@@ -19,7 +19,6 @@ data plane as idiomatic Spark DataFrame pipelines:
   text analysis, multimodal column plumbing.
 - ``pipeline/``   — the /ask lifecycle (route -> search -> context assembly)
   and batch ingestion job (SURVEY.md §3).
-- ``streaming/``  — Structured Streaming ingest (SURVEY.md §2.10 extension).
 """
 
 __version__ = "0.1.0"

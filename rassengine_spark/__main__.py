@@ -39,13 +39,6 @@ of the reference's REST endpoints has a direct equivalent for each flow.
         (--block-domains FILE) -> optional full prep pipeline (--prep);
         writes the corpus parquet and prints counts.
 
-    python -m rassengine_spark stream --kind KIND --src DIR --out DIR \\
-            --checkpoint DIR
-        run one availableNow pass of a streaming maintainer over the
-        JSON-lines files in --src: `index` (term-index segments),
-        `vectors` (IVF segments), `rollup` (counts/distinct/quantile
-        serving tables), `dedup` (signature-store-gated corpus ingest).
-
 Models stay pluggable: the CLI wires the deterministic defaults; swap in
 ml/plugins.py constructors programmatically for real models.
 """
@@ -273,114 +266,6 @@ def _cmd_table(args) -> int:
     return 0
 
 
-def _cmd_stream(args) -> int:
-    from .session import get_spark
-
-    spark = get_spark("cli-stream")
-    kind = args.kind
-    if args.n_cells is not None and kind != "vectors":
-        print("--n-cells only applies to --kind vectors",
-              file=sys.stderr)
-        return 2
-    if kind == "index":
-        from .streaming.index import stream_index_ingest
-        q = stream_index_ingest(spark, args.src, args.out,
-                                args.checkpoint)
-    elif kind == "vectors":
-        from .streaming.vectors import stream_vector_ingest
-        q = stream_vector_ingest(spark, args.src, args.out,
-                                 args.checkpoint,
-                                 n_cells=args.n_cells or 8)
-    elif kind == "rollup":
-        from .streaming.rollup import stream_rollup_maintenance
-        q = stream_rollup_maintenance(spark, args.src, args.out,
-                                      args.checkpoint)
-    elif kind == "clusters":
-        from .streaming.clusters import stream_cluster_maintenance
-        q = stream_cluster_maintenance(spark, args.src, args.out,
-                                       args.checkpoint)
-    elif kind == "dsir":
-        from .streaming.dsir import stream_gram_counts_maintenance
-        q = stream_gram_counts_maintenance(spark, args.src, args.out,
-                                           args.checkpoint)
-    elif kind == "scd2":
-        from .streaming.scd2 import stream_scd2_maintenance
-        q = stream_scd2_maintenance(spark, args.src, args.out,
-                                    args.checkpoint)
-    elif kind == "vocab":
-        from .streaming.vocab import stream_gram_vocab_maintenance
-        q = stream_gram_vocab_maintenance(spark, args.src, args.out,
-                                          args.checkpoint)
-    elif kind == "hnsw":
-        from .streaming.hnsw import stream_hnsw_append
-        q = stream_hnsw_append(spark, args.src, args.out,
-                               args.checkpoint)
-    elif kind == "boilerplate":
-        from .streaming.boilerplate import stream_line_stats_maintenance
-        q = stream_line_stats_maintenance(spark, args.src, args.out,
-                                          args.checkpoint)
-    elif kind == "scorehist":
-        from .streaming.quantiles import stream_score_hist_maintenance
-        q = stream_score_hist_maintenance(spark, args.src, args.out,
-                                          args.checkpoint)
-    elif kind == "dq":
-        if not args.dq_columns:
-            print("--kind dq requires --dq-columns (completeness suite "
-                  "over these long/string columns)", file=sys.stderr)
-            return 2
-        from .llmops.dataquality import completeness
-        from .streaming.dataquality import stream_dq_counters_maintenance
-        cols = [c.strip() for c in args.dq_columns.split(",") if c.strip()]
-        schema = ", ".join(f"{c} string" for c in cols)
-        q = stream_dq_counters_maintenance(
-            spark, args.src, args.out, args.checkpoint, schema,
-            [completeness(c) for c in cols])
-    elif kind == "psi":
-        if not args.dq_columns:
-            print("--kind psi requires --dq-columns as GROUP,VALUE "
-                  "(matching the baseline store's manifest)",
-                  file=sys.stderr)
-            return 2
-        from .streaming.dataquality import stream_psi_current_maintenance
-        g, v = [c.strip() for c in args.dq_columns.split(",")][:2]
-        q = stream_psi_current_maintenance(
-            spark, args.src, args.out, args.checkpoint,
-            f"{g} string, {v} double")
-    elif kind == "kmv":
-        from .streaming.overlap import stream_kmv_maintenance
-        q = stream_kmv_maintenance(spark, args.src, args.out,
-                                   args.checkpoint)
-    elif kind == "lm":
-        from .streaming.lm import stream_lm_maintenance
-        q = stream_lm_maintenance(spark, args.src, args.out,
-                                  args.checkpoint)
-    elif kind == "holt":
-        from .streaming.forecast import stream_holt_maintenance
-        q = stream_holt_maintenance(spark, args.src, args.out,
-                                    args.checkpoint)
-    elif kind == "decontam":
-        if not args.vocab:
-            print("--kind decontam requires --vocab (gram-vocab store)",
-                  file=sys.stderr)
-            return 2
-        from .streaming.decontam_report import \
-            stream_contamination_report_maintenance
-        q = stream_contamination_report_maintenance(
-            spark, args.src, args.out, args.checkpoint, args.vocab)
-    else:                      # dedup
-        import os
-        from .streaming.dedup import stream_dedup_ingest
-        q = stream_dedup_ingest(spark, args.src,
-                                os.path.join(args.out, "store"),
-                                os.path.join(args.out, "corpus"),
-                                os.path.join(args.out, "dupes"),
-                                args.checkpoint)
-    q.awaitTermination()
-    print(json.dumps({"kind": kind, "out": args.out,
-                      "checkpoint": args.checkpoint}))
-    return 0
-
-
 def build_parser() -> argparse.ArgumentParser:
     p = argparse.ArgumentParser(prog="rassengine_spark")
     sub = p.add_subparsers(dest="cmd", required=True)
@@ -476,30 +361,6 @@ def build_parser() -> argparse.ArgumentParser:
                          "(match the original build)")
     pt.add_argument("--prune", action="store_true")
     pt.set_defaults(fn=_cmd_table)
-
-    ps = sub.add_parser(
-        "stream",
-        help="streaming maintainers: index / vectors / rollup / dedup /"
-             " clusters / dsir / scd2")
-    ps.add_argument("--kind", required=True,
-                    choices=["index", "vectors", "rollup", "dedup",
-                             "clusters", "dsir", "scd2", "vocab",
-                             "hnsw", "decontam", "boilerplate",
-                             "scorehist", "dq", "psi", "kmv", "lm",
-                             "holt"])
-    ps.add_argument("--src", required=True,
-                    help="input dir of JSON-lines micro-batch files")
-    ps.add_argument("--out", required=True,
-                    help="maintained store dir (segments / rollups)")
-    ps.add_argument("--checkpoint", required=True)
-    ps.add_argument("--n-cells", type=int, default=None,
-                    help="IVF cell count (vectors kind only)")
-    ps.add_argument("--vocab", default=None,
-                    help="gram-vocabulary store dir (decontam kind only)")
-    ps.add_argument("--dq-columns", default=None,
-                    help="comma-separated columns for the streamed "
-                         "completeness suite (dq kind only)")
-    ps.set_defaults(fn=_cmd_stream)
     return p
 
 

@@ -201,8 +201,8 @@ def append_line_stats(new_df: DataFrame, text_col: str, id_col: str,
     byte-identical; nothing is re-read or re-counted. Naming/replay
     contract per counter_store: an UNcommitted crash rewrites the
     orphan in place, an already-committed ``delta_name`` is a pure
-    no-op (the streaming maintainer names deltas by batch id for
-    exactly this). Single writer, new-documents-only — replaying the
+    no-op (name deltas by batch id to make batch replay safe). Single
+    writer, new-documents-only — replaying the
     same docs under a new name double-counts."""
     from .counter_store import append_counters, load_counter_manifest
 

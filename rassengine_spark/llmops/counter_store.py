@@ -4,7 +4,7 @@ A persisted table of ADDITIVE counter rows (key columns + one bigint
 count) that grows by O(batch) delta folds: the shape behind the
 per-source boilerplate line counters (``llmops/boilerplate.py``) and the
 score-histogram threshold tier (``llmops/splits.py``). Contrast with the
-other exactly-once store shapes here (SCALE.md "Streaming"): versioned
+other exactly-once store shapes here: versioned
 copy-on-write rewrites O(store) per fold; the anti-joined set stores get
 idempotence from their algebra; this one appends O(batch) and makes the
 commit atomic with a manifest.
@@ -23,8 +23,8 @@ Layout under ``path``:
 
 Replay discipline: deltas are named. Re-folding an UNcommitted name
 overwrites the orphan in place; an already-committed name is a pure
-no-op (never rewrite a directory a reader can see). The streaming
-maintainers name deltas ``b{batch_id}`` for exactly this. Additivity
+no-op (never rewrite a directory a reader can see): a maintainer that
+names deltas by batch id can replay a batch safely. Additivity
 requires each fold to bring NEW underlying rows — replaying the same
 data under a fresh name double-counts. Single writer per store.
 """

@@ -228,8 +228,8 @@ def append_gram_vocab(new_train_df: DataFrame, text_col: str,
     so history files stay byte-identical and repeated appends of the
     same corpus are no-ops. Same n as the original build (from meta).
     The appended file count scales with the NOVEL row count (one file
-    per ~1M hashes, capped at the store's bucket count) — a streaming
-    maintainer folding small batches writes one small file per batch,
+    per ~1M hashes, capped at the store's bucket count) — a maintainer
+    folding small batches writes one small file per batch,
     not `buckets` slivers; run compact_gram_vocab when the accumulated
     file count starts to dominate probe planning."""
     import os
@@ -354,7 +354,7 @@ def contamination_counters(spark, eval_df: DataFrame, text_col: str,
     (slice..., n_docs, n_contaminated, tot_grams, tot_matched,
     sum_micro). All exact integers, so any fold sequence equals the
     one-shot counters over the union of all folded eval docs — the
-    property the streaming maintainer relies on. Slice values must be
+    property merge_contamination_counters relies on. Slice values must be
     non-null (they become fold join keys)."""
     per_doc = ngram_overlap_from_store(spark, eval_df, text_col, id_col,
                                        vocab_path)
@@ -376,28 +376,21 @@ _COUNTER_COLS = ["n_docs", "n_contaminated", "tot_grams", "tot_matched",
 
 
 def merge_contamination_counters(spark, path: str, batch: DataFrame,
-                                 slice_cols: list[str],
-                                 src_path: str | None = None) -> None:
+                                 slice_cols: list[str]) -> None:
     """Fold one batch's counters into the persisted table (full-outer
     join on the slice grain, integer sums; whole-table rewrite — the
     table is one row per populated slice combination, tiny at any eval
-    volume). ``src_path`` reads the previous state from a different
-    root (the streaming tier's copy-on-write versioning); default
-    in-place, crash-safe via util.swap_commit_dir. NOT idempotent under
-    replay (counters double) — replay protection is the streaming
-    marker discipline, exactly as for the additive rollups."""
+    volume). Folds in place, crash-safe via util.swap_commit_dir. NOT
+    idempotent under replay (counters double), exactly as for the
+    additive rollups."""
     import os
 
     from ..util import heal_swapped_dir, swap_commit_dir
 
-    read_root = src_path if src_path is not None else path
-    heal_swapped_dir(os.path.join(read_root, "data"))
-    if path != read_root:
-        heal_swapped_dir(os.path.join(path, "data"))
-    src_data = os.path.join(read_root, "data")
     data_p = os.path.join(path, "data")
-    if os.path.exists(src_data):
-        prev = spark.read.parquet(src_data).select(
+    heal_swapped_dir(data_p)
+    if os.path.exists(data_p):
+        prev = spark.read.parquet(data_p).select(
             *slice_cols, *[F.col(c).alias(f"_p_{c}")
                            for c in _COUNTER_COLS])
         out = (prev.join(batch, slice_cols, "full_outer")

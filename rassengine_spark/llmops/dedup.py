@@ -985,8 +985,7 @@ def cluster_keepers(clusters: DataFrame, scores: DataFrame,
 
 def merge_cluster_store(spark, path: str, new_pairs: DataFrame,
                         src: str = "id_a", dst: str = "id_b",
-                        max_iter: int = 20,
-                        src_path: str | None = None) -> None:
+                        max_iter: int = 20) -> None:
     """Incremental duplicate-CLUSTER maintenance — the cluster-resolution
     member of the incremental family (signature store =
     incremental_minhash_pairs finds each batch's pairs; this folds them
@@ -1002,29 +1001,23 @@ def merge_cluster_store(spark, path: str, new_pairs: DataFrame,
     across folds (min-id union), so keeper decisions are stable unless a
     merge genuinely links clusters.
 
-    ``src_path`` reads the previous state from a DIFFERENT root (the
-    streaming tier's copy-on-write versioning — streaming/clusters.py
-    folds v{n} from committed v{n-1}); default in-place. Re-folding the
-    same pairs is a NO-OP by construction (edges are idempotent for
-    connectivity), which is what makes crash replay safe. In-place folds
-    never overwrite the previous state while the job runs: the new
-    forest writes to a temp sibling of data/ and swaps in with two
-    directory renames (data -> bak, tmp -> data) — a Spark failure
-    mid-write leaves data/ untouched, and a driver crash between the
-    renames is repaired by _heal_cluster_store on the next open (bak is
-    restored if data/ is missing, discarded otherwise)."""
+    Folds run in place. Re-folding the same pairs is a NO-OP by
+    construction (edges are idempotent for connectivity), which is what
+    makes crash replay safe. Folds never overwrite the previous state
+    while the job runs: the new forest writes to a temp sibling of
+    data/ and swaps in with two directory renames (data -> bak,
+    tmp -> data) — a Spark failure mid-write leaves data/ untouched, and
+    a crash between the two renames is repaired by
+    _heal_cluster_store on the next open (bak is restored if data/ is
+    missing, discarded otherwise)."""
     import os
 
-    read_root = src_path if src_path is not None else path
-    _heal_cluster_store(read_root)
-    if path != read_root:
-        _heal_cluster_store(path)
-    src_data = os.path.join(read_root, "data")
+    _heal_cluster_store(path)
     data_p = os.path.join(path, "data")
     pairs = new_pairs.select(F.col(src).alias("id_a"),
                              F.col(dst).alias("id_b"))
-    if os.path.exists(src_data):
-        existing = spark.read.parquet(src_data)
+    if os.path.exists(data_p):
+        existing = spark.read.parquet(data_p)
         batch_nodes = (pairs.select(F.col("id_a").alias("node"))
                        .unionAll(pairs.select(F.col("id_b").alias("node")))
                        .distinct())

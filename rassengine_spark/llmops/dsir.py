@@ -55,7 +55,7 @@ def gram_bucket_counts(df: DataFrame, text_col: str, id_col: str,
     the <= n_buckets-row sufficient statistic DSIR needs from either
     side. ADDITIVE: counts over doc-disjoint corpus slices sum to the
     union's counts, which is what makes the persisted fold
-    (merge_gram_counts / streaming/dsir.py) exactly equal a one-shot
+    (merge_gram_counts) exactly equal a one-shot
     rebuild."""
     gb = hashed_gram_buckets(df, text_col, id_col, n, n_buckets)
     return gb.groupBy("b").agg(F.count(F.lit(1)).alias("c"))
@@ -132,33 +132,26 @@ def importance_weights_from_counts(
 
 
 def merge_gram_counts(spark, path: str, batch: DataFrame, text_col: str,
-                      id_col: str, n: int = 2, n_buckets: int = 8192,
-                      src_path: str | None = None) -> None:
+                      id_col: str, n: int = 2,
+                      n_buckets: int = 8192) -> None:
     """Incremental DSIR density maintenance: fold a doc batch's gram
     bucket counts into the persisted (b, c) table — the DSIR member of
     the incremental rollup family (counts are additive integers, so any
     fold sequence equals the one-shot aggregate over the union exactly,
     like merge_rollup's DECIMAL sums). The table is <= n_buckets rows
     (64 KiB at the default width): whole-table rewrite per fold is the
-    right plan at any corpus size. ``src_path`` reads the previous state
-    from a different root (streaming/dsir.py's copy-on-write
-    versioning); default in-place, crash-safe via util.swap_commit_dir.
-    NOT idempotent under replay (counts double) — replay protection is
-    the streaming tier's marker discipline, exactly as with
-    merge_rollup."""
+    right plan at any corpus size. Folds in place, crash-safe via
+    util.swap_commit_dir. NOT idempotent under replay (counts double),
+    exactly as with merge_rollup."""
     import os
 
     from ..util import heal_swapped_dir, swap_commit_dir
 
-    read_root = src_path if src_path is not None else path
-    heal_swapped_dir(os.path.join(read_root, "data"))
-    if path != read_root:
-        heal_swapped_dir(os.path.join(path, "data"))
-    src_data = os.path.join(read_root, "data")
     data_p = os.path.join(path, "data")
+    heal_swapped_dir(data_p)
     bc = gram_bucket_counts(batch, text_col, id_col, n, n_buckets)
-    if os.path.exists(src_data):
-        prev = spark.read.parquet(src_data) \
+    if os.path.exists(data_p):
+        prev = spark.read.parquet(data_p) \
                     .select("b", F.col("c").alias("_pc"))
         out = (prev.join(bc, "b", "full_outer")
                    .select("b",

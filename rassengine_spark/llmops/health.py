@@ -1,7 +1,6 @@
 """Pipeline-health dashboard: ONE (metric, value, flagged) frame per
-curation run, served from the persisted counter stores the maintenance
-jobs (batch folds or the streaming maintainers in ``streaming/``) keep
-fresh — the single view a 100 TB curation pipeline is operated by.
+curation run, served from the persisted counter stores the batch folds
+keep fresh — the single view a 100 TB curation pipeline is operated by.
 
 Serving cost is O(store groups), independent of corpus size, for every
 branch except the optional dup-rate scan (one hash-aggregate over
@@ -81,7 +80,7 @@ def health_report(spark: SparkSession, dq_path: str, psi_path: str,
 
 def health_store_paths(root: str) -> dict[str, str]:
     """Canonical store layout under one health root (the layout the
-    driver entry's builder and the streaming composition test share)."""
+    store builder in ``__spark_entry__.py`` uses)."""
     return {"dq": os.path.join(root, "dq"),
             "psi": os.path.join(root, "psi"),
             "contam": os.path.join(root, "contam")}

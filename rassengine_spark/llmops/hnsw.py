@@ -506,34 +506,11 @@ def append_hnsw_index(new_corpus: DataFrame, vec_col: str, id_col: str,
                             max_shard_rows=max_shard_rows)
 
 
-def append_hnsw_index_at(new_corpus: DataFrame, vec_col: str, id_col: str,
-                         path: str, part_offset: int, m: int = 8,
-                         ef_construction: int = 64,
-                         partitions: int | None = 8,
-                         max_shard_rows: int = MAX_SHARD_ROWS) -> None:
-    """Append new shard graphs at an EXPLICIT part_id offset using
-    dynamic partition overwrite: re-running the same (data, offset)
-    rewrites exactly its own shard directories instead of duplicating
-    them — the IDEMPOTENT append primitive the streaming maintainer
-    builds exactly-once on (a crash between write and commit marker is
-    repaired by simply re-running the batch). The caller owns namespace
-    disjointness: offsets from different calls must be at least
-    partitions * _SUBSHARD_STRIDE apart. `partitions` defaults to a
-    fixed 8 (not the scan layout) so the batch's shard composition — and
-    therefore the overwritten directory set — is a pure function of the
-    data."""
-    _build_and_write_graphs(new_corpus, vec_col, id_col, path, m,
-                            ef_construction, partitions,
-                            mode="overwrite-dynamic",
-                            part_offset=part_offset,
-                            max_shard_rows=max_shard_rows)
-
-
 def compact_hnsw_store(spark, path: str, m: int = 8,
                        ef_construction: int = 64,
                        partitions: int | None = None,
                        max_shard_rows: int = MAX_SHARD_ROWS) -> None:
-    """Segment compaction for an appended/streamed HNSW store: rebuild
+    """Segment compaction for an appended HNSW store: rebuild
     ONE fresh generation of shard graphs from the store's own vectors
     (the store carries raw `v`, so no corpus re-read) and swap it in
     crash-safely (util.swap_commit_dir: a failure mid-rebuild leaves the
@@ -612,14 +589,7 @@ def _build_and_write_graphs(corpus: DataFrame, vec_col: str, id_col: str,
         build,
         "part_id bigint, node bigint, id bigint, v array<double>, "
         "adj string, entry bigint, max_level int")
-    w = out.write.partitionBy("part_id")
-    if mode == "overwrite-dynamic":
-        # replaces ONLY the part_id directories this write produces —
-        # the idempotent-replay primitive (append_hnsw_index_at)
-        w = w.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-    else:
-        w = w.mode(mode)
-    w.parquet(path)
+    out.write.partitionBy("part_id").mode(mode).parquet(path)
 
 
 def hnsw_topk_from_store_df(spark, path: str, queries: DataFrame,

@@ -236,8 +236,8 @@ def save_lm_store(train: DataFrame, text_col: str, id_col: str,
                   path: str, buckets: int = 8) -> None:
     """Build the persisted LM model from an initial corpus. A top-level
     manifest commits LAST, after both sub-stores — it is the build's
-    completion marker (a crash mid-build leaves no top manifest, so the
-    streaming maintainer's init check re-runs the build)."""
+    completion marker (a crash mid-build leaves no top manifest, so an
+    init-if-missing check re-runs the build)."""
     import os
 
     from .counter_store import commit_counter_manifest, save_counters

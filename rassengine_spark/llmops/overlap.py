@@ -191,8 +191,8 @@ def append_kmv_shard(shard_sketches: DataFrame, path: str,
     Shard sketches must be built with k >= the store's manifest k —
     a smaller shard k silently drops members of the global top-k.
     Pass the shard's build ``k`` to ENFORCE that contract (raises
-    ValueError on a too-small shard instead of biasing estimates); the
-    streaming maintainer sketches at the manifest k for exactly this.
+    ValueError on a too-small shard instead of biasing estimates);
+    sketch new shards at the manifest k for exactly this.
     The k cannot be inferred from the rows (a sparse group legitimately
     carries < k hashes), hence the explicit parameter."""
     import os

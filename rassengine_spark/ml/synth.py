@@ -159,10 +159,6 @@ def _tpl_label(k: int) -> list[str]:
             for _, labels in NER_TEMPLATES]
 
 
-def _sql_quote(s: str) -> str:
-    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
-
-
 def ner_corpus(spark: SparkSession, n: int = 10000) -> DataFrame:
     """One row per labeled SPAN: (qid, text, span_idx, label, span_start,
     span_end, value); span_start/span_end are 0-based character offsets,
@@ -178,7 +174,7 @@ def ner_corpus(spark: SparkSession, n: int = 10000) -> DataFrame:
     t_idx = (F.conv(F.substring(F.md5(F.concat(
         F.col("id").cast("string"), F.lit(":nt"))), 1, 8), 16, 10)
         .cast("bigint") % nt).cast("int")
-    from ..util import string_array_lit
+    from ..util import sql_quote, string_array_lit
 
     def at(vals: list[str]):
         return F.element_at(string_array_lit(vals), t_idx + 1)
@@ -190,10 +186,10 @@ def ner_corpus(spark: SparkSession, n: int = 10000) -> DataFrame:
 
     def val_expr(k: int):
         arr = " ".join(
-            f"WHEN {_sql_quote(lab)} THEN array("
-            + ",".join(_sql_quote(x) for x in pool) + ")"
+            f"WHEN {sql_quote(lab)} THEN array("
+            + ",".join(sql_quote(x) for x in pool) + ")"
             for lab, pool in NER_POOLS.items())
-        size = " ".join(f"WHEN {_sql_quote(lab)} THEN {len(pool)}"
+        size = " ".join(f"WHEN {sql_quote(lab)} THEN {len(pool)}"
                         for lab, pool in NER_POOLS.items())
         h = (f"cast(conv(substring(md5(concat(cast(id as string), "
              f"':n{k}')), 1, 8), 16, 10) as bigint)")

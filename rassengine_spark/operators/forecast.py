@@ -174,9 +174,9 @@ def holt_backtest_micro(series: DataFrame, key_col: str, t_col: str,
 # two-point init once the second bucket lands.
 
 def _params_path(path: str) -> str:
-    # named manifest.json so the shared stream harness's init-if-missing
-    # check (streaming/counters.py) recognizes a built store; written
-    # LAST by save_holt_state as the build-completion marker
+    # named manifest.json like the other fold stores' completion
+    # markers; written LAST by save_holt_state as the build-completion
+    # marker
     import os
     return os.path.join(path, "manifest.json")
 
@@ -225,11 +225,10 @@ def append_holt_buckets(spark, new_series: DataFrame, key_col: str,
     Every new bucket must be strictly later than its series' last_t
     (append-only CDC contract — violations raise). With
     ``skip_stale=True`` stale buckets are DROPPED instead: the replay
-    semantics the streaming maintainer needs — a crash between the
-    state swap and the marker commit replays the whole batch, whose
+    semantics a batch-replaying maintainer needs — a crash between the
+    state swap and its own commit marker replays the whole batch, whose
     buckets are then all at-or-before last_t and fold to a no-op
-    (without this, the replayed batch would raise forever and the
-    stream could never restart — review finding, pytest-pinned)."""
+    (without this, the replayed batch would raise forever)."""
     import json
     import os
 

@@ -338,8 +338,8 @@ def ivf_probe_frame(queries: DataFrame, vec_col: str, query_id_col: str,
                     cents: list[list[float]], n_probe: int,
                     round_to: int) -> tuple[DataFrame, list[int]]:
     """(probe frame, distinct probe cells) for a bounded query batch —
-    the driver-side half of IVF serving, shared by the batch store and
-    the streaming segment tier so probe semantics cannot drift. The
+    the probe half of IVF serving, kept apart from the scoring half
+    (ivf_score_topk) so probe semantics live in one place. The
     frame is pinned (localCheckpoint): the collect AND the scoring join
     reuse it, so the affinity expressions evaluate once per call."""
     from ..llmops.similarity import _cell_affinities_sql
@@ -360,7 +360,7 @@ def ivf_score_topk(assignments: DataFrame, q: DataFrame, k: int,
                    round_to: int) -> DataFrame:
     """Score (id, v, cell) candidate rows against the broadcast probe
     frame and take the per-query k-heap — the scoring half of IVF
-    serving, shared with the streaming segment tier."""
+    serving."""
     from ..functions.vector import cosine
     from ..llmops.similarity import _per_query_topk
 

@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 
 from ..functions.bm25 import B, K1
 from ..functions.text import terms_of, tokenize
+from ..util import sql_quote
 
 
 def build_term_index(df: DataFrame, text_col: str, id_col: str,
@@ -110,10 +111,6 @@ def _pivot_fold(per_occ: DataFrame, keys: list[str], n_pos: int):
     return g.select(*keys, raw.alias("_raw"))
 
 
-def _sql_quote(s: str) -> str:
-    return "'" + s.replace("\\", "\\\\").replace("'", "''") + "'"
-
-
 def bm25_topk_from_index(postings: DataFrame, doclens: DataFrame,
                          stats: DataFrame, query: str, k: int = 10,
                          k1: float = K1, b: float = B,
@@ -157,7 +154,7 @@ def bm25_topk_from_index(postings: DataFrame, doclens: DataFrame,
         for i, t in enumerate(terms):
             pos_of.setdefault(t, []).append(i)
         occ_map = F.expr("map(" + ", ".join(
-            f"{_sql_quote(t)}, array({', '.join(map(str, ps))})"
+            f"{sql_quote(t)}, array({', '.join(map(str, ps))})"
             for t, ps in pos_of.items()) + ")")
         per_occ = contrib.select(
             "id", F.explode(occ_map[F.col("term")]).alias("_pos"),
@@ -263,7 +260,7 @@ def bm25_batch_topk_from_index(postings: DataFrame, doclens: DataFrame,
         # indices (repeats preserved — the fold adds once per occurrence,
         # exactly the scan form's left-to-right chain)
         occ_sql = "map(" + ", ".join(
-            f"{_sql_quote(qid)}, "
+            f"{sql_quote(qid)}, "
             f"array({', '.join(str(ti_of[t]) for t in ts)})"
             for qid, ts in sorted(per_q.items())) + ")"
         occ = F.expr(occ_sql)[F.col("query_id")]

@@ -410,43 +410,3 @@ def rrf_fuse(a: DataFrame, b: DataFrame, rrf_k: int = 60, top: int = 10,
     return (j.select("id", score.alias("score"))
              .orderBy(F.col("score").desc(), F.col("id").asc())
              .limit(top))
-
-
-def hybrid_rrf_search(df: DataFrame, spec: CorpusSpec, query: str,
-                      query_vec: list[float], k: int = 3,
-                      filter_expr: Column | None = None, partition_key=None,
-                      depth: int = 20, rrf_k: int = 60,
-                      text_boost: float = 1.5, kw_boost: float = 1.0,
-                      round_to: int = 6) -> DataFrame:
-    """Q3's rank-fused sibling, dispatchable: the same lexical clauses as
-    `hybrid_search` and the same kNN as `semantic_search`, each ranked to
-    top-`depth` independently, fused by RRF instead of the reference's
-    weighted should-sum (app/main.py:1562-1615). Plug into AskPipeline
-    with ``hybrid_fusion="rrf"``.
-
-    Scale: both routes end in TakeOrderedAndProject (per-partition
-    k-heaps); the rank windows and the fuse join run over `depth`-row
-    frames, so the only corpus-scale work is the two scoring scans —
-    same cost class as hybrid_search, plus nothing."""
-    df = _apply_filters(df, filter_expr, spec, partition_key)
-    lex_score = S.should_sum(
-        S.fuzzy_best_fields(spec.text_fields, query, text_boost),
-        S.exact_term_best_fields(spec.keyword_fields, query, kw_boost))
-    sem_score = (V.dot_literal(F.col(spec.embedding_col), query_vec)
-                 if spec.embedding_col else F.lit(0.0))
-
-    def route(score: Column) -> DataFrame:
-        top = (df.withColumn("score", F.round(score, round_to))
-                 .filter(F.col("score") > 0)
-                 .orderBy(F.col("score").desc(), F.col(spec.id_col).asc())
-                 .limit(depth)
-                 .select(F.col(spec.id_col).alias("id"), "score"))
-        # depth-row frame: bounded by the limit above, never corpus-scale
-        wr = Window.orderBy(F.desc("score"), F.asc("id"))
-        return top.select("id", F.row_number().over(wr).alias("rank"))
-
-    fused = rrf_fuse(route(lex_score), route(sem_score),
-                     rrf_k=rrf_k, top=k, round_to=round_to)
-    out = df.join(F.broadcast(fused.withColumnRenamed("id", spec.id_col)),
-                  spec.id_col)
-    return out.orderBy(F.col("score").desc(), F.col(spec.id_col).asc())

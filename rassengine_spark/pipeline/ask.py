@@ -129,8 +129,7 @@ class AskPipeline:
                  embed_fn: EmbedFn | None = None, dim: int = 64,
                  generate_fn: GenerateFn = _echo_generate,
                  rerank: bool | object = False,
-                 rerank_depth: int = 4,
-                 hybrid_fusion: str = "should_sum"):
+                 rerank_depth: int = 4):
         self.documents = documents
         self.chunks = chunks
         self.chats = chats
@@ -145,13 +144,6 @@ class AskPipeline:
         # scoring. First stage over-fetches k*rerank_depth candidates.
         self.rerank = rerank
         self.rerank_depth = rerank_depth
-        # HYBRID route fusion: "should_sum" = the reference's weighted
-        # clause sum (app/main.py:1562-1615); "rrf" = zero-tuning
-        # reciprocal-rank fusion of the lexical and vector routes
-        # (operators/search.py::hybrid_rrf_search)
-        if hybrid_fusion not in ("should_sum", "rrf"):
-            raise ValueError("hybrid_fusion must be 'should_sum' or 'rrf'")
-        self.hybrid_fusion = hybrid_fusion
         # union view: the reference queries ONE index holding both kinds
         self.corpus = documents.unionByName(
             chunks, allowMissingColumns=True)
@@ -192,10 +184,6 @@ class AskPipeline:
         c, s = self.corpus, self.spec
 
         def hybrid(frame):
-            if self.hybrid_fusion == "rrf":
-                return ops.hybrid_rrf_search(frame, s, query, qvec, k,
-                                             filter_expr, patient_id,
-                                             round_to=6)
             return ops.hybrid_search(frame, s, query, qvec, k, filter_expr,
                                      patient_id, round_to=6)
 

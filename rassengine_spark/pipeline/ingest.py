@@ -22,7 +22,6 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from ..ml.embed import EmbedFn, with_embeddings
 from ..sources.fhir import parse_fhir
@@ -252,8 +251,7 @@ def _split_touched(existing: DataFrame, touched: DataFrame,
 
 
 def merge_rollup(spark: SparkSession, rollup_path: str, delta: DataFrame,
-                 group_cols: list[str], agg_exprs: dict[str, str],
-                 src_path: str | None = None) -> None:
+                 group_cols: list[str], agg_exprs: dict[str, str]) -> None:
     """Incremental aggregate maintenance: fold a new micro-batch into a
     persisted additive rollup, re-aggregating ONLY the groups the batch
     touches — the 100 TB pattern for keeping serving rollups fresh without
@@ -266,16 +264,10 @@ def merge_rollup(spark: SparkSession, rollup_path: str, delta: DataFrame,
     delta pre-aggregates map-side, joins nothing — the union touches only
     existing rows for AFFECTED groups (semi-join pruned), so the rewrite
     cost scales with the batch's group count, not the table.
-
-    `src_path` reads the existing rollup from a DIFFERENT location than
-    the write target — the versioned copy-on-write fold the streaming
-    maintenance job uses so a crashed fold never corrupts the committed
-    table (default: fold in place).
     """
     partial = delta
-    src = src_path if src_path is not None else rollup_path
-    if os.path.exists(src):
-        existing = spark.read.parquet(src)
+    if os.path.exists(rollup_path):
+        existing = spark.read.parquet(rollup_path)
         touched = partial.select(group_cols).distinct()
         affected, untouched = _split_touched(existing, touched, group_cols)
         merged = (affected.unionByName(partial)
@@ -290,138 +282,15 @@ def merge_rollup(spark: SparkSession, rollup_path: str, delta: DataFrame,
     out.write.mode("overwrite").parquet(rollup_path)
 
 
-def merge_hll_rollup(spark: SparkSession, rollup_path: str,
-                     delta: DataFrame, group_cols: list[str],
-                     key_col: str, lg_k: int = 12,
-                     src_path: str | None = None) -> None:
-    """merge_rollup's DISTINCT-COUNT sibling: maintain a persisted
-    per-group Datasketches HLL table (binary sketch column) and fold each
-    micro-batch in by UNIONING sketches for the touched groups only.
-    Distinct counts are not additive, so the additive-rollup trick cannot
-    carry them — the sketch union property can: union(sketch(A),
-    sketch(B)) == sketch(A ++ B) at a fixed lg_k, so the incrementally
-    maintained estimate equals the from-scratch one (asserted exactly in
-    tests/test_sketches.py). History is never rescanned; each batch costs
-    one map-side sketch aggregate plus a semi-join-pruned rewrite of the
-    affected groups.
-
-    lg_k is persisted on first write and REUSED for every later batch —
-    hll_union_agg refuses sketches of mixed lg_k, so a caller passing a
-    different value later must not silently arm that failure.
-
-    `src_path`: as in merge_rollup — read the existing sketches (and
-    their lg_k meta) from a different location than the write target."""
-    src = src_path if src_path is not None else rollup_path
-    src_meta = os.path.join(src, "_hll_meta")
-    meta_p = os.path.join(rollup_path, "_hll_meta")
-    data_p = os.path.join(rollup_path, "data")
-    if os.path.exists(src_meta):
-        lg_k = int(spark.read.parquet(src_meta).collect()[0]["lg_k"])
-    if not os.path.exists(meta_p):
-        (spark.createDataFrame([(lg_k,)], "lg_k int")
-         .repartition(1).write.mode("overwrite").parquet(meta_p))
-    part = (delta.groupBy(group_cols)
-            .agg(F.hll_sketch_agg(key_col, F.lit(lg_k)).alias("sketch")))
-    src_data = os.path.join(src, "data")
-    if os.path.exists(src_data):
-        existing = spark.read.parquet(src_data)
-        touched = part.select(group_cols).distinct()
-        affected, untouched = _split_touched(existing, touched, group_cols)
-        merged = (affected.unionByName(part)
-                  .groupBy(group_cols)
-                  .agg(F.hll_union_agg("sketch").alias("sketch")))
-        out = untouched.unionByName(merged).localCheckpoint()
-    else:
-        out = part.localCheckpoint()
-    out.write.mode("overwrite").parquet(data_p)
-
-
-def merge_histogram_rollup(spark: SparkSession, rollup_path: str,
-                           delta: DataFrame, group_cols: list[str],
-                           value_col: str, lo: float = 0.0,
-                           width: float = 1.0,
-                           src_path: str | None = None) -> None:
-    """merge_rollup's QUANTILE sibling: maintain per-group fixed-width
-    histogram bins. Quantiles are not additive, but bin COUNTS are, so
-    the incremental fold is exactly merge_rollup over (group, bin) —
-    the maintained table EQUALS a from-scratch rebuild (no sketch
-    approximation in the merge; all error lives in the bin width, chosen
-    up front). The serving view interpolates any quantile from the bins.
-
-    The bin spec (lo, width) is persisted on first write and REUSED for
-    every later batch — mixed-width bins merge into nonsense, so a
-    caller passing a different spec later must not silently arm that
-    (same discipline as merge_hll_rollup's lg_k).
-
-    bin = floor((value - lo) / width); NULL values are skipped (they
-    carry no quantile information). Bins are sparse rows — range
-    outliers cost one row, not array width."""
-    src = src_path if src_path is not None else rollup_path
-    src_meta = os.path.join(src, "_hist_meta")
-    meta_p = os.path.join(rollup_path, "_hist_meta")
-    if os.path.exists(src_meta):
-        m = spark.read.parquet(src_meta).collect()[0]
-        lo, width = float(m["lo"]), float(m["width"])
-    if not os.path.exists(meta_p):
-        (spark.createDataFrame([(float(lo), float(width))],
-                               "lo double, width double")
-         .repartition(1).write.mode("overwrite").parquet(meta_p))
-    binned = (delta.filter(F.col(value_col).isNotNull())
-              .select(*group_cols,
-                      F.floor((F.col(value_col) - lo) / width)
-                       .cast("long").alias("bin"),
-                      F.lit(1).cast("long").alias("n")))
-    merge_rollup(spark, os.path.join(rollup_path, "data"), binned,
-                 group_cols + ["bin"], {"n": "sum"},
-                 src_path=(os.path.join(src, "data")
-                           if src_path is not None else None))
-
-
-def read_histogram_quantiles(spark: SparkSession, rollup_path: str,
-                             group_cols: list[str],
-                             qs: list[float]) -> DataFrame:
-    """The serving view of a merge_histogram_rollup table: one row per
-    group with a `q_<q>` column per requested quantile. The estimate is
-    the UPPER EDGE of the first bin whose cumulative count reaches the
-    q-rank — deterministic, within one bin width of the exact quantile
-    (tested). The rank test is PURE INTEGER arithmetic: q becomes an
-    exact fraction (Decimal ratio), and `cum * den >= num * tot`
-    replaces the double product `q * tot`, which overshoots the exact
-    integer for boundary cases like 0.55 * 100 and would skip to the
-    next occupied bin — arbitrarily far away in a sparse histogram.
-    Per-group bins are bounded by value range / width, so the cumulative
-    window is partition-local and tiny."""
-    from decimal import Decimal
-
-    meta = spark.read.parquet(os.path.join(rollup_path,
-                                           "_hist_meta")).collect()[0]
-    lo, width = float(meta["lo"]), float(meta["width"])
-    hist = spark.read.parquet(os.path.join(rollup_path, "data"))
-    w = (Window.partitionBy(*group_cols).orderBy("bin")
-         .rowsBetween(Window.unboundedPreceding, 0))
-    wt = Window.partitionBy(*group_cols)
-    cum = (hist.withColumn("_cum", F.sum("n").over(w))
-               .withColumn("_tot", F.sum("n").over(wt)))
-    aggs = []
-    for q in qs:
-        num, den = Decimal(str(q)).as_integer_ratio()
-        hit = F.when(F.col("_cum") * int(den) >= F.col("_tot") * int(num),
-                     F.col("bin"))
-        aggs.append((lo + (F.min(hit) + 1) * width)
-                    .alias(f"q_{str(q).replace('.', '_')}"))
-    return cum.groupBy(*group_cols).agg(*aggs)
-
-
 def merge_mg_rollup(spark: SparkSession, rollup_path: str,
                     delta: DataFrame, group_cols: list[str],
-                    item_col: str, k: int = 64,
-                    src_path: str | None = None) -> None:
+                    item_col: str, k: int = 64) -> None:
     """merge_rollup's HEAVY-HITTER sibling: maintain persisted per-group
     Misra-Gries summaries (<= k (item, est) counters per group) and fold
     each micro-batch in by counter-merging the touched groups only —
     the frequency member of the incremental family (additive counts /
-    HLL distinct / histogram quantiles / MG heavy hitters). MG summaries
-    are MERGEABLE (Agarwal et al., "Mergeable Summaries", public): sum
+    MG heavy hitters). MG summaries are MERGEABLE (Agarwal et al.,
+    "Mergeable Summaries", public): sum
     matched counters, then if more than k survive, subtract the
     (k+1)-th largest and drop non-positives — the deterministic
     undercount bound true − est <= N_group/(k+1) holds after ANY fold
@@ -430,13 +299,11 @@ def merge_mg_rollup(spark: SparkSession, rollup_path: str,
     compose into one bound)."""
     import pandas as pd
 
-    src = src_path if src_path is not None else rollup_path
-    src_meta = _meta_dir(src, "mg_meta")
     meta_p = _meta_dir(rollup_path, "mg_meta")
     data_p = os.path.join(rollup_path, "data")
-    if os.path.exists(src_meta):
-        k = int(spark.read.parquet(src_meta).collect()[0]["k"])
-    if not os.path.exists(meta_p):
+    if os.path.exists(meta_p):
+        k = int(spark.read.parquet(meta_p).collect()[0]["k"])
+    else:
         (spark.createDataFrame([(k,)], "k int")
          .repartition(1).write.mode("overwrite").parquet(meta_p))
 
@@ -512,9 +379,8 @@ def merge_mg_rollup(spark: SparkSession, rollup_path: str,
             .mapInPandas(summarize, schema)
             .groupBy(group_cols).applyInPandas(merge_counters, schema)
             .localCheckpoint(eager=False))
-    src_data = os.path.join(src, "data")
-    if os.path.exists(src_data):
-        existing = spark.read.parquet(src_data)
+    if os.path.exists(data_p):
+        existing = spark.read.parquet(data_p)
         touched = part.select(group_cols).distinct()
         affected, untouched = _split_touched(existing, touched, group_cols)
         merged = (affected.unionByName(part)
@@ -532,12 +398,3 @@ def read_mg_rollup(spark: SparkSession, rollup_path: str) -> DataFrame:
     every item with true frequency > N_group/(k+1) is guaranteed
     present."""
     return spark.read.parquet(os.path.join(rollup_path, "data"))
-
-
-def read_hll_rollup(spark: SparkSession, rollup_path: str) -> DataFrame:
-    """The serving view of a merge_hll_rollup table: groups + the
-    approximate distinct count decoded from the persisted sketch."""
-    return (spark.read.parquet(os.path.join(rollup_path, "data"))
-            .withColumn("approx_distinct",
-                        F.hll_sketch_estimate("sketch"))
-            .drop("sketch"))

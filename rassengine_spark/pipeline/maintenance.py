@@ -9,7 +9,7 @@ training jobs actually need):
   appending. `publish_snapshot` records the table's current file list in
   a manifest; `read_snapshot` plans a scan over EXACTLY those files.
   Publishing is metadata-only (no data copy) and O(#files).
-- **compaction**: streaming/micro-batch appends accumulate small files;
+- **compaction**: micro-batch appends accumulate small files;
   at 100 TB scan cost is dominated by per-file overhead and row-group
   fragmentation. `compact_parquet` rewrites the table into
   ceil(bytes/target) files and swaps directories atomically-enough for a

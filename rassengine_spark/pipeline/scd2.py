@@ -57,8 +57,7 @@ def scd2_snapshot(obs: DataFrame, key_cols: list[str], attr_cols: list[str],
 
 def merge_scd2(spark: SparkSession, path: str, batch: DataFrame,
                key_cols: list[str], attr_cols: list[str],
-               ts_col: str, seq_col: str,
-               src_path: str | None = None) -> None:
+               ts_col: str, seq_col: str) -> None:
     """Fold an observation batch into the persisted SCD2 table.
 
     CDC contract: per key, a batch's observations must not precede the
@@ -70,20 +69,14 @@ def merge_scd2(spark: SparkSession, path: str, batch: DataFrame,
     observation, carrying its original (ts, seq)) plus the batch — if
     the first new observation repeats the current attrs it compresses
     away, otherwise the current row closes at the new valid_from.
-    In-place folds are crash-safe via util.swap_commit_dir; ``src_path``
-    reads the previous state from a different root (the streaming
-    tiers' copy-on-write versioning seam)."""
-    read_root = src_path if src_path is not None else path
-    heal_swapped_dir(os.path.join(read_root, "data"))
-    if path != read_root:
-        heal_swapped_dir(os.path.join(path, "data"))
-    src_data = os.path.join(read_root, "data")
+    In-place folds are crash-safe via util.swap_commit_dir."""
     data_p = os.path.join(path, "data")
+    heal_swapped_dir(data_p)
     obs = batch.select(*key_cols, *attr_cols,
                        F.col(ts_col).alias("_ts"),
                        F.col(seq_col).alias("_bseq"))
-    if os.path.exists(src_data):
-        prev = spark.read.parquet(src_data)
+    if os.path.exists(data_p):
+        prev = spark.read.parquet(data_p)
         bkeys = obs.select(*key_cols).distinct()
         untouched = prev.join(bkeys, key_cols, "left_anti")
         touched = prev.join(bkeys, key_cols, "left_semi")

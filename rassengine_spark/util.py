@@ -12,6 +12,14 @@ def qident(name: str) -> str:
     return "`" + name.replace("`", "``") + "`"
 
 
+def sql_quote(s: str) -> str:
+    """Single-quoted Spark SQL string literal, for splicing into SQL-text
+    expression builders. Escapes backslash and quote with a backslash,
+    as the default parser reads them
+    (spark.sql.parser.escapedStringLiterals=false)."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
 def double_array_sql(vals: list[float]) -> str:
     """array<double> literal as SQL text (see double_array_lit). repr()
     round-trips every finite double exactly, so the parsed literal is
@@ -33,9 +41,7 @@ def string_array_lit(vals: list[str]) -> Column:
     """array<string> literal from ONE parsed SQL string (the string twin of
     double_array_lit — per-element F.lit costs one py4j round-trip each,
     which dominates plan construction for template/pool arrays)."""
-    def esc(s: str) -> str:
-        return s.replace("\\", "\\\\").replace("'", "\\'")
-    return F.expr("array(" + ",".join(f"'{esc(v)}'" for v in vals) + ")")
+    return F.expr("array(" + ",".join(map(sql_quote, vals)) + ")")
 
 
 def double_matrix_sql(rows: list[list[float]]) -> str:

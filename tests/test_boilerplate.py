@@ -1,6 +1,6 @@
-"""llmops/boilerplate.py + streaming/boilerplate.py: per-source
-boilerplate line stats — hand-computed semantics, store folds ≡ one-shot,
-crash-safe compaction, idempotent named deltas, streaming maintenance."""
+"""llmops/boilerplate.py: per-source boilerplate line stats —
+hand-computed semantics, store folds ≡ one-shot, crash-safe compaction,
+idempotent named deltas."""
 
 import json
 import os
@@ -11,8 +11,6 @@ from pyspark.sql import functions as F
 from rassengine_spark.llmops.boilerplate import (
     append_line_stats, boilerplate_from_store, boilerplate_lines_by_source,
     compact_line_stats, read_line_stats, save_line_stats)
-from rassengine_spark.streaming.boilerplate import (
-    stream_line_stats_maintenance)
 
 DOCS = [
     # source A: 'header a' in all 3 docs (twice in d1 — counts once),
@@ -138,19 +136,6 @@ def test_empty_fold_is_a_noop(spark, tmp_path):
     assert m["deltas"] == []
 
 
-def _write_jsonl(path, rows):
-    with open(path, "w") as f:
-        for i, s, t in rows:
-            f.write(json.dumps({"doc_id": i, "source": s, "text": t})
-                    + "\n")
-
-
-def _run_stream(spark, dirs, ckpt="ckpt"):
-    q = stream_line_stats_maintenance(spark, dirs["in"], dirs["st"],
-                                      dirs[ckpt], buckets=2)
-    q.awaitTermination(120)
-
-
 def test_concurrent_counter_fold_refused(spark, tmp_path):
     """Manifest-LSM single-writer ENFORCED: a second fold arriving while
     one is mid-commit must raise RuntimeError before reading the
@@ -180,37 +165,6 @@ def test_concurrent_counter_fold_refused(spark, tmp_path):
     os.unlink(path + ".__fold_lock")
     append_counters(df, path)                        # lease freed: folds
     assert load_counter_manifest(path)["deltas"] == ["d1"]
-
-
-def test_stream_matches_one_shot_replay_noop_foreign_rejected(
-        spark, tmp_path):
-    dirs = {k: str(tmp_path / k) for k in ("in", "st", "ckpt", "ckpt2")}
-    os.makedirs(dirs["in"])
-    _write_jsonl(os.path.join(dirs["in"], "a.json"), DOCS[:2])
-    _run_stream(spark, dirs)
-    _write_jsonl(os.path.join(dirs["in"], "b.json"), DOCS[2:])
-    _run_stream(spark, dirs)
-
-    df = spark.createDataFrame(DOCS, SCHEMA)
-    oneshot = _rows(boilerplate_lines_by_source(
-        df, "text", "doc_id", "source", min_docs=2, min_frac_ppm=700_000))
-    assert _rows(boilerplate_from_store(
-        spark, dirs["st"], min_docs=2, min_frac_ppm=700_000)) == oneshot
-
-    # replay with the same checkpoint and no new files: counters frozen
-    marker = json.load(open(os.path.join(dirs["st"], "LATEST.json")))
-    _run_stream(spark, dirs)
-    assert json.load(open(os.path.join(
-        dirs["st"], "LATEST.json"))) == marker
-    assert _rows(boilerplate_from_store(
-        spark, dirs["st"], min_docs=2, min_frac_ppm=700_000)) == oneshot
-
-    # a different checkpoint lineage must be rejected loudly
-    with pytest.raises(Exception) as ei:
-        q = stream_line_stats_maintenance(spark, dirs["in"], dirs["st"],
-                                          dirs["ckpt2"], buckets=2)
-        q.awaitTermination(120)
-    assert "different" in str(ei.value) or "lineage" in str(ei.value)
 
 
 def test_strip_removes_every_flagged_occurrence(spark):
@@ -258,19 +212,6 @@ def test_prep_per_source_boilerplate_stage(spark):
     assert texts[3] == "promo header\ngamma words entirely distinct three"
     # ride-along columns survive the stage rejoin
     assert {r.name for r in out.collect()} == {"d1", "d2", "d3"}
-
-
-def test_cli_stream_boilerplate(spark, tmp_path, capsys):
-    from rassengine_spark.__main__ import main
-    src = tmp_path / "in"
-    src.mkdir()
-    _write_jsonl(str(src / "a.json"), DOCS[:2])
-    assert main(["stream", "--kind", "boilerplate", "--src", str(src),
-                 "--out", str(tmp_path / "st"),
-                 "--checkpoint", str(tmp_path / "ck")]) == 0
-    got = {(r.source, r.norm, r.cnt)
-           for r in read_line_stats(spark, str(tmp_path / "st")).collect()}
-    assert ("A", "header a", 2) in got and ("A", None, 2) in got
 
 
 def test_gc_removes_only_unreferenced_dirs(spark, tmp_path):

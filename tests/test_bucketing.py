@@ -45,63 +45,3 @@ def test_bucketed_groupby_has_no_exchange(spark, bucketed_pair):
     ta, _ = bucketed_pair
     plan = _plan(ta.groupBy("patientId").agg(F.sum("x").alias("sx")))
     assert "Exchange" not in plan
-
-
-def test_streaming_foreachbatch_keeps_bucketed_layout(spark, tmp_path):
-    """Micro-batches appended via bucketed_sink keep the table co-located:
-    a post-ingest join against a bucketed dim plans with no Exchange, and
-    the checkpoint makes re-runs append-nothing (exactly-once)."""
-    import json
-    import os
-
-    from rassengine_spark.streaming.ingest import stream_to_bucketed
-
-    src = tmp_path / "src"
-    src.mkdir()
-
-    def write_batch(name, rows):
-        p = os.path.join(str(src), name)
-        with open(p + ".tmp", "w") as f:
-            for r in rows:
-                f.write(json.dumps(r) + "\n")
-        os.rename(p + ".tmp", p)
-
-    write_batch("b1.json", [{"patientId": i, "x": i % 7} for i in range(50)])
-    write_batch("b2.json", [{"patientId": i, "x": i % 7}
-                            for i in range(50, 100)])
-
-    dim = spark.range(0, 100).select(
-        F.col("id").alias("patientId"), (F.col("id") % 3).alias("grp"))
-    (dim.write.mode("overwrite").bucketBy(8, "patientId")
-        .sortBy("patientId").option("path", str(tmp_path / "dim"))
-        .saveAsTable("t_stream_dim"))
-
-    def run():
-        events = (spark.readStream
-                  .schema("patientId long, x long")
-                  .option("maxFilesPerTrigger", "1")
-                  .json(str(src)))
-        q = stream_to_bucketed(events, "t_stream_fact",
-                               str(tmp_path / "fact"),
-                               str(tmp_path / "ckpt"), "patientId")
-        q.awaitTermination(120)
-
-    try:
-        run()
-        fact = spark.table("t_stream_fact")
-        assert fact.count() == 100
-        old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        try:
-            joined = fact.join(spark.table("t_stream_dim"), "patientId") \
-                         .select("patientId", "x", "grp")
-            plan = _plan(joined)
-            assert "SortMergeJoin" in plan
-            assert "Exchange" not in plan
-        finally:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-        run()   # replay with same checkpoint: nothing new to ingest
-        assert spark.table("t_stream_fact").count() == 100
-    finally:
-        for t in ("t_stream_fact", "t_stream_dim"):
-            spark.sql(f"DROP TABLE IF EXISTS {t}")

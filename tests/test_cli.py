@@ -123,54 +123,6 @@ def test_cli_crawl(spark, tmp_path, capsys):
     assert urls == {"http://good.org/a"}
 
 
-def test_cli_stream_index(spark, tmp_path, capsys):
-    """stream: one availableNow pass of the term-index maintainer."""
-    import os
-
-    src = tmp_path / "stream_in"
-    src.mkdir()
-    (src / "a.json").write_text(
-        json.dumps({"doc_id": 1, "text": "spark streams segments"}) + "\n")
-    out = str(tmp_path / "segidx")
-    ckpt = str(tmp_path / "segckpt")
-
-    from rassengine_spark.__main__ import main
-    assert main(["stream", "--kind", "index", "--src", str(src),
-                 "--out", out, "--checkpoint", ckpt]) == 0
-    res = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert res["kind"] == "index"
-    assert os.path.exists(os.path.join(out, "LATEST.json"))
-
-    from rassengine_spark.streaming.index import bm25_topk_from_segments
-    got = bm25_topk_from_segments(spark, out, "segments").collect()
-    assert [r.id for r in got] == [1]
-
-
-def test_cli_stream_clusters(spark, tmp_path, capsys):
-    """stream: one availableNow pass of the cluster maintainer."""
-    import os
-
-    src = tmp_path / "pairs_in"
-    src.mkdir()
-    (src / "a.json").write_text(
-        json.dumps({"id_a": 1, "id_b": 2}) + "\n"
-        + json.dumps({"id_a": 2, "id_b": 3}) + "\n")
-    out = str(tmp_path / "clusters")
-    ckpt = str(tmp_path / "clckpt")
-
-    from rassengine_spark.__main__ import main
-    assert main(["stream", "--kind", "clusters", "--src", str(src),
-                 "--out", out, "--checkpoint", ckpt]) == 0
-    res = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert res["kind"] == "clusters"
-    assert os.path.exists(os.path.join(out, "LATEST.json"))
-
-    from rassengine_spark.streaming.clusters import read_stream_clusters
-    got = {(r.node, r.root, r.cluster_size)
-           for r in read_stream_clusters(spark, out).collect()}
-    assert got == {(1, 1, 3), (2, 1, 3), (3, 1, 3)}
-
-
 def test_cli_table_compact_store(spark, tmp_path, capsys):
     """table --compact-store folds a term store's append slivers and the
     store keeps serving identical results."""
@@ -204,74 +156,6 @@ def test_cli_table_compact_store(spark, tmp_path, capsys):
     assert [(r.id, r.score)
             for r in bm25_topk_from_store(spark, path, "spark join",
                                           k=3).collect()] == before
-
-
-def test_cli_stream_dq_and_compact(spark, tmp_path, capsys):
-    """stream --kind dq folds a completeness suite from JSON batches;
-    table --compact-store dq keeps the served report identical."""
-    import json as _json
-    import os as _os
-
-    from rassengine_spark.__main__ import main
-    from rassengine_spark.llmops.dataquality import dq_report_from_counters
-
-    src = str(tmp_path / "in")
-    store = str(tmp_path / "st")
-    ck = str(tmp_path / "ck")
-    _os.makedirs(src)
-    with open(_os.path.join(src, "a.json"), "w") as f:
-        for i in range(6):
-            f.write(_json.dumps(
-                {"name": None if i % 3 == 0 else f"n{i}"}) + "\n")
-    assert main(["stream", "--kind", "dq", "--src", src, "--out", store,
-                 "--checkpoint", ck, "--dq-columns", "name"]) == 0
-    _json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    before = {r["check"]: (r.metric, r.passed) for r in
-              dq_report_from_counters(spark, store).collect()}
-    assert before["completeness(name)"] == (0.6667, False)
-    assert main(["table", "--path", store, "--compact-store", "dq"]) == 0
-    assert {r["check"]: (r.metric, r.passed) for r in
-            dq_report_from_counters(spark, store).collect()} == before
-
-
-def test_cli_stream_kmv_and_lm(spark, tmp_path, capsys):
-    """stream --kind kmv / lm fold sketch and LM-count stores from JSON
-    batches; table --compact-store keeps the served state identical."""
-    import json as _json
-    import os as _os
-
-    from rassengine_spark.__main__ import main
-    from rassengine_spark.llmops.lm_score import kn_model_from_store
-    from rassengine_spark.llmops.overlap import read_kmv_store
-
-    src = str(tmp_path / "in")
-    _os.makedirs(src)
-    with open(_os.path.join(src, "a.json"), "w") as f:
-        for i in range(8):
-            f.write(_json.dumps({"g": f"s{i % 2}", "doc_id": i,
-                                 "text": f"w{i} w{i+1} w{i+2}"}) + "\n")
-
-    kst, kck = str(tmp_path / "kst"), str(tmp_path / "kck")
-    assert main(["stream", "--kind", "kmv", "--src", src, "--out", kst,
-                 "--checkpoint", kck]) == 0
-    before = {r.g: r.hs for r in read_kmv_store(spark, kst).collect()}
-    assert set(before) == {"s0", "s1"}
-    assert main(["table", "--path", kst, "--compact-store", "kmv"]) == 0
-    assert {r.g: r.hs for r in
-            read_kmv_store(spark, kst).collect()} == before
-
-    lst, lck = str(tmp_path / "lst"), str(tmp_path / "lck")
-    assert main(["stream", "--kind", "lm", "--src", src, "--out", lst,
-                 "--checkpoint", lck]) == 0
-    m_before = kn_model_from_store(spark, lst)
-    # materialize BEFORE compaction GCs the delta files under the lazy DF
-    bc_before = sorted(map(tuple, m_before[0].collect()))
-    assert m_before[3] > 0 and m_before[4] > 0
-    assert main(["table", "--path", lst, "--compact-store", "lm"]) == 0
-    m_after = kn_model_from_store(spark, lst)
-    assert (m_after[3], m_after[4]) == (m_before[3], m_before[4])
-    assert sorted(map(tuple, m_after[0].collect())) == bc_before
-    capsys.readouterr()
 
 
 def test_cli_health(spark, tmp_path, capsys):

@@ -187,7 +187,7 @@ def test_prefix_filter_short_and_empty_docs(spark):
 
 
 # ---------------------------------------------------------------------------
-# Incremental DQ counter store + streaming maintenance
+# Incremental DQ counter store
 # ---------------------------------------------------------------------------
 
 def _orders_checks():
@@ -221,82 +221,6 @@ def test_dq_append_rejects_suite_mismatch(spark, tmp_path):
         DQ.append_dq_counters(df, [DQ.completeness("id")], path)
 
 
-def test_dq_stream_matches_one_shot(spark, tmp_path):
-    """Streamed DQ counters == one-shot suite over the union; replay is
-    a no-op; foreign checkpoint rejected."""
-    import json as _json
-    import os as _os
-
-    from rassengine_spark.streaming.dataquality import (
-        stream_dq_counters_maintenance)
-
-    dirs = {k: str(tmp_path / k) for k in ("in", "st", "ck", "ck2")}
-    _os.makedirs(dirs["in"])
-    rows = [(i, None if i % 6 == 0 else (i % 9) - 1) for i in range(40)]
-
-    def write(name, chunk):
-        with open(_os.path.join(dirs["in"], name), "w") as f:
-            for i, v in chunk:
-                f.write(_json.dumps({"id": i, "v": v}) + "\n")
-
-    def run(ck="ck"):
-        q = stream_dq_counters_maintenance(
-            spark, dirs["in"], dirs["st"], dirs[ck],
-            "id long, v long", _orders_checks(), buckets=2)
-        q.awaitTermination(120)
-
-    write("a.json", rows[:17])
-    run()
-    write("b.json", rows[17:])
-    run()
-
-    df = spark.createDataFrame(rows, "id long, v long")
-    got = {r["check"]: (r.metric, r.passed) for r in
-           DQ.dq_report_from_counters(spark, dirs["st"]).collect()}
-    want = {r["check"]: (r.metric, r.passed) for r in
-            DQ.check_suite(df, _orders_checks()).collect()}
-    assert got == want
-
-    marker = _json.load(open(_os.path.join(dirs["st"], "LATEST.json")))
-    run()                                     # replay: no new files
-    assert _json.load(open(_os.path.join(
-        dirs["st"], "LATEST.json"))) == marker
-
-    with pytest.raises(Exception) as ei:
-        run("ck2")
-    assert "different" in str(ei.value) or "lineage" in str(ei.value)
-
-
-def test_dq_stream_attaches_to_one_shot_store(spark, tmp_path):
-    """A store built one-shot is folded into, never rebuilt over."""
-    import json as _json
-    import os as _os
-
-    from rassengine_spark.streaming.dataquality import (
-        stream_dq_counters_maintenance)
-
-    dirs = {k: str(tmp_path / k) for k in ("in", "st", "ck")}
-    _os.makedirs(dirs["in"])
-    base = [(i, i % 3) for i in range(10)]
-    extra = [(100 + i, None if i % 2 else 1) for i in range(8)]
-    checks = _orders_checks()
-    DQ.save_dq_counters(
-        spark.createDataFrame(base, "id long, v long"), checks, dirs["st"])
-    with open(_os.path.join(dirs["in"], "a.json"), "w") as f:
-        for i, v in extra:
-            f.write(_json.dumps({"id": i, "v": v}) + "\n")
-    q = stream_dq_counters_maintenance(
-        spark, dirs["in"], dirs["st"], dirs["ck"],
-        "id long, v long", checks, buckets=2)
-    q.awaitTermination(120)
-    df = spark.createDataFrame(base + extra, "id long, v long")
-    got = {r["check"]: (r.metric, r.passed) for r in
-           DQ.dq_report_from_counters(spark, dirs["st"]).collect()}
-    want = {r["check"]: (r.metric, r.passed) for r in
-            DQ.check_suite(df, checks).collect()}
-    assert got == want
-
-
 def test_psi_fold_matches_one_shot(spark, tmp_path):
     """Baseline-save + any partition of current-batch folds (with a
     mid-sequence compaction) serves the same report as psi_drift over
@@ -327,42 +251,6 @@ def test_psi_counters_rejects_bad_side(spark):
     df = spark.createDataFrame([(1, "a", 2.0)], "id long, g string, v double")
     with pytest.raises(ValueError, match="side"):
         DQ.value_bin_counters(df, "g", "v", "nope", 0.0, 10.0)
-
-
-def test_psi_stream_requires_baseline_and_matches(spark, tmp_path):
-    """The PSI stream refuses to run without a baseline store, then
-    folds current batches to the exact one-shot report."""
-    import json as _json
-    import os as _os
-
-    from rassengine_spark.streaming.dataquality import (
-        stream_psi_current_maintenance)
-
-    dirs = {k: str(tmp_path / k) for k in ("in", "st", "ck")}
-    _os.makedirs(dirs["in"])
-    with pytest.raises(FileNotFoundError, match="baseline"):
-        stream_psi_current_maintenance(spark, dirs["in"], dirs["st"],
-                                       dirs["ck"], "g string, v double")
-
-    rows = [("g" + str(i % 2), float((i * 7) % 50) + (25.0 if i % 3 else 0.0),
-             i % 4 == 0) for i in range(120)]
-    df = spark.createDataFrame(rows, "g string, v double, b boolean")
-    DQ.save_psi_counters(df.filter("b"), "g", "v", dirs["st"],
-                         lo=0.0, hi=80.0)
-    cur = [(g, v) for g, v, b in rows if not b]
-    for name, chunk in (("a.json", cur[:40]), ("b.json", cur[40:])):
-        with open(_os.path.join(dirs["in"], name), "w") as f:
-            for g, v in chunk:
-                f.write(_json.dumps({"g": g, "v": v}) + "\n")
-    q = stream_psi_current_maintenance(spark, dirs["in"], dirs["st"],
-                                       dirs["ck"], "g string, v double")
-    q.awaitTermination(120)
-    got = {r.g: (r.psi, r.n_base, r.n_cur, r.drifted) for r in
-           DQ.psi_report_from_counters(spark, dirs["st"]).collect()}
-    want = {r.g: (r.psi, r.n_base, r.n_cur, r.drifted) for r in
-            DQ.psi_drift(df, "g", "v", F.col("b"),
-                         lo=0.0, hi=80.0).collect()}
-    assert got == want
 
 
 def test_k_anonymity_hand_computed(spark):

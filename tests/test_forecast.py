@@ -123,48 +123,6 @@ def test_holt_state_out_of_order_rejected(spark, tmp_path):
         append_holt_buckets(spark, stale, "k", "t", "y", path)
 
 
-def test_stream_holt_maintenance_equals_oneshot(spark, tmp_path):
-    """Streamed bucket folds == one-shot recurrence; replay no-op."""
-    import json as _json
-    import os as _os
-
-    from rassengine_spark.operators.forecast import (forecast_from_state,
-                                                     holt_forecast_micro)
-    from rassengine_spark.streaming.forecast import stream_holt_maintenance
-
-    dirs = {k: str(tmp_path / k) for k in ("in", "st", "ck")}
-    _os.makedirs(dirs["in"])
-    rows = [("a", t, float(10 + 2 * t)) for t in range(8)]
-    rows += [("b", t, float(40 - 3 * t)) for t in range(8)]
-
-    def write(name, chunk):
-        with open(_os.path.join(dirs["in"], name), "w") as f:
-            for k, t, y in chunk:
-                f.write(_json.dumps({"k": k, "t": t, "y": y}) + "\n")
-
-    def run():
-        q = stream_holt_maintenance(spark, dirs["in"], dirs["st"],
-                                    dirs["ck"])
-        q.awaitTermination(120)
-
-    write("a.json", [r for r in rows if r[1] < 4])
-    run()
-    write("b.json", [r for r in rows if r[1] >= 4])
-    run()
-
-    df = spark.createDataFrame(rows, "k string, t long, y double")
-    got = sorted(map(tuple, forecast_from_state(
-        spark, dirs["st"], horizons=2).collect()))
-    want = sorted(map(tuple, holt_forecast_micro(
-        df, "k", "t", "y", horizons=2).collect()))
-    assert got == want
-
-    marker = _json.load(open(_os.path.join(dirs["st"], "LATEST.json")))
-    run()
-    assert _json.load(open(_os.path.join(
-        dirs["st"], "LATEST.json"))) == marker
-
-
 def test_backtest_constant_series_null_mase(spark):
     from rassengine_spark.operators.forecast import holt_backtest_micro
     rows = [("a", t, 7.0) for t in range(5)]
@@ -173,50 +131,6 @@ def test_backtest_constant_series_null_mase(spark):
     assert r.naive_sae_micro == 0 and r.mase_ppm is None
     assert r.sae_micro == 0
     assert r.n_steps == 3
-
-
-def test_stream_holt_crash_replay_recovers(spark, tmp_path):
-    """Crash window between the state swap and the marker commit: the
-    replayed batch folds to a no-op instead of raising forever (the
-    failure the strict CDC check would otherwise cause on restart)."""
-    import json as _json
-    import os as _os
-
-    from rassengine_spark.operators.forecast import (append_holt_buckets,
-                                                     forecast_from_state,
-                                                     holt_forecast_micro)
-    from rassengine_spark.streaming.forecast import stream_holt_maintenance
-
-    dirs = {k: str(tmp_path / k) for k in ("in", "st", "ck")}
-    _os.makedirs(dirs["in"])
-    rows = [("a", t, float(10 + 2 * t)) for t in range(6)]
-
-    def write(name, chunk):
-        with open(_os.path.join(dirs["in"], name), "w") as f:
-            for k, t, y in chunk:
-                f.write(_json.dumps({"k": k, "t": t, "y": y}) + "\n")
-
-    def run():
-        q = stream_holt_maintenance(spark, dirs["in"], dirs["st"],
-                                    dirs["ck"])
-        q.awaitTermination(120)
-
-    write("a.json", rows[:3])
-    run()
-    # simulate the crash: batch b1's data was FOLDED (state advanced)
-    # but the marker was not committed — fold the next chunk manually,
-    # leaving LATEST.json at the pre-fold batch id
-    batch = spark.createDataFrame(rows[3:], "k string, t long, y double")
-    append_holt_buckets(spark, batch, "k", "t", "y", dirs["st"])
-    write("b.json", rows[3:])
-    run()                       # replays the folded data: must not raise
-
-    df = spark.createDataFrame(rows, "k string, t long, y double")
-    got = sorted(map(tuple, forecast_from_state(
-        spark, dirs["st"], horizons=2).collect()))
-    want = sorted(map(tuple, holt_forecast_micro(
-        df, "k", "t", "y", horizons=2).collect()))
-    assert got == want
 
 
 def test_seasonal_strength_detects_weekly_pattern(spark):

@@ -249,32 +249,38 @@ def test_append_hnsw_index_segments(spark, tmp_path):
 def test_compact_hnsw_store_preserves_serving(spark, tmp_path):
     """Compaction rebuilds one fresh shard generation from the store's
     own vectors and swaps it in: exhaustive serving identical before and
-    after, the sparse appended part_id namespace collapses, and no
-    backup/tmp siblings remain."""
+    after, the appended generation's part_ids fold back into the
+    save-time layout, and no backup/tmp siblings remain."""
     import os
 
-    from rassengine_spark.llmops.hnsw import (append_hnsw_index_at,
+    from rassengine_spark.llmops.hnsw import (_SUBSHARD_STRIDE,
+                                              append_hnsw_index,
                                               compact_hnsw_store,
-                                              hnsw_topk_from_store_df)
+                                              hnsw_topk_from_store_df,
+                                              save_hnsw_index)
     corpus, qs = _clustered(spark), _queries(spark)
     path = str(tmp_path / "g")
     first = corpus.filter(F.col("vec_id") < 120)
     rest = corpus.filter(F.col("vec_id") >= 120)
-    append_hnsw_index_at(first, "v", "vec_id", path, part_offset=1 << 16)
-    append_hnsw_index_at(rest, "v", "vec_id", path, part_offset=2 << 16)
+    save_hnsw_index(first, "v", "vec_id", path, partitions=2)
+    append_hnsw_index(rest, "v", "vec_id", path, partitions=2)
+
+    def part_ids():
+        return {r.part_id for r in spark.read.parquet(path)
+                .select("part_id").distinct().collect()}
+
+    # part_id = offset + build partition * stride (one subshard each):
+    # the save writes {0, S}; the append continues at offset S + 1
+    s = _SUBSHARD_STRIDE
+    assert part_ids() == {0, s, s + 1, 2 * s + 1}
     before = hnsw_topk_from_store_df(spark, path, qs, "v", "qid", k=5,
                                      ef_search=10 ** 6).collect()
-    parts_before = {r.part_id for r in spark.read.parquet(path)
-                    .select("part_id").distinct().collect()}
-    assert min(parts_before) >= 1 << 16
     compact_hnsw_store(spark, path, partitions=2)
     after = hnsw_topk_from_store_df(spark, path, qs, "v", "qid", k=5,
                                     ef_search=10 ** 6).collect()
     key = lambda rows: [(r.query_id, r.id, r.score, r.rank) for r in rows]
     assert key(after) == key(before)
-    parts_after = {r.part_id for r in spark.read.parquet(path)
-                   .select("part_id").distinct().collect()}
-    assert max(parts_after) < 1 << 16      # namespace reset
+    assert part_ids() == {0, s}            # one generation, offset 0
     assert not os.path.exists(path + ".__fold_bak")
     assert not os.path.exists(path + ".__fold_tmp")
 

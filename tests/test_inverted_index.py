@@ -54,3 +54,29 @@ def test_query_prunes_to_query_terms(spark):
                                 k=5)._jdf.queryExecution() \
         .optimizedPlan().toString()
     assert "spark" in plan and "join" in plan   # term literals in filter
+
+
+def test_batch_query_ids_with_quotes_round_trip(spark):
+    """Query ids reach the plan as SQL string literals (util.sql_quote):
+    ids carrying quotes and backslashes come back unchanged on both the
+    pivot fold and the long-query literal-map fold, each with the same
+    ranking the single-query scorer gives; string_array_lit round-trips
+    the same strings."""
+    from rassengine_spark.operators.inverted_index import (
+        _MAX_PIVOT_POS, bm25_batch_topk_from_index)
+    from rassengine_spark.util import string_array_lit
+
+    ids = ["o'brien", "a\\b", "x''y"]
+    postings, doclens, stats = build_term_index(corpus(spark), "text", "id")
+    for q in ["spark join", "spark join" + " spark" * _MAX_PIVOT_POS]:
+        want = [(r.id, r.score)
+                for r in bm25_topk_from_index(postings, doclens, stats,
+                                              q, k=3).collect()]
+        got: dict = {}
+        for r in bm25_batch_topk_from_index(
+                postings, doclens, stats, {qid: q for qid in ids},
+                k=3).orderBy("query_id", "rank").collect():
+            got.setdefault(r.query_id, []).append((r.id, r.score))
+        assert got == {qid: want for qid in ids}, q
+    arr = spark.range(1).select(string_array_lit(ids).alias("a")).first().a
+    assert arr == ids

@@ -158,51 +158,3 @@ def test_lm_store_crash_replay_heals(spark, tmp_path):
     bc = {(r.w1, r.w2): r.c2 for r in bigrams.collect()}
     assert bc == {("a", "b"): 2, ("b", "c"): 1, ("b", "d"): 1}
     assert vocab == 4                                   # a b c d
-
-
-def test_stream_lm_maintenance_equals_fit(spark, tmp_path):
-    """Streamed LM-count folds == one-shot fit over all rows; replay is
-    a no-op; a pre-built store is attached to, not rebuilt."""
-    import json as _json
-    import os as _os
-
-    from rassengine_spark.llmops.lm_score import (fit_kn_bigram_lm,
-                                                  kn_model_from_store,
-                                                  save_lm_store)
-    from rassengine_spark.streaming.lm import stream_lm_maintenance
-
-    dirs = {k: str(tmp_path / k) for k in ("in", "st", "ck")}
-    _os.makedirs(dirs["in"])
-    rows = [(i, f"w{i % 5} w{(i + 1) % 5} w{(i + 2) % 3}")
-            for i in range(24)]
-
-    def write(name, chunk):
-        with open(_os.path.join(dirs["in"], name), "w") as f:
-            for i, t in chunk:
-                f.write(_json.dumps({"doc_id": i, "text": t}) + "\n")
-
-    def run():
-        q = stream_lm_maintenance(spark, dirs["in"], dirs["st"],
-                                  dirs["ck"], buckets=2)
-        q.awaitTermination(120)
-
-    # pre-build on the first 8 docs: the stream must attach, not rebuild
-    save_lm_store(spark.createDataFrame(rows[:8],
-                                        "doc_id long, text string"),
-                  "text", "doc_id", dirs["st"], buckets=2)
-    write("a.json", rows[8:16])
-    run()
-    write("b.json", rows[16:])
-    run()
-
-    train = spark.createDataFrame(rows, "doc_id long, text string")
-    got = kn_model_from_store(spark, dirs["st"])
-    want = fit_kn_bigram_lm(train, "text", "doc_id")
-    assert got[3] == want[3] and got[4] == want[4]
-    assert sorted(map(tuple, got[0].collect())) == \
-        sorted(map(tuple, want[0].collect()))
-
-    marker = _json.load(open(_os.path.join(dirs["st"], "LATEST.json")))
-    run()
-    assert _json.load(open(_os.path.join(
-        dirs["st"], "LATEST.json"))) == marker

@@ -153,49 +153,6 @@ def test_append_rejects_smaller_shard_k(spark, tmp_path):
                      path, k=32)
 
 
-def test_stream_kmv_maintenance_equals_oneshot(spark, tmp_path):
-    """Streamed sketch folds == one-shot sketch of all rows; replay is
-    a no-op; attaching with a different k defers to the manifest."""
-    import json as _json
-    import os as _os
-
-    from rassengine_spark.streaming.overlap import stream_kmv_maintenance
-
-    dirs = {k: str(tmp_path / k) for k in ("in", "st", "ck")}
-    _os.makedirs(dirs["in"])
-    rows = [("a" if i % 2 else "b", f"w{i} w{i+1} w{i+2}")
-            for i in range(40)]
-
-    def write(name, chunk):
-        with open(_os.path.join(dirs["in"], name), "w") as f:
-            for g, t in chunk:
-                f.write(_json.dumps({"g": g, "text": t}) + "\n")
-
-    def run(k=8):
-        q = stream_kmv_maintenance(spark, dirs["in"], dirs["st"],
-                                   dirs["ck"], k=k, shingle_n=2,
-                                   buckets=2)
-        q.awaitTermination(120)
-
-    write("a.json", rows[:15])
-    run()
-    write("b.json", rows[15:])
-    # different k argument on attach: manifest k (8) must win
-    run(k=4)
-
-    from rassengine_spark.llmops.overlap import read_kmv_store
-    df = spark.createDataFrame(rows, "g string, text string")
-    want = {r.g: r.hs for r in
-            kmv_sketch(df, "g", "text", k=8, shingle_n=2).collect()}
-    got = {r.g: r.hs for r in read_kmv_store(spark, dirs["st"]).collect()}
-    assert got == want
-
-    marker = _json.load(open(_os.path.join(dirs["st"], "LATEST.json")))
-    run()                                     # replay: no new files
-    assert _json.load(open(_os.path.join(
-        dirs["st"], "LATEST.json"))) == marker
-
-
 def test_disparate_sizes_null_containment_not_nan(spark):
     """k=2 with one huge corpus whose hashes dominate the union sample:
     the starved side's containment is NULL, never inf/NaN."""

@@ -1,5 +1,5 @@
 """End-to-end pipeline tests: text/markdown sources (S3/S4), batch ingest
-with idempotent upsert (S9), the /ask lifecycle (§3.1), streaming ingest."""
+with idempotent upsert (S9), the /ask lifecycle (§3.1), rollup folds."""
 
 import json
 
@@ -193,42 +193,6 @@ def test_ask_ner_filter_routes(pipeline):
     for r in res.hits.collect():
         assert (r.conditionCodeText or "").lower() == "hypertension" \
             or r.doc_type == "unstructured"
-
-
-def test_ask_hybrid_rrf_fusion_route(spark, corpus_dir):
-    """hybrid_fusion='rrf' swaps the HYBRID route for rank fusion: same
-    lifecycle, hits non-empty, and the score column carries RRF values
-    (sums of 1/(60+rank) — bounded by 2/61)."""
-    _, out, _ = corpus_dir
-    docs = spark.read.parquet(str(out / "documents"))
-    chunks = spark.read.parquet(str(out / "chunks"))
-    p = AskPipeline(docs, chunks, dim=16, hybrid_fusion="rrf")
-    res = p.ask("Find patients with hypertension", "u1")
-    assert res.intent == "HYBRID"
-    rows = res.hits.collect()
-    assert rows
-    for r in rows:
-        assert 0.0 < r.score <= round(2 / 61, 6) + 1e-9
-    with pytest.raises(ValueError):
-        AskPipeline(docs, chunks, dim=16, hybrid_fusion="bogus")
-
-
-# ------------------------------------------------------------ streaming
-def test_streaming_ingest(spark, tmp_path):
-    from rassengine_spark.streaming.ingest import stream_fhir_uploads
-    up = tmp_path / "uploads"
-    up.mkdir()
-    (up / "patient_1_bundle.json").write_text(json.dumps(BUNDLE))
-    out = tmp_path / "wh"
-    ckpt = tmp_path / "ckpt"
-    q = stream_fhir_uploads(spark, str(up), str(out), str(ckpt),
-                            chunk_size=64, dim=16)
-    q.awaitTermination(120)
-    docs = spark.read.parquet(str(out / "documents"))
-    assert docs.count() == 9
-    chunks = spark.read.parquet(str(out / "chunks"))
-    assert chunks.count() >= 2
-    assert len(chunks.first().embedding) == 16
 
 
 def test_merge_rollup_incremental_equals_full(spark, tmp_path):

@@ -34,98 +34,6 @@ def test_sketch_rollup_tracks_exact(spark):
         assert abs(r.a - r.e) <= max(5, 0.15 * r.e)
 
 
-def test_hll_rollup_incremental_merge_equals_full(spark, tmp_path):
-    """The distinct-count rollup invariant: maintaining the sketch table
-    over three batches gives EXACTLY the estimates of sketching the
-    concatenated stream once — union(sketch(A), sketch(B)) == sketch(A++B)
-    at fixed lg_k, so incremental serving never drifts from a rebuild."""
-    from rassengine_spark.pipeline.ingest import (merge_hll_rollup,
-                                                  read_hll_rollup)
-
-    path = str(tmp_path / "hll")
-    batches = [
-        [("g1", i) for i in range(200)] + [("g2", i) for i in range(50)],
-        [("g1", i) for i in range(100, 300)],          # overlaps batch 1
-        [("g3", i) for i in range(25)],                # new group
-    ]
-    for b in batches:
-        delta = spark.createDataFrame(b, "g string, u long")
-        merge_hll_rollup(spark, path, delta, ["g"], "u")
-
-    got = {r.g: r.approx_distinct
-           for r in read_hll_rollup(spark, path).collect()}
-    full = spark.createDataFrame(sum(batches, []), "g string, u long")
-    import pyspark.sql.functions as F
-    want = {r.g: r.a for r in
-            (full.groupBy("g")
-                 .agg(F.hll_sketch_estimate(
-                     F.hll_sketch_agg("u", F.lit(12))).alias("a"))
-             .collect())}
-    assert got == want
-    # estimates stay near truth (g1 saw 300 distinct, g2 50, g3 25)
-    truth = {"g1": 300, "g2": 50, "g3": 25}
-    for g, t in truth.items():
-        assert abs(got[g] - t) <= max(3, 0.05 * t), (g, got[g], t)
-
-
-def test_histogram_rollup_incremental_equals_full_and_bounds_error(
-        spark, tmp_path):
-    import random
-
-    from rassengine_spark.pipeline.ingest import (merge_histogram_rollup,
-                                                  read_histogram_quantiles)
-
-    rnd = random.Random(7)
-    rows = [("a" if i % 3 else "b", rnd.uniform(0, 100))
-            for i in range(600)]
-    half = len(rows) // 2
-    inc = str(tmp_path / "inc")
-    full = str(tmp_path / "full")
-
-    def df(rs):
-        return spark.createDataFrame(rs, "grp string, v double")
-
-    merge_histogram_rollup(spark, inc, df(rows[:half]), ["grp"], "v",
-                           lo=0.0, width=2.0)
-    # second batch passes a DIFFERENT width: the persisted spec must win
-    merge_histogram_rollup(spark, inc, df(rows[half:]), ["grp"], "v",
-                           lo=0.0, width=999.0)
-    merge_histogram_rollup(spark, full, df(rows), ["grp"], "v",
-                           lo=0.0, width=2.0)
-
-    import os
-    inc_rows = sorted(map(tuple, spark.read.parquet(
-        os.path.join(inc, "data")).collect()))
-    full_rows = sorted(map(tuple, spark.read.parquet(
-        os.path.join(full, "data")).collect()))
-    assert inc_rows == full_rows          # incremental == rebuild exactly
-
-    got = {r.grp: (r.q_0_5, r.q_0_99) for r in
-           read_histogram_quantiles(spark, inc, ["grp"],
-                                    [0.5, 0.99]).collect()}
-    for grp in ("a", "b"):
-        vals = sorted(v for g, v in rows if g == grp)
-        for q, est in zip((0.5, 0.99), got[grp]):
-            import math
-            exact = vals[math.ceil(q * len(vals)) - 1]
-            assert abs(est - exact) <= 2.0 + 1e-9   # within one bin width
-
-
-def test_histogram_quantile_rank_is_exact_on_fp_boundaries(spark, tmp_path):
-    # 0.55 * 100 = 55.00000000000001 in double: a double-product rank
-    # test skips past the 55-count bin to a far outlier bin
-    from rassengine_spark.pipeline.ingest import (merge_histogram_rollup,
-                                                  read_histogram_quantiles)
-    rows = [("g", 0.2)] * 55 + [("g", 2000.5)] * 45
-    merge_histogram_rollup(
-        spark, str(tmp_path / "h"),
-        spark.createDataFrame(rows, "grp string, v double"),
-        ["grp"], "v", lo=0.0, width=1.0)
-    got = read_histogram_quantiles(spark, str(tmp_path / "h"), ["grp"],
-                                   [0.55]).collect()[0]
-    assert got.q_0_55 == 1.0      # upper edge of the 55-count bin
-
-
 def test_quantile_sketch_bounds_all_true(spark):
     from rassengine_spark.operators.sketches import quantile_sketch_bounds
 

@@ -363,57 +363,6 @@ def test_score_hist_store_fold_equals_one_shot(spark, tmp_path):
     assert got == want
 
 
-def test_stream_score_hist_matches_one_shot(spark, tmp_path):
-    """Streamed histogram thresholds == one-shot over the union; replay
-    is a no-op; foreign checkpoint rejected."""
-    import json as _json
-
-    import pytest as _pytest
-
-    from rassengine_spark.llmops.splits import (
-        _quantile_thresholds, quantile_thresholds_from_store,
-        score_histogram)
-    from rassengine_spark.streaming.quantiles import (
-        stream_score_hist_maintenance)
-
-    dirs = {k: str(tmp_path / k) for k in ("in", "st", "ck", "ck2")}
-    import os as _os
-    _os.makedirs(dirs["in"])
-    rows = [(i, "G" + str(i % 2), (i * 3) % 7) for i in range(40)]
-
-    def write(name, chunk):
-        with open(_os.path.join(dirs["in"], name), "w") as f:
-            for i, g, s in chunk:
-                f.write(_json.dumps({"id": i, "lang": g, "score": s})
-                        + "\n")
-
-    def run(ck="ck"):
-        q = stream_score_hist_maintenance(spark, dirs["in"], dirs["st"],
-                                          dirs[ck], buckets=2)
-        q.awaitTermination(120)
-
-    write("a.json", rows[:15])
-    run()
-    write("b.json", rows[15:])
-    run()
-
-    df = spark.createDataFrame(rows, "id long, lang string, score long")
-    want = {tuple(r) for r in _quantile_thresholds(
-        score_histogram(df, "score", "lang"), "lang", "score",
-        300_000).collect()}
-    assert {tuple(r) for r in quantile_thresholds_from_store(
-        spark, dirs["st"], 300_000).collect()} == want
-
-    marker = _json.load(open(_os.path.join(dirs["st"], "LATEST.json")))
-    run()                                     # replay: no new files
-    assert _json.load(open(_os.path.join(
-        dirs["st"], "LATEST.json"))) == marker
-
-    with _pytest.raises(Exception) as ei:
-        run("ck2")
-    assert "different" in str(ei.value) or "lineage" in str(ei.value)
-
-
 def test_drop_bottom_quantile_null_group_is_a_group(spark):
     """NULL group rows form their own partition (the rank-window spec),
     not a silent full drop."""
@@ -425,38 +374,3 @@ def test_drop_bottom_quantile_null_group_is_a_group(spark):
         df, "s", "id", "g", drop_ppm=250_000).collect()}
     # NULL group: n=4, k=1 -> drop id 1 (s=1); A: n=2, k=0 -> keep both
     assert kept == {2, 3, 4, 5, 6}
-
-
-def test_stream_attaches_to_one_shot_store(spark, tmp_path):
-    """A store built one-shot (no stream marker) must be FOLDED INTO by
-    a new stream, never silently rebuilt over."""
-    import json as _json
-    import os as _os
-
-    from rassengine_spark.llmops.splits import (
-        quantile_thresholds_from_store, save_score_hist,
-        _quantile_thresholds, score_histogram)
-    from rassengine_spark.streaming.quantiles import (
-        stream_score_hist_maintenance)
-
-    dirs = {k: str(tmp_path / k) for k in ("in", "st", "ck")}
-    _os.makedirs(dirs["in"])
-    batch1 = [(i, "G0", i % 5) for i in range(20)]
-    df1 = spark.createDataFrame(batch1, "id long, lang string, score long")
-    save_score_hist(df1, "score", "lang", dirs["st"], buckets=2)
-
-    batch2 = [(100 + i, "G1", i % 3) for i in range(10)]
-    with open(_os.path.join(dirs["in"], "a.json"), "w") as f:
-        for i, g, s in batch2:
-            f.write(_json.dumps({"id": i, "lang": g, "score": s}) + "\n")
-    q = stream_score_hist_maintenance(spark, dirs["in"], dirs["st"],
-                                      dirs["ck"], buckets=2)
-    q.awaitTermination(120)
-
-    union = spark.createDataFrame(batch1 + batch2,
-                                  "id long, lang string, score long")
-    want = {tuple(r) for r in _quantile_thresholds(
-        score_histogram(union, "score", "lang"), "lang", "score",
-        250_000).collect()}
-    assert {tuple(r) for r in quantile_thresholds_from_store(
-        spark, dirs["st"], 250_000).collect()} == want
