@@ -10,88 +10,93 @@ Semantics reproduced (SURVEY.md §2.3; public OpenSearch docs):
 - `multi_match type=phrase_prefix, operator=and` = all terms prefix-match.
 - `filter` clauses are non-scoring predicates.
 
-All builders return plain Column expressions; a search operator is then
-`df.withColumn("score", expr).filter(score > 0).orderBy(desc, id).limit(k)`
-which Spark executes as scan -> project -> TakeOrderedAndProject: no shuffle,
-limit pushed to every partition — the same early-termination the reference
-gets from `terminate_after: k` (app/main.py:1515).
+All builders return Spark SQL text (see functions/text.py for why), which
+the search operator parses with one `F.expr`; the operator is then
+`df.withColumn("score", F.expr(sql)).orderBy(desc, id).limit(k)` and a
+`score > 0` filter on the k rows, which Spark executes as scan -> project
+-> TakeOrderedAndProject: a k-heap per partition, so only k rows per
+partition leave it — the same early termination the reference gets from
+`terminate_after: k` (app/main.py:1515).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-
+from ..util import qident, sql_quote
 from . import text as T
 
 
-def _field_col(field: str) -> Column:
-    return F.col(field)
+def dlit(x: float) -> str:
+    """A double literal as SQL text (repr round-trips exactly)."""
+    return f"{float(x)!r}D"
 
 
-def phrase_best_fields(fields: list[str], query: str, boost: float = 1.0) -> Column:
+def best_fields(per: list[str], boost: float) -> str:
+    """greatest(per..., 0.0) x boost; 0.0 for no fields."""
+    if not per:
+        return "0.0D"
+    return f"(greatest({', '.join(per)}, 0.0D) * {dlit(boost)})"
+
+
+def phrase_best_fields(fields: list[str], query: str, boost: float = 1.0) -> str:
     """Max-over-fields phrase indicator x boost (type=phrase multi_match)."""
-    per = [T.phrase_match(f, query).cast("double") for f in fields]
-    return F.greatest(*per, F.lit(0.0)) * F.lit(boost) if per else F.lit(0.0)
+    return best_fields([f"CAST({T.phrase_match_sql(f, query)} AS DOUBLE)"
+                        for f in fields], boost)
 
 
-def exact_best_fields(fields: list[str], query: str, boost: float = 1.0) -> Column:
+def exact_best_fields(fields: list[str], query: str, boost: float = 1.0) -> str:
     """Max-over-fields exact-term-count (OR match on untokenized keywords:
     a keyword field matches when it equals any query term, or — for
     multi-word keywords — contains the full phrase)."""
     terms = T.terms_of(query)
+    arr = T.terms_sql(terms)
+    phrase = sql_quote(" ".join(terms))
     per = []
     for f in fields:
-        c = F.lower(_field_col(f))
-        eq_any = F.lit(False)
-        for t in terms:
-            eq_any = eq_any | (c == t)
-        eq_any = eq_any | c.contains(" ".join(terms))
-        per.append(F.coalesce(eq_any, F.lit(False)).cast("double"))
-    return F.greatest(*per, F.lit(0.0)) * F.lit(boost) if per else F.lit(0.0)
+        c = f"lower({qident(f)})"
+        eq_any = f"array_contains({arr}, {c}) OR " if arr else ""
+        per.append(f"CAST(coalesce({eq_any}contains({c}, {phrase}), false)"
+                   f" AS DOUBLE)")
+    return best_fields(per, boost)
+
+
+def _count_best_fields(count_sql, fields: list[str], query: str,
+                       boost: float, field_boosts: dict | None) -> str:
+    terms = T.terms_of(query)
+    field_boosts = field_boosts or {}
+    return best_fields([f"CAST({count_sql(T.tokens_sql(f), terms)} AS DOUBLE)"
+                        f" * {dlit(field_boosts.get(f, 1.0))}" for f in fields],
+                       boost)
 
 
 def fuzzy_best_fields(fields: list[str], query: str, boost: float = 1.0,
-                      field_boosts: dict[str, float] | None = None) -> Column:
+                      field_boosts: dict[str, float] | None = None) -> str:
     """Max over fields of (matched-term-count x per-field boost) with AUTO
     fuzziness (best_fields + fuzziness:AUTO + operator:or)."""
-    terms = T.terms_of(query)
-    field_boosts = field_boosts or {}
-    per = []
-    for f in fields:
-        tokens = T.tokenize(f)
-        cnt = T.fuzzy_term_count(tokens, terms).cast("double")
-        per.append(cnt * F.lit(float(field_boosts.get(f, 1.0))))
-    return F.greatest(*per, F.lit(0.0)) * F.lit(boost) if per else F.lit(0.0)
+    return _count_best_fields(T.fuzzy_term_count_sql, fields, query, boost,
+                              field_boosts)
 
 
 def exact_term_best_fields(fields: list[str], query: str, boost: float = 1.0,
-                           field_boosts: dict[str, float] | None = None) -> Column:
+                           field_boosts: dict[str, float] | None = None) -> str:
     """Max over fields of exact matched-term-count (best_fields, no fuzz)."""
-    terms = T.terms_of(query)
-    field_boosts = field_boosts or {}
-    per = []
-    for f in fields:
-        tokens = T.tokenize(f)
-        cnt = T.exact_term_count(tokens, terms).cast("double")
-        per.append(cnt * F.lit(float(field_boosts.get(f, 1.0))))
-    return F.greatest(*per, F.lit(0.0)) * F.lit(boost) if per else F.lit(0.0)
+    return _count_best_fields(T.exact_term_count_sql, fields, query, boost,
+                              field_boosts)
 
 
 def prefix_and_best_fields(fields: list[str], query: str,
-                           boost: float = 1.0) -> Column:
+                           boost: float = 1.0) -> str:
     """Max over fields of all-terms-prefix indicator (phrase_prefix, op=and;
     reference structured search field list app/main.py:1722-1742)."""
     terms = T.terms_of(query)
-    per = [T.all_terms_prefix(T.tokenize(f), terms).cast("double")
-           for f in fields]
-    return F.greatest(*per, F.lit(0.0)) * F.lit(boost) if per else F.lit(0.0)
+    return best_fields([f"CAST({T.all_terms_prefix_sql(T.tokens_sql(f), terms)}"
+                        f" AS DOUBLE)" for f in fields], boost)
 
 
-def should_sum(*clauses: Column) -> Column:
-    """bool.should scoring: sum of clause scores (each already boosted).
-    minimum_should_match:1 is enforced by the caller's `score > 0` filter."""
-    out = F.lit(0.0)
+def should_sum(*clauses: str) -> str:
+    """bool.should scoring: sum of clause scores (each already boosted),
+    folded left from 0.0. minimum_should_match:1 is enforced by the
+    caller's `score > 0` filter."""
+    out = "0.0D"
     for c in clauses:
-        out = out + F.coalesce(c, F.lit(0.0))
+        out = f"({out} + coalesce({c}, 0.0D))"
     return out

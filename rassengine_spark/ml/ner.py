@@ -22,6 +22,8 @@ from dataclasses import dataclass
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from ..util import qident, sql_quote
+
 ENTITY_FIELD_MAP: dict[str, str | list[str]] = {
     "PERSON": "patientName",
     "DOCTOR": "practitionerName",
@@ -125,27 +127,20 @@ def tag_entities(query: str) -> list[Entity]:
 def entities_to_filter(entities: list[Entity]) -> Column | None:
     """P2 (legacy_ner_preprocess, app/main.py:2589-2610): AND of
     phrase-containment predicates; DATE -> same-day range OR-ed over the 6
-    mapped date fields."""
-    clauses: list[Column] = []
+    mapped date fields. Built as SQL text and parsed once."""
+    clauses: list[str] = []
     for e in entities:
         mapped = ENTITY_FIELD_MAP.get(e.label)
         if mapped is None:
             continue                      # labels outside the map are dropped
         if e.label == "DATE":
-            d = F.to_date(F.lit(e.text))
-            per_field = [F.to_date(F.col(f)).eqNullSafe(d) for f in mapped]
-            clause = per_field[0]
-            for c in per_field[1:]:
-                clause = clause | c
+            d = f"to_date({sql_quote(e.text)})"
+            clauses.append("(" + " OR ".join(
+                f"to_date({qident(f)}) <=> {d}" for f in mapped) + ")")
         else:
-            clause = F.lower(F.col(mapped)).contains(e.text.lower())
-        clauses.append(clause)
-    if not clauses:
-        return None
-    out = clauses[0]
-    for c in clauses[1:]:
-        out = out & c
-    return out
+            clauses.append(f"contains(lower({qident(mapped)}), "
+                           f"{sql_quote(e.text.lower())})")
+    return F.expr(" AND ".join(clauses)) if clauses else None
 
 
 def ner_filter(query: str) -> Column | None:

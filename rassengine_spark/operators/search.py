@@ -7,12 +7,14 @@ the reference hardcodes its FHIR groups at app/main.py:1403-1468; ours are
 data, so the same operators run on any corpus).
 
 Scale notes (every operator):
+- score is one SQL-text expression (functions/scoring.py), parsed by a
+  single `F.expr`, whose shape does not depend on the query's terms.
 - score is a pure projection -> stays in one WholeStageCodegen span with the
   parquet scan; filters and non-scoring predicates (`filter_expr`,
   `patient_id`) are plain predicates Catalyst pushes into the scan.
 - top-k uses orderBy(...).limit(k) -> TakeOrderedAndProject: each partition
-  keeps a k-heap, the driver merges P heaps; no global sort shuffle. This is
-  the distributed analog of the reference's `terminate_after: k`.
+  keeps a k-heap and one task merges the P heaps; no global sort shuffle.
+  This is the distributed analog of the reference's `terminate_after: k`.
 - ties are broken on the corpus id column so results are deterministic.
 """
 
@@ -27,6 +29,7 @@ from pyspark.sql.window import Window
 from ..functions import scoring as S
 from ..functions import text as T
 from ..functions import vector as V
+from ..util import double_array_sql, qident, sql_quote
 
 
 @dataclass(frozen=True)
@@ -54,9 +57,27 @@ def _topk(df: DataFrame, spec: CorpusSpec, k: int,
     exact dyadic rationals and need no rounding)."""
     if round_to is not None:
         df = df.withColumn("score", F.round(F.col("score"), round_to))
-    return (df.filter(F.col("score") > 0)
-              .orderBy(F.col("score").desc(), F.col(spec.id_col).asc())
-              .limit(k))
+    # score>0 after the limit keeps the same rows (positive scores sort
+    # first) and keeps Catalyst from copying the score expression into a
+    # pushed-down filter, which would evaluate and compile it twice
+    return (df.orderBy(F.col("score").desc(), F.col(spec.id_col).asc())
+              .limit(k).filter(F.col("score") > 0))
+
+
+def _knn_sql(spec: CorpusSpec, query_vec: list[float]) -> str:
+    """SQL text of the embedding's dot product with the query vector,
+    which rides in the plan as one array literal."""
+    return V.dot_sql(qident(spec.embedding_col), double_array_sql(query_vec))
+
+
+def _recent_sql(date_fields: list[str], now: str | None,
+                window_months: int) -> str:
+    """SQL text of: some date field lies in [now - window, now]."""
+    now_sql = f"to_timestamp({sql_quote(now)})" if now else "current_timestamp()"
+    lo = f"({now_sql} - make_interval(0, {int(window_months)}, 0, 0, 0, 0, 0))"
+    return "(" + " OR ".join(
+        [f"{qident(d)} BETWEEN {lo} AND {now_sql}" for d in date_fields]
+        or ["false"]) + ")"
 
 
 def _apply_filters(df: DataFrame, filter_expr: Column | None,
@@ -80,7 +101,7 @@ def exact_match_search(df: DataFrame, spec: CorpusSpec, query: str, k: int = 3,
         S.phrase_best_fields(spec.text_fields, query, text_boost),
         S.exact_best_fields(spec.keyword_fields, query, kw_boost))
     df = _apply_filters(df, filter_expr, spec, partition_key)
-    return _topk(df.withColumn("score", score), spec, k)
+    return _topk(df.withColumn("score", F.expr(score)), spec, k)
 
 
 # ---------------------------------------------------------------- Q2
@@ -91,9 +112,9 @@ def semantic_search(df: DataFrame, spec: CorpusSpec, query_vec: list[float],
     vector, top-k. (reference `semantic_search`, app/main.py:1527-1560.)
     Exact scan is O(n·d) but embarrassingly parallel; the approximate path
     for huge corpora is llmops/similarity.py (LSH-bucketed)."""
-    score = V.dot_literal(F.col(spec.embedding_col), query_vec)
     df = _apply_filters(df, filter_expr, spec, partition_key)
-    return _topk(df.withColumn("score", score), spec, k, round_to)
+    return _topk(df.withColumn("score", F.expr(_knn_sql(spec, query_vec))),
+                 spec, k, round_to)
 
 
 # ---------------------------------------------------------------- Q3
@@ -108,11 +129,12 @@ def hybrid_search(df: DataFrame, spec: CorpusSpec, query: str,
     (reference `hybrid_search`, app/main.py:1562-1615 — the default route.)"""
     lex_text = S.fuzzy_best_fields(spec.text_fields, query, text_boost)
     lex_kw = S.exact_term_best_fields(spec.keyword_fields, query, kw_boost)
-    knn = (V.dot_literal(F.col(spec.embedding_col), query_vec)
-           * F.lit(knn_boost)) if spec.embedding_col else F.lit(0.0)
+    knn = (f"({_knn_sql(spec, query_vec)} * {S.dlit(knn_boost)})"
+           if spec.embedding_col else "0.0D")
     df = _apply_filters(df, filter_expr, spec, partition_key)
     return _topk(df.withColumn(
-        "score", S.should_sum(lex_text, lex_kw, knn)), spec, k, round_to)
+        "score", F.expr(S.should_sum(lex_text, lex_kw, knn))), spec, k,
+        round_to)
 
 
 # ---------------------------------------------------------------- Q4
@@ -128,7 +150,7 @@ def structured_search(df: DataFrame, spec: CorpusSpec, query: str, k: int = 3,
     list it does define at app/main.py:1722-1742 (SURVEY.md §7.3 risk 2)."""
     score = S.prefix_and_best_fields(spec.structured_fields, query, 1.0)
     df = _apply_filters(df, filter_expr, spec, partition_key)
-    return _topk(df.withColumn("score", score), spec, k)
+    return _topk(df.withColumn("score", F.expr(score)), spec, k)
 
 
 # ---------------------------------------------------------------- Q5
@@ -144,15 +166,14 @@ def hybrid_structured_search(df: DataFrame, spec: CorpusSpec, query: str,
     structured docs carry no vector."""
     lex = S.prefix_and_best_fields(spec.structured_fields, query, lex_boost)
     if spec.embedding_col and query_vec is not None:
-        knn = F.when(
-            F.col(spec.embedding_col).isNotNull(),
-            V.dot_literal(F.col(spec.embedding_col), query_vec) * knn_boost
-        ).otherwise(F.lit(0.0))
+        knn = (f"CASE WHEN {qident(spec.embedding_col)} IS NOT NULL THEN "
+               f"{_knn_sql(spec, query_vec)} * {S.dlit(knn_boost)} "
+               f"ELSE 0.0D END")
     else:
-        knn = F.lit(0.0)
+        knn = "0.0D"
     df = _apply_filters(df, filter_expr, spec, partition_key)
-    return _topk(df.withColumn("score", S.should_sum(lex, knn)), spec, k,
-                 round_to)
+    return _topk(df.withColumn("score", F.expr(S.should_sum(lex, knn))),
+                 spec, k, round_to)
 
 
 # ---------------------------------------------------------------- Q6
@@ -192,7 +213,7 @@ def comparison_search(df: DataFrame, spec: CorpusSpec, query: str, k: int = 3,
     fields = list(spec.compare_fields.keys())
     score = S.fuzzy_best_fields(fields, query, 1.0, spec.compare_fields)
     df = _apply_filters(df, filter_expr, spec, partition_key)
-    return _topk(df.withColumn("score", score), spec, k)
+    return _topk(df.withColumn("score", F.expr(score)), spec, k)
 
 
 # ---------------------------------------------------------------- Q8
@@ -205,21 +226,19 @@ def temporal_search(df: DataFrame, spec: CorpusSpec, query: str, k: int = 3,
     [now - window, now]); sort by the primary date field desc.
     (reference `temporal_search`, app/main.py:1866-1918; range 1875-1883,
     sort 1906.) `now` is parameterized so tests pin it (SURVEY §7.3 risk 5)."""
-    now_col = F.to_timestamp(F.lit(now)) if now else F.current_timestamp()
-    lo = now_col - F.make_interval(months=F.lit(window_months))
-    in_range = F.lit(False)
-    for dfld in spec.date_fields:
-        in_range = in_range | F.col(dfld).between(lo, now_col)
+    in_range = _recent_sql(spec.date_fields, now, window_months)
     lex = S.should_sum(
         S.fuzzy_best_fields(spec.text_fields, query, 1.0),
         S.exact_term_best_fields(spec.keyword_fields, query, 1.0))
     sort_field = sort_field or spec.date_fields[0]
     df = _apply_filters(df, filter_expr, spec, partition_key)
-    return (df.withColumn("score", lex)
-              .filter((F.col("score") > 0) & in_range)
-              .orderBy(F.col(sort_field).desc_nulls_last(),
+    hit = F.col("score") > 0
+    # matched rows sort first, so filtering after the limit keeps the same
+    # rows without copying `lex` into a pushed-down filter (see _topk)
+    return (df.filter(F.expr(in_range)).withColumn("score", F.expr(lex))
+              .orderBy(hit.desc(), F.col(sort_field).desc_nulls_last(),
                        F.col(spec.id_col).asc())
-              .limit(k))
+              .limit(k).filter(hit))
 
 
 # ---------------------------------------------------------------- Q9
@@ -231,7 +250,7 @@ def explanatory_search(df: DataFrame, spec: CorpusSpec, query: str,
     fields = list(spec.note_fields.keys())
     score = S.fuzzy_best_fields(fields, query, 1.0, spec.note_fields)
     df = _apply_filters(df, filter_expr, spec, partition_key)
-    return _topk(df.withColumn("score", score), spec, k)
+    return _topk(df.withColumn("score", F.expr(score)), spec, k)
 
 
 # ---------------------------------------------------------------- Q10
@@ -249,20 +268,16 @@ def multi_intent_search(df: DataFrame, spec: CorpusSpec, query: str,
     that collapses to ONE range on the last date field
     (app/main.py:2004-2007); we implement the evident intent — any date
     field recent — and document the delta (SURVEY.md §7.3 risk 2)."""
-    now_col = F.to_timestamp(F.lit(now)) if now else F.current_timestamp()
-    lo = now_col - F.make_interval(months=F.lit(window_months))
-    recent = F.lit(False)
-    for dfld in spec.date_fields:
-        recent = recent | F.col(dfld).between(lo, now_col)
-    knn = (V.dot_literal(F.col(spec.embedding_col), query_vec) * knn_boost
-           ) if (spec.embedding_col and query_vec is not None) else F.lit(0.0)
+    recent = _recent_sql(spec.date_fields, now, window_months)
+    knn = (f"({_knn_sql(spec, query_vec)} * {S.dlit(knn_boost)})"
+           if spec.embedding_col and query_vec is not None else "0.0D")
     score = S.should_sum(
         S.fuzzy_best_fields(spec.text_fields, query, text_boost),
         S.exact_term_best_fields(spec.keyword_fields, query, kw_boost),
         knn,
-        recent.cast("double") * F.lit(recency_boost))
+        f"(CAST({recent} AS DOUBLE) * {S.dlit(recency_boost)})")
     df = _apply_filters(df, filter_expr, spec, partition_key)
-    return _topk(df.withColumn("score", score), spec, k, round_to)
+    return _topk(df.withColumn("score", F.expr(score)), spec, k, round_to)
 
 
 # ---------------------------------------------------------------- Q11
@@ -272,11 +287,11 @@ def entity_specific_search(df: DataFrame, spec: CorpusSpec, query: str,
     """Q11 ENTITY_SPECIFIC: phrase multi_match (op=and) over identity fields
     with boosts 4/3 (reference app/main.py:2029-2074): boost-weighted max of
     phrase hits."""
-    per = [T.phrase_match(f, query).cast("double") * F.lit(float(b))
-           for f, b in spec.identity_fields.items()]
-    score = F.greatest(*per, F.lit(0.0)) if per else F.lit(0.0)
+    score = S.best_fields(
+        [f"CAST({T.phrase_match_sql(f, query)} AS DOUBLE) * {S.dlit(b)}"
+         for f, b in spec.identity_fields.items()], 1.0)
     df = _apply_filters(df, filter_expr, spec, partition_key)
-    return _topk(df.withColumn("score", score), spec, k)
+    return _topk(df.withColumn("score", F.expr(score)), spec, k)
 
 
 # ---------------------------------------------------------------- Q12 / W1
@@ -315,15 +330,13 @@ def resolve_ids_from_name(df: DataFrame, name_col: str, id_col: str,
     phrase=2, fuzzy AND=1), collapse per id, top-k ids.
     (reference `resolve_patient_ids_from_name`, app/main.py:2637-2744.)"""
     terms = T.terms_of(query_name)
-    tokens = T.tokenize(name_col)
-    exact = (F.lower(F.col(name_col)) == " ".join(terms)).cast("double") * 3.0
-    phrase = T.phrase_match(name_col, query_name).cast("double") * 2.0
-    fuzzy_and = F.lit(True)
-    for t in terms:
-        fuzzy_and = fuzzy_and & T.fuzzy_term_match(tokens, t)
-    fuzzy = fuzzy_and.cast("double") * 1.0
-    scored = df.withColumn(
-        "score", F.greatest(exact, phrase, fuzzy)).filter(F.col("score") > 0)
+    name = sql_quote(" ".join(terms))
+    score = (
+        f"greatest(CAST(lower({qident(name_col)}) = {name} AS DOUBLE) * 3.0D, "
+        f"CAST({T.phrase_match_sql(name_col, query_name)} AS DOUBLE) * 2.0D, "
+        f"CAST({T.all_terms_fuzzy_sql(T.tokens_sql(name_col), terms)} "
+        f"AS DOUBLE) * 1.0D)")
+    scored = df.withColumn("score", F.expr(score)).filter(F.col("score") > 0)
     best = collapse_best_per_key(scored, id_col, "score", id_col)
     return (best.orderBy(F.col("score").desc(), F.col(id_col).asc())
                 .limit(k).select(id_col, "score"))

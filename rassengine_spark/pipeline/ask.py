@@ -29,6 +29,7 @@ from ..operators.search import CorpusSpec
 from ..operators.windows import last_n_per_key
 from ..schemas import (DATE_FIELDS, KEYWORD_FIELDS, STRUCTURED_FIELDS,
                        TEXT_FIELDS)
+from ..util import qident, sql_quote
 
 # FHIR corpus spec — field groups from app/main.py:1403-1468; note/identity/
 # compare boosts from the per-method DSL (app/main.py:1819-1826, 1929-1937,
@@ -82,16 +83,15 @@ def render_context(hits: DataFrame, id_col: str = "doc_id",
     frame, so the collect is k rows, not a corpus scan."""
     exclude = {id_col, "doc_type", "resourceType", "embedding", "score",
                "user_id", "file_path", "file_type"}
-    kvs = [F.when(F.col(c).isNotNull(),
-                  F.concat(F.lit(f"{c}: "), F.col(c).cast("string")))
-           for c, t in hits.dtypes
+    dtypes = hits.dtypes
+    kvs = [f"CASE WHEN {qident(c)} IS NOT NULL THEN "
+           f"concat({sql_quote(c + ': ')}, CAST({qident(c)} AS STRING)) END"
+           for c, t in dtypes
            if c not in exclude and not t.startswith("array")]
-    has_text = text_col in hits.columns
-    structured_snippet = F.array_join(F.array_compact(F.array(*kvs)), " | ")
-    snippet = (F.coalesce(F.col(text_col), structured_snippet)
-               if has_text else structured_snippet)
-    rows = (hits.withColumn("_snippet", snippet)
-                .select(id_col, "_snippet").collect())
+    snippet = f"array_join(array_compact(array({', '.join(kvs)})), ' | ')"
+    if any(c == text_col for c, _ in dtypes):
+        snippet = f"coalesce({qident(text_col)}, {snippet})"
+    rows = hits.select(id_col, F.expr(snippet)).collect()
     seen: dict[str, str] = {}
     for r in rows:                       # D1 dedup-concat (app/main.py:2894)
         if r[0] in seen and seen[r[0]] != r[1]:

@@ -19,7 +19,8 @@ def test_tokenize_and_terms(spark):
 def test_phrase_match(spark):
     df = spark.createDataFrame(
         [("the hash join runs",), ("join hash",), (None,)], ["t"])
-    got = [r[0] for r in df.select(T.phrase_match("t", "Hash  Join")).collect()]
+    got = [r[0] for r in
+           df.select(F.expr(T.phrase_match_sql("t", "Hash  Join"))).collect()]
     assert got == [True, False, False]
 
 
@@ -31,18 +32,51 @@ def test_auto_fuzziness_thresholds():
     assert T.auto_fuzziness("abcdef") == 2
 
 
+def test_fuzzy_sql_applies_auto_fuzziness(spark):
+    """A term of length n matches a token auto_fuzziness(term) edits away
+    and not one edit further."""
+    for n in range(1, 9):
+        term = "abcdefgh"[:n]
+        d = T.auto_fuzziness(term)
+        tokens = ["z" * d + term[d:], "z" * (d + 1) + term[d + 1:]]
+        df = spark.createDataFrame([(t,) for t in tokens], ["t"])
+        got = [r[0] for r in df.select(F.expr(
+            T.fuzzy_term_count_sql(T.tokens_sql("t"), [term]))).collect()]
+        assert got == [1, 0], (term, tokens)
+
+
 def test_fuzzy_and_prefix_match(spark):
     df = spark.createDataFrame([("stream batch spark",)], ["t"])
-    tok = T.tokenize("t")
+    tok = T.tokens_sql("t")
     out = df.select(
-        T.fuzzy_term_match(tok, "streem").alias("a"),   # d=2 matches stream
-        T.fuzzy_term_match(tok, "xx").alias("b"),       # d=0, absent
-        T.prefix_term_match(tok, "spa").alias("c"),
-        T.all_terms_prefix(tok, ["str", "ba"]).alias("d"),
-        T.all_terms_prefix(tok, ["str", "zz"]).alias("e"),
+        F.expr(T.all_terms_fuzzy_sql(tok, ["streem"])).alias("a"),  # d=2
+        F.expr(T.all_terms_fuzzy_sql(tok, ["xx"])).alias("b"),      # d=0
+        F.expr(T.all_terms_prefix_sql(tok, ["spa"])).alias("c"),
+        F.expr(T.all_terms_prefix_sql(tok, ["str", "ba"])).alias("d"),
+        F.expr(T.all_terms_prefix_sql(tok, ["str", "zz"])).alias("e"),
     ).collect()[0]
     assert (out["a"], out["b"], out["c"], out["d"], out["e"]) == (
         True, False, True, True, False)
+
+
+def test_term_counts_and_empty_terms(spark):
+    """Counts walk the one terms literal (repeats count twice); a query
+    with no terms never builds `array()`: counts are 0 and the AND
+    predicates are true, as the per-term folds gave."""
+    df = spark.createDataFrame([("stream batch spark",), (None,)], ["t"])
+    tok = T.tokens_sql("t")
+    rows = df.select(
+        F.expr(T.exact_term_count_sql(tok, ["spark", "spark", "sparc"])),
+        F.expr(T.fuzzy_term_count_sql(tok, ["spark", "sparc", "xx"])),
+        F.expr(T.exact_term_count_sql(tok, [])),
+        F.expr(T.fuzzy_term_count_sql(tok, [])),
+        F.expr(T.all_terms_fuzzy_sql(tok, [])),
+        F.expr(T.all_terms_prefix_sql(tok, [])),
+    ).collect()
+    assert tuple(rows[0]) == (2, 2, 0, 0, True, True)
+    assert tuple(rows[1]) == (0, 0, 0, 0, True, True)
+    assert T.terms_sql([]) is None
+    assert T.terms_sql(["o'b", "a\\b"]) == "array('o\\'b', 'a\\\\b')"
 
 
 def test_vector_ops(spark):

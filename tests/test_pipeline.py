@@ -195,6 +195,25 @@ def test_ask_ner_filter_routes(pipeline):
             or r.doc_type == "unstructured"
 
 
+@pytest.mark.parametrize("query,intent,hits", [
+    # no [a-z0-9] term: the kNN clause alone scores
+    ("???", "HYBRID", [("Patient-p1-unstructured-0", 0.654654)]),
+    ("Find patients with O'Brien's \\ disease.", "HYBRID",
+     [("patient_1_history-0-unstructured", 3.131519),
+      ("Condition-c1-unstructured-0", 0.657596)]),
+    ("Ünïcödé 患者 hypertension?", "HYBRID",
+     [("Condition-c1-structured", 1.5)]),
+    ("Look up ICD-10 code R13'; DROP", "MULTI_INTENT", []),
+])
+def test_ask_odd_queries(pipeline, query, intent, hits):
+    """Quotes, backslashes, unicode and term-less queries get a defined
+    answer; the expected hits are those of the per-term Column builders
+    the SQL-text builders replaced."""
+    res = pipeline.ask(query, "u1")
+    assert res.intent == intent
+    assert [(r.doc_id, r.score) for r in res.hits.collect()] == hits
+
+
 def test_merge_rollup_incremental_equals_full(spark, tmp_path):
     """Folding batches incrementally must equal a one-shot rollup."""
     from rassengine_spark.pipeline.ingest import merge_rollup

@@ -238,3 +238,52 @@ def test_bigram_fit_single_arrow_pass(spark):
     # explode over `df`; the train-side fit passes must be gone
     assert plan.count("MapInPandas") <= 1, \
         f"fit-side Arrow passes leaked into the score plan:\n{plan[:2000]}"
+
+
+@pytest.fixture(scope="module")
+def fhir_corpus(spark, tmp_path_factory):
+    """One FHIR row carrying every document and chunk column, so the
+    optimized plan keeps every field's clause (no column folds to NULL)."""
+    from pyspark.sql.types import StructType
+
+    from rassengine_spark.schemas import CHUNKS_SCHEMA, DOCUMENTS_SCHEMA
+
+    names = set(DOCUMENTS_SCHEMA.fieldNames())
+    schema = StructType(DOCUMENTS_SCHEMA.fields + [
+        f for f in CHUNKS_SCHEMA.fields if f.name not in names])
+    vals = {"doc_id": "d1", "doc_type": "structured",
+            "resourceType": "Patient", "user_id": "u1",
+            "unstructuredText": "x"}
+    d = str(tmp_path_factory.mktemp("fhir") / "docs")
+    spark.createDataFrame([tuple(vals.get(n) for n in schema.fieldNames())],
+                          schema).write.parquet(d)
+    return spark.read.parquet(d)
+
+
+@pytest.mark.parametrize("intent,call,n_fields", [
+    ("HYBRID", "levenshtein(", "text"),
+    ("KEYWORD", "array_contains(", "keyword"),
+])
+def test_ask_plan_shape_does_not_depend_on_terms(spark, fhir_corpus, intent,
+                                                 call, n_fields):
+    """A 1-term and a 9-term ask build plans of one shape: the terms ride
+    in one array literal, so a lexical clause holds one fuzzy (HYBRID) or
+    keyword (KEYWORD) match per field whatever the term count."""
+    from rassengine_spark.pipeline.ask import FHIR_SPEC, AskPipeline
+
+    fields = {"text": FHIR_SPEC.text_fields,
+              "keyword": FHIR_SPEC.keyword_fields}[n_fields]
+    pipe = AskPipeline(fhir_corpus, fhir_corpus.limit(0), dim=4)
+    key = "spark.sql.debug.maxToStringFields"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "100000")        # print every field of the plan
+    try:
+        counts = []
+        for q in ["diabetes", "patients with diabetes taking metformin "
+                              "and insulin since last year"]:
+            hits = pipe.dispatch(intent, q, [0.5] * 4, 3, None, None)
+            counts.append(hits._jdf.queryExecution().optimizedPlan()
+                          .toString().count(call))
+    finally:
+        spark.conf.set(key, old)
+    assert counts == [len(fields), len(fields)]

@@ -81,6 +81,34 @@ def pandas_rows(pdf):
             for r in pdf.itertuples(index=False, name=None)]
 
 
+def connect(sf_dir: str):
+    """DuckDB connection with one view per test-data table in sf_dir."""
+    con = duckdb.connect()
+    for t in TABLES:
+        p = os.path.join(sf_dir, f"{t}.parquet")
+        if os.path.exists(p):
+            con.sql(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
+    return con
+
+
+def compare(sdf, ddf) -> list[str]:
+    """Problems found comparing a Spark result with its DuckDB twin, both
+    as pandas frames: column names, row count, value multiset."""
+    scols, srows = list(sdf.columns), pandas_rows(sdf)
+    dcols, drows = list(ddf.columns), pandas_rows(ddf)
+    problems = []
+    if sorted(scols) != sorted(dcols):
+        problems.append(f"schema {sorted(scols)} != {sorted(dcols)}")
+    if len(srows) != len(drows):
+        problems.append(f"rowcount {len(srows)} != {len(drows)}")
+    if not problems:
+        a, b = rowset(scols, srows), rowset(dcols, drows)
+        if a != b:
+            diffs = [(x, y) for x, y in zip(a, b) if x != y][:3]
+            problems.append(f"values differ, e.g. {diffs}")
+    return problems
+
+
 def main():
     args = [a for a in sys.argv[1:] if a != "--window"]
     window = "--window" in sys.argv[1:]
@@ -93,11 +121,7 @@ def main():
     from rassengine_spark.session import get_spark
 
     spark = get_spark("check")
-    con = duckdb.connect()
-    for t in TABLES:
-        p = os.path.join(sf_dir, f"{t}.parquet")
-        if os.path.exists(p):
-            con.sql(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
+    con = connect(sf_dir)
 
     qs, oracles = entrymod.queries(), entrymod.oracle_sql()
     if window:
@@ -107,40 +131,26 @@ def main():
         if only and name not in only:
             continue
         try:
-            sdf = fn(spark, sf_dir)
-            scols = sdf.columns
-            srows = pandas_rows(sdf.toPandas())
+            sdf = fn(spark, sf_dir).toPandas()
         except Exception as e:
             print(f"FAIL {name}: spark error: {e}")
             failed.append(name)
             continue
         if name not in oracles:
-            print(f"ROWS-ONLY {name}: {len(srows)} rows (no oracle)")
+            print(f"ROWS-ONLY {name}: {len(sdf)} rows (no oracle)")
             continue
         try:
-            rel = con.sql(oracles[name])
-            ddf = rel.fetchdf()          # pandas path == driver path
-            dcols = list(ddf.columns)
-            drows = pandas_rows(ddf)
+            ddf = con.sql(oracles[name]).fetchdf()  # via pandas, as Spark's
         except Exception as e:
             print(f"FAIL {name}: duckdb error: {e}")
             failed.append(name)
             continue
-        problems = []
-        if sorted(scols) != sorted(dcols):
-            problems.append(f"schema {sorted(scols)} != {sorted(dcols)}")
-        if len(srows) != len(drows):
-            problems.append(f"rowcount {len(srows)} != {len(drows)}")
-        if not problems:
-            a, b = rowset(scols, srows), rowset(dcols, drows)
-            if a != b:
-                diffs = [(x, y) for x, y in zip(a, b) if x != y][:3]
-                problems.append(f"values differ, e.g. {diffs}")
+        problems = compare(sdf, ddf)
         if problems:
             print(f"FAIL {name}: " + "; ".join(problems))
             failed.append(name)
         else:
-            print(f"OK   {name}: {len(srows)} rows")
+            print(f"OK   {name}: {len(sdf)} rows")
     print()
     if failed:
         print(f"{len(failed)} FAILED: {failed}")
