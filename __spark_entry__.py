@@ -5247,7 +5247,7 @@ def _bm25_known_item_ranks(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = {str(r.id): r.q for r in sample if r.q}
     postings, doclens, stats = build_term_index_from_tokens(toks)
     res = bm25_batch_topk_from_index(postings, doclens, stats, queries,
-                                     k=10, reuse_pruned=True)
+                                     k=10)
     qdf = spark.createDataFrame([(int(k),) for k in queries],
                                 "query_id long")
     hit = (res.withColumn("query_id", F.col("query_id").cast("long"))
@@ -5398,7 +5398,7 @@ def _q_rag_chunk_known_item(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint(eager=False)
     postings, doclens, stats = build_term_index_from_tokens(ctoks)
     res = bm25_batch_topk_from_index(postings, doclens, stats, queries,
-                                     k=10, reuse_pruned=True)
+                                     k=10)
     qdf = spark.createDataFrame([(int(k),) for k in queries],
                                 "query_id long")
     hit = (res.withColumn("query_id", F.col("query_id").cast("long"))

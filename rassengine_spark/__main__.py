@@ -304,7 +304,9 @@ def build_parser() -> argparse.ArgumentParser:
     px.add_argument("--text-col", default="text")
     px.add_argument("--id-col", default="doc_id")
     px.add_argument("--vec-col", default="embedding")
-    px.add_argument("--term-buckets", type=int, default=256)
+    px.add_argument("--term-buckets", type=int, default=None,
+                    help="term-store bucket count (default: derived from "
+                         "the corpus size)")
     px.add_argument("--bpe-merges", type=int, default=64)
     px.add_argument("--ivf-cells", type=int, default=64)
     px.set_defaults(fn=_cmd_index)

@@ -245,5 +245,4 @@ def bm25_batch_topk_join(df: DataFrame, text_col: str, id_col: str,
     postings, doclens, stats = build_term_index(df, text_col, id_col,
                                                 single_pass=True)
     return bm25_batch_topk_from_index(postings, doclens, stats, queries,
-                                      k=k, k1=k1, b=b, round_to=round_to,
-                                      reuse_pruned=True)
+                                      k=k, k1=k1, b=b, round_to=round_to)

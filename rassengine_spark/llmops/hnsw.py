@@ -34,6 +34,7 @@ from __future__ import annotations
 import hashlib
 import heapq
 import math
+import re
 from collections.abc import Iterator
 
 import numpy as np
@@ -468,6 +469,16 @@ def _hnsw_topk_df(corpus: DataFrame, queries: DataFrame, vec_col: str,
 # the previous max, so append's offset = max+1 contract is preserved.
 _SUBSHARD_STRIDE = 1024
 
+# one row per graph node; part_id is the directory partition. Reads pass
+# it explicitly, so opening the store infers nothing from parquet footers
+# (schema inference is a Spark job per read).
+_STORE_SCHEMA = ("part_id bigint, node bigint, id bigint, v array<double>, "
+                 "adj string, entry bigint, max_level int")
+
+
+def _read_store(spark, path: str) -> DataFrame:
+    return spark.read.schema(_STORE_SCHEMA).parquet(path)
+
 
 def save_hnsw_index(corpus: DataFrame, vec_col: str, id_col: str,
                     path: str, m: int = 8, ef_construction: int = 64,
@@ -497,9 +508,8 @@ def append_hnsw_index(new_corpus: DataFrame, vec_col: str, id_col: str,
     full save_hnsw_index plays the role of segment compaction when the
     shard count grows. Use the same m/ef_construction operating point as
     the original build — quality knobs are per-shard."""
-    spark = new_corpus.sparkSession
-    offset = int(spark.read.parquet(path)
-                 .agg(F.max("part_id")).collect()[0][0]) + 1
+    offset = max(_store_part_ids(_read_store(new_corpus.sparkSession,
+                                             path))) + 1
     _build_and_write_graphs(new_corpus, vec_col, id_col, path, m,
                             ef_construction, partitions,
                             mode="append", part_offset=offset,
@@ -520,7 +530,7 @@ def compact_hnsw_store(spark, path: str, m: int = 8,
     like every fold store."""
     from ..util import swap_commit_dir
 
-    vecs = (spark.read.parquet(path).select("id", "v")
+    vecs = (_read_store(spark, path).select("id", "v")
             .localCheckpoint(eager=False))
 
     def rebuild(tmp_p: str) -> None:
@@ -585,11 +595,16 @@ def _build_and_write_graphs(corpus: DataFrame, vec_col: str, id_col: str,
                                        dtype="int32"),
             })
 
-    out = c.mapInPandas(
-        build,
-        "part_id bigint, node bigint, id bigint, v array<double>, "
-        "adj string, entry bigint, max_level int")
+    out = c.mapInPandas(build, _STORE_SCHEMA)
     out.write.partitionBy("part_id").mode(mode).parquet(path)
+
+
+def _store_part_ids(graphs: DataFrame) -> list[int]:
+    """The store's shard ids, from the relation's file listing (the
+    `part_id=N` directory of every data file): the listing is made when
+    the store is opened, so this runs no Spark job."""
+    return sorted({int(m.group(1)) for f in graphs.inputFiles()
+                   for m in [re.search(r"/part_id=(\d+)/", f)] if m})
 
 
 def hnsw_topk_from_store_df(spark, path: str, queries: DataFrame,
@@ -598,19 +613,19 @@ def hnsw_topk_from_store_df(spark, path: str, queries: DataFrame,
                             round_to: int | None = 6) -> DataFrame:
     """Serve the persisted graphs against a query DATAFRAME — no driver
     collect, so the query side can be unbounded (a stream's micro-batch,
-    a query log). Each shard must see every query: the query table is
-    replicated per shard with a broadcast cross-join against the shard id
-    list (Q x P rows of (id, vector) — the standard scatter for
-    shard-local indexes), then a cogroup pairs each shard's graph rows
-    with its query copy and one applyInPandas searches them together.
-    Result merge is the usual per-query window rank."""
-    graphs = spark.read.parquet(path)
-    # separate read: deriving parts from `graphs` would make the cogroup
-    # an ambiguous self-join on part_id
-    parts = spark.read.parquet(path).select("part_id").distinct()
-    qrep = (queries.select(F.col(query_id_col).cast("long").alias("qid"),
-                           F.col(vec_col).alias("qv"))
-            .crossJoin(F.broadcast(parts)))
+    a query log). Each shard must see every query: each query row is
+    replicated onto every shard by exploding the literal array of the
+    store's shard ids, read from the store's file listing (Q x P rows of
+    (id, vector) — the standard scatter for shard-local indexes), then a
+    cogroup pairs each shard's graph rows with its query copy and one
+    applyInPandas searches them together. The store is read once. Result
+    merge is the usual per-query window rank."""
+    graphs = _read_store(spark, path)
+    parts = F.array(*[F.lit(p) for p in _store_part_ids(graphs)])
+    qrep = queries.select(F.col(query_id_col).cast("long").alias("qid"),
+                          F.col(vec_col).alias("qv"),
+                          F.explode(parts.cast("array<bigint>"))
+                          .alias("part_id"))
 
     def search(key, g_pdf: pd.DataFrame, q_pdf: pd.DataFrame
                ) -> pd.DataFrame:
@@ -684,7 +699,7 @@ def hnsw_topk_from_store(spark, path: str, queries,
                              "id": pd.Series(out_i, dtype="int64"),
                              "score": pd.Series(out_s, dtype="float64")})
 
-    res = (spark.read.parquet(path)
+    res = (_read_store(spark, path)
            .groupBy("part_id")
            .applyInPandas(search, "query_id bigint, id bigint, score double"))
     if round_to is not None:

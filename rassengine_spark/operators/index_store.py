@@ -7,11 +7,14 @@ layout makes query-time scans PRUNE:
 - term index  — postings bucketed into `tb = md5(term) % n_buckets`
   partitions. A query's terms map to a handful of buckets, so the scan
   reads |terms| partitions out of n_buckets, never the corpus. Bucketing
-  (not one directory per term) keeps the partition count fixed at any
+  (not one directory per term) keeps the partition count bounded at any
   corpus size — a directory per distinct term is millions of partitions of
-  metadata at web scale. md5 (not xxhash64) so the bucket of a term is
-  computable driver-side without a Spark job, and identically in any
-  engine.
+  metadata at web scale. The bucket count follows corpus size: about
+  _BUCKET_ROWS postings rows (~128 MB, compact_term_index's file target)
+  per bucket, capped at _MAX_BUCKETS, so a small store is one directory
+  and one file per append instead of hundreds of near-empty ones. md5
+  (not xxhash64) so the bucket of a term is computable driver-side
+  without a Spark job, and identically in any engine.
 - IVF index   — (cell-partitioned assignments, centroids). Queries probe
   n_probe cells; the assignment scan prunes to those partitions —
   O(N * n_probe / n_cells) rows read, the IVF contract, now enforced by
@@ -88,17 +91,36 @@ def term_bucket_py(term: str, n_buckets: int) -> int:
     return int(hashlib.md5(term.encode()).hexdigest()[:15], 16) % n_buckets
 
 
+# postings rows per term bucket when save_term_index derives the count:
+# at the ~8 bytes a (term, id, tf) row takes in parquet once its ids
+# outgrow the column dictionary, a full bucket is about the 128 MB file
+# compact_term_index targets
+_BUCKET_ROWS = 16 << 20
+_MAX_BUCKETS = 256
+
+
 def save_term_index(postings: DataFrame, doclens: DataFrame,
                     stats: DataFrame, path: str,
-                    n_buckets: int = 256) -> None:
+                    n_buckets: int | None = None) -> None:
     """Write (postings, doclens, stats) under `path`, postings partitioned
     by term bucket. One repartition on tb so each partition is written by
     one task (no tiny-file explosion: files = n_buckets, not
-    n_buckets x tasks). The four tables are independent outputs (nothing
-    reads another's files), so the writes run as concurrent jobs — the
-    small jobs back-fill the postings job's task tail instead of queueing
-    behind it."""
+    n_buckets x tasks). The one-row stats are collected once: they size
+    the bucket count when `n_buckets` is None (n_docs x avgdl postings
+    rows estimated, _BUCKET_ROWS per bucket, at most _MAX_BUCKETS) and
+    are written back from the collected values. The remaining tables are
+    independent outputs (nothing reads another's files), so the writes
+    run as concurrent jobs — the small jobs back-fill the postings job's
+    task tail instead of queueing behind it."""
     from concurrent.futures import ThreadPoolExecutor
+
+    spark = postings.sparkSession
+    st = stats.collect()[0]
+    n_docs, avgdl = st["n_docs"], st["avgdl"]
+    if n_buckets is None:
+        est_rows = n_docs * (avgdl or 0.0)
+        n_buckets = min(_MAX_BUCKETS,
+                        max(1, math.ceil(est_rows / _BUCKET_ROWS)))
 
     def w_postings() -> None:
         (postings.withColumn("tb", term_bucket_expr("term", n_buckets))
@@ -110,11 +132,12 @@ def save_term_index(postings: DataFrame, doclens: DataFrame,
         doclens.write.mode("overwrite").parquet(f"{path}/doclens")
 
     def w_stats() -> None:
-        stats.write.mode("overwrite").parquet(f"{path}/stats")
+        (spark.createDataFrame([(n_docs, avgdl)],
+                               "n_docs bigint, avgdl double")
+         .write.mode("overwrite").parquet(f"{path}/stats"))
 
     def w_meta() -> None:
-        (postings.sparkSession
-         .createDataFrame([(n_buckets,)], "n_buckets int")
+        (spark.createDataFrame([(n_buckets,)], "n_buckets int")
          .write.mode("overwrite").parquet(f"{path}/meta"))
 
     # meta is written AFTER the pool joins (ADVICE r08): it used to be the
@@ -163,7 +186,9 @@ def append_term_index(new_df: DataFrame, text_col: str, id_col: str,
 
     def w_doclens_stats() -> None:
         doclens.write.mode("append").parquet(f"{path}/doclens")
-        (spark.read.parquet(f"{path}/doclens")
+        # read back with the appended frame's schema, which is the
+        # store's: inferring it from the files is one more Spark job
+        (spark.read.schema(doclens.schema).parquet(f"{path}/doclens")
               .agg(F.count(F.lit(1)).alias("n_docs"),
                    F.avg("dl").alias("avgdl"))
               .write.mode("overwrite").parquet(f"{path}/stats"))

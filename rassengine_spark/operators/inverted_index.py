@@ -114,8 +114,7 @@ def _pivot_fold(per_occ: DataFrame, keys: list[str], n_pos: int):
 def bm25_topk_from_index(postings: DataFrame, doclens: DataFrame,
                          stats: DataFrame, query: str, k: int = 10,
                          k1: float = K1, b: float = B,
-                         round_to: int = 6,
-                         reuse_pruned: bool = False) -> DataFrame:
+                         round_to: int = 6) -> DataFrame:
     """Top-k (id, score) by BM25 served ENTIRELY from the index tables —
     the corpus text is never touched. Identical scores to
     `bm25_topk(corpus, ...)` for the same corpus/query (parity-tested):
@@ -131,15 +130,8 @@ def bm25_topk_from_index(postings: DataFrame, doclens: DataFrame,
     for t in terms:
         order.setdefault(t, len(order))
 
-    # pruned postings feed BOTH the df-count agg and the scoring join.
-    # reuse_pruned lazily checkpoints them so both consumers share one
-    # compute — worth it when `postings` is a LIVE tokenize+explode+agg
-    # lineage; leave False for store-served frames, where the re-read is
-    # a partition-pruned parquet scan and the transparent plan keeps
-    # pruning auditable (tests assert PartitionFilters on the final DF)
+    # pruned postings feed BOTH the df-count agg and the scoring join
     p = postings.filter(F.col("term").isin(*list(order)))
-    if reuse_pruned:
-        p = p.localCheckpoint(eager=False)
     dfreq = p.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
 
     contrib = (p.join(F.broadcast(dfreq), "term")
@@ -189,13 +181,10 @@ def bm25_topk_from_index(postings: DataFrame, doclens: DataFrame,
             .limit(k))
 
 
-
-
 def bm25_batch_topk_from_index(postings: DataFrame, doclens: DataFrame,
                                stats: DataFrame, queries: dict[str, str],
                                k: int = 10, k1: float = K1, b: float = B,
-                               round_to: int = 6,
-                               reuse_pruned: bool = False) -> DataFrame:
+                               round_to: int = 6) -> DataFrame:
     """Per-query BM25 top-k for a BATCH of queries served from the index
     tables: (query_id, id, score, rank). The batch analog of
     bm25_topk_from_index — candidates come from ONE term-pruned postings
@@ -205,75 +194,67 @@ def bm25_batch_topk_from_index(postings: DataFrame, doclens: DataFrame,
     (every query <= _MAX_PIVOT_POS terms, i.e. serving traffic) fold
     through the pivoted codegen aggregate; any longer query switches the
     whole batch to the HOF map fold — the two are bit-identical (see
-    _pivot_fold). NOTHING in the plan is sized by |Q| or the vocabulary
-    except two broadcasts and one literal map (unlike a per-doc tf-column
-    layout, whose schema grows with the union term count)."""
+    _pivot_fold).
+
+    One shuffle. A literal map from each query term to the
+    (query_id, _pos) slots it fills — its occurrences on the pivot path,
+    its distinct-term slot in each query on the map-fold path — is
+    exploded on the pruned postings, which then repartition by query_id.
+    Every row of a (query_id, _pos) group is one posting of that slot's
+    term, so a window count there IS the term's df; doclens (two numbers
+    per document) joins broadcast, so the window, the (query_id, id) fold
+    and the per-query rank all run on that one partitioning, and the
+    postings are read once. NOTHING in the plan is sized by |Q| or the
+    vocabulary except the literal maps (unlike a per-doc tf-column
+    layout, whose schema grows with the union term count); a map lookup
+    scans its keys, which is cheap at serving batch sizes."""
+    from pyspark.sql.window import Window
+
     per_q = {qid: terms_of(q) for qid, q in queries.items()}
-    per_q = {qid: ts for qid, ts in per_q.items() if ts}
+    per_q = {qid: ts for qid, ts in sorted(per_q.items()) if ts}
     if not per_q:
         raise ValueError("no tokenizable terms in any query")
-    uniq = sorted({t for ts in per_q.values() for t in ts})
-    ti_of = {t: i for i, t in enumerate(uniq)}
-    n_pos = max(len(ts) for ts in per_q.values())
+    pivot = max(len(ts) for ts in per_q.values()) <= _MAX_PIVOT_POS
+    slots_of = {qid: ts if pivot else sorted(set(ts))
+                for qid, ts in per_q.items()}
+    slots: dict[str, list[str]] = {}
+    for qid, ts in slots_of.items():
+        for i, t in enumerate(ts):
+            slots.setdefault(t, []).append(
+                f"named_struct('query_id', {sql_quote(qid)}, '_pos', {i})")
+    slot_map = F.expr("map(" + ", ".join(
+        f"{sql_quote(t)}, array({', '.join(v)})"
+        for t, v in slots.items()) + ")")
+    contrib = (postings.filter(F.col("term").isin(sorted(slots)))
+               .select("*", F.inline(slot_map[F.col("term")]))
+               .repartition("query_id")
+               .withColumn("df", F.count(F.lit(1)).over(
+                   Window.partitionBy("query_id", "_pos")))
+               .join(F.broadcast(doclens), "id")
+               .crossJoin(F.broadcast(stats))
+               .select("query_id", "id", "_pos",
+                       _bm25_contrib(k1, b).alias("_c")))
 
-    # same two-consumer shape as the single-query form: reuse_pruned
-    # checkpoints the term-pruned postings so dfreq + contrib share one
-    # compute (live lineages); store-served frames keep the transparent
-    # partition-pruned scan
-    p = postings.filter(F.col("term").isin(uniq))
-    if reuse_pruned:
-        p = p.localCheckpoint(eager=False)
-    dfreq = p.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    spark = postings.sparkSession
-    c = _bm25_contrib(k1, b)
-
-    if n_pos <= _MAX_PIVOT_POS:
-        # occurrence-level query-term table: joining it replicates a
-        # (term, doc) posting once per occurrence of that term in each
-        # query, position attached — rows feed the pivot fold directly
-        qterm = spark.createDataFrame(
-            [(qid, t, i) for qid, ts in sorted(per_q.items())
-             for i, t in enumerate(ts)],
-            "query_id string, term string, _pos int")
-        per_occ = (p.join(F.broadcast(qterm), "term")
-                    .join(F.broadcast(dfreq), "term")
-                    .join(doclens, "id")
-                    .crossJoin(F.broadcast(stats))
-                    .select("query_id", "id", "_pos", c.alias("_c")))
-        scored = _pivot_fold(per_occ, ["query_id", "id"], n_pos)
+    if pivot:
+        n_pos = max(len(ts) for ts in per_q.values())
+        scored = _pivot_fold(contrib, ["query_id", "id"], n_pos)
     else:
-        qterm = spark.createDataFrame(
-            [(qid, t) for qid, ts in sorted(per_q.items())
-             for t in sorted(set(ts))], "query_id string, term string")
-        contrib = (p.join(F.broadcast(qterm), "term")
-                    .join(F.broadcast(dfreq), "term")
-                    .join(doclens, "id")
-                    .crossJoin(F.broadcast(stats)))
-        ti = F.create_map(*[x for t, i in ti_of.items()
-                            for x in (F.lit(t), F.lit(i))])
-        per_term = contrib.select(
-            "query_id", "id",
-            F.struct(ti[F.col("term")].alias("i"),
-                     c.alias("c")).alias("tc"))
-
-        # one parsed literal: query_id -> its occurrence list of term
-        # indices (repeats preserved — the fold adds once per occurrence,
-        # exactly the scan form's left-to-right chain)
+        # one parsed literal: query_id -> the slot of each of its term
+        # OCCURRENCES in order (repeats preserved — the fold adds once per
+        # occurrence, exactly the scan form's left-to-right chain)
         occ_sql = "map(" + ", ".join(
             f"{sql_quote(qid)}, "
-            f"array({', '.join(str(ti_of[t]) for t in ts)})"
-            for qid, ts in sorted(per_q.items())) + ")"
+            f"array({', '.join(str(slots_of[qid].index(t)) for t in ts)})"
+            for qid, ts in per_q.items()) + ")"
         occ = F.expr(occ_sql)[F.col("query_id")]
-
-        cmap = F.map_from_entries(F.collect_list("tc"))
+        cmap = F.map_from_entries(F.collect_list(F.struct("_pos", "_c")))
         raw = F.aggregate(occ, F.lit(0.0),
                           lambda acc, i: acc + F.coalesce(cmap[i],
                                                           F.lit(0.0)))
-        scored = per_term.groupBy("query_id", "id").agg(raw.alias("_raw"))
+        scored = contrib.groupBy("query_id", "id").agg(raw.alias("_raw"))
     scored = (scored.filter(F.col("_raw") > 0)
               .select("query_id", "id",
                       F.round(F.col("_raw"), round_to).alias("score")))
-    from pyspark.sql.window import Window
     w = Window.partitionBy("query_id").orderBy(
         F.col("score").desc(), F.col("id").asc())
     return (scored.withColumn("rank", F.row_number().over(w))

@@ -77,9 +77,11 @@ RESOURCE_TYPES = [
 
 def code_text(c: Column) -> Column:
     """S2 (app/main.py:585-591): CodeableConcept -> display string:
-    `.text` else coding[0].display else coding[0].code."""
-    return F.coalesce(c["text"], c["coding"][0]["display"],
-                      c["coding"][0]["code"])
+    `.text` else coding[0].display else coding[0].code. First elements are
+    read with `get` throughout this module: FHIR arrays may be empty, and
+    ANSI `[0]` raises on an empty array where `get` returns null."""
+    return F.coalesce(c["text"], F.get(c["coding"], 0)["display"],
+                      F.get(c["coding"], 0)["code"])
 
 
 def _ts(c: Column) -> Column:
@@ -104,7 +106,7 @@ def _human_name(r: Column) -> Column:
     1047-1051). DELIBERATE extension: a `text` field on the name wins when
     present (the reference ignores it and would emit '' for text-only
     names); missing parts are skipped instead of leaving ''-gaps."""
-    n = _name_array(r)[0]
+    n = F.get(_name_array(r), 0)
     return F.coalesce(
         n["text"],
         F.nullif(F.trim(F.concat_ws(
@@ -123,7 +125,7 @@ def _address(r: Column) -> Column:
     1060-1067). DELIBERATE cleanup: missing parts are skipped (concat_ws
     drops nulls) where the reference's ' '.join keeps ''-gaps, producing
     double spaces for partial addresses."""
-    a = r["address"][0]
+    a = F.get(r["address"], 0)
     return F.nullif(F.trim(F.concat_ws(
         " ", F.array_join(a["line"], " "), a["city"], a["state"],
         a["postalCode"])), F.lit(""))
@@ -201,10 +203,10 @@ def structured_documents(resources: DataFrame) -> DataFrame:
         only("Patient", code_text(r["maritalStatus"])).alias("patientMaritalStatus"),
         only("Patient", multiple_birth).alias("patientMultipleBirth"),
         only("Patient", _telecom(r)).alias("patientTelecom"),
-        only("Patient", code_text(r["communication"][0]["language"])).alias("patientLanguage"),
+        only("Patient", code_text(F.get(r["communication"], 0)["language"])).alias("patientLanguage"),
         only("Condition", r["id"]).alias("conditionId"),
         only("Condition", code_text(r["code"])).alias("conditionCodeText"),
-        only("Condition", code_text(r["category"][0])).alias("conditionCategory"),
+        only("Condition", code_text(F.get(r["category"], 0))).alias("conditionCategory"),
         only("Condition", code_text(r["clinicalStatus"])).alias("conditionClinicalStatus"),
         only("Condition", code_text(r["verificationStatus"])).alias("conditionVerificationStatus"),
         only("Condition", _ts(r["onsetDateTime"])).alias("conditionOnsetDateTime"),
@@ -217,26 +219,26 @@ def structured_documents(resources: DataFrame) -> DataFrame:
             r["valueQuantity"]["value"].cast("string"), r["valueString"],
             code_text(r["valueCodeableConcept"]))).alias("observationValue"),
         only("Observation", r["valueQuantity"]["unit"]).alias("observationUnit"),
-        only("Observation", code_text(r["interpretation"][0])).alias("observationInterpretation"),
+        only("Observation", code_text(F.get(r["interpretation"], 0))).alias("observationInterpretation"),
         only("Observation", _ts(r["effectiveDateTime"])).alias("observationEffectiveDateTime"),
         only("Observation", _ts(r["issued"])).alias("observationIssued"),
         only("Observation", F.when(
-            r["referenceRange"][0].isNotNull(),
+            F.get(r["referenceRange"], 0).isNotNull(),
             F.concat_ws(", ",
                         F.concat(F.lit("Low: "),
-                                 r["referenceRange"][0]["low"]["value"].cast("string")),
+                                 F.get(r["referenceRange"], 0)["low"]["value"].cast("string")),
                         F.concat(F.lit("High: "),
-                                 r["referenceRange"][0]["high"]["value"].cast("string"))))
+                                 F.get(r["referenceRange"], 0)["high"]["value"].cast("string"))))
              ).alias("observationReferenceRange"),
         only("Observation", _notes(r)).alias("observationNote"),
         only("Encounter", r["id"]).alias("encounterId"),
         only("Encounter", r["status"]).alias("encounterStatus"),
         only("Encounter", F.coalesce(r["class"]["code"], r["class"]["display"])).alias("encounterClass"),
-        only("Encounter", code_text(r["type"][0])).alias("encounterType"),
-        only("Encounter", code_text(r["reasonCode"][0])).alias("encounterReasonCode"),
+        only("Encounter", code_text(F.get(r["type"], 0))).alias("encounterType"),
+        only("Encounter", code_text(F.get(r["reasonCode"], 0))).alias("encounterReasonCode"),
         only("Encounter", _ts(r["period"]["start"])).alias("encounterStart"),
         only("Encounter", _ts(r["period"]["end"])).alias("encounterEnd"),
-        only("Encounter", r["location"][0]["location"]["display"]).alias("encounterLocation"),
+        only("Encounter", F.get(r["location"], 0)["location"]["display"]).alias("encounterLocation"),
         only("Encounter", r["serviceProvider"]["reference"]).alias("encounterServiceProvider"),
         only("Encounter", F.nullif(F.array_join(F.transform(
             r["participant"], lambda p: p["individual"]["display"]), " | "),
@@ -248,7 +250,7 @@ def structured_documents(resources: DataFrame) -> DataFrame:
         only("MedicationRequest", r["intent"]).alias("medRequestIntent"),
         only("MedicationRequest", r["status"]).alias("medRequestStatus"),
         only("MedicationRequest", r["priority"]).alias("medRequestPriority"),
-        only("MedicationRequest", r["dosageInstruction"][0]["text"]).alias("medRequestDosageInstruction"),
+        only("MedicationRequest", F.get(r["dosageInstruction"], 0)["text"]).alias("medRequestDosageInstruction"),
         only("MedicationRequest", F.when(
             r["dispenseRequest"].isNotNull(),
             F.to_json(r["dispenseRequest"]))).alias("medRequestDispenseRequest"),
@@ -257,13 +259,13 @@ def structured_documents(resources: DataFrame) -> DataFrame:
         only("Procedure", code_text(r["code"])).alias("procedureCodeText"),
         only("Procedure", r["status"]).alias("procedureStatus"),
         only("Procedure", _ts(r["performedDateTime"])).alias("procedurePerformedDateTime"),
-        only("Procedure", code_text(r["followUp"][0])).alias("procedureFollowUp"),
+        only("Procedure", code_text(F.get(r["followUp"], 0))).alias("procedureFollowUp"),
         only("Procedure", _notes(r)).alias("procedureNote"),
         only("AllergyIntolerance", r["id"]).alias("allergyId"),
         only("AllergyIntolerance", code_text(r["clinicalStatus"])).alias("allergyClinicalStatus"),
         only("AllergyIntolerance", code_text(r["verificationStatus"])).alias("allergyVerificationStatus"),
-        only("AllergyIntolerance", code_text(r["type"][0])).alias("allergyType"),
-        only("AllergyIntolerance", code_text(r["category"][0])).alias("allergyCategory"),
+        only("AllergyIntolerance", code_text(F.get(r["type"], 0))).alias("allergyType"),
+        only("AllergyIntolerance", code_text(F.get(r["category"], 0))).alias("allergyCategory"),
         only("AllergyIntolerance", r["criticality"]).alias("allergyCriticality"),
         only("AllergyIntolerance", code_text(r["code"])).alias("allergyCodeText"),
         only("AllergyIntolerance", _ts(r["onsetDateTime"])).alias("allergyOnsetDateTime"),
@@ -271,12 +273,12 @@ def structured_documents(resources: DataFrame) -> DataFrame:
         only("Practitioner", r["id"]).alias("practitionerId"),
         only("Practitioner", _human_name(r)).alias("practitionerName"),
         only("Practitioner", r["gender"]).alias("practitionerGender"),
-        only("Practitioner", code_text(r["qualification"][0]["code"])).alias("practitionerSpecialty"),
+        only("Practitioner", code_text(F.get(r["qualification"], 0)["code"])).alias("practitionerSpecialty"),
         only("Practitioner", _address(r)).alias("practitionerAddress"),
         only("Practitioner", _telecom(r)).alias("practitionerTelecom"),
         only("Organization", r["id"]).alias("organizationId"),
         only("Organization", _org_name(r)).alias("organizationName"),
-        only("Organization", code_text(r["type"][0])).alias("organizationType"),
+        only("Organization", code_text(F.get(r["type"], 0))).alias("organizationType"),
         only("Organization", _address(r)).alias("organizationAddress"),
         only("Organization", _telecom(r)).alias("organizationTelecom"),
     )

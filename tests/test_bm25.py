@@ -77,17 +77,21 @@ def test_bm25_batch_matches_single_query(spark):
 def test_bm25_batch_join_shape_matches_struct_shape(spark):
     """The large-Q join formulation must be bit-equal to the struct-
     literal batch scorer (same stats, same formula, ordered fold with
-    zero-skip proven safe) — including a query with a repeated term."""
+    zero-skip proven safe) — including a query with a repeated term, and
+    a batch whose longest query takes the map-fold path."""
     from rassengine_spark.functions.bm25 import (bm25_batch_topk,
                                                  bm25_batch_topk_join)
+    from rassengine_spark.operators.inverted_index import _MAX_PIVOT_POS
     docs = spark.createDataFrame(
         [(i, f"alpha beta w{i} gamma alpha" if i % 3 else "beta only doc")
          for i in range(30)], "doc_id long, text string")
     qs = {"q1": "alpha gamma", "q2": "beta", "q3": "alpha alpha w7"}
-    a = {(r.query_id, r.id): (r.score, r.rank)
-         for r in bm25_batch_topk(docs, "text", "doc_id", qs, k=7)
-         .collect()}
-    b = {(r.query_id, r.id): (r.score, r.rank)
-         for r in bm25_batch_topk_join(docs, "text", "doc_id", qs, k=7)
-         .collect()}
-    assert a == b and len(a) > 0
+    long_q = " ".join(["gamma w4 alpha doc w7"] * (_MAX_PIVOT_POS // 4))
+    for batch in (qs, {**qs, "q4": long_q}):
+        a = {(r.query_id, r.id): (r.score, r.rank)
+             for r in bm25_batch_topk(docs, "text", "doc_id", batch, k=7)
+             .collect()}
+        b = {(r.query_id, r.id): (r.score, r.rank)
+             for r in bm25_batch_topk_join(docs, "text", "doc_id", batch,
+                                           k=7).collect()}
+        assert a == b and len(a) > 0

@@ -283,6 +283,36 @@ def test_parse_fhir_malformed_inputs_do_not_throw(spark):
     assert rows[0].patientName is None     # bad nested shape -> null
 
 
+def test_parse_fhir_empty_arrays_read_as_null(spark):
+    """A first-element field over an EMPTY FHIR array (`name: []`,
+    `coding: []`, ...) is null, not an ANSI index-out-of-bounds error."""
+    from rassengine_spark.sources.fhir import parse_fhir
+
+    empty = {k: [] for k in ["name", "address", "communication",
+                             "category", "interpretation", "referenceRange",
+                             "type", "reasonCode", "location",
+                             "dosageInstruction", "followUp",
+                             "qualification"]}
+    resources = [{"resourceType": rt, "id": rt.lower(),
+                  "code": {"coding": []}, **empty}
+                 for rt in ["Patient", "Condition", "Observation",
+                            "Encounter", "MedicationRequest", "Procedure",
+                            "AllergyIntolerance", "Practitioner",
+                            "Organization"]]
+    raw = spark.createDataFrame(
+        [("u1", "e.json",
+          json.dumps({"entry": [{"resource": r} for r in resources]}))],
+        "user_id string, file_path string, content string")
+    sdocs, chunks = parse_fhir(raw, chunk_size=16)
+    rows = {r.resourceType: r for r in sdocs.collect()}
+    chunks.collect()
+    assert len(rows) == 9
+    assert rows["Patient"].patientName is None
+    assert rows["Patient"].patientAddress is None
+    assert rows["Condition"].conditionCategory is None
+    assert rows["Encounter"].encounterType is None
+
+
 # ------------------------------------------------------------- fuzz (§5)
 from hypothesis import HealthCheck, given, settings  # noqa: E402
 from hypothesis import strategies as st  # noqa: E402

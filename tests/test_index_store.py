@@ -313,3 +313,41 @@ def test_store_metadata_cached_across_serve_calls(spark, tmp_path,
     assert any(p.rstrip("/").endswith("meta") for p in reads)
     plan = _physical(out)
     assert "PartitionFilters" in plan     # still pruned after reload
+
+
+def test_term_store_bucket_count_follows_corpus(spark, tmp_path):
+    """Saved without n_buckets, a small corpus gets one bucket, recorded
+    in meta; it serves BM25 identical to the same corpus in 16 buckets,
+    before and after an append, and the append keeps the recorded count.
+    An explicit n_buckets is recorded as given."""
+    import glob
+    import os
+
+    from rassengine_spark.operators.index_store import append_term_index
+
+    def meta(p):
+        return spark.read.parquet(f"{p}/meta").collect()[0]["n_buckets"]
+
+    def served(p, q):
+        return [(r.id, r.score)
+                for r in bm25_topk_from_store(spark, p, q, k=5).collect()]
+
+    df = corpus(spark)
+    derived, fixed = str(tmp_path / "derived"), str(tmp_path / "fixed")
+    save_term_index(*build_term_index(df, "text", "id"), derived)
+    save_term_index(*build_term_index(df, "text", "id"), fixed,
+                    n_buckets=16)
+    assert meta(derived) == 1 and meta(fixed) == 16
+    assert len(glob.glob(os.path.join(derived, "postings", "tb=*"))) == 1
+    queries = ["spark join", "query planning spark", "cooking recipe"]
+    for q in queries:
+        assert served(derived, q) == served(fixed, q), q
+
+    extra = spark.createDataFrame(
+        [(10, "spark shuffles and spark joins again")],
+        "id long, text string")
+    for p in (derived, fixed):
+        append_term_index(extra, "text", "id", p)
+    assert meta(derived) == 1 and meta(fixed) == 16
+    for q in queries:
+        assert served(derived, q) == served(fixed, q), q

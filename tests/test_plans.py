@@ -287,3 +287,69 @@ def test_ask_plan_shape_does_not_depend_on_terms(spark, fhir_corpus, intent,
     finally:
         spark.conf.set(key, old)
     assert counts == [len(fields), len(fields)]
+
+
+@pytest.fixture(scope="module")
+def term_store(spark, tmp_path_factory):
+    from rassengine_spark.operators.index_store import save_term_index
+    from rassengine_spark.operators.inverted_index import build_term_index
+
+    words = ["spark", "join", "shuffle", "window", "sort", "query", "plan",
+             "scan", "index", "bucket", "merge", "hash"]
+    rows = [(i, " ".join(words[(i * j) % len(words)] for j in range(1, 9)))
+            for i in range(60)]
+    path = str(tmp_path_factory.mktemp("terms") / "store")
+    save_term_index(*build_term_index(
+        spark.createDataFrame(rows, "id long, text string"), "text", "id"),
+        path)
+    return path, words
+
+
+@pytest.mark.parametrize("batch", ["one", "thirty_two", "long_query"])
+def test_bm25_batch_is_one_shuffle(spark, term_store, batch):
+    """A store-served BM25 batch shuffles once (by query_id): df is a
+    window on that partitioning, so no aggregate is keyed on term, and
+    the (query_id, id) fold and the rank window reuse it — for a 1-query
+    batch, a 32-query batch and one with a query longer than
+    _MAX_PIVOT_POS (the map-fold path)."""
+    from rassengine_spark.operators.inverted_index import (
+        _MAX_PIVOT_POS, bm25_batch_topk_from_index)
+
+    path, words = term_store
+    queries = {"one": {"q0": "spark join"},
+               "thirty_two": {f"q{i}": f"{words[i % 12]} {words[i * 5 % 12]}"
+                              for i in range(32)},
+               "long_query": {"q0": "spark join",
+                              "q1": " ".join(words[i % 12] for i in
+                                             range(_MAX_PIVOT_POS + 3))},
+               }[batch]
+    out = bm25_batch_topk_from_index(
+        spark.read.parquet(f"{path}/postings").select("term", "id", "tf"),
+        spark.read.parquet(f"{path}/doclens"),
+        spark.read.parquet(f"{path}/stats"), queries, k=5)
+    assert out.collect()
+    plan = _plan(out)
+    assert "isFinalPlan=true" in plan
+    plan = plan.split("== Initial Plan ==")[0]
+    assert plan.count("Exchange hashpartitioning") == 1, plan
+    assert "HashAggregate(keys=[term" not in plan, plan
+
+
+def test_hnsw_store_batch_scans_store_once(spark, tmp_path):
+    """Serving a query frame from the HNSW store reads the store once:
+    the shard ids come from its file listing, not a second scan."""
+    from rassengine_spark.llmops.hnsw import (hnsw_topk_from_store_df,
+                                              save_hnsw_index)
+
+    rows = [(i, [float((i * 7 + j * 3) % 11 - 5) for j in range(8)])
+            for i in range(60)]
+    corpus = spark.createDataFrame(rows, "vec_id long, v array<double>")
+    path = str(tmp_path / "hnsw")
+    save_hnsw_index(corpus, "v", "vec_id", path, partitions=3)
+    qs = corpus.filter(F.col("vec_id") < 4) \
+               .select(F.col("vec_id").alias("qid"), "v")
+    out = hnsw_topk_from_store_df(spark, path, qs, "v", "qid", k=3)
+    assert out.count() == 12
+    plan = _plan(out)
+    assert plan.count("FileScan parquet") == 1, plan
+    assert "BroadcastNestedLoopJoin" not in plan, plan

@@ -1,7 +1,9 @@
-"""The search routes against their DuckDB oracles: each `__spark_entry__.py`
-entry that runs an intent-routed operator (or the ask dispatch itself) is
-executed on Spark and compared with its `oracle_sql()` twin through
-tools/check.py's canonical compare (schema, row count, value multiset)."""
+"""The search routes and the retrieval stores against their DuckDB
+oracles: each `__spark_entry__.py` entry that runs an intent-routed
+operator (or the ask dispatch itself), or that serves BM25 from the term
+index or kNN from the HNSW store, is executed on Spark and compared with
+its `oracle_sql()` twin through tools/check.py's canonical compare
+(schema, row count, value multiset)."""
 
 import importlib.util
 import os
@@ -20,6 +22,12 @@ ROUTES = [
     "q9_explanatory", "q10_multi_intent", "q11_entity_specific",
     "q12_collapse_best_per_key", "q13_name_resolution", "q13_fuzzy_trigram",
     "q14_has_data", "rerank_lexical",
+    # term index and HNSW store: build, append, compact, serve
+    "bm25_batch_ranked", "bm25_index_ranked", "bm25_known_item_eval",
+    "bm25_ndcg_mrr_eval", "bm25_store_ranked", "bm25_store_append_ranked",
+    "bm25_store_compacted_ranked", "sim_hnsw_recall",
+    "sim_hnsw_store_recall", "sim_hnsw_store_append_recall",
+    "sim_hnsw_compacted_recall",
 ]
 
 
