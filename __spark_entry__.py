@@ -17,7 +17,9 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from rassengine_spark.functions.text import terms_of
 from rassengine_spark.operators import search as ops
+from rassengine_spark.operators.inverted_index import B, K1
 from rassengine_spark.operators import windows as W
 from rassengine_spark.functions import vector as V
 from rassengine_spark.session import load_tables
@@ -486,10 +488,8 @@ def _q_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine-exact by construction."""
     from pyspark.sql.window import Window
 
-    from rassengine_spark.functions.bm25 import bm25_topk
     t = load_tables(spark, sf_dir)
-    lex = bm25_topk(t["documents"], "text", "doc_id",
-                    "spark join query", k=20)
+    lex = _bm25_index_topk(t["documents"], "spark join query", k=20)
     wr = Window.orderBy(F.desc("score"), F.asc("id"))     # 20-row frame
     lex_r = lex.select("id", F.row_number().over(wr).alias("rank"))
     sem = (t["embeddings"]
@@ -503,7 +503,6 @@ def _q_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_hybrid_rrf() -> str:
-    from rassengine_spark.functions.bm25 import bm25_sql
     lex = bm25_sql("documents", "text", "doc_id", "spark join query", k=20)
     return f"""
 WITH lex AS ({lex}),
@@ -1157,105 +1156,6 @@ ORDER BY 1, 2
 """
 
 
-def _q_sim_maxsim(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ColBERT-style late-interaction top-k
-    (llmops/similarity.py::maxsim_topk): docs are 10-vector bags
-    (vec_id div 10), queries are the label 0/1 token sets thinned to
-    ~1-in-12; score = Σ_token max_docvec rounded cosine, token sum as
-    DECIMAL (order-free) — the multi-vector retrieval family."""
-    emb = load_tables(spark, sf_dir)["embeddings"]
-    docs = emb.filter(F.col("label") >= 2).select(
-        F.expr("vec_id div 10").alias("doc"), "embedding")
-    qs = emb.filter((F.col("label") < 2) & (F.col("vec_id") % 12 == 0))
-    return SIM.maxsim_topk(docs, qs, "embedding", "doc", "vec_id",
-                           "label", k=5)
-
-
-_SQL_SIM_MAXSIM = f"""
-WITH d AS (SELECT vec_id // 10 AS id, embedding AS v
-           FROM embeddings WHERE label >= 2),
-q AS (SELECT label AS query_id, vec_id AS qtok, embedding AS qv
-      FROM embeddings WHERE label < 2 AND vec_id % 12 = 0),
-mx AS (
-  SELECT query_id, qtok, id,
-         max({_SQL_COS.format(a='d.v', b='q.qv')}) AS m
-  FROM d CROSS JOIN q GROUP BY 1, 2, 3),
-sm AS (
-  SELECT query_id, id,
-         CAST(SUM(CAST(m AS DECIMAL(16,6))) AS DOUBLE) AS score
-  FROM mx GROUP BY 1, 2)
-SELECT query_id, id, score,
-       CAST(row_number() OVER (PARTITION BY query_id
-                               ORDER BY score DESC, id ASC) AS INT) AS rank
-FROM sm QUALIFY rank <= 5
-"""
-
-
-def _q_sim_mmr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MMR diversity rerank (llmops/similarity.py::mmr_rerank): per
-    query, cosine top-8 candidates greedily reranked by
-    0.5·rel − 0.5·max-sim-to-selected, k=3 — the rerank pass that stops
-    a result list being near-duplicates of one hit. Fixed-k greedy steps
-    unroll into a SQL oracle; the Arrow pass uses the HALF_UP driver
-    twin so the penalties are engine-exact."""
-    emb = load_tables(spark, sf_dir)["embeddings"]
-    queries_df = emb.filter(F.col("vec_id") < 2) \
-                    .select(F.col("vec_id").alias("qid"), "embedding")
-    corpus = emb.filter(F.col("vec_id") >= 5)
-    cand = SIM.brute_force_topk(corpus, queries_df, "embedding", "vec_id",
-                                "qid", k=8)
-    withv = emb.select(F.col("vec_id").alias("id"), "embedding") \
-               .join(F.broadcast(cand), "id")
-    return SIM.mmr_rerank(withv, "embedding", "id", "query_id",
-                          rel_col="score", k=3) \
-              .orderBy("query_id", "mmr_rank")
-
-
-def _sql_sim_mmr() -> str:
-    cos = _SQL_COS.format
-    return f"""
-WITH q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings
-           WHERE vec_id < 2),
-c AS (SELECT vec_id AS id, embedding AS v FROM embeddings
-      WHERE vec_id >= 5),
-scored AS (
-  SELECT query_id, id, {cos(a='c.v', b='q.qv')} AS rel, v
-  FROM c CROSS JOIN q),
-cand AS MATERIALIZED (
-  SELECT * FROM scored
-  QUALIFY row_number() OVER (PARTITION BY query_id
-                             ORDER BY rel DESC, id ASC) <= 8),
-s1 AS MATERIALIZED (
-  SELECT query_id, id, v FROM cand
-  QUALIFY row_number() OVER (PARTITION BY query_id
-                             ORDER BY rel DESC, id ASC) = 1),
-r2 AS (
-  SELECT c.query_id, c.id, c.rel, c.v,
-         0.5 * c.rel - 0.5 * {cos(a='c.v', b='s1.v')} AS sc
-  FROM cand c JOIN s1 ON c.query_id = s1.query_id AND c.id <> s1.id),
-s2 AS MATERIALIZED (
-  SELECT query_id, id, v FROM r2
-  QUALIFY row_number() OVER (PARTITION BY query_id
-                             ORDER BY sc DESC, id ASC) = 1),
-r3 AS (
-  SELECT c.query_id, c.id,
-         0.5 * c.rel - 0.5 * greatest({cos(a='c.v', b='s1.v')},
-                                      {cos(a='c.v', b='s2.v')}) AS sc
-  FROM cand c
-  JOIN s1 ON c.query_id = s1.query_id
-  JOIN s2 ON c.query_id = s2.query_id
-  WHERE c.id <> s1.id AND c.id <> s2.id),
-s3 AS (
-  SELECT query_id, id FROM r3
-  QUALIFY row_number() OVER (PARTITION BY query_id
-                             ORDER BY sc DESC, id ASC) = 1)
-SELECT query_id, id, CAST(1 AS INT) AS mmr_rank FROM s1
-UNION ALL SELECT query_id, id, 2 FROM s2
-UNION ALL SELECT query_id, id, 3 FROM s3
-ORDER BY query_id, mmr_rank
-"""
-
-
 def _q_sim_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-k ANN baseline: 5 query vectors vs corpus."""
     emb = load_tables(spark, sf_dir)["embeddings"]
@@ -1316,18 +1216,6 @@ def _serve_hnsw_recall(spark: SparkSession, sf_dir: str,
     rec = SIM.recall_at_k(approx, exact)
     return rec.select("query_id", "n_exact",
                       (F.col("recall") >= 0.8).alias("recall_ok"))
-
-
-def _serve_ivf_store_topk(spark: SparkSession, sf_dir: str,
-                          path: str) -> DataFrame:
-    """Shared serve body of the three IVF store entries: top-k from the
-    persisted cell-partitioned tier for the fixed query batch."""
-    from rassengine_spark.operators.index_store import ivf_topk_from_store
-    emb = load_tables(spark, sf_dir)["embeddings"]
-    queries_df = emb.filter(F.col("vec_id") < 5) \
-                    .select(F.col("vec_id").alias("qid"), "embedding")
-    return ivf_topk_from_store(spark, path, queries_df, "embedding",
-                               "qid", k=_IVF_K, n_probe=_IVF_PROBE)
 
 
 def _q_sim_hnsw_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1455,617 +1343,6 @@ def _build_hnsw_store_m16(spark: SparkSession, sf_dir: str) -> str:
     save_hnsw_index(corpus, "embedding", "vec_id", path, m=16,
                     ef_construction=128, partitions=4)
     return path
-
-
-def _sql_sim_lsh() -> str:
-    planes = SIM.hyperplanes(EMBED_DIM, 4)
-    bucket_terms = []
-    for i, p in enumerate(planes):
-        lit = "[" + ", ".join(f"{x!r}" for x in p) + "]"
-        bucket_terms.append(
-            f"(CASE WHEN list_dot_product(list_transform(embedding, "
-            f"x -> CAST(x AS DOUBLE)), {lit}) > 0 THEN {1 << i} ELSE 0 END)")
-    bucket = " + ".join(bucket_terms)
-    return f"""
-WITH b AS (SELECT vec_id, embedding, {bucket} AS bucket FROM embeddings),
-q AS (SELECT vec_id AS query_id, embedding AS qv, bucket FROM b WHERE vec_id < 5),
-c AS (SELECT vec_id AS id, embedding AS v, bucket FROM b WHERE vec_id >= 5),
-scored AS (
-  SELECT q.query_id, c.id, {_SQL_COS.format(a='c.v', b='q.qv')} AS score
-  FROM c JOIN q ON c.bucket = q.bucket)
-SELECT query_id, id, score,
-       CAST(row_number() OVER (PARTITION BY query_id
-                               ORDER BY score DESC, id ASC) AS INT) AS rank
-FROM scored
-QUALIFY rank <= 3
-"""
-
-
-def _q_sim_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LSH-bucketed approximate top-k: random-hyperplane buckets prune the
-    candidate set (the 100 TB scale path for ANN)."""
-    emb = load_tables(spark, sf_dir)["embeddings"]
-    queries_df = emb.filter(F.col("vec_id") < 5) \
-                    .select(F.col("vec_id").alias("qid"), "embedding")
-    corpus = emb.filter(F.col("vec_id") >= 5)
-    return SIM.lsh_bucketed_topk(corpus, queries_df, "embedding", "vec_id",
-                                 "qid", k=3, bits=4, dim=EMBED_DIM)
-
-
-_IVF_CELLS, _IVF_PROBE, _IVF_K = 8, 2, 3
-
-
-def _q_sim_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF approximate top-k: md5-sampled coarse-quantizer cells; queries
-    probe their 2 nearest of 8 cells (the inverted-file ANN scale path —
-    per-query work O(N * n_probe / n_cells))."""
-    emb = load_tables(spark, sf_dir)["embeddings"]
-    queries_df = emb.filter(F.col("vec_id") < 5) \
-                    .select(F.col("vec_id").alias("qid"), "embedding")
-    corpus = emb.filter(F.col("vec_id") >= 5)
-    return SIM.ivf_topk(corpus, queries_df, "embedding", "vec_id", "qid",
-                        k=_IVF_K, n_cells=_IVF_CELLS, n_probe=_IVF_PROBE)
-
-
-def _q_sim_ivf_store(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The persisted IVF tier end to end (operators/index_store.py):
-    centroids + cell-partitioned assignments written once, then top-k
-    served FROM THE STORE — probe cells computed driver-side so the
-    assignment read prunes to n_probe partitions (PartitionFilters, the
-    sublinear serving path). Assignment uses the same rounded-cosine
-    argmax as the live ivf_topk, so this is bit-identical to
-    sim_ivf_topk and shares its oracle. The index is written in the
-    prepare phase; this callable serves."""
-    return _serve_ivf_store_topk(
-        spark, sf_dir, _prepared_store("sim_ivf_store_topk", spark, sf_dir))
-
-
-def _build_ivf_store(spark: SparkSession, sf_dir: str) -> str:
-    from rassengine_spark.operators.index_store import save_ivf_index
-
-    path = _store_tmp_path("rass_ivf_store", sf_dir)
-    emb = load_tables(spark, sf_dir)["embeddings"]
-    corpus = emb.filter(F.col("vec_id") >= 5)
-    save_ivf_index(corpus, "embedding", "vec_id", path,
-                   n_cells=_IVF_CELLS)
-    return path
-
-
-def _q_sim_ivf_store_append(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The IVF tier's INCREMENTAL path: even-id vectors build the index
-    (and its quantizer), odd-id vectors APPEND — assigned against the
-    PERSISTED centroids, because re-deriving the quantizer from new data
-    would silently shift every historical cell boundary. The oracle
-    samples centroids from the initially-indexed half only and scores
-    the full corpus. Build+append run in the prepare phase; this
-    callable serves."""
-    return _serve_ivf_store_topk(
-        spark, sf_dir, _prepared_store("sim_ivf_store_append_topk", spark, sf_dir))
-
-
-def _build_ivf_store_appended(spark: SparkSession, sf_dir: str) -> str:
-    from rassengine_spark.operators.index_store import (append_ivf_index,
-                                                        save_ivf_index)
-
-    path = _store_tmp_path("rass_ivf_append", sf_dir)
-    emb = load_tables(spark, sf_dir)["embeddings"]
-    first = emb.filter((F.col("vec_id") >= 5)
-                       & (F.col("vec_id") % 2 == 0))
-    rest = emb.filter((F.col("vec_id") >= 5)
-                      & (F.col("vec_id") % 2 == 1))
-    save_ivf_index(first, "embedding", "vec_id", path,
-                   n_cells=_IVF_CELLS)
-    append_ivf_index(rest, "embedding", "vec_id", path)
-    return path
-
-
-def _q_sim_ivf_store_compacted(spark: SparkSession, sf_dir: str
-                               ) -> DataFrame:
-    """The IVF tier's compaction lifecycle: build on the even half,
-    append the odd half (a sliver per touched cell), COMPACT
-    (operators/index_store.py::compact_ivf_index — per-cell rewrite,
-    centroids/quantizer untouched, crash-safe swap) and serve. Layout
-    only, so the served top-k shares the append path's oracle verbatim
-    — compaction invisibility for the vector tier. Build+append+compact
-    run in the prepare phase; this callable serves."""
-    return _serve_ivf_store_topk(
-        spark, sf_dir, _prepared_store("sim_ivf_store_compacted_topk", spark, sf_dir))
-
-
-def _build_ivf_store_compacted(spark: SparkSession, sf_dir: str) -> str:
-    from rassengine_spark.operators.index_store import (append_ivf_index,
-                                                        compact_ivf_index,
-                                                        save_ivf_index)
-
-    path = _store_tmp_path("rass_ivf_compact", sf_dir)
-    emb = load_tables(spark, sf_dir)["embeddings"]
-    first = emb.filter((F.col("vec_id") >= 5)
-                       & (F.col("vec_id") % 2 == 0))
-    rest = emb.filter((F.col("vec_id") >= 5)
-                      & (F.col("vec_id") % 2 == 1))
-    save_ivf_index(first, "embedding", "vec_id", path,
-                   n_cells=_IVF_CELLS)
-    append_ivf_index(rest, "embedding", "vec_id", path)
-    compact_ivf_index(spark, path)
-    return path
-
-
-def _sql_sim_ivf(cent_where: str = "vec_id >= 5") -> str:
-    # cent_where narrows the QUANTIZER's training rows (the append-path
-    # oracle samples centroids from the initially-indexed half only);
-    # the corpus c0 always scores in full
-    cos_cv = _SQL_COS.format(a="cv", b="v")
-    cos_cq = _SQL_COS.format(a="cv", b="qv")
-    cos_vq = _SQL_COS.format(a="v", b="qv")
-    return f"""
-WITH q0 AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings
-            WHERE vec_id < 5),
-c0 AS (SELECT vec_id AS id, embedding AS v FROM embeddings
-       WHERE vec_id >= 5),
-ctrain AS (SELECT vec_id AS id, embedding AS v FROM embeddings
-           WHERE {cent_where}),
-cent AS (
-  SELECT row_number() OVER (ORDER BY md5(CAST(id AS VARCHAR))) - 1 AS cell,
-         v AS cv
-  FROM ctrain ORDER BY md5(CAST(id AS VARCHAR)) LIMIT {_IVF_CELLS}),
-cassign AS (
-  SELECT id, v, cell FROM (
-    SELECT c0.id, c0.v, cent.cell,
-           row_number() OVER (PARTITION BY c0.id
-                              ORDER BY {cos_cv} DESC, cent.cell ASC) AS rn
-    FROM c0 CROSS JOIN cent) WHERE rn = 1),
-qprobe AS (
-  SELECT query_id, qv, cell FROM (
-    SELECT q0.query_id, q0.qv, cent.cell,
-           row_number() OVER (PARTITION BY q0.query_id
-                              ORDER BY {cos_cq} DESC, cent.cell ASC) AS rn
-    FROM q0 CROSS JOIN cent) WHERE rn <= {_IVF_PROBE}),
-scored AS (
-  SELECT qprobe.query_id, cassign.id, {cos_vq} AS score
-  FROM cassign JOIN qprobe USING (cell))
-SELECT query_id, id, score,
-       CAST(row_number() OVER (PARTITION BY query_id
-                               ORDER BY score DESC, id ASC) AS INT) AS rank
-FROM scored QUALIFY rank <= {_IVF_K}
-"""
-
-
-_PQ_M, _PQ_CODES, _PQ_K = 8, 16, 5
-
-
-def _q_sim_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Product-quantization ADC top-k (llmops/pq.py): m=8 codewords per
-    vector (64x narrower than the double vectors through every scan and
-    shuffle), scoring = m table lookups per row; codebooks are the
-    md5-ordered deterministic sample, encode/score folds engine-exact."""
-    from rassengine_spark.llmops.pq import pq_adc_topk
-    emb = load_tables(spark, sf_dir)["embeddings"]
-    queries_df = emb.filter(F.col("vec_id") < 5) \
-                    .select(F.col("vec_id").alias("qid"), "embedding")
-    corpus = emb.filter(F.col("vec_id") >= 5)
-    return pq_adc_topk(corpus, queries_df, "embedding", "vec_id", "qid",
-                       k=_PQ_K, m=_PQ_M, n_codes=_PQ_CODES)
-
-
-def _sql_sim_pq() -> str:
-    sub = 64 // _PQ_M
-    d = ("list_dot_product(list_transform({a}, x -> CAST(x AS DOUBLE)), "
-         "list_transform({b}, x -> CAST(x AS DOUBLE)))")
-    aff = (f"round({d.format(a='cs', b='s')} - 0.5 * "
-           f"{d.format(a='cs', b='cs')}, 6)")
-    return f"""
-WITH q0 AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings
-            WHERE vec_id < 5),
-c0 AS (SELECT vec_id AS id, embedding AS v FROM embeddings
-       WHERE vec_id >= 5),
-cb AS (
-  SELECT row_number() OVER (ORDER BY md5(CAST(id AS VARCHAR))) - 1 AS code,
-         v AS cv
-  FROM c0 ORDER BY md5(CAST(id AS VARCHAR)) LIMIT {_PQ_CODES}),
-js AS (SELECT CAST(j AS INT) AS j
-       FROM UNNEST(generate_series(0, {_PQ_M - 1})) t(j)),
-cbsub AS (SELECT code, j, cv[j*{sub}+1 : j*{sub}+{sub}] AS cs
-          FROM cb CROSS JOIN js),
-csub AS (SELECT id, j, v[j*{sub}+1 : j*{sub}+{sub}] AS s
-         FROM c0 CROSS JOIN js),
-cassign AS (
-  SELECT id, j, code FROM (
-    SELECT csub.id, csub.j, cbsub.code,
-           row_number() OVER (PARTITION BY csub.id, csub.j
-                              ORDER BY {aff} DESC, cbsub.code ASC) AS rn
-    FROM csub JOIN cbsub ON csub.j = cbsub.j) WHERE rn = 1),
-qsub AS (SELECT query_id, j, qv[j*{sub}+1 : j*{sub}+{sub}] AS qs
-         FROM q0 CROSS JOIN js),
-contrib AS (
-  SELECT qsub.query_id, cassign.id, cassign.j,
-         {d.format(a='qs', b='cs')} AS x
-  FROM cassign
-  JOIN cbsub ON cassign.j = cbsub.j AND cassign.code = cbsub.code
-  JOIN qsub ON qsub.j = cassign.j),
-scored AS (
-  SELECT query_id, id, round(SUM(x ORDER BY j), 6) AS score
-  FROM contrib GROUP BY query_id, id)
-SELECT query_id, id, score,
-       CAST(row_number() OVER (PARTITION BY query_id
-                               ORDER BY score DESC, id ASC) AS INT) AS rank
-FROM scored QUALIFY rank <= {_PQ_K}
-"""
-
-
-def _q_sim_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Composed IVF+PQ (llmops/pq.py::ivfpq_topk): coarse cells prune the
-    candidate set AND candidates score from m-byte PQ codes — both axes
-    of the 100 TB scan cut in one operator."""
-    from rassengine_spark.llmops.pq import ivfpq_topk
-    emb = load_tables(spark, sf_dir)["embeddings"]
-    queries_df = emb.filter(F.col("vec_id") < 5) \
-                    .select(F.col("vec_id").alias("qid"), "embedding")
-    corpus = emb.filter(F.col("vec_id") >= 5)
-    return ivfpq_topk(corpus, queries_df, "embedding", "vec_id", "qid",
-                      k=_PQ_K, n_cells=_IVF_CELLS, n_probe=_IVF_PROBE,
-                      m=_PQ_M, n_codes=_PQ_CODES)
-
-
-def _sql_sim_ivfpq() -> str:
-    sub = 64 // _PQ_M
-    d = ("list_dot_product(list_transform({a}, x -> CAST(x AS DOUBLE)), "
-         "list_transform({b}, x -> CAST(x AS DOUBLE)))")
-    aff = (f"round({d.format(a='cs', b='s')} - 0.5 * "
-           f"{d.format(a='cs', b='cs')}, 6)")
-    cos_cv = _SQL_COS.format(a="cv", b="v")
-    cos_cq = _SQL_COS.format(a="cv", b="qv")
-    return f"""
-WITH q0 AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings
-            WHERE vec_id < 5),
-c0 AS (SELECT vec_id AS id, embedding AS v FROM embeddings
-       WHERE vec_id >= 5),
-cent AS (
-  SELECT row_number() OVER (ORDER BY md5(CAST(id AS VARCHAR))) - 1 AS cell,
-         v AS cv
-  FROM c0 ORDER BY md5(CAST(id AS VARCHAR)) LIMIT {_IVF_CELLS}),
-cb AS (
-  SELECT row_number() OVER (ORDER BY md5(CAST(id AS VARCHAR))) - 1 AS code,
-         v AS cv2
-  FROM c0 ORDER BY md5(CAST(id AS VARCHAR)) LIMIT {_PQ_CODES}),
-js AS (SELECT CAST(j AS INT) AS j
-       FROM UNNEST(generate_series(0, {_PQ_M - 1})) t(j)),
-cbsub AS (SELECT code, j, cv2[j*{sub}+1 : j*{sub}+{sub}] AS cs
-          FROM cb CROSS JOIN js),
-cassign AS (
-  SELECT id, cell FROM (
-    SELECT c0.id, cent.cell,
-           row_number() OVER (PARTITION BY c0.id
-                              ORDER BY {cos_cv} DESC, cent.cell ASC) AS rn
-    FROM c0 CROSS JOIN cent) WHERE rn = 1),
-csub AS (SELECT id, j, v[j*{sub}+1 : j*{sub}+{sub}] AS s
-         FROM c0 CROSS JOIN js),
-ccodes AS (
-  SELECT id, j, code FROM (
-    SELECT csub.id, csub.j, cbsub.code,
-           row_number() OVER (PARTITION BY csub.id, csub.j
-                              ORDER BY {aff} DESC, cbsub.code ASC) AS rn
-    FROM csub JOIN cbsub ON csub.j = cbsub.j) WHERE rn = 1),
-qprobe AS (
-  SELECT query_id, cell FROM (
-    SELECT q0.query_id, cent.cell,
-           row_number() OVER (PARTITION BY q0.query_id
-                              ORDER BY {cos_cq} DESC, cent.cell ASC) AS rn
-    FROM q0 CROSS JOIN cent) WHERE rn <= {_IVF_PROBE}),
-qsub AS (SELECT query_id, j, qv[j*{sub}+1 : j*{sub}+{sub}] AS qs
-         FROM q0 CROSS JOIN js),
-contrib AS (
-  SELECT qprobe.query_id, cassign.id, ccodes.j,
-         {d.format(a='qs', b='cs')} AS x
-  FROM qprobe
-  JOIN cassign USING (cell)
-  JOIN ccodes ON ccodes.id = cassign.id
-  JOIN cbsub ON cbsub.j = ccodes.j AND cbsub.code = ccodes.code
-  JOIN qsub ON qsub.query_id = qprobe.query_id AND qsub.j = ccodes.j),
-scored AS (
-  SELECT query_id, id, round(SUM(x ORDER BY j), 6) AS score
-  FROM contrib GROUP BY query_id, id)
-SELECT query_id, id, score,
-       CAST(row_number() OVER (PARTITION BY query_id
-                               ORDER BY score DESC, id ASC) AS INT) AS rank
-FROM scored QUALIFY rank <= {_PQ_K}
-"""
-
-
-def _q_sim_ivfpq_res(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Residual IVFADC (llmops/pq.py::ivfpq_residual_topk): candidates
-    carry PQ codes of (v - centroid[cell]); score = dot(q, centroid) +
-    ADC residual sum — quantization error bounded by the cell radius."""
-    from rassengine_spark.llmops.pq import ivfpq_residual_topk
-    emb = load_tables(spark, sf_dir)["embeddings"]
-    queries_df = emb.filter(F.col("vec_id") < 5) \
-                    .select(F.col("vec_id").alias("qid"), "embedding")
-    corpus = emb.filter(F.col("vec_id") >= 5)
-    return ivfpq_residual_topk(corpus, queries_df, "embedding", "vec_id",
-                               "qid", k=_PQ_K, n_cells=_IVF_CELLS,
-                               n_probe=_IVF_PROBE, m=_PQ_M,
-                               n_codes=_PQ_CODES)
-
-
-def _sql_sim_ivfpq_res() -> str:
-    sub = 64 // _PQ_M
-    d = ("list_dot_product(list_transform({a}, x -> CAST(x AS DOUBLE)), "
-         "list_transform({b}, x -> CAST(x AS DOUBLE)))")
-    aff = (f"round({d.format(a='cs', b='s')} - 0.5 * "
-           f"{d.format(a='cs', b='cs')}, 6)")
-    cos_cv = _SQL_COS.format(a="cv", b="v")
-    cos_cq = _SQL_COS.format(a="cv", b="qv")
-    return f"""
-WITH q0 AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings
-            WHERE vec_id < 5),
-c0 AS (SELECT vec_id AS id, embedding AS v FROM embeddings
-       WHERE vec_id >= 5),
-cent AS (
-  SELECT row_number() OVER (ORDER BY md5(CAST(id AS VARCHAR))) - 1 AS cell,
-         v AS cv
-  FROM c0 ORDER BY md5(CAST(id AS VARCHAR)) LIMIT {_IVF_CELLS}),
-cassign AS (
-  SELECT id, v, cell FROM (
-    SELECT c0.id, c0.v, cent.cell,
-           row_number() OVER (PARTITION BY c0.id
-                              ORDER BY {cos_cv} DESC, cent.cell ASC) AS rn
-    FROM c0 CROSS JOIN cent) WHERE rn = 1),
-rres AS (
-  SELECT cassign.id, cassign.cell,
-         list_transform(list_zip(cassign.v, cent.cv),
-                        p -> CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE))
-           AS r
-  FROM cassign JOIN cent USING (cell)),
-rcb AS (
-  SELECT row_number() OVER (ORDER BY md5(CAST(id AS VARCHAR))) - 1 AS code,
-         r AS rv
-  FROM rres ORDER BY md5(CAST(id AS VARCHAR)) LIMIT {_PQ_CODES}),
-js AS (SELECT CAST(j AS INT) AS j
-       FROM UNNEST(generate_series(0, {_PQ_M - 1})) t(j)),
-rcbsub AS (SELECT code, j, rv[j*{sub}+1 : j*{sub}+{sub}] AS cs
-           FROM rcb CROSS JOIN js),
-rsub AS (SELECT id, j, r[j*{sub}+1 : j*{sub}+{sub}] AS s
-         FROM rres CROSS JOIN js),
-ccodes AS (
-  SELECT id, j, code FROM (
-    SELECT rsub.id, rsub.j, rcbsub.code,
-           row_number() OVER (PARTITION BY rsub.id, rsub.j
-                              ORDER BY {aff} DESC, rcbsub.code ASC) AS rn
-    FROM rsub JOIN rcbsub ON rsub.j = rcbsub.j) WHERE rn = 1),
-qprobe AS (
-  SELECT query_id, qv, cell FROM (
-    SELECT q0.query_id, q0.qv, cent.cell,
-           row_number() OVER (PARTITION BY q0.query_id
-                              ORDER BY {cos_cq} DESC, cent.cell ASC) AS rn
-    FROM q0 CROSS JOIN cent) WHERE rn <= {_IVF_PROBE}),
-cand AS (
-  SELECT qprobe.query_id, cassign.id,
-         {d.format(a='qprobe.qv', b='cent.cv')} AS base
-  FROM qprobe JOIN cassign USING (cell) JOIN cent USING (cell)),
-qsub AS (SELECT query_id, qv[j*{sub}+1 : j*{sub}+{sub}] AS qs, j
-         FROM q0 CROSS JOIN js),
-contrib AS (
-  SELECT cand.query_id, cand.id, ccodes.j,
-         {d.format(a='qs', b='cs')} AS x
-  FROM cand
-  JOIN ccodes ON ccodes.id = cand.id
-  JOIN rcbsub ON rcbsub.j = ccodes.j AND rcbsub.code = ccodes.code
-  JOIN qsub ON qsub.query_id = cand.query_id AND qsub.j = ccodes.j),
-sumt AS (
-  SELECT query_id, id, SUM(x ORDER BY j) AS adc
-  FROM contrib GROUP BY query_id, id),
-scored AS (
-  SELECT s.query_id, s.id, round(s.adc + c.base, 6) AS score
-  FROM sumt s JOIN cand c ON c.query_id = s.query_id AND c.id = s.id)
-SELECT query_id, id, score,
-       CAST(row_number() OVER (PARTITION BY query_id
-                               ORDER BY score DESC, id ASC) AS INT) AS rank
-FROM scored QUALIFY rank <= {_PQ_K}
-"""
-
-
-def _q_sim_quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-k over the int8-quantized corpus (4x narrower vector storage —
-    the scan-cost tier for 100 TB embedding columns); floor-based
-    quantization math is bit-identical in DuckDB."""
-    emb = load_tables(spark, sf_dir)["embeddings"]
-    queries_df = emb.filter(F.col("vec_id") < 5) \
-                    .select(F.col("vec_id").alias("qid"), "embedding")
-    corpus = emb.filter(F.col("vec_id") >= 5)
-    return SIM.quantized_topk(corpus, queries_df, "embedding", "vec_id",
-                              "qid", k=5)
-
-
-_SQL_SIM_QUANTIZED = f"""
-WITH q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings
-           WHERE vec_id < 5),
-c0 AS (SELECT vec_id AS id,
-              list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v0
-       FROM embeddings WHERE vec_id >= 5),
-cs AS (SELECT id, v0,
-              CASE WHEN list_max(list_transform(v0, x -> abs(x))) = 0
-                   THEN 1.0
-                   ELSE list_max(list_transform(v0, x -> abs(x))) / 127.0
-              END AS s
-       FROM c0),
-c AS (SELECT id,
-             list_transform(
-               list_transform(v0, x -> CAST(floor(x / s + 0.5) AS INT)),
-               qq -> CAST(qq AS DOUBLE) * s) AS v
-      FROM cs),
-scored AS (
-  SELECT q.query_id, c.id, {_SQL_COS.format(a='c.v', b='q.qv')} AS score
-  FROM c CROSS JOIN q)
-SELECT query_id, id, score,
-       CAST(row_number() OVER (PARTITION BY query_id
-                               ORDER BY score DESC, id ASC) AS INT) AS rank
-FROM scored
-QUALIFY rank <= 5
-"""
-
-
-def _q_sim_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ANN quality eval: per-query recall@k of the IVF tier against exact
-    brute force on the same queries — the measurement loop that tunes
-    n_cells/n_probe at scale."""
-    emb = load_tables(spark, sf_dir)["embeddings"]
-    queries_df = emb.filter(F.col("vec_id") < 5) \
-                    .select(F.col("vec_id").alias("qid"), "embedding")
-    corpus = emb.filter(F.col("vec_id") >= 5)
-    approx = SIM.ivf_topk(corpus, queries_df, "embedding", "vec_id", "qid",
-                          k=_IVF_K, n_cells=_IVF_CELLS, n_probe=_IVF_PROBE)
-    exact = SIM.brute_force_topk(corpus, queries_df, "embedding", "vec_id",
-                                 "qid", k=_IVF_K)
-    return SIM.recall_at_k(approx, exact)
-
-
-def _q_sim_ivf_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ANN RANKING quality for the IVF tier: per-query nDCG@k against
-    exact top-k as the ideal (llmops/similarity.py::ndcg_at_k). Recall
-    ignores order — an operator that returns all k items backwards still
-    scores 1.0; nDCG grades the ranking the way retrieval serving is
-    actually consumed. Integer micro-gains + literal ideal prefix sums
-    shared with the oracle, one division at the end; fully dynamic
-    oracle (IVF cells are the deterministic md5 sample)."""
-    emb = load_tables(spark, sf_dir)["embeddings"]
-    queries_df = emb.filter(F.col("vec_id") < 5) \
-                    .select(F.col("vec_id").alias("qid"), "embedding")
-    corpus = emb.filter(F.col("vec_id") >= 5)
-    approx = SIM.ivf_topk(corpus, queries_df, "embedding", "vec_id", "qid",
-                          k=_IVF_K, n_cells=_IVF_CELLS, n_probe=_IVF_PROBE)
-    exact = SIM.brute_force_topk(corpus, queries_df, "embedding", "vec_id",
-                                 "qid", k=_IVF_K)
-    return SIM.ndcg_at_k(approx, exact)
-
-
-def _sql_sim_ivf_ndcg() -> str:
-    from rassengine_spark.llmops.similarity import (NDCG_GAIN_MICRO,
-                                                    NDCG_IDEAL_MICRO)
-    gain = " ".join(f"WHEN a.rank = {r} THEN {NDCG_GAIN_MICRO[r]}"
-                    for r in range(1, _IVF_K + 1))
-    ideal = " ".join(f"WHEN n_exact = {n} THEN {NDCG_IDEAL_MICRO[n]}"
-                     for n in range(1, _IVF_K + 1))
-    cos_vq = _SQL_COS.format(a="c.v", b="q.qv")
-    return f"""
-WITH approx AS ({_sql_sim_ivf()}),
-exact AS (
-  SELECT query_id, id FROM (
-    SELECT q.query_id, c.id, {cos_vq} AS score
-    FROM (SELECT vec_id AS id, embedding AS v FROM embeddings
-          WHERE vec_id >= 5) c
-    CROSS JOIN (SELECT vec_id AS query_id, embedding AS qv
-                FROM embeddings WHERE vec_id < 5) q)
-  QUALIFY row_number() OVER (PARTITION BY query_id
-                             ORDER BY score DESC, id ASC) <= {_IVF_K}),
-dcg AS (
-  SELECT a.query_id,
-         CAST(SUM(CASE WHEN e.id IS NOT NULL
-                       THEN CASE {gain} ELSE 0 END
-                       ELSE 0 END) AS BIGINT) AS dcg_micro
-  FROM approx a LEFT JOIN exact e
-    ON e.query_id = a.query_id AND e.id = a.id
-  GROUP BY a.query_id),
-per AS (SELECT query_id, COUNT(*) AS n_exact FROM exact GROUP BY query_id)
-SELECT per.query_id, per.n_exact,
-       CAST(COALESCE(dcg.dcg_micro, 0) AS BIGINT) AS dcg_micro,
-       CAST(CASE {ideal} ELSE 0 END AS BIGINT) AS idcg_micro,
-       round(CAST(COALESCE(dcg.dcg_micro, 0) AS DOUBLE)
-             / (CASE {ideal} ELSE 0 END), 6) AS ndcg
-FROM per LEFT JOIN dcg ON dcg.query_id = per.query_id
-"""
-
-
-def _q_sim_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Matryoshka-style prefix-dimension retrieval eval (Kusupati et al.
-    2022, public): search with only the FIRST 16 of 64 dims (4x narrower
-    scan/shuffle — the same storage lever as int8/PQ, traded along the
-    dimension axis) and measure per-query recall@5 against full-dim
-    exact top-k. Fully oracled: the prefix search is a plain slice, so
-    BOTH sides of the recall are SQL-expressible — no floor needed."""
-    emb = load_tables(spark, sf_dir)["embeddings"]
-    queries_df = emb.filter(F.col("vec_id") < 5) \
-                    .select(F.col("vec_id").alias("qid"), "embedding")
-    corpus = emb.filter(F.col("vec_id") >= 5)
-    pref = F.slice(F.col("embedding"), 1, 16).alias("embedding")
-    approx = SIM.brute_force_topk(
-        corpus.select("vec_id", pref),
-        queries_df.select("qid", pref), "embedding", "vec_id", "qid", k=5)
-    exact = SIM.brute_force_topk(corpus, queries_df, "embedding", "vec_id",
-                                 "qid", k=5)
-    return SIM.recall_at_k(approx, exact)
-
-
-def _sql_sim_matryoshka_recall() -> str:
-    cos16 = _SQL_COS.format(a="(c.v[1:16])", b="(q.qv[1:16])")
-    approx = f"""
-  SELECT query_id, id FROM (
-    SELECT q.query_id, c.id, {cos16} AS score
-    FROM (SELECT vec_id AS id, embedding AS v FROM embeddings
-          WHERE vec_id >= 5) c
-    CROSS JOIN (SELECT vec_id AS query_id, embedding AS qv
-                FROM embeddings WHERE vec_id < 5) q)
-  QUALIFY row_number() OVER (PARTITION BY query_id
-                             ORDER BY score DESC, id ASC) <= 5"""
-    return _sql_recall_oracle(
-        approx, _SQL_COS.format(a="c.v", b="q.qv"), 5)
-
-
-def _sql_recall_oracle(approx_sql: str, score_expr: str, k: int) -> str:
-    """Shared recall@k oracle scaffold: exact top-k by `score_expr`
-    (cosine or dot), LEFT JOIN against the given approx CTE, per-query
-    recall — the one place the recall formula and exact-kNN tiebreak
-    live."""
-    exact_sql = f"""
-  WITH q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings
-             WHERE vec_id < 5),
-  c AS (SELECT vec_id AS id, embedding AS v FROM embeddings
-        WHERE vec_id >= 5),
-  scored AS (
-    SELECT q.query_id, c.id, {score_expr} AS score
-    FROM c CROSS JOIN q)
-  SELECT query_id, id FROM scored
-  QUALIFY row_number() OVER (PARTITION BY query_id
-                             ORDER BY score DESC, id ASC) <= {k}"""
-    return f"""
-WITH approx AS ({approx_sql}),
-exact AS ({exact_sql})
-SELECT exact.query_id,
-       count(*) AS n_exact,
-       count(approx.id) AS n_matched,
-       round(CAST(count(approx.id) AS DOUBLE) / count(*), 6) AS recall
-FROM exact LEFT JOIN approx
-  ON exact.query_id = approx.query_id AND exact.id = approx.id
-GROUP BY exact.query_id
-"""
-
-
-
-
-def _sql_sim_ivf_recall() -> str:
-    return _sql_recall_oracle(_sql_sim_ivf(),
-                              _SQL_COS.format(a="v", b="qv"), _IVF_K)
-
-
-def _q_sim_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ANN quality eval for the PQ tier: per-query recall@k of ADC
-    scoring against exact dot-product top-k — the measurement loop that
-    tunes m/n_codes at scale (same harness as sim_ivf_recall)."""
-    from rassengine_spark.llmops.pq import pq_adc_topk
-    emb = load_tables(spark, sf_dir)["embeddings"]
-    queries_df = emb.filter(F.col("vec_id") < 5) \
-                    .select(F.col("vec_id").alias("qid"), "embedding")
-    corpus = emb.filter(F.col("vec_id") >= 5)
-    approx = pq_adc_topk(corpus, queries_df, "embedding", "vec_id", "qid",
-                         k=_PQ_K, m=_PQ_M, n_codes=_PQ_CODES)
-    exact = SIM.brute_force_topk(corpus, queries_df, "embedding",
-                                 "vec_id", "qid", k=_PQ_K, metric="dot")
-    return SIM.recall_at_k(approx, exact)
-
-
-def _sql_sim_pq_recall() -> str:
-    dot_vq = ("round(list_dot_product("
-              "list_transform(v, x -> CAST(x AS DOUBLE)), "
-              "list_transform(qv, x -> CAST(x AS DOUBLE))), 6)")
-    return _sql_recall_oracle(_sql_sim_pq(), dot_vq, _PQ_K)
 
 
 def _q_text_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5003,22 +4280,59 @@ def _sql_m_intent_eval() -> str:
     return intent_eval_sql(n=2000)
 
 
+def _bm25_index_topk(docs: DataFrame, query: str, k: int) -> DataFrame:
+    """BM25 top-k (id, score) over documents.text, served from the
+    corpus's term-index frames — the engine's one lexical scorer."""
+    from rassengine_spark.operators.inverted_index import (
+        bm25_topk_from_index, build_term_index)
+    return bm25_topk_from_index(*build_term_index(docs, "text", "doc_id"),
+                                query, k=k)
+
+
 def _q_bm25_ranked(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lucene-BM25 ranked retrieval (k1=1.2, b=0.75) over documents.text —
-    the reference's multi_match scoring semantic (SURVEY §2.3), as a
-    stats-pass + per-row-expression plan with no per-term shuffle."""
-    from rassengine_spark.functions.bm25 import bm25_topk
+    the reference's multi_match scoring semantic (SURVEY §2.3), served
+    from the term index (operators/inverted_index.py)."""
     docs = load_tables(spark, sf_dir)["documents"]
-    return bm25_topk(docs, "text", "doc_id", "spark join query", k=15)
+    return _bm25_index_topk(docs, "spark join query", k=15)
+
+
+def bm25_sql(table: str, text_col: str, id_col: str, query: str,
+             k: int = 10, k1: float = K1, b: float = B,
+             round_to: int = 6) -> str:
+    """DuckDB twin of the index-served BM25 top-k — identical tokenizer,
+    stats, and formula."""
+    terms = terms_of(query)
+    toks = (f"list_filter(string_split_regex(lower({text_col}), "
+            f"'[^a-z0-9]+'), x -> len(x) > 0)")
+    tf = ("len(list_filter(toks, x -> x = '{t}'))")
+    df_cols = ", ".join(
+        "SUM(CASE WHEN " + tf.format(t=t) + " > 0 THEN 1 ELSE 0 END)"
+        f" AS df_{i}" for i, t in enumerate(terms))
+    score_terms = " + ".join(
+        f"(ln(1.0 + (s.n - s.df_{i} + 0.5) / (s.df_{i} + 0.5))"
+        f" * {tf.format(t=t)} * {k1 + 1.0}"
+        f" / ({tf.format(t=t)} + {k1} * (1.0 - {b} + {b} * len(toks)"
+        f" / s.avgdl)))"
+        for i, t in enumerate(terms))
+    return f"""
+WITH tok AS (
+  SELECT {id_col} AS id, {toks} AS toks FROM {table}),
+s AS (
+  SELECT COUNT(*) AS n, AVG(len(toks)) AS avgdl, {df_cols} FROM tok)
+SELECT id, round({score_terms}, {round_to}) AS score
+FROM tok, s
+WHERE ({score_terms}) > 0
+ORDER BY score DESC, id ASC LIMIT {k}
+"""
 
 
 def _sql_bm25_ranked() -> str:
-    from rassengine_spark.functions.bm25 import bm25_sql
     return bm25_sql("documents", "text", "doc_id", "spark join query", k=15)
 
 
 # --------------------------------------------------- build/serve seam
-# Index-LIFECYCLE entries (persisted term/IVF/HNSW stores) used to time
+# Index-LIFECYCLE entries (persisted term/HNSW stores) used to time
 # their build+append+compact INSIDE the query callable, so the bench
 # number drifted upward as lifecycle stages were added while the serving
 # path stayed pruned and sublinear (VERDICT r07 #1: term store 18.0 s
@@ -5102,7 +4416,7 @@ def _q_bm25_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     index_store.py): postings written bucketed by md5(term), the query
     read statically prunes to its terms' buckets (PartitionFilters, no
     planning job) — the sublinear lexical serving tier, bit-identical to
-    the scan-based bm25_ranked so it shares that oracle. The store is
+    bm25_ranked's index frames so it shares that oracle. The store is
     prepared once per process (_prepared_store); this callable is the
     SERVE phase."""
     from rassengine_spark.operators.index_store import bm25_topk_from_store
@@ -5145,15 +4459,11 @@ def _q_bm25_store_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_bm25_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BM25 served from the inverted-index TABLES (postings/doclens/stats,
     operators/inverted_index.py) — the corpus text is never scanned at
-    query time; same oracle as the scan-based bm25_ranked because the
-    scores are bit-identical (SURVEY §4 O5: the postings materialized
-    view is Spark's analog of the reference's Lucene index)."""
-    from rassengine_spark.operators.inverted_index import (
-        bm25_topk_from_index, build_term_index)
+    query time (SURVEY §4 O5: the postings materialized view is Spark's
+    analog of the reference's Lucene index). Since bm25_ranked serves
+    from the same index, the two share one oracle."""
     docs = load_tables(spark, sf_dir)["documents"]
-    postings, doclens, stats = build_term_index(docs, "text", "doc_id")
-    return bm25_topk_from_index(postings, doclens, stats,
-                                "spark join query", k=15)
+    return _bm25_index_topk(docs, "spark join query", k=15)
 
 
 _BM25_BATCH_QUERIES = {"q_join": "spark join query",
@@ -5162,20 +4472,20 @@ _BM25_BATCH_QUERIES = {"q_join": "spark join query",
 
 
 def _q_bm25_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batched BM25: three queries ranked in ONE corpus pass (union-term
-    stats row + array-of-structs explode of only the score>0 pairs) —
-    identical scores to scoring each query alone."""
-    from rassengine_spark.functions.bm25 import bm25_batch_topk
+    """Batched BM25: three queries ranked in ONE term-pruned postings read
+    of the corpus's term index (bm25_batch_topk_from_index) — identical
+    scores to scoring each query alone."""
+    from rassengine_spark.operators.inverted_index import (
+        bm25_batch_topk_from_index, build_term_index)
     docs = load_tables(spark, sf_dir)["documents"]
-    return bm25_batch_topk(docs, "text", "doc_id", _BM25_BATCH_QUERIES,
-                           k=10)
+    return bm25_batch_topk_from_index(
+        *build_term_index(docs, "text", "doc_id"), _BM25_BATCH_QUERIES,
+        k=10)
 
 
 def _sql_bm25_batch() -> str:
     # per-query replica of the single-query formula: each term's df/n/avgdl
     # is a corpus-global stat, so per-query stats == batch union stats
-    from rassengine_spark.functions.bm25 import K1, B
-    from rassengine_spark.functions.text import terms_of
     toks = ("list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), "
             "x -> len(x) > 0)")
     parts = []
@@ -5209,7 +4519,7 @@ _KNOWN_ITEM_Q = 50
 def _q_bm25_known_item(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Retrieval-quality eval (known-item search): a FIXED-SIZE
     md5-sampled query set (the 50 docs whose md5(id) sorts lowest — the
-    same deterministic-sample pattern the quantizers use) becomes
+    same deterministic-sample pattern the dedup cell quantizer uses) becomes
     queries (first 4 tokens each) and BM25 must find the source doc —
     per-query src_rank / hit@1 / hit@10. Round-4 change: the old 'every
     50th doc' selection grew the QUERY SET with the corpus, which the
@@ -5260,13 +4570,9 @@ def _bm25_known_item_ranks(spark: SparkSession, sf_dir: str) -> DataFrame:
 # engines map ranks through the SAME integer constants (no per-engine
 # transcendental log2 in the comparison surface — the integer-micro rule
 # events_ewma_daily's ordered fold follows): reciprocal rank 1e6/r and
-# the single-relevant-doc nDCG gain 1e6/log2(r+1) (IDCG = 1). The gain
-# map is the similarity module's — ONE source of truth for the constants.
-from rassengine_spark.llmops.similarity import \
-    NDCG_GAIN_MICRO as _NDCG_GAIN_MICRO  # noqa: E402
-
+# the single-relevant-doc nDCG gain 1e6/log2(r+1) (IDCG = 1).
 _RR_MICRO = {r: round(1_000_000 / r) for r in range(1, 11)}
-_NDCG_MICRO = {r: _NDCG_GAIN_MICRO[r] for r in range(1, 11)}
+_NDCG_MICRO = {r: round(1_000_000 / math.log2(r + 1)) for r in range(1, 11)}
 
 
 def _q_bm25_ndcg_mrr(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5311,7 +4617,6 @@ def _sql_bm25_known_item() -> str:
     # fully dynamic twin: queries derive from the table IN SQL; per-query
     # contributions fold in qterm-position order (SUM ... ORDER BY pos) to
     # match the Spark side's left fold — the ordered-FP-fold rule
-    from rassengine_spark.functions.bm25 import B, K1
     toks = ("list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), "
             "x -> len(x) > 0)")
     tf = "len(list_filter(tok.toks, x -> x = o.t))"
@@ -5414,7 +4719,6 @@ def _q_rag_chunk_known_item(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_rag_chunk_known_item() -> str:
-    from rassengine_spark.functions.bm25 import B, K1
     toks = ("list_filter(string_split_regex(lower({col}), '[^a-z0-9]+'), "
             "x -> len(x) > 0)")
     words = _SQL_WORDS.format(col="text")
@@ -5473,14 +4777,14 @@ FROM q LEFT JOIN hits h ON h.qid = q.qid
 
 
 def _q_rerank_lexical(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Two-stage retrieval: BM25 scans the corpus for 20 candidates, the
-    second stage re-scores ONLY those by query-term Jaccard and keeps 5 —
-    the retrieve-then-rerank shape (ml/rerank.py) with the deterministic
-    scorer; a cross-encoder RerankFn drops in without changing the plan."""
-    from rassengine_spark.functions.bm25 import bm25_topk
+    """Two-stage retrieval: BM25 from the term index picks 20 candidates,
+    the second stage re-scores ONLY those by query-term Jaccard and keeps
+    5 — the retrieve-then-rerank shape (ml/rerank.py) with the
+    deterministic scorer; a cross-encoder RerankFn drops in without
+    changing the plan."""
     from rassengine_spark.ml.rerank import rerank_topk
     docs = load_tables(spark, sf_dir)["documents"]
-    stage1 = bm25_topk(docs, "text", "doc_id", "spark join query", k=20)
+    stage1 = _bm25_index_topk(docs, "spark join query", k=20)
     cands = stage1.join(
         docs.select(F.col("doc_id").alias("id"), "text"), "id")
     return (rerank_topk(cands, "spark join query", "text", "id", k=5)
@@ -5488,7 +4792,6 @@ def _q_rerank_lexical(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_rerank_lexical() -> str:
-    from rassengine_spark.functions.bm25 import bm25_sql
     stage1 = bm25_sql("documents", "text", "doc_id", "spark join query",
                       k=20)
     qlist = "['join', 'query', 'spark']"
@@ -7542,33 +6845,6 @@ FROM j GROUP BY event_type, day, day_value
 """
 
 
-def _q_sim_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Radius retrieval (llmops/similarity.py::range_search): every
-    corpus vector with cosine >= 0.2 against each query — the
-    fixed-threshold sibling of brute_force_topk for recall-critical
-    pulls where a top-k cut would silently drop qualifying rows. One
-    broadcast scoring projection + a scan-fused filter; no window, no
-    pre-result shuffle."""
-    emb = load_tables(spark, sf_dir)["embeddings"]
-    q = emb.filter(F.col("vec_id") < 5) \
-           .select(F.col("vec_id").alias("qid"), "embedding")
-    corpus = emb.filter(F.col("vec_id") >= 5)
-    return SIM.range_search(corpus, q, "embedding", "vec_id", "qid",
-                            min_score=0.2)
-
-
-_SQL_SIM_RANGE_SEARCH = f"""
-WITH q AS (SELECT vec_id AS query_id, embedding AS qv
-           FROM embeddings WHERE vec_id < 5),
-c AS (SELECT vec_id AS id, embedding AS v
-      FROM embeddings WHERE vec_id >= 5)
-SELECT q.query_id, c.id,
-       {_SQL_COS.format(a='c.v', b='q.qv')} AS score
-FROM c CROSS JOIN q
-WHERE {_SQL_COS.format(a='c.v', b='q.qv')} >= 0.2
-"""
-
-
 def _q_events_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Semi-structured analytics: typed `from_json` extraction of the
     events.props payload feeding a grouped aggregate — the JSON parse is a
@@ -8054,74 +7330,7 @@ FROM documents d LEFT JOIN vecs v USING (doc_id)
 """
 
 
-def _q_mine_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hard-negative mining for contrastive training
-    (llmops/similarity.py::hard_negative_topk): per query vector, the
-    top-5 most-similar corpus vectors with a DIFFERENT label — the
-    confusable negatives dense-retriever training needs (DPR-style)."""
-    emb = load_tables(spark, sf_dir)["embeddings"]
-    queries_df = emb.filter(F.col("vec_id") < 5) \
-                    .select(F.col("vec_id").alias("qid"), "embedding",
-                            "label")
-    corpus = emb.filter(F.col("vec_id") >= 5)
-    return SIM.hard_negative_topk(corpus, queries_df, "embedding",
-                                  "vec_id", "qid", label_col="label", k=5)
-
-
-_SQL_MINE_HARD_NEGATIVES = f"""
-WITH q AS (SELECT vec_id AS query_id, embedding AS qv, label AS ql
-           FROM embeddings WHERE vec_id < 5),
-c AS (SELECT vec_id AS id, embedding AS v, label AS cl
-      FROM embeddings WHERE vec_id >= 5),
-scored AS (
-  SELECT q.query_id, c.id, {_SQL_COS.format(a='c.v', b='q.qv')} AS score
-  FROM c JOIN q ON c.cl <> q.ql)
-SELECT query_id, id, score,
-       CAST(row_number() OVER (PARTITION BY query_id
-                               ORDER BY score DESC, id ASC) AS INT) AS rank
-FROM scored
-QUALIFY rank <= 5
-"""
-
-
 _PROFILE_CELLS = 8
-
-
-def _q_corpus_cluster_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus-mixture diagnostic (llmops/similarity.py::cluster_profile):
-    every embedding assigned to its nearest md5-sampled centroid (the IVF
-    quantizer), then per-cell balance stats. The mean affinity folds as
-    exact integer micro-units, so it is engine-identical under any
-    partitioning."""
-    emb = load_tables(spark, sf_dir)["embeddings"]
-    return SIM.cluster_profile(emb, "embedding", "vec_id",
-                               n_cells=_PROFILE_CELLS)
-
-
-_SQL_CORPUS_CLUSTER_PROFILE = f"""
-WITH c0 AS (SELECT vec_id AS id, embedding AS v FROM embeddings),
-cent AS (
-  SELECT row_number() OVER (ORDER BY md5(CAST(id AS VARCHAR))) - 1 AS cell,
-         v AS cv
-  FROM c0 ORDER BY md5(CAST(id AS VARCHAR)) LIMIT {_PROFILE_CELLS}),
-cassign AS (
-  SELECT id, cell, aff FROM (
-    SELECT c0.id, cent.cell,
-           {_SQL_COS.format(a='cent.cv', b='c0.v')} AS aff,
-           row_number() OVER (
-               PARTITION BY c0.id
-               ORDER BY {_SQL_COS.format(a='cent.cv', b='c0.v')} DESC,
-                        cent.cell ASC) AS rn
-    FROM c0 CROSS JOIN cent) WHERE rn = 1)
-SELECT CAST(cell AS INT) AS cell,
-       COUNT(*) AS n_vecs,
-       CAST(CAST(SUM(CAST(round(aff * 1000000, 0) AS BIGINT)) AS BIGINT)
-            AS DOUBLE)
-       / (CAST(COUNT(*) AS DOUBLE) * 1000000.0) AS avg_affinity,
-       MIN(aff) AS min_affinity,
-       MAX(aff) AS max_affinity
-FROM cassign GROUP BY cell
-"""
 
 
 def _q_dedup_embedding_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -8131,8 +7340,7 @@ def _q_dedup_embedding_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     by the deterministic md5-sampled IVF cell (the operator docstring's
     'choose finer blocks' knob, here stamped): block = (label, cell)
     bounds every gram matrix at cell size; pairs split across cells are
-    missed by design — the same recall trade as ivf_topk's probe list,
-    and the cell count is the dial."""
+    missed by design, and the cell count is the dial."""
     emb = load_tables(spark, sf_dir)["embeddings"]
     # Since round 5 the md5-IVF cell refinement is BUILT IN
     # (embedding_near_pairs_topn's max_block/sub_cells default); this
@@ -8161,114 +7369,6 @@ SELECT a.id AS id_a, b.id AS id_b,
        {_SQL_COS.format(a='a.v', b='b.v')} AS cos
 FROM cassign a JOIN cassign b ON a.blk = b.blk AND a.id < b.id
 ORDER BY cos DESC, id_a ASC, id_b ASC LIMIT 20
-"""
-
-
-def _q_sim_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Mutual-kNN graph construction (llmops/similarity.py::
-    knn_graph_blocks): each embedding's top-3 in-cell neighbors, kept
-    only when reciprocated — the noise-robust graph behind clustering /
-    label propagation / manifold methods (a hub's one-way edges drop
-    out). Blocks = (label, md5-IVF cell): the per-block gram matrix is
-    bounded by cell size, the IVF recall trade. Oracle recomputes the
-    cells, per-src ranks, and the reciprocity join."""
-    emb = load_tables(spark, sf_dir)["embeddings"]
-    cents = SIM.ivf_centroids(emb, "embedding", "vec_id", _PROFILE_CELLS)
-    blk = F.concat_ws(
-        "#", F.col("label").cast("string"),
-        SIM._best_cell("embedding", cents, 6).cast("string"))
-    blocked = emb.withColumn("_lc", blk)
-    return SIM.knn_graph_blocks(blocked, "embedding", "vec_id", "_lc",
-                                k=3, mutual=True)
-
-
-_SQL_SIM_KNN_GRAPH = f"""
-WITH c0 AS (SELECT vec_id AS id, embedding AS v, label FROM embeddings),
-cent AS (
-  SELECT row_number() OVER (ORDER BY md5(CAST(id AS VARCHAR))) - 1 AS cell,
-         v AS cv
-  FROM c0 ORDER BY md5(CAST(id AS VARCHAR)) LIMIT {_PROFILE_CELLS}),
-cassign AS MATERIALIZED (
-  SELECT id, v, concat_ws('#', label, cell) AS blk FROM (
-    SELECT c0.id, c0.v, c0.label, cent.cell,
-           row_number() OVER (
-               PARTITION BY c0.id
-               ORDER BY {_SQL_COS.format(a='cent.cv', b='c0.v')} DESC,
-                        cent.cell ASC) AS rn
-    FROM c0 CROSS JOIN cent) WHERE rn = 1),
-ranked AS MATERIALIZED (
-  SELECT src, dst, cos, CAST(rnk AS INT) AS rank FROM (
-    SELECT a.id AS src, b.id AS dst,
-           {_SQL_COS.format(a='a.v', b='b.v')} AS cos,
-           row_number() OVER (
-               PARTITION BY a.id
-               ORDER BY {_SQL_COS.format(a='a.v', b='b.v')} DESC,
-                        b.id ASC) AS rnk
-    FROM cassign a JOIN cassign b ON a.blk = b.blk AND a.id <> b.id)
-  WHERE rnk <= 3)
-SELECT r1.src, r1.dst, r1.cos, r1.rank
-FROM ranked r1 SEMI JOIN ranked r2
-  ON r1.src = r2.dst AND r1.dst = r2.src
-"""
-
-
-def _q_sim_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Semantic clustering = mutual-kNN graph -> connected components
-    (the standard density-free clustering composition: SemDeDup prunes
-    pairs, THIS groups them): (node, root, cluster_size) over the
-    reciprocated in-cell top-3 edges. Both stages are stamped operators
-    (knn_graph_blocks + the dedup tier's connected_components); this
-    entry stamps the composition, oracle = the knn SQL feeding the
-    recursive-CTE reachability used by dedup_cc_clusters."""
-    emb = load_tables(spark, sf_dir)["embeddings"]
-    cents = SIM.ivf_centroids(emb, "embedding", "vec_id", _PROFILE_CELLS)
-    blk = F.concat_ws(
-        "#", F.col("label").cast("string"),
-        SIM._best_cell("embedding", cents, 6).cast("string"))
-    blocked = emb.withColumn("_lc", blk)
-    edges = SIM.knn_graph_blocks(blocked, "embedding", "vec_id", "_lc",
-                                 k=3, mutual=True)
-    return DD.dup_clusters(edges, "src", "dst")
-
-
-_SQL_SIM_SEMANTIC_CLUSTERS = f"""
-WITH RECURSIVE
-c0 AS (SELECT vec_id AS id, embedding AS v, label FROM embeddings),
-cent AS (
-  SELECT row_number() OVER (ORDER BY md5(CAST(id AS VARCHAR))) - 1 AS cell,
-         v AS cv
-  FROM c0 ORDER BY md5(CAST(id AS VARCHAR)) LIMIT {_PROFILE_CELLS}),
-cassign AS MATERIALIZED (
-  SELECT id, v, concat_ws('#', label, cell) AS blk FROM (
-    SELECT c0.id, c0.v, c0.label, cent.cell,
-           row_number() OVER (
-               PARTITION BY c0.id
-               ORDER BY {_SQL_COS.format(a='cent.cv', b='c0.v')} DESC,
-                        cent.cell ASC) AS rn
-    FROM c0 CROSS JOIN cent) WHERE rn = 1),
-ranked AS MATERIALIZED (
-  SELECT src, dst FROM (
-    SELECT a.id AS src, b.id AS dst,
-           row_number() OVER (
-               PARTITION BY a.id
-               ORDER BY {_SQL_COS.format(a='a.v', b='b.v')} DESC,
-                        b.id ASC) AS rnk
-    FROM cassign a JOIN cassign b ON a.blk = b.blk AND a.id <> b.id)
-  WHERE rnk <= 3),
-mut AS MATERIALIZED (
-  SELECT r1.src, r1.dst
-  FROM ranked r1 SEMI JOIN ranked r2
-    ON r1.src = r2.dst AND r1.dst = r2.src),
-sym AS (SELECT src AS u, dst AS v FROM mut
-        UNION SELECT dst, src FROM mut),
-reach(node, r) AS (
-  SELECT DISTINCT u, u FROM sym
-  UNION
-  SELECT s.u, r.r FROM sym s JOIN reach r ON s.v = r.node),
-cc AS (SELECT node, MIN(r) AS root FROM reach GROUP BY node),
-sizes AS (SELECT root, COUNT(*) AS cluster_size FROM cc GROUP BY root)
-SELECT cc.node, cc.root, sizes.cluster_size
-FROM cc JOIN sizes USING (root)
 """
 
 
@@ -8371,27 +7471,6 @@ FROM batched GROUP BY shard, bucket, batch_id
 """
 
 
-def _q_sim_quantized_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ANN quality eval for the int8 storage tier: per-query recall@k of
-    quantized-cosine top-k against exact brute force — the number that
-    justifies (or vetoes) the 4x narrower scan (same harness as
-    sim_ivf_recall / sim_pq_recall)."""
-    emb = load_tables(spark, sf_dir)["embeddings"]
-    queries_df = emb.filter(F.col("vec_id") < 5) \
-                    .select(F.col("vec_id").alias("qid"), "embedding")
-    corpus = emb.filter(F.col("vec_id") >= 5)
-    approx = SIM.quantized_topk(corpus, queries_df, "embedding", "vec_id",
-                                "qid", k=5)
-    exact = SIM.brute_force_topk(corpus, queries_df, "embedding",
-                                 "vec_id", "qid", k=5)
-    return SIM.recall_at_k(approx, exact)
-
-
-def _sql_sim_quantized_recall() -> str:
-    return _sql_recall_oracle(_SQL_SIM_QUANTIZED,
-                              _SQL_COS.format(a="v", b="qv"), 5)
-
-
 _DSIR_BUCKETS = 8192
 
 
@@ -8482,47 +7561,6 @@ def _build_dsir_count_stores(spark: SparkSession, sf_dir: str) -> str:
                               "text", "doc_id", n=2,
                               n_buckets=_DSIR_BUCKETS)
     return root
-
-
-def _q_mine_triplets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Training-triplet assembly (llmops/similarity.py::mine_triplets):
-    per anchor, the hardest same-label positive and hardest other-label
-    negative with their margin — the (a, p, n) rows a contrastive loss
-    consumes."""
-    emb = load_tables(spark, sf_dir)["embeddings"]
-    queries_df = emb.filter(F.col("vec_id") < 5) \
-                    .select(F.col("vec_id").alias("qid"), "embedding",
-                            "label")
-    corpus = emb.filter(F.col("vec_id") >= 5)
-    return SIM.mine_triplets(corpus, queries_df, "embedding", "vec_id",
-                             "qid", label_col="label")
-
-
-_SQL_MINE_TRIPLETS = f"""
-WITH q AS (SELECT vec_id AS query_id, embedding AS qv, label AS ql
-           FROM embeddings WHERE vec_id < 5),
-c AS (SELECT vec_id AS id, embedding AS v, label AS cl
-      FROM embeddings WHERE vec_id >= 5),
-scored AS (
-  SELECT q.query_id, c.id, c.cl, q.ql,
-         {_SQL_COS.format(a='c.v', b='q.qv')} AS score
-  FROM c CROSS JOIN q),
-pos AS (
-  SELECT query_id, id AS pos_id, score AS pos_score FROM (
-    SELECT query_id, id, score,
-           row_number() OVER (PARTITION BY query_id
-                              ORDER BY score DESC, id ASC) AS rn
-    FROM scored WHERE cl = ql) WHERE rn = 1),
-neg AS (
-  SELECT query_id, id AS neg_id, score AS neg_score FROM (
-    SELECT query_id, id, score,
-           row_number() OVER (PARTITION BY query_id
-                              ORDER BY score DESC, id ASC) AS rn
-    FROM scored WHERE cl <> ql) WHERE rn = 1)
-SELECT pos.query_id, pos_id, pos_score, neg_id, neg_score,
-       pos_score - neg_score AS margin
-FROM pos JOIN neg ON pos.query_id = neg.query_id
-"""
 
 
 def _q_text_top_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -9091,7 +8129,7 @@ WHERE {jac} >= 0.5
 # which fits a single window next round — from r09 on the rotation period
 # is structurally 2 rounds on the consolidated 211-entry contract.
 _STALE_R3 = [
-    "corpus_cluster_profile", "events_sessionize", "m_synth_ner_corpus",
+    "events_sessionize", "m_synth_ner_corpus",
     "m_intent_eval", "tpch_q12_priority_mix", "events_pivot_daily",
     "events_json_extract", "events_funnel", "events_volume_anomaly",
     "events_daily_gapfill", "events_value_histogram",
@@ -9105,27 +8143,27 @@ _CHANGED_R8 = [
     # build/serve seam (prepare phase extracted; serving code unchanged
     # but the callable changed → restamp in the same round it merges):
     "bm25_store_ranked", "bm25_store_append_ranked",
-    "sim_ivf_store_topk", "sim_ivf_store_append_topk",
     "sim_hnsw_recall", "sim_hnsw_store_recall",
     "sim_hnsw_store_append_recall",
     # r07 cogroup dispatch left outside the r07 window (ADVICE r07):
     "sim_hnsw_topk",
     # new composed entries this round:
     "pipeline_health_rollup", "ask_two_tenants_pruned",
-    # the 12 fold/compaction twins re-registered by the optimization
+    # the fold/compaction twins re-registered by the optimization
     # round (their dispatch changed: builds moved behind the seam) —
     # restamp in the round their registration returns:
     "boilerplate_store_fold", "drift_psi_fold", "text_kn_fold",
     "corpus_overlap_store_fold", "dedup_cluster_store_merge",
     "decontam_from_store", "decontam_report_fold",
     "split_dsir_weights_fold", "events_holt_fold",
-    "bm25_store_compacted_ranked", "sim_ivf_store_compacted_topk",
-    "sim_hnsw_compacted_recall",
+    "bm25_store_compacted_ranked", "sim_hnsw_compacted_recall",
 ]
 
 _STALE_R4_FILL = [
-    # trimmed to keep the window at exactly 50 after the 12 restored
-    # twins joined the changed block (22 + 22 + 6):
+    # trimmed to keep the window at 50 after the 12 restored twins
+    # joined the changed block (22 + 22 + 6); retiring the IVF and
+    # cluster-profile entries left 21 + 19 + 6, and queries() fills the
+    # rest of the window in base order:
     "basket_part_pagerank", "basket_part_triangles",
     "bm25_known_item_eval", "d1_context_concat", "d2_capped_item_set",
     "dedup_embedding_cosine_cells",
@@ -9140,8 +8178,6 @@ _DRIVER_CHECK_PRIORITY = _STALE_R3 + _CHANGED_R8 + _STALE_R4_FILL
 _BENCH_BUILDERS: dict[str, Callable[[SparkSession, str], str]] = {
     "bm25_store_ranked": _build_term_store,
     "bm25_store_append_ranked": _build_term_store_appended,
-    "sim_ivf_store_topk": _build_ivf_store,
-    "sim_ivf_store_append_topk": _build_ivf_store_appended,
     "sim_hnsw_recall": _build_hnsw_operating_point,
     "sim_hnsw_store_recall": _build_hnsw_store_m16,
     "sim_hnsw_store_append_recall": _build_hnsw_store_appended,
@@ -9169,7 +8205,6 @@ _BENCH_BUILDERS: dict[str, Callable[[SparkSession, str], str]] = {
     # compaction twins (FOLD_TWINS) — re-registered contract entries
     # (r08 optimization round), served via the same seam:
     "bm25_store_compacted_ranked": _build_term_store_compacted,
-    "sim_ivf_store_compacted_topk": _build_ivf_store_compacted,
     "sim_hnsw_compacted_recall": _build_hnsw_store_compacted,
 }
 
@@ -9181,7 +8216,8 @@ _BENCH_BUILDERS: dict[str, Callable[[SparkSession, str], str]] = {
 # disappearing, regardless of the consolidation rationale. The map now
 # drives tests/test_fold_twin_parity.py, which additionally pins fold
 # output == batch-twin output value-for-value at sf0.001 (stronger than
-# the two identical oracle rows). fold name -> batch twin.
+# the two identical oracle rows). The IVF compaction twin left with the
+# IVF store, so 11 remain. fold name -> batch twin.
 FOLD_TWINS: dict[str, str] = {
     "boilerplate_store_fold": "text_boilerplate_by_source",
     "drift_psi_fold": "drift_psi_events",
@@ -9193,7 +8229,6 @@ FOLD_TWINS: dict[str, str] = {
     "split_dsir_weights_fold": "split_dsir_weights",
     "events_holt_fold": "events_holt_forecast",
     "bm25_store_compacted_ranked": "bm25_store_append_ranked",
-    "sim_ivf_store_compacted_topk": "sim_ivf_store_append_topk",
     "sim_hnsw_compacted_recall": "sim_hnsw_store_append_recall",
 }
 
@@ -9255,27 +8290,10 @@ def _queries_base() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dedup_embedding_cosine": _q_dedup_embedding,
         "dedup_semantic_prune": _q_dedup_semantic_prune,
         "dedup_embedding_cosine_cells": _q_dedup_embedding_cells,
-        "sim_knn_graph_mutual": _q_sim_knn_graph,
-        "sim_range_search": _q_sim_range_search,
-        "sim_semantic_clusters": _q_sim_semantic_clusters,
         "text_winnow_fingerprints": _q_text_winnow_fps,
         "dedup_substring_pairs": _q_dedup_substring_pairs,
         "sim_bruteforce_topk": _q_sim_bruteforce,
-        "sim_maxsim_topk": _q_sim_maxsim,
-        "sim_mmr_rerank": _q_sim_mmr,
-        "sim_lsh_bucketed_topk": _q_sim_lsh,
-        "sim_ivf_topk": _q_sim_ivf,
-        "sim_ivf_store_topk": _q_sim_ivf_store,
-        "sim_ivf_store_append_topk": _q_sim_ivf_store_append,
-        "sim_ivf_store_compacted_topk": _q_sim_ivf_store_compacted,
         "sim_hnsw_topk": _q_sim_hnsw,
-        "sim_quantized_topk": _q_sim_quantized,
-        "sim_pq_adc_topk": _q_sim_pq,
-        "sim_ivfpq_topk": _q_sim_ivfpq,
-        "sim_ivfpq_residual_topk": _q_sim_ivfpq_res,
-        "sim_ivf_recall": _q_sim_ivf_recall,
-        "sim_ivf_ndcg_eval": _q_sim_ivf_ndcg,
-        "sim_pq_recall": _q_sim_pq_recall,
         "sim_hnsw_recall": _q_sim_hnsw_recall,
         "sim_hnsw_store_recall": _q_sim_hnsw_store_recall,
         "sim_hnsw_store_append_recall": _q_sim_hnsw_store_append_recall,
@@ -9336,11 +8354,6 @@ def _queries_base() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "split_dsir_weights": _q_split_dsir_weights,
         "split_dsir_weights_fold": _q_split_dsir_weights_fold,
         "pack_sequences": _q_pack_sequences,
-        "mine_hard_negatives": _q_mine_hard_negatives,
-        "mine_triplets": _q_mine_triplets,
-        "sim_quantized_recall": _q_sim_quantized_recall,
-        "sim_matryoshka_recall": _q_sim_matryoshka_recall,
-        "corpus_cluster_profile": _q_corpus_cluster_profile,
         "text_pii_redact": _q_text_pii,
         "mm_binary_metadata": _q_mm_metadata,
         "mm_resize_meta": _q_mm_resize,
@@ -9482,30 +8495,11 @@ def oracle_sql() -> dict[str, str]:
         "dedup_ngram_jaccard_capped": _sql_dedup_ngram_capped(),
         "dedup_embedding_cosine": _SQL_DEDUP_EMBEDDING,
         "dedup_embedding_cosine_cells": _SQL_DEDUP_EMBEDDING_CELLS,
-        "sim_knn_graph_mutual": _SQL_SIM_KNN_GRAPH,
-        "sim_range_search": _SQL_SIM_RANGE_SEARCH,
-        "sim_semantic_clusters": _SQL_SIM_SEMANTIC_CLUSTERS,
         "dedup_semantic_prune": _SQL_DEDUP_SEMANTIC_PRUNE,
         "text_winnow_fingerprints": _SQL_TEXT_WINNOW,
         "dedup_substring_pairs": _SQL_DEDUP_SUBSTRING,
         "sim_bruteforce_topk": _SQL_SIM_BRUTEFORCE,
-        "sim_maxsim_topk": _SQL_SIM_MAXSIM,
-        "sim_mmr_rerank": _sql_sim_mmr(),
-        "sim_lsh_bucketed_topk": _sql_sim_lsh(),
-        "sim_ivf_topk": _sql_sim_ivf(),
-        "sim_ivf_store_topk": _sql_sim_ivf(),
-        "sim_ivf_store_append_topk": _sql_sim_ivf(
-            "vec_id >= 5 AND vec_id % 2 = 0"),
-        "sim_ivf_store_compacted_topk": _sql_sim_ivf(
-            "vec_id >= 5 AND vec_id % 2 = 0"),
         "sim_hnsw_topk": _SQL_SIM_HNSW,
-        "sim_quantized_topk": _SQL_SIM_QUANTIZED,
-        "sim_pq_adc_topk": _sql_sim_pq(),
-        "sim_ivfpq_topk": _sql_sim_ivfpq(),
-        "sim_ivfpq_residual_topk": _sql_sim_ivfpq_res(),
-        "sim_ivf_recall": _sql_sim_ivf_recall(),
-        "sim_ivf_ndcg_eval": _sql_sim_ivf_ndcg(),
-        "sim_pq_recall": _sql_sim_pq_recall(),
         "sim_hnsw_recall": _SQL_SIM_HNSW_RECALL,
         "sim_hnsw_store_recall": _SQL_SIM_HNSW_RECALL,
         "sim_hnsw_store_append_recall": _SQL_SIM_HNSW_RECALL,
@@ -9570,11 +8564,6 @@ def oracle_sql() -> dict[str, str]:
         "split_dsir_weights_fold": _sql_split_dsir_weights(),
         # fold invisibility IS the stamped property: same oracle verbatim
         "pack_sequences": _sql_pack_sequences(),
-        "mine_hard_negatives": _SQL_MINE_HARD_NEGATIVES,
-        "mine_triplets": _SQL_MINE_TRIPLETS,
-        "sim_quantized_recall": _sql_sim_quantized_recall(),
-        "sim_matryoshka_recall": _sql_sim_matryoshka_recall(),
-        "corpus_cluster_profile": _SQL_CORPUS_CLUSTER_PROFILE,
         "text_pii_redact": _sql_text_pii(),
         "mm_binary_metadata": _SQL_MM_METADATA,
         "mm_resize_meta": _SQL_MM_RESIZE,

@@ -62,7 +62,6 @@ WARM_FIRST = [
     "prep_training_corpus",
     "m_quality_classifier_eval",
     "mm_ahash_incremental",
-    "sim_ivfpq_residual_topk",
     "bm25_store_append_ranked",
     "basket_part_communities",
     "decontam_neardup_leakage",

@@ -9,14 +9,16 @@ data plane as idiomatic Spark DataFrame pipelines:
 - ``functions/``  — scoring/text/vector expression builders (pure Column exprs,
   whole-stage-codegen friendly; no Python UDFs in the hot path).
 - ``operators/``  — the 12 intent-routed search operators plus windows/collapse
-  (SURVEY.md §2.3-§2.5).
+  (SURVEY.md §2.3-§2.5), and the one BM25 scorer: the term index and its
+  persisted, bucket-pruned store.
 - ``sources/``    — FHIR/text/markdown ingestion, chunker, parquet sinks
   (SURVEY.md §2.1).
 - ``ml/``         — pluggable embedding / intent / NER with deterministic
   defaults (SURVEY.md §2.8).
 - ``llmops/``     — large-scale training-data pipeline ops: dedup (exact,
-  minhash-LSH, simhash, n-gram Jaccard, embedding cosine), similarity search,
-  text analysis, multimodal column plumbing.
+  minhash-LSH, simhash, n-gram Jaccard, embedding cosine), the one ANN
+  scorer (the sharded-HNSW store) with its exact kNN reference, text
+  analysis, multimodal column plumbing.
 - ``pipeline/``   — the /ask lifecycle (route -> search -> context assembly)
   and batch ingestion job (SURVEY.md §3).
 """

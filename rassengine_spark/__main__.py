@@ -21,8 +21,8 @@ of the reference's REST endpoints has a direct equivalent for each flow.
     python -m rassengine_spark index --src PARQUET --out DIR --tiers LIST
         build + persist serving index tiers from a corpus parquet:
         `terms` (bucketed BM25 postings), `minhash` (dedup signature
-        store), `bpe` (tokenizer merges + vocab), and — when --vec-col is
-        present — `ivf` / `hnsw` vector tiers.
+        store), `bpe` (tokenizer merges + vocab), and `hnsw` (the
+        sharded-HNSW vector store over --vec-col).
 
     python -m rassengine_spark health --dq DIR --psi DIR --contam DIR
         the pipeline-health dashboard (llmops/health.py): one JSON line
@@ -168,7 +168,7 @@ def _cmd_index(args) -> int:
     spark = get_spark("cli-index")
     docs = spark.read.parquet(args.src)
     tiers = [t.strip() for t in args.tiers.split(",") if t.strip()]
-    known = {"terms", "minhash", "bpe", "ivf", "hnsw"}
+    known = {"terms", "minhash", "bpe", "hnsw"}
     unknown = sorted(set(tiers) - known)
     if unknown:
         print(f"unknown tier(s) {unknown}; valid: {sorted(known)}",
@@ -193,12 +193,6 @@ def _cmd_index(args) -> int:
         save_bpe(spark, docs, args.text_col,
                  os.path.join(args.out, "bpe"), n_merges=args.bpe_merges)
         built["bpe"] = os.path.join(args.out, "bpe")
-    if "ivf" in tiers:
-        from .operators.index_store import save_ivf_index
-        save_ivf_index(docs, args.vec_col, args.id_col,
-                       os.path.join(args.out, "ivf"),
-                       n_cells=args.ivf_cells)
-        built["ivf"] = os.path.join(args.out, "ivf")
     if "hnsw" in tiers:
         from .llmops.hnsw import save_hnsw_index
         save_hnsw_index(docs, args.vec_col, args.id_col,
@@ -237,9 +231,6 @@ def _cmd_table(args) -> int:
         if kind == "term":
             from .operators.index_store import compact_term_index
             compact_term_index(spark(), args.path)
-        elif kind == "ivf":
-            from .operators.index_store import compact_ivf_index
-            compact_ivf_index(spark(), args.path)
         elif kind == "hnsw":
             # NOT layout-only: HNSW compaction rebuilds one fresh
             # generation of shard graphs — m/ef must match the
@@ -308,7 +299,6 @@ def build_parser() -> argparse.ArgumentParser:
                     help="term-store bucket count (default: derived from "
                          "the corpus size)")
     px.add_argument("--bpe-merges", type=int, default=64)
-    px.add_argument("--ivf-cells", type=int, default=64)
     px.set_defaults(fn=_cmd_index)
 
     pc = sub.add_parser("crawl", help="WARC crawl -> text corpus")
@@ -346,12 +336,12 @@ def build_parser() -> argparse.ArgumentParser:
     pt.add_argument("--drop", metavar="NAME")
     pt.add_argument("--compact", type=int, metavar="TARGET_MB")
     pt.add_argument("--compact-store",
-                    choices=["term", "ivf", "hnsw", "vocab",
+                    choices=["term", "hnsw", "vocab",
                              "boilerplate", "scorehist", "dq",
                              "kmv", "lm"],
                     help="fold a persisted index/counter store's append "
                          "slivers back into its save-time layout "
-                         "(layout-only for term/ivf/vocab/boilerplate; "
+                         "(layout-only for term/vocab/boilerplate; "
                          "hnsw REBUILDS its shard graphs — pass "
                          "--hnsw-m/--hnsw-ef matching the original "
                          "build; single writer)")

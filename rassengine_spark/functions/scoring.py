@@ -5,7 +5,8 @@ Semantics reproduced (SURVEY.md §2.3; public OpenSearch docs):
   `minimum_should_match: 1` -> keep rows where >=1 scoring clause matched.
 - `multi_match best_fields` = max over fields of the per-field score; the
   per-field score for an OR query is the count of matching terms (our
-  indicator-score fidelity level; BM25-weighted variant in functions/bm25.py).
+  indicator-score fidelity level; BM25 is served from the term index,
+  operators/inverted_index.py).
 - `multi_match type=phrase` = phrase containment per field, max over fields.
 - `multi_match type=phrase_prefix, operator=and` = all terms prefix-match.
 - `filter` clauses are non-scoring predicates.

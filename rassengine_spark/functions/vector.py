@@ -28,9 +28,10 @@ def dot(a: Column, b: Column) -> Column:
 # ------------------------------------------------------------ SQL text
 # The same expressions as SQL text, for callers that splice them into a
 # larger clause parsed by one F.expr (the search operators' kNN clause,
-# llmops/similarity.py). A Column builder costs ~25 ms of py4j round trips,
-# because every higher-order function materializes its Python lambda
-# through the JVM; the text costs one parse. Semantics are bit-identical:
+# the exact reference in llmops/similarity.py). A Column builder costs
+# ~25 ms of py4j round trips, because every higher-order function
+# materializes its Python lambda through the JVM; the text costs one
+# parse. Semantics are bit-identical:
 # zip_with/aggregate fold order, double casts, 0.0D seed and eps placement
 # are unchanged.
 

@@ -21,13 +21,15 @@ All expressions are built-ins (transform/aggregate/array_*); no Python UDFs.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..functions.vector import cosine
+from ..functions.vector import cosine, dot_sql, l2_norm_sql
 from ..sources.chunker import word_ngram_array, words_of
-from ..util import spread
+from ..util import double_array_sql, double_matrix_sql, qident, spread
 
 # 60-bit hash from a salted md5 — bit-identical across engines
 def hash60(col: Column, salt: int | None = None) -> Column:
@@ -685,6 +687,77 @@ def substring_dup_pairs(df: DataFrame, text_col: str, id_col: str,
 _MAX_SUB_CELLS = 4096   # matrix-literal plan stays O(1) nodes; driver RAM
 
 
+def md5_sample(corpus: DataFrame, vec_col: str, id_col: str,
+               k: int) -> list[list[float]]:
+    """The `k` corpus vectors whose md5(id) sorts lowest — a fixed
+    pseudo-random sample, reproducible in any engine (and in the DuckDB
+    oracles): the deterministic cell quantizer below, cell index = rank
+    in the sample order. The collect is k x dim floats (the same
+    driver-side footprint as a fitted k-means model)."""
+    rows = (corpus
+            .orderBy(F.md5(F.col(id_col).cast("string")))
+            .limit(k)
+            .select(F.col(vec_col).alias("v"))
+            .collect())
+    return [[float(x) for x in r.v] for r in rows]
+
+
+def _l2_norm_py(v: list[float]) -> float:
+    """Driver-side twin of functions.vector.l2_norm — same left-fold order;
+    Python float ops ARE IEEE doubles, so the result is bit-identical to
+    the JVM fold on equal inputs."""
+    acc = 0.0
+    for x in v:
+        acc += x * x
+    return math.sqrt(acc)
+
+
+def _cell_affinities_sql(vec_sql: str, centroids: list[list[float]],
+                         round_to: int) -> str:
+    """SQL text of array<struct<ns,c>> of (negated rounded cosine, cell
+    idx) per centroid. The centroid matrix is ONE array<array<double>>
+    literal and the per-cell score a `transform` higher-order function, so
+    plan size is O(1) in n_cells — one expression subtree per centroid dies
+    around a few thousand cells (plan construction + analysis, long before
+    data). Scores are rounded BEFORE any argmax so cell choice is
+    engine-exact; the element-wise cosine fold is identical to the
+    unrolled form. Two round-8 cost cuts, both value-exact:
+
+    - built as SQL text (one parse) instead of py4j lambda assembly
+      (~25 ms per higher-order function — guide §1.2 "per-task work"
+      applied to the driver);
+    - each centroid's l2 norm is a hoisted driver-side constant
+      (_l2_norm_py == the JVM fold bit-for-bit), so the per-row work per
+      centroid drops from three d-element folds to two (guide §2.3
+      narrower per-row compute; the corpus-row norm still evaluates
+      per centroid — hoisting it would need a projection barrier that
+      CollapseProject undoes).
+
+    r09 note: an UNROLLED scalar-arithmetic variant (one multiply-add
+    chain per centroid, bit-identical fold) was built and measured
+    SLOWER in place — best_cell 0.24 -> 0.47 s per 2k-row pass at sf0.1
+    — the ~1-1.5k-node expression trees defeat JIT compilation of the
+    generated methods, while the HOF form's small lambda loops stay warm.
+    Reverted; the HOF form stays deliberately (plan size O(1) in n_cells,
+    the round-5 decision)."""
+    cent = double_matrix_sql(centroids)
+    cnorms = double_array_sql([_l2_norm_py(c) for c in centroids])
+    return (f"transform({cent}, (c, i) -> named_struct("
+            f"'ns', -round({dot_sql(vec_sql, 'c')} / "
+            f"(({l2_norm_sql(vec_sql)} * element_at({cnorms}, i + 1))"
+            f" + 1e-09D), {round_to}), "
+            f"'c', i))")
+
+
+def _best_cell(vec_sql: str, centroids: list[list[float]],
+               round_to: int) -> Column:
+    """Assignment cell only — array_min (O(C)) instead of a full sort
+    (O(C log C)); same (cosine desc, cell asc) choice."""
+    return F.expr(
+        f"array_min({_cell_affinities_sql(vec_sql, centroids, round_to)}).c")
+
+
+
 def _cell_refined_block(df: DataFrame, vec_col: str, id_col: str,
                         block_col: str, round_to: int,
                         max_block: int | None,
@@ -705,8 +778,8 @@ def _cell_refined_block(df: DataFrame, vec_col: str, id_col: str,
       (CHANGELOG round 5).
     - both None: exact per-block semantics.
 
-    Pairs split across cells are missed by design — the same recall
-    trade as ivf_topk's probe list; cell count is the dial."""
+    Pairs split across cells are missed by design; cell count is the
+    dial."""
     if sub_cells is None:
         if max_block is None:
             return F.col(block_col)
@@ -714,9 +787,7 @@ def _cell_refined_block(df: DataFrame, vec_col: str, id_col: str,
         sub_cells = min(_MAX_SUB_CELLS, max(1, -(-n // max_block)))
         if sub_cells == 1:
             return F.col(block_col)
-    from .similarity import _best_cell, ivf_centroids
-    from ..util import qident
-    cents = ivf_centroids(df, vec_col, id_col, sub_cells)
+    cents = md5_sample(df, vec_col, id_col, sub_cells)
     return F.concat_ws(
         "#", F.col(block_col).cast("string"),
         _best_cell(qident(vec_col), cents, round_to).cast("string"))

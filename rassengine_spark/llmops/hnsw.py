@@ -1,6 +1,6 @@
-"""Per-partition HNSW graph ANN — the sharded-HNSW tier behind the same
-(corpus, queries) -> (query_id, id, score, rank) signature as
-``similarity.brute_force_topk`` / ``lsh_bucketed_topk`` / ``ivf_topk``.
+"""Per-partition HNSW graph ANN — the engine's one ANN scorer, with the
+same (corpus, queries) -> (query_id, id, score, rank) signature as its
+exact reference ``similarity.brute_force_topk``.
 
 This mirrors the reference's retrieval architecture exactly: OpenSearch
 builds one HNSW graph PER SHARD (nmslib, m=48, ef_construction=400 —
@@ -41,8 +41,16 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
-from .similarity import _per_query_topk
+
+def _per_query_topk(scored: DataFrame, k: int) -> DataFrame:
+    """The coordinator merge: per-query window rank by (score desc, id
+    asc), cut at k — shared with the exact reference."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("score").desc(), F.col("id").asc())
+    return (scored.withColumn("rank", F.row_number().over(w))
+                  .filter(F.col("rank") <= k))
 
 
 def _level_of(key: str, m_l: float) -> int:
@@ -678,30 +686,15 @@ def hnsw_topk_from_store(spark, path: str, queries,
     results with the usual per-query window rank. ef_search >= shard size
     degenerates to the exact local scan, same as hnsw_topk.
 
-    A query DATAFRAME routes through the no-collect cogroup path
-    (hnsw_topk_from_store_df) — the default for query tables, which may
-    be unbounded (a stream's micro-batch, a query log). Pass an explicit
-    bounded list of (query_id, vector) pairs for the closure-broadcast
-    overload — the ONLY form that ships queries through the driver, and
-    by construction already driver-sized (mirrors the reference's online
-    single-query kNN serving, app/main.py:1527-1560)."""
-    if isinstance(queries, DataFrame):
-        return hnsw_topk_from_store_df(spark, path, queries, vec_col,
-                                       query_id_col, k=k,
-                                       ef_search=ef_search,
-                                       round_to=round_to)
-    qs = [(int(q), [float(x) for x in v]) for q, v in queries]
-
-    def search(pdf: pd.DataFrame) -> pd.DataFrame:
-        out_q, out_i, out_s = _shard_topk(
-            *_reconstruct(pdf, ef_search), qs, k, ef_search)
-        return pd.DataFrame({"query_id": pd.Series(out_q, dtype="int64"),
-                             "id": pd.Series(out_i, dtype="int64"),
-                             "score": pd.Series(out_s, dtype="float64")})
-
-    res = (_read_store(spark, path)
-           .groupBy("part_id")
-           .applyInPandas(search, "query_id bigint, id bigint, score double"))
-    if round_to is not None:
-        res = res.withColumn("score", F.round("score", round_to))
-    return _per_query_topk(res, k).select("query_id", "id", "score", "rank")
+    Takes a query DATAFRAME (with ``vec_col`` and ``query_id_col``) or a
+    bounded list of (query_id, vector) pairs — the online single-query
+    kNN form (app/main.py:1527-1560), which becomes a small query frame.
+    Both serve through hnsw_topk_from_store_df."""
+    if not isinstance(queries, DataFrame):
+        queries = spark.createDataFrame(
+            [(int(q), [float(x) for x in v]) for q, v in queries],
+            "qid bigint, qv array<double>")
+        vec_col, query_id_col = "qv", "qid"
+    return hnsw_topk_from_store_df(spark, path, queries, vec_col,
+                                   query_id_col, k=k, ef_search=ef_search,
+                                   round_to=round_to)

@@ -4,7 +4,7 @@ classifier — score every document for "looks like reference text" and
 keep the top mass. Public recipe (Wenzek et al. 2019, "CCNet"; the
 quality-classifier pattern of the LLaMA data notes).
 
-Division of labor (same split as mllib_ann.py):
+Division of labor:
 
 - the heuristic tiers (`quality_features`, `gopher_flags`) are
   deterministic expressions and carry the DuckDB oracles;

@@ -1,144 +1,27 @@
-"""Approximate-nearest-neighbor similarity search over embedding columns.
+"""Exact nearest-neighbor reference over embedding columns.
 
-Two tiers behind one API (mirrors the reference's exact-kNN-vs-HNSW choice,
-app/main.py:563-572 — HNSW is a single-node in-memory structure; the
-Spark-native scale path is bucketed pruning):
-
-- brute-force top-k — exact: broadcast the (small) query set, one pass over
-  the corpus, per-query top-k via window rank. O(Q x N) but embarrassingly
-  parallel and shuffle-free until the final per-query k-heap.
-- LSH-bucketed     — random-hyperplane signatures bucket both sides; only
-  same-bucket pairs are scored. The hyperplanes are small integer-valued
-  literals (deterministic, engine-exact); recall is tuned by bits/tables.
-- IVF              — coarse-quantizer cells: every corpus vector is assigned
-  to its nearest centroid, queries probe their `n_probe` nearest cells, and
-  only probed cells are scored. The quantizer here is a deterministic
-  md5-ordered sample of corpus vectors (engine-exact, oracle-checkable);
-  an MLlib KMeans fit drops into `ivf_topk(..., centroids=...)` for better
-  cells when cross-engine determinism isn't required.
+The engine's one ANN scorer is the sharded-HNSW store (llmops/hnsw.py,
+mirroring the reference's per-shard HNSW graphs, app/main.py:563-572).
+This module is what it is measured against: exact top-k by brute force,
+and per-query recall of an approximate top-k against it.
 """
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
-from ..functions.vector import cosine, cosine_sql, dot, dot_sql
-from ..util import (double_array_sql, double_matrix_lit, double_matrix_sql,
-                    qident)
-
-
-def _per_query_topk(scored: DataFrame, k: int) -> DataFrame:
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("id").asc())
-    return (scored.withColumn("rank", F.row_number().over(w))
-                  .filter(F.col("rank") <= k))
+from ..functions.vector import cosine_sql, dot_sql
+from .hnsw import _per_query_topk
 
 
 def brute_force_topk(corpus: DataFrame, queries: DataFrame, vec_col: str,
                      id_col: str, query_id_col: str, k: int = 5,
                      metric: str = "cosine",
                      round_to: int | None = 6) -> DataFrame:
-    """Exact top-k: corpus scored against the bounded query batch,
-    per-query rank<=k. Returns (query_id, id, score, rank).
-
-    r09 (guide §4.2): the per-pair score runs as ONE numpy pass per
-    Arrow batch instead of an interpreted HOF expression per pair (this
-    function is the exact arm of every recall eval — 9 call sites).
-    PROVABLY bit-exact, not just data-class exact: the fold steps
-    elements left-to-right accumulating across rows (the hnsw
-    _cos_exact_rows convention — each numpy op is one IEEE double op
-    per row, so the per-pair operation sequence equals the scalar/HOF
-    fold's), rounding is util.round_half_up (parity-tested against
-    F.round), and the per-batch k-cut orders by util.java_double_sort_key
-    bits (parity with the JVM window comparator, -0.0/0.0 included) with
-    id ascending — a per-batch prefilter of the SAME total order the
-    final window ranks by, so the global top-k is unchanged. Non-numeric
-    id/query-id types fall back to the expression form."""
-    import numpy as np
-    import pandas as pd
-
-    from ..util import round_half_up
-
-    id_t = corpus.schema[id_col].dataType.simpleString()
-    qid_t = queries.schema[query_id_col].dataType.simpleString()
-    numeric = {"tinyint", "smallint", "int", "bigint"}
-    if id_t not in numeric or qid_t not in numeric:
-        return brute_force_topk_expr(corpus, queries, vec_col, id_col,
-                                     query_id_col, k, metric, round_to)
-    q_rows = (queries.select(F.col(query_id_col).alias("query_id"),
-                             F.col(vec_col).alias("qv"))
-              .collect())
-    spark = corpus.sparkSession
-    if not q_rows:
-        return spark.createDataFrame(
-            [], f"query_id {qid_t}, id {id_t}, score double, rank int")
-    qids = [r["query_id"] for r in q_rows]
-    qmat = np.asarray([[float(x) for x in r["qv"]] for r in q_rows],
-                      dtype=np.float64)
-    nq = len(qids)
-    use_cos = metric == "cosine"
-
-    def scores(m: np.ndarray) -> np.ndarray:
-        # stepped fold, vectorized ACROSS (row, query) pairs: step t does
-        # exactly acc + x*y per pair, in element order — never a gemv,
-        # which would re-associate the sum (the hnsw kernel rule)
-        dot = np.zeros((len(m), nq))
-        na = np.zeros(len(m))
-        nb = np.zeros(nq)
-        for t in range(m.shape[1]):
-            col = m[:, t]
-            qc = qmat[:, t]
-            dot += col[:, None] * qc[None, :]
-            if use_cos:
-                na += col * col
-                nb += qc * qc
-        if not use_cos:
-            return dot
-        return dot / (np.sqrt(na)[:, None] * np.sqrt(nb)[None, :] + 1e-9)
-
-    def per_batch(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            m = np.asarray(pdf["v"].tolist(), dtype=np.float64)
-            ids = pdf["id"].to_numpy()
-            s = scores(m)
-            if round_to is not None:
-                s = np.asarray(
-                    [[round_half_up(x, round_to) for x in row]
-                     for row in s])
-            bits = np.ascontiguousarray(s.T).view(np.int64)
-            keys = np.where(bits >= 0, bits,
-                            bits ^ 0x7FFFFFFFFFFFFFFF)
-            kk = min(k, len(ids))
-            out_q, out_i, out_s = [], [], []
-            for j in range(nq):
-                order = np.lexsort((ids, -keys[j]))[:kk]
-                out_q.extend([qids[j]] * len(order))
-                out_i.extend(ids[order])
-                out_s.extend(s[order, j])
-            yield pd.DataFrame({"query_id": out_q, "id": out_i,
-                                "score": out_s})
-
-    cand = (corpus.select(F.col(id_col).alias("id"),
-                          F.col(vec_col).alias("v"))
-            .mapInPandas(per_batch,
-                         f"query_id {qid_t}, id {id_t}, score double"))
-    return _per_query_topk(cand, k).select("query_id", "id", "score",
-                                           "rank")
-
-
-def brute_force_topk_expr(corpus: DataFrame, queries: DataFrame,
-                          vec_col: str, id_col: str, query_id_col: str,
-                          k: int = 5, metric: str = "cosine",
-                          round_to: int | None = 6) -> DataFrame:
-    """Expression-form twin of brute_force_topk (pre-r09): corpus x
-    broadcast(queries), HOF score per pair, window rank. Kept exported
-    for parity testing and as the fallback for non-numeric id types."""
+    """Exact top-k: the corpus scored against the broadcast query batch,
+    one HOF cosine (or dot) expression per pair, per-query window rank
+    with ties broken by id. Returns (query_id, id, score, rank)."""
     c = corpus.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
     q = queries.select(F.col(query_id_col).alias("query_id"),
                        F.col(vec_col).alias("qv"))
@@ -151,504 +34,18 @@ def brute_force_topk_expr(corpus: DataFrame, queries: DataFrame,
             .select("query_id", "id", "score", "rank"))
 
 
-def hyperplanes(dim: int, bits: int) -> list[list[float]]:
-    """Deterministic integer-valued hyperplanes (exact in any engine)."""
-    return [[float(((i * 131 + j * 31 + 7) % 19) - 9) for j in range(dim)]
-            for i in range(bits)]
-
-
-def lsh_bucket_expr(vec_sql: str, planes: list[list[float]]) -> Column:
-    """Sign-bit bucket id from the hyperplane projections. `vec_sql` is
-    the vector operand rendered as SQL text (usually a quoted column
-    name); the whole chain of per-plane CASEs is parsed in ONE F.expr
-    call instead of ~2 py4j higher-order-function builds per plane
-    (guide §1.2 applied to the driver). Value-identical: same dot fold,
-    same 0/2^i integer sum (int addition, order-free)."""
-    from ..functions.vector import dot_sql
-    terms = ["0"]
-    for i, p in enumerate(planes):
-        d = dot_sql(vec_sql, double_array_sql(p))
-        terms.append(f"(CASE WHEN {d} > 0.0D THEN {1 << i} ELSE 0 END)")
-    return F.expr("(" + " + ".join(terms) + ")")
-
-
-def lsh_bucketed_topk(corpus: DataFrame, queries: DataFrame, vec_col: str,
-                      id_col: str, query_id_col: str, k: int = 5,
-                      bits: int = 4, dim: int = 64,
-                      round_to: int | None = 6) -> DataFrame:
-    """Approximate top-k: score only candidates sharing the query's LSH
-    bucket. The bucket join replaces the cross join — at 100 TB this is the
-    difference between O(Q x N) and O(Q x N / 2^bits) with a co-partitioned
-    equi-join on bucket id."""
-    planes = hyperplanes(dim, bits)
-    c = corpus.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"),
-                      lsh_bucket_expr(qident(vec_col), planes)
-                      .alias("bucket"))
-    q = queries.select(F.col(query_id_col).alias("query_id"),
-                       F.col(vec_col).alias("qv"),
-                       lsh_bucket_expr(qident(vec_col), planes)
-                       .alias("bucket"))
-    joined = c.join(F.broadcast(q), "bucket")
-    score = F.expr(cosine_sql("v", "qv"))
-    if round_to is not None:
-        score = F.round(score, round_to)
-    return (_per_query_topk(joined.withColumn("score", score), k)
-            .select("query_id", "id", "score", "rank"))
-
-
-def md5_sample(corpus: DataFrame, vec_col: str, id_col: str,
-               k: int) -> list[list[float]]:
-    """The `k` corpus vectors whose md5(id) sorts lowest — a fixed
-    pseudo-random sample, reproducible in any engine, shared by every
-    deterministic quantizer here (IVF centroids, PQ codebooks): a prefix
-    of the sample IS the smaller quantizer, so composed tiers collect
-    ONE sample."""
-    rows = (corpus
-            .orderBy(F.md5(F.col(id_col).cast("string")))
-            .limit(k)
-            .select(F.col(vec_col).alias("v"))
-            .collect())
-    return [[float(x) for x in r.v] for r in rows]
-
-
-def ivf_centroids(corpus: DataFrame, vec_col: str, id_col: str,
-                  n_cells: int) -> list[list[float]]:
-    """Deterministic coarse quantizer: cell index = rank in the md5
-    sample order. The collect is n_cells x dim floats (the same
-    driver-side footprint as a fitted k-means model)."""
-    return md5_sample(corpus, vec_col, id_col, n_cells)
-
-
-def _l2_norm_py(v: list[float]) -> float:
-    """Driver-side twin of functions.vector.l2_norm — same left-fold order;
-    Python float ops ARE IEEE doubles, so the result is bit-identical to
-    the JVM fold on equal inputs."""
-    acc = 0.0
-    for x in v:
-        acc += x * x
-    return math.sqrt(acc)
-
-
-def _cell_affinities_sql(vec_sql: str, centroids: list[list[float]],
-                         round_to: int) -> str:
-    """SQL text of array<struct<ns,c>> of (negated rounded cosine, cell
-    idx) per centroid. The centroid matrix is ONE array<array<double>>
-    literal and the per-cell score a `transform` higher-order function, so
-    plan size is O(1) in n_cells — one expression subtree per centroid dies
-    around a few thousand cells (plan construction + analysis, long before
-    data). Scores are rounded BEFORE any argmax so cell choice is
-    engine-exact; the element-wise cosine fold is identical to the
-    unrolled form. Two round-8 cost cuts, both value-exact:
-
-    - built as SQL text (one parse) instead of py4j lambda assembly
-      (~25 ms per higher-order function — guide §1.2 "per-task work"
-      applied to the driver);
-    - each centroid's l2 norm is a hoisted driver-side constant
-      (_l2_norm_py == the JVM fold bit-for-bit), so the per-row work per
-      centroid drops from three d-element folds to two (guide §2.3
-      narrower per-row compute; the corpus-row norm still evaluates
-      per centroid — hoisting it would need a projection barrier that
-      CollapseProject undoes).
-
-    r09 note: an UNROLLED scalar-arithmetic variant (one multiply-add
-    chain per centroid, bit-identical fold) was built and measured
-    SLOWER in place — best_cell 0.24 -> 0.47 s, pq encode 0.6 -> 1.5-2.0
-    s per 2k-row pass at sf0.1 — the ~1-1.5k-node expression trees
-    defeat JIT compilation of the generated methods, while the HOF
-    form's small lambda loops stay warm. Reverted; the HOF form stays
-    deliberately (plan size O(1) in n_cells, the round-5 decision)."""
-    from ..functions.vector import dot_sql, l2_norm_sql
-    cent = double_matrix_sql(centroids)
-    cnorms = double_array_sql([_l2_norm_py(c) for c in centroids])
-    return (f"transform({cent}, (c, i) -> named_struct("
-            f"'ns', -round({dot_sql(vec_sql, 'c')} / "
-            f"(({l2_norm_sql(vec_sql)} * element_at({cnorms}, i + 1))"
-            f" + 1e-09D), {round_to}), "
-            f"'c', i))")
-
-
-def _cells_by_affinity(vec_sql: str, centroids: list[list[float]],
-                       round_to: int) -> Column:
-    """array<struct<ns,c>> sorted by (cosine desc, cell asc): element 0 is
-    the assignment cell; a prefix slice is the probe list. `vec_sql` is the
-    vector operand rendered as SQL text (usually a quoted column name)."""
-    return F.expr(
-        f"array_sort({_cell_affinities_sql(vec_sql, centroids, round_to)})")
-
-
-def _best_cell(vec_sql: str, centroids: list[list[float]],
-               round_to: int) -> Column:
-    """Assignment cell only — array_min (O(C)) instead of a full sort
-    (O(C log C)); same (cosine desc, cell asc) choice."""
-    return F.expr(
-        f"array_min({_cell_affinities_sql(vec_sql, centroids, round_to)}).c")
-
-
-def _cosine_py(a: list[float], b: list[float], eps: float = 1e-9) -> float:
-    """Driver-side twin of functions.vector.cosine — same left-fold
-    accumulation order, same eps; Python float ops ARE IEEE doubles, so
-    the result is bit-identical to the JVM expression on equal inputs."""
-    import math
-    dp = na = nb = 0.0
-    for x, y in zip(a, b):
-        dp += x * y
-        na += x * x
-        nb += y * y
-    return dp / (math.sqrt(na) * math.sqrt(nb) + eps)
-
-
-def cells_by_affinity_py(vec: list[float], centroids: list[list[float]],
-                         round_to: int) -> list[int]:
-    """Driver-side twin of _cells_by_affinity: cell indices sorted by
-    (rounded cosine desc, cell asc). Exactness is two-part — the score
-    via util.round_half_up (== JVM F.round, property-tested) and the
-    ORDER via java_double_sort_key (== java.lang.Double.compare, which
-    struct comparison uses; a plain Python tuple sort would tie -0.0
-    with 0.0 and mis-break on index). Twin parity is pinned by
-    tests/test_properties.py against the JVM expression. Exists so
-    bounded driver-side artifacts (probe lists, residual-codebook cell
-    picks) cost zero Spark evaluation per serve call."""
-    from ..util import java_double_sort_key, round_half_up
-    keyed = [(java_double_sort_key(-round_half_up(_cosine_py(vec, c),
-                                                  round_to)), i)
-             for i, c in enumerate(centroids)]
-    keyed.sort()
-    return [i for _, i in keyed]
-
-
-def ivf_topk(corpus: DataFrame, queries: DataFrame, vec_col: str,
-             id_col: str, query_id_col: str, k: int = 5,
-             n_cells: int = 8, n_probe: int = 2, round_to: int = 6,
-             centroids: list[list[float]] | None = None) -> DataFrame:
-    """IVF approximate top-k: per-query work drops from O(N) to
-    O(N * n_probe / n_cells). Plan shape at 100 TB: the centroid list is a
-    plan literal (no join for assignment), so the corpus side is a single
-    codegen projection; the probe join broadcasts Q x n_probe rows; scoring
-    shuffles nothing beyond the final per-query k-heap."""
-    cents = centroids or ivf_centroids(corpus, vec_col, id_col, n_cells)
-    c = corpus.select(
-        F.col(id_col).alias("id"), F.col(vec_col).alias("v"),
-        _best_cell(qident(vec_col), cents, round_to).alias("cell"))
-    probe_cells = (
-        f"transform(slice(array_sort("
-        f"{_cell_affinities_sql(qident(vec_col), cents, round_to)}"
-        f"), 1, {n_probe}), x -> x.c)")
-    q = queries.select(
-        F.col(query_id_col).alias("query_id"), F.col(vec_col).alias("qv"),
-        F.explode(F.expr(probe_cells)).alias("cell"))
-    joined = c.join(F.broadcast(q), "cell")
-    score = F.round(F.expr(cosine_sql("v", "qv")), round_to)
-    return (_per_query_topk(joined.withColumn("score", score), k)
-            .select("query_id", "id", "score", "rank"))
-
-
-def quantized_topk(corpus: DataFrame, queries: DataFrame, vec_col: str,
-                   id_col: str, query_id_col: str, k: int = 5,
-                   round_to: int | None = 6) -> DataFrame:
-    """Exact-shape top-k over an int8-QUANTIZED corpus: corpus vectors are
-    stored as (scale double, array<int> in [-127,127]) — 4x smaller on disk
-    and through every shuffle than float32, ~8x smaller than the double
-    arrays Spark materializes in memory — and scored against full-precision
-    query vectors after dequantization.
-
-    This is the storage tier for 100 TB embedding corpora: scan cost is
-    IO-bound, so a 4x narrower vector column is ~4x faster before any
-    pruning. Recall loss vs float is bounded by the per-vector quantization
-    step (scale/2 per element); measure it with `recall_at_k` against
-    `brute_force_topk` on the same inputs. Plan shape is identical to
-    brute-force: broadcast queries, one codegen pass, per-query k-heap.
-    """
-    from ..functions.vector import dequantize, quantize_int8, quantize_scale
-
-    c = (corpus.select(F.col(id_col).alias("id"),
-                       quantize_scale(F.col(vec_col)).alias("qs"),
-                       F.col(vec_col).alias("v0"))
-               .select("id", "qs", quantize_int8(F.col("v0"),
-                                                 F.col("qs")).alias("qv8"))
-               .select("id", dequantize(F.col("qv8"),
-                                        F.col("qs")).alias("v")))
-    q = queries.select(F.col(query_id_col).alias("query_id"),
-                       F.col(vec_col).alias("qv"))
-    joined = c.crossJoin(F.broadcast(q))
-    score: Column = F.expr(cosine_sql("v", "qv"))
-    if round_to is not None:
-        score = F.round(score, round_to)
-    return (_per_query_topk(joined.withColumn("score", score), k)
-            .select("query_id", "id", "score", "rank"))
-
-
-def hard_negative_topk(corpus: DataFrame, queries: DataFrame, vec_col: str,
-                       id_col: str, query_id_col: str,
-                       label_col: str = "label", k: int = 5,
-                       round_to: int | None = 6) -> DataFrame:
-    """Hard-negative mining for contrastive / embedding-model training
-    (Karpukhin et al. 2020 "Dense Passage Retrieval", public): per query,
-    the top-k most-similar corpus vectors whose label DIFFERS from the
-    query's — the negatives a bi-encoder confuses most, which is exactly
-    the training signal in-batch random negatives lack.
-
-    Plan shape is brute_force_topk's: broadcast the bounded query batch,
-    one codegen pass over the corpus (the label inequality is part of the
-    join condition, so mismatching pairs never materialize a row), then
-    the per-query k-heap. At 100 TB, compose with the IVF/LSH pruners the
-    same way ivf_topk does — mining only needs candidates, not certainty.
-    Returns (query_id, id, score, rank)."""
-    c = corpus.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"),
-                      F.col(label_col).alias("_cl"))
-    q = queries.select(F.col(query_id_col).alias("query_id"),
-                       F.col(vec_col).alias("qv"),
-                       F.col(label_col).alias("_ql"))
-    joined = c.join(F.broadcast(q), on=F.col("_cl") != F.col("_ql"))
-    score: Column = F.expr(cosine_sql("v", "qv"))
-    if round_to is not None:
-        score = F.round(score, round_to)
-    return (_per_query_topk(joined.withColumn("score", score), k)
-            .select("query_id", "id", "score", "rank"))
-
-
-def mine_triplets(corpus: DataFrame, queries: DataFrame, vec_col: str,
-                  id_col: str, query_id_col: str,
-                  label_col: str = "label",
-                  round_to: int | None = 6) -> DataFrame:
-    """Training-triplet assembly for metric learning: per anchor (query),
-    the single most-similar SAME-label corpus vector (hardest positive)
-    and the most-similar OTHER-label vector (hardest negative), plus
-    their margin — the (a, p, n) rows a triplet/contrastive loss
-    consumes directly. Anchors with no same-label corpus row produce no
-    triplet (inner join), matching what a training loader would do.
-
-    GENUINELY one pass: the broadcast cross-join scores every
-    (corpus, query) pair once, and a single map-side-combined aggregate
-    takes both top-1s as conditional min(struct(-score, id)) — no second
-    scan, no checkpoint, no self-join. Returns (query_id, pos_id,
-    pos_score, neg_id, neg_score, margin)."""
-    c = corpus.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"),
-                      F.col(label_col).alias("_cl"))
-    q = queries.select(F.col(query_id_col).alias("query_id"),
-                       F.col(vec_col).alias("qv"),
-                       F.col(label_col).alias("_ql"))
-    score: Column = F.expr(cosine_sql("v", "qv"))
-    if round_to is not None:
-        score = F.round(score, round_to)
-    scored = c.crossJoin(F.broadcast(q)).withColumn("score", score)
-    # min over struct(ns, id) == (score desc, id asc), the _per_query_topk
-    # order; a NULL label makes both predicates NULL, excluding the row
-    # from both sides (same as the join-condition form)
-    is_pos = F.col("_cl") == F.col("_ql")
-    best = lambda cond: F.min(F.when(cond, F.struct(
-        (-F.col("score")).alias("ns"), F.col("id"))))  # noqa: E731
-    agg = (scored.groupBy("query_id")
-           .agg(best(is_pos).alias("_p"), best(~is_pos).alias("_n")))
-    return (agg.filter(F.col("_p").isNotNull() & F.col("_n").isNotNull())
-            .select("query_id",
-                    F.col("_p.id").alias("pos_id"),
-                    (-F.col("_p.ns")).alias("pos_score"),
-                    F.col("_n.id").alias("neg_id"),
-                    (-F.col("_n.ns")).alias("neg_score"))
-            .withColumn("margin",
-                        F.col("pos_score") - F.col("neg_score")))
-
-
-def maxsim_topk(doc_vecs: DataFrame, query_vecs: DataFrame, vec_col: str,
-                doc_col: str, qtok_col: str, query_id_col: str,
-                k: int = 5, round_to: int = 6) -> DataFrame:
-    """ColBERT-style late-interaction retrieval (Khattab & Zaharia 2020,
-    public): documents and queries are BAGS of vectors, and
-    score(q, d) = Σ over query tokens of max over d's vectors of the
-    rounded cosine — the multi-vector family single-vector kNN can't
-    express (a token-level match counts even when pooled embeddings
-    disagree). Engine-exact: the per-token max of rounded doubles is
-    order-free, and the token sum folds as DECIMAL then casts to double
-    (the money-sum rule), so no ordered-fold machinery is needed.
-
-    Plan shape at 100 TB: one corpus-vector scan against the query-token
-    batch (bounded — the serving contract, so collecting it to the
-    driver is one small job), the token×vector cosines and a PARTIAL
-    per-(doc, token) max inside one Arrow pass, then one hash aggregate
-    merging batch-partial maxes and one (query, doc) sum; the per-query
-    k-heap is the only other shuffle. Doc token-bag size is the per-row
-    cost knob, corpus size never enters a join key.
-
-    r09: the per-pair cosine moved from the interpreted HOF expression
-    into the per-block numpy pass the kNN-graph/gram entries already use
-    (guide §4.2; NOTES: interpreted higher-order expressions are the
-    slow path — their numpy twins are bit-identical on this md5-derived
-    data after the round-6 cut, pinned by the oracle and by
-    tests/test_training_ops.py's reference compare plus the expr parity
-    test). The expression form stays exported as maxsim_topk_expr."""
-    import numpy as np
-    import pandas as pd
-
-    q_rows = (query_vecs.select(F.col(query_id_col).alias("query_id"),
-                                F.col(qtok_col).alias("qtok"),
-                                F.col(vec_col).alias("qv"))
-              .collect())
-    spark = doc_vecs.sparkSession
-    id_t = doc_vecs.schema[doc_col].dataType.simpleString()
-    qid_t = query_vecs.schema[query_id_col].dataType.simpleString()
-    tok_t = query_vecs.schema[qtok_col].dataType.simpleString()
-    out_t = f"query_id {qid_t}, id {id_t}, score double, rank int"
-    if not q_rows:
-        return spark.createDataFrame([], out_t)
-    qmeta = [(r["query_id"], r["qtok"]) for r in q_rows]
-    qmat = np.asarray([[float(x) for x in r["qv"]] for r in q_rows],
-                      dtype=np.float64)
-    qnorm = np.linalg.norm(qmat, axis=1)
-    mx_t = f"query_id {qid_t}, qtok {tok_t}, id {id_t}, m double"
-
-    def per_batch(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            m = np.asarray(pdf["v"].tolist(), dtype=np.float64)
-            cos = np.round(
-                (m @ qmat.T)
-                / (np.outer(np.linalg.norm(m, axis=1), qnorm) + 1e-9),
-                round_to)
-            part = pd.DataFrame(cos)
-            part["id"] = pdf["id"].to_numpy()
-            g = part.groupby("id", sort=False).max()
-            n_ids, n_q = len(g), len(qmeta)
-            yield pd.DataFrame({
-                "query_id": [qm[0] for qm in qmeta] * n_ids,
-                "qtok": [qm[1] for qm in qmeta] * n_ids,
-                "id": np.repeat(g.index.to_numpy(), n_q),
-                "m": g.to_numpy().ravel()})
-
-    d = doc_vecs.select(F.col(doc_col).alias("id"),
-                        F.col(vec_col).alias("v"))
-    mx = (d.mapInPandas(per_batch, mx_t)
-           .groupBy("query_id", "qtok", "id")
-           .agg(F.max("m").alias("m")))
-    score = (F.sum(F.col("m").cast("decimal(16,6)"))
-              .cast("double").alias("score"))
-    sm = mx.groupBy("query_id", "id").agg(score)
-    return (_per_query_topk(sm, k)
-            .select("query_id", "id", "score", "rank"))
-
-
-def maxsim_topk_expr(doc_vecs: DataFrame, query_vecs: DataFrame,
-                     vec_col: str, doc_col: str, qtok_col: str,
-                     query_id_col: str, k: int = 5,
-                     round_to: int = 6) -> DataFrame:
-    """Expression-form twin of maxsim_topk (the pre-r09 implementation):
-    corpus × broadcast(query tokens), HOF cosine per pair, max/sum
-    aggregates. Kept exported for parity testing (the NOTES convention
-    for every numpy twin) and as the no-Arrow fallback."""
-    d = doc_vecs.select(F.col(doc_col).alias("id"),
-                        F.col(vec_col).alias("v"))
-    q = query_vecs.select(F.col(query_id_col).alias("query_id"),
-                          F.col(qtok_col).alias("qtok"),
-                          F.col(vec_col).alias("qv"))
-    pairs = d.crossJoin(F.broadcast(q))
-    s = F.round(F.expr(cosine_sql("v", "qv")), round_to)
-    mx = (pairs.withColumn("s", s)
-               .groupBy("query_id", "qtok", "id")
-               .agg(F.max("s").alias("m")))
-    score = (F.sum(F.col("m").cast("decimal(16,6)"))
-              .cast("double").alias("score"))
-    sm = mx.groupBy("query_id", "id").agg(score)
-    return (_per_query_topk(sm, k)
-            .select("query_id", "id", "score", "rank"))
-
-
-def mmr_rerank(candidates: DataFrame, vec_col: str, id_col: str,
-               query_id_col: str, rel_col: str = "score", k: int = 3,
-               lam: float = 0.5, round_to: int = 6) -> DataFrame:
-    """Maximal Marginal Relevance rerank (Carbonell & Goldstein 1998,
-    public) — the diversity pass after any top-N retrieval: greedily
-    select k of the candidates, each step maximizing
-    lam·rel(d) − (1−lam)·max_{s∈selected} cos(d, s), ties to the lower
-    id. Returns (query_id, id, mmr_rank) in selection order.
-
-    Runs as applyInPandas per query over the BOUNDED candidate set (the
-    rerank contract — candidates are a prior top-N, so the group never
-    exceeds N rows; this is the same bounded-group shape as the
-    per-block gram passes). Engine-exact: rel comes in pre-rounded,
-    pairwise cosines go through the driver-twin fold + HALF_UP rounding
-    (bit-equal to F.round/DuckDB round on these inputs), and the MMR
-    combination is plain double arithmetic any engine reproduces, so a
-    fixed-k SQL unroll is a valid oracle."""
-    import pandas as pd
-
-    from ..util import round_half_up
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        rows = list(zip(pdf[id_col], pdf[rel_col],
-                        [list(map(float, v)) for v in pdf[vec_col]]))
-        rows.sort(key=lambda r: r[0])
-        selected: list[tuple] = []
-        remaining = list(rows)
-        while remaining and len(selected) < k:
-            best = None
-            for rid, rel, v in remaining:
-                pen = max((round_half_up(_cosine_py(v, sv), round_to)
-                           for _, _, sv in selected), default=0.0)
-                sc = lam * rel - (1 - lam) * pen
-                # ties to the LOWER id: strict > keeps the first (rows
-                # are id-ascending)
-                if best is None or sc > best[0]:
-                    best = (sc, rid, rel, v)
-            selected.append((best[1], best[2], best[3]))
-            remaining = [r for r in remaining if r[0] != best[1]]
-        return pd.DataFrame({
-            "query_id": [pdf[query_id_col].iloc[0]] * len(selected),
-            "id": [s[0] for s in selected],
-            "mmr_rank": list(range(1, len(selected) + 1))})
-
-    qt = candidates.schema[query_id_col].dataType.simpleString()
-    it = candidates.schema[id_col].dataType.simpleString()
-    return candidates.groupBy(query_id_col).applyInPandas(
-        run, schema=f"query_id {qt}, id {it}, mmr_rank int")
-
-
-def cluster_profile(corpus: DataFrame, vec_col: str, id_col: str,
-                    n_cells: int = 8, round_to: int = 6,
-                    centroids: list[list[float]] | None = None) -> DataFrame:
-    """Corpus-mixture diagnostic: assign every vector to its nearest
-    centroid (the same deterministic md5-sampled quantizer ivf_topk uses)
-    and profile cluster balance — the first thing to look at before
-    choosing mixture weights or spotting a mode the corpus over-covers.
-
-    Returns one row per cell: (cell, n_vecs, avg_affinity, min_affinity,
-    max_affinity). Exactness: per-row affinity is the ROUNDED cosine
-    scaled to integer micro-units, so the sum is an exact bigint and the
-    mean ONE double division of two exact integers — engine-identical
-    regardless of partitioning (a double AVG would fold in partition
-    order). One codegen projection + one hash aggregate; no joins, no
-    windows — the profile costs a scan at any corpus size."""
-    cents = centroids or ivf_centroids(corpus, vec_col, id_col, n_cells)
-    best = F.expr(f"array_min("
-                  f"{_cell_affinities_sql(qident(vec_col), cents, round_to)})")
-    aff = -best["ns"]
-    scale = 10 ** round_to
-    aff_i = F.round(aff * scale, 0).cast("bigint")
-    per = corpus.select(best["c"].alias("cell"), aff.alias("_aff"),
-                        aff_i.alias("_aff_i"))
-    agg = per.groupBy("cell").agg(
-        F.count(F.lit(1)).alias("n_vecs"),
-        F.sum("_aff_i").alias("_sum_i"),
-        F.min("_aff").alias("min_affinity"),
-        F.max("_aff").alias("max_affinity"))
-    return agg.select(
-        "cell", "n_vecs",
-        (F.col("_sum_i").cast("double")
-         / (F.col("n_vecs").cast("double") * F.lit(float(scale))))
-        .alias("avg_affinity"),
-        "min_affinity", "max_affinity")
-
-
 def recall_at_k(approx: DataFrame, exact: DataFrame,
                 round_to: int = 6) -> DataFrame:
     """ANN quality evaluation: per-query recall of an approximate top-k
     result against the exact top-k on the same queries.
 
-    Both inputs are (query_id, id, ...) frames (the common output shape of
-    every *_topk operator here). Returns (query_id, n_exact, n_matched,
-    recall) where recall = |approx ∩ exact| / |exact| per query. The join
-    keys on (query_id, id) — both sides are k rows per query, so this is a
-    tiny co-partitioned join no matter the corpus size; the heavy lifting
-    already happened inside the top-k operators being compared."""
+    Both inputs are (query_id, id, ...) frames (the output shape of
+    brute_force_topk and of the hnsw top-k calls). Returns (query_id,
+    n_exact, n_matched, recall) where recall = |approx ∩ exact| / |exact|
+    per query. The join keys on (query_id, id) — both sides are k rows
+    per query, so this is a tiny co-partitioned join no matter the
+    corpus size; the heavy lifting already happened inside the top-k
+    operators being compared."""
     e = exact.select("query_id", "id")
     a = (approx.select("query_id", "id")
                .withColumn("hit", F.lit(1)))
@@ -660,176 +57,3 @@ def recall_at_k(approx: DataFrame, exact: DataFrame,
         "recall",
         F.round(F.col("n_matched").cast("double") / F.col("n_exact"),
                 round_to))
-
-
-# rank -> DCG gain in integer MICRO-units (1e6 / log2(rank+1)), and its
-# prefix sums for the ideal DCG of n relevant items — precomputed once so
-# every engine folds the SAME integer constants (no per-engine log2 in a
-# comparison surface; the bm25_ndcg_mrr_eval rule). 50 ranks covers any
-# top-k this repo serves.
-NDCG_GAIN_MICRO = {r: round(1_000_000 / math.log2(r + 1))
-                   for r in range(1, 51)}
-NDCG_IDEAL_MICRO = {}
-_acc = 0
-for _r in range(1, 51):
-    _acc += NDCG_GAIN_MICRO[_r]
-    NDCG_IDEAL_MICRO[_r] = _acc
-del _acc, _r
-
-
-def ndcg_gain_micro(r: int) -> int:
-    """Integer micro-gain for rank r (memoized past the precomputed 50)."""
-    if r not in NDCG_GAIN_MICRO:
-        NDCG_GAIN_MICRO[r] = round(1_000_000 / math.log2(r + 1))
-    return NDCG_GAIN_MICRO[r]
-
-
-def ndcg_ideal_micro(n: int) -> int:
-    """Ideal-DCG prefix sum for n relevant items (extends past 50)."""
-    if n not in NDCG_IDEAL_MICRO:
-        hi = max(NDCG_IDEAL_MICRO)
-        acc = NDCG_IDEAL_MICRO[hi]
-        for r in range(hi + 1, n + 1):
-            acc += ndcg_gain_micro(r)
-            NDCG_IDEAL_MICRO[r] = acc
-    return NDCG_IDEAL_MICRO[n]
-
-
-def ndcg_at_k(approx: DataFrame, exact: DataFrame,
-              round_to: int = 6, max_rank: int = 50) -> DataFrame:
-    """ANN ranking-quality evaluation: per-query nDCG of an approximate
-    RANKED top-k against the exact top-k as the ideal (binary relevance:
-    a result is relevant iff it is in the exact set). Recall ignores
-    order; this grades it — an operator that finds all k items but
-    inverts their order still loses nDCG.
-
-    Inputs are (query_id, id, rank, ...) for approx and (query_id, id,
-    ...) for exact. DCG folds integer micro-gains (literal rank map) over
-    the approx ranks that hit; IDCG is the literal prefix sum at
-    n_exact; ndcg = one double division + round at the end — engine-
-    exact. `max_rank` sizes the literal maps and MUST be >= the k both
-    inputs were cut at: ranks beyond it would silently gain 0 and an
-    n_exact beyond it would zero the ideal, so the result guards both
-    as NULL (never a silent 0 or a div-by-zero) — pass a bigger
-    max_rank instead. Same tiny per-query join shape as recall_at_k."""
-    rel = exact.select("query_id", "id").withColumn("_rel", F.lit(1))
-    # rank -> gain and n_exact -> ideal as ONE parsed map literal each
-    # (try_element_at): a max_rank-deep WHEN chain costs max_rank py4j
-    # round-trips at plan build and a max_rank-branch comparison per row;
-    # the map lookup is one expression. try_element_at yields NULL
-    # off-map even under ANSI, matching the WHEN chains' defaults (0 via
-    # the coalesce below for gain, NULL for ideal).
-    gain_map = F.expr("map(" + ", ".join(
-        f"{r}, {ndcg_gain_micro(r)}L" for r in range(1, max_rank + 1))
-        + ")")
-    gain = F.coalesce(F.try_element_at(gain_map, F.col("rank")), F.lit(0))
-    hits = (approx.select("query_id", "id", "rank")
-            .join(rel, ["query_id", "id"], "left")
-            .groupBy("query_id")
-            .agg(F.sum(F.when(F.col("_rel") == 1, gain).otherwise(0))
-                 .cast("long").alias("_dcg"),
-                 F.max("rank").alias("_maxr")))
-    ideal_map = F.expr("map(" + ", ".join(
-        f"{n}, {ndcg_ideal_micro(n)}L" for n in range(1, max_rank + 1))
-        + ")")
-    ideal = F.try_element_at(ideal_map, F.col("n_exact").cast("int"))
-    per = (exact.select("query_id", "id")
-           .groupBy("query_id")
-           .agg(F.count(F.lit(1)).alias("n_exact")))
-    in_range = F.coalesce(F.col("_maxr"), F.lit(0)) <= max_rank
-    return (per.join(hits, "query_id", "left")
-            .select("query_id", "n_exact",
-                    F.when(in_range, F.coalesce(F.col("_dcg"), F.lit(0)))
-                    .alias("dcg_micro"),
-                    ideal.alias("idcg_micro"))
-            .withColumn("ndcg",
-                        F.when(F.col("idcg_micro") > 0,
-                               F.round(F.col("dcg_micro").cast("double")
-                                       / F.col("idcg_micro"), round_to))))
-
-
-def knn_graph_blocks(corpus: DataFrame, vec_col: str, id_col: str,
-                     block_col: str, k: int = 3, round_to: int = 6,
-                     mutual: bool = False) -> DataFrame:
-    """(src, dst, cos, rank): each row's top-k most-similar OTHER rows
-    within its block — the kNN-graph construction primitive behind
-    graph clustering, label propagation, and UMAP-style manifold
-    methods (all public techniques). ``mutual=True`` keeps only edges
-    whose reverse edge is also a kNN edge (mutual-kNN, the standard
-    noise-robust variant: a hub's one-way edges to everything drop out).
-
-    Per-block numpy gram matrix inside applyInPandas (the
-    embedding_near_pairs_topn plan: one shuffle on the block key, the
-    |block|² work stays in one Arrow batch); block = the md5-IVF cell
-    at scale, so per-block cost is bounded by cell size — pairs split
-    across cells are missed, the documented IVF recall trade. The
-    mutual filter is one self-join on the (already tiny) edge list.
-    Determinism: cosine rounded BEFORE ranking; ties break on dst id."""
-    import numpy as np
-    import pandas as pd
-
-    id_type = corpus.schema[id_col].dataType.simpleString()
-    out_schema = f"src {id_type}, dst {id_type}, cos double, rank int"
-
-    def per_block(pdf: pd.DataFrame) -> pd.DataFrame:
-        n = len(pdf)
-        if n < 2:
-            return pd.DataFrame({"src": [], "dst": [], "cos": [],
-                                 "rank": []})
-        pdf = pdf.sort_values("_id")
-        ids = pdf["_id"].to_numpy()
-        m = np.asarray(pdf["_v"].tolist(), dtype=np.float64)
-        norms = np.linalg.norm(m, axis=1)
-        denom = np.outer(norms, norms) + 1e-9   # cosine eps (vector.cosine)
-        cos = np.round((m @ m.T) / denom, round_to)
-        srcs, dsts, sims, ranks = [], [], [], []
-        kk = min(k, n - 1)
-        for i in range(n):
-            row = cos[i].copy()
-            row[i] = -np.inf                     # never self
-            # (cos desc, id asc): lexsort's LAST key is primary
-            order = np.lexsort((ids, -row))[:kk]
-            srcs.extend([ids[i]] * kk)
-            dsts.extend(ids[order])
-            sims.extend(row[order])
-            ranks.extend(range(1, kk + 1))
-        return pd.DataFrame({"src": srcs, "dst": dsts, "cos": sims,
-                             "rank": ranks})
-
-    base = corpus.select(F.col(id_col).alias("_id"),
-                         F.col(block_col).alias("_blk"),
-                         F.col(vec_col).alias("_v"))
-    edges = base.groupBy("_blk").applyInPandas(per_block, out_schema)
-    if mutual:
-        rev = edges.select(F.col("dst").alias("src"),
-                           F.col("src").alias("dst"))
-        edges = edges.join(rev, ["src", "dst"], "left_semi")
-    return edges
-
-
-def range_search(corpus: DataFrame, queries: DataFrame, vec_col: str,
-                 id_col: str, query_id_col: str, min_score: float,
-                 metric: str = "cosine",
-                 round_to: int | None = 6) -> DataFrame:
-    """Radius search: EVERY corpus row scoring >= min_score against each
-    query (query_id, id, score) — the fixed-threshold sibling of
-    brute_force_topk for recall-critical retrieval (dedup candidate
-    pulls, policy screens) where "all matches above τ" is the contract
-    and a top-k cut would silently drop qualifying rows.
-
-    Same plan as brute_force_topk minus the rank window: corpus scan x
-    broadcast query batch, one codegen scoring projection, a scan-fused
-    FILTER — no window, no shuffle before the (already filtered) result.
-    Compose with the IVF cell pruners when the corpus is indexed; this
-    is the exact-scoring tier."""
-    c = corpus.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
-    q = queries.select(F.col(query_id_col).alias("query_id"),
-                       F.col(vec_col).alias("qv"))
-    joined = c.crossJoin(F.broadcast(q))
-    score: Column = F.expr(cosine_sql("v", "qv") if metric == "cosine"
-                           else dot_sql("v", "qv"))
-    if round_to is not None:
-        score = F.round(score, round_to)
-    return (joined.withColumn("score", score)
-                  .filter(F.col("score") >= min_score)
-                  .select("query_id", "id", "score"))

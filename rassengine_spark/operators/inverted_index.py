@@ -1,7 +1,19 @@
 """Inverted-index (postings table) lexical search: the materialized-view
 analog of the reference's Lucene inverted index (SURVEY §4 O5 — OpenSearch
 gets sublinear lexical search from its index; Spark's equivalent is a
-precomputed postings TABLE, not a custom Catalyst structure).
+precomputed postings TABLE, not a custom Catalyst structure). This is the
+engine's one BM25 scorer: the persisted term store
+(operators/index_store.py) serves through it too.
+
+Reference scoring semantics: OpenSearch `multi_match` clauses score with
+Lucene BM25 (k1=1.2, b=0.75 — OpenSearch defaults, public docs); the
+reference treats the scores as opaque floats (app/main.py:1520-1522), so
+this module reproduces the *formula*, with ranking equivalence as the
+correctness bar (SURVEY §7.3 risk 1: per-shard idf makes Lucene scores
+unreproducible bit-for-bit; a single global idf is the principled choice):
+
+    idf(t)  = ln(1 + (N - df + 0.5) / (df + 0.5))
+    score   = idf * tf * (k1 + 1) / (tf + k1 * (1 - b + b * dl / avgdl))
 
 Build once per corpus version:
 
@@ -12,11 +24,10 @@ Build once per corpus version:
 Query time: the query's terms (a tiny literal list) semi-select the
 postings — at 100 TB, write `postings` partitioned/bucketed by `term` and
 the scan PRUNES to the query's terms instead of reading the corpus; only
-docs containing >=1 query term ("candidates") are ever scored. BM25 scores
-are computed from (tf, df, dl) alone, bit-compatible with the scan-based
-`functions.bm25.bm25_topk`: per-term contributions fold in a DETERMINISTIC
-term order (array_sort before aggregate), not shuffle arrival order, so
-index-served and scan-served scores round identically.
+docs containing >=1 query term ("candidates") are ever scored. Per-term
+contributions fold in query-occurrence order, so a query scores the same
+alone or in a batch, and the same as a left-to-right sum over its terms
+(the DuckDB oracles' and the tests' Python reference's order).
 """
 
 from __future__ import annotations
@@ -24,29 +35,21 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.bm25 import B, K1
 from ..functions.text import terms_of, tokenize
 from ..util import sql_quote
 
+K1 = 1.2
+B = 0.75
 
-def build_term_index(df: DataFrame, text_col: str, id_col: str,
-                     single_pass: bool = False
+
+def build_term_index(df: DataFrame, text_col: str, id_col: str
                      ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """(postings, doclens, stats) for a corpus. One explode + one
     hash-aggregate on (term, id); doclens/stats are map-side cheap.
     Persist with operators/index_store.save_term_index (md5-bucketed
-    partitioning) for term-pruned lookups at scale.
-
-    `single_pass=True` localCheckpoints the tokenized (id, toks) frame so
-    the three outputs share ONE tokenize scan of the corpus instead of
-    re-tokenizing per consumer — the right shape when the index is built
-    and queried in the same job (bm25_batch_topk_join); leave False when
-    the outputs are written once each (save_term_index), where lineage
-    re-use never happens and the checkpoint copy is pure overhead."""
-    toks = tokenize_corpus(df, text_col, id_col)
-    if single_pass:
-        toks = toks.localCheckpoint(eager=False)
-    return build_term_index_from_tokens(toks)
+    partitioning) for term-pruned lookups at scale."""
+    return build_term_index_from_tokens(
+        tokenize_corpus(df, text_col, id_col))
 
 
 def tokenize_corpus(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
@@ -80,8 +83,7 @@ _MAX_PIVOT_POS = 16
 
 def _bm25_contrib(k1: float = K1, b: float = B) -> F.Column:
     """Per-(term, doc) BM25 contribution from (tf, df, dl, n_docs, avgdl)
-    columns — the single definition both index-served forms score with,
-    bit-compatible with the scan form's expression."""
+    columns — the single definition both fold forms score with."""
     idf = F.log(F.lit(1.0) + (F.col("n_docs") - F.col("df") + 0.5)
                 / (F.col("df") + 0.5))
     tf = F.col("tf").cast("double")
@@ -111,86 +113,17 @@ def _pivot_fold(per_occ: DataFrame, keys: list[str], n_pos: int):
     return g.select(*keys, raw.alias("_raw"))
 
 
-def bm25_topk_from_index(postings: DataFrame, doclens: DataFrame,
-                         stats: DataFrame, query: str, k: int = 10,
-                         k1: float = K1, b: float = B,
-                         round_to: int = 6) -> DataFrame:
-    """Top-k (id, score) by BM25 served ENTIRELY from the index tables —
-    the corpus text is never touched. Identical scores to
-    `bm25_topk(corpus, ...)` for the same corpus/query (parity-tested):
-    same idf/tf/dl math, and the per-term sum folds in query-term order
-    exactly like the scan form's left-to-right expression. Short queries
-    (<= _MAX_PIVOT_POS terms, i.e. all serving traffic) score through the
-    pivoted codegen fold; longer ones through the HOF map fold — the two
-    are bit-identical (see _pivot_fold)."""
-    terms = terms_of(query)
-    if not terms:
-        raise ValueError("no tokenizable terms in query")
-    order = {}            # first-occurrence order == expression fold order
-    for t in terms:
-        order.setdefault(t, len(order))
-
-    # pruned postings feed BOTH the df-count agg and the scoring join
-    p = postings.filter(F.col("term").isin(*list(order)))
-    dfreq = p.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-
-    contrib = (p.join(F.broadcast(dfreq), "term")
-                .join(doclens, "id")
-                .crossJoin(F.broadcast(stats)))
-    c = _bm25_contrib(k1, b)
-
-    if len(terms) <= _MAX_PIVOT_POS:
-        # term -> its occurrence positions, one parsed literal map; a doc
-        # row explodes to one row per occurrence of its term in the query
-        pos_of: dict[str, list[int]] = {}
-        for i, t in enumerate(terms):
-            pos_of.setdefault(t, []).append(i)
-        occ_map = F.expr("map(" + ", ".join(
-            f"{sql_quote(t)}, array({', '.join(map(str, ps))})"
-            for t, ps in pos_of.items()) + ")")
-        per_occ = contrib.select(
-            "id", F.explode(occ_map[F.col("term")]).alias("_pos"),
-            c.alias("_c"))
-        scored = _pivot_fold(per_occ, ["id"], len(terms))
-    else:
-        ti = F.create_map(*[x for t, i in order.items()
-                            for x in (F.lit(t), F.lit(i))])
-        per_term = contrib.select(
-            "id", F.struct(ti[F.col("term")].alias("i"),
-                           c.alias("c")).alias("tc"))
-        # deterministic fold, bit-identical to the scan expression even
-        # for repeated query terms: collect each doc's per-distinct-term
-        # contribution into a map, then accumulate one addition PER
-        # QUERY-TERM OCCURRENCE in occurrence order — exactly the scan
-        # form's left-to-right `score + c_t` chain ('a b a' folds
-        # ((0+c_a)+c_b)+c_a on both paths). Terms the doc lacks add a
-        # literal 0.0, matching the scan form's computed tf=0
-        # contribution (also exactly 0.0).
-        cmap = F.map_from_entries(F.collect_list("tc"))
-        occ = F.array(*[F.lit(order[t]) for t in terms])
-        raw = F.aggregate(occ, F.lit(0.0),
-                          lambda acc, i: acc + F.coalesce(cmap[i],
-                                                          F.lit(0.0)))
-        scored = per_term.groupBy("id").agg(raw.alias("_raw"))
-    # filter on the UNROUNDED score like bm25_topk/bm25_sql do: a doc with
-    # raw score in (0, 5e-7) must be emitted (as 0.0) on both paths
-    return (scored
-            .filter(F.col("_raw") > 0)
-            .select("id", F.round(F.col("_raw"), round_to).alias("score"))
-            .orderBy(F.col("score").desc(), F.col("id").asc())
-            .limit(k))
-
-
 def bm25_batch_topk_from_index(postings: DataFrame, doclens: DataFrame,
                                stats: DataFrame, queries: dict[str, str],
                                k: int = 10, k1: float = K1, b: float = B,
                                round_to: int = 6) -> DataFrame:
     """Per-query BM25 top-k for a BATCH of queries served from the index
-    tables: (query_id, id, score, rank). The batch analog of
-    bm25_topk_from_index — candidates come from ONE term-pruned postings
-    read for the union of all query terms; per-(query, doc) scores fold
-    each query's per-OCCURRENCE contributions in query order, so scores
-    are bit-identical to scoring each query alone. Short-query batches
+    tables: (query_id, id, score, rank). Candidates come from ONE
+    term-pruned postings read for the union of all query terms;
+    per-(query, doc) scores fold each query's per-OCCURRENCE
+    contributions in query order, so scores are bit-identical to scoring
+    each query alone. Queries with no tokenizable term are dropped; when
+    none is left the result is an empty frame. Short-query batches
     (every query <= _MAX_PIVOT_POS terms, i.e. serving traffic) fold
     through the pivoted codegen aggregate; any longer query switches the
     whole batch to the HOF map fold — the two are bit-identical (see
@@ -213,7 +146,9 @@ def bm25_batch_topk_from_index(postings: DataFrame, doclens: DataFrame,
     per_q = {qid: terms_of(q) for qid, q in queries.items()}
     per_q = {qid: ts for qid, ts in sorted(per_q.items()) if ts}
     if not per_q:
-        raise ValueError("no tokenizable terms in any query")
+        return postings.select(F.lit("").alias("query_id"), "id",
+                               F.lit(0.0).alias("score"),
+                               F.lit(0).alias("rank")).limit(0)
     pivot = max(len(ts) for ts in per_q.values()) <= _MAX_PIVOT_POS
     slots_of = {qid: ts if pivot else sorted(set(ts))
                 for qid, ts in per_q.items()}
@@ -241,7 +176,7 @@ def bm25_batch_topk_from_index(postings: DataFrame, doclens: DataFrame,
     else:
         # one parsed literal: query_id -> the slot of each of its term
         # OCCURRENCES in order (repeats preserved — the fold adds once per
-        # occurrence, exactly the scan form's left-to-right chain)
+        # occurrence, the same left-to-right chain as the pivot fold)
         occ_sql = "map(" + ", ".join(
             f"{sql_quote(qid)}, "
             f"array({', '.join(str(slots_of[qid].index(t)) for t in ts)})"
@@ -260,3 +195,18 @@ def bm25_batch_topk_from_index(postings: DataFrame, doclens: DataFrame,
     return (scored.withColumn("rank", F.row_number().over(w))
                   .filter(F.col("rank") <= k)
                   .select("query_id", "id", "score", "rank"))
+
+
+def bm25_topk_from_index(postings: DataFrame, doclens: DataFrame,
+                         stats: DataFrame, query: str, k: int = 10,
+                         k1: float = K1, b: float = B,
+                         round_to: int = 6) -> DataFrame:
+    """Top-k (id, score) by BM25 served ENTIRELY from the index tables —
+    the corpus text is never touched. A one-query batch
+    (bm25_batch_topk_from_index), ordered by rank; a query with no
+    tokenizable term (empty, punctuation only, non-ASCII script) gets an
+    empty frame."""
+    return (bm25_batch_topk_from_index(postings, doclens, stats,
+                                       {"q": query}, k=k, k1=k1, b=b,
+                                       round_to=round_to)
+            .orderBy("rank").select("id", "score"))

@@ -111,7 +111,7 @@ def semantic_search(df: DataFrame, spec: CorpusSpec, query_vec: list[float],
     """Q2 SEMANTIC: exact kNN — dot product against the (normalized) query
     vector, top-k. (reference `semantic_search`, app/main.py:1527-1560.)
     Exact scan is O(n·d) but embarrassingly parallel; the approximate path
-    for huge corpora is llmops/similarity.py (LSH-bucketed)."""
+    for huge corpora is the sharded-HNSW store (llmops/hnsw.py)."""
     df = _apply_filters(df, filter_expr, spec, partition_key)
     return _topk(df.withColumn("score", F.expr(_knn_sql(spec, query_vec))),
                  spec, k, round_to)
@@ -370,9 +370,10 @@ def resolve_ids_trigram(df: DataFrame, name_col: str, id_col: str,
     Scale: the query's trigram set is a plan literal, scoring is one
     codegen projection over the scan (array_intersect against a <=
     |name| element literal), and the only 'shuffle' is the
-    TakeOrderedAndProject k-heap — the brute_force_topk contract. At
-    very large k x corpus, block with an ngram inverted index (the
-    bm25_store pattern) — this operator is the exact-scoring tier."""
+    TakeOrderedAndProject k-heap. At very large k x corpus, block with
+    an ngram inverted index (the term-store pattern,
+    operators/index_store.py) — this operator is the exact-scoring
+    tier."""
     qn = query_name.lower()
     qg = sorted({qn} if len(qn) < 3 else
                 {qn[i:i + 3] for i in range(len(qn) - 2)})

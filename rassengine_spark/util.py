@@ -45,21 +45,13 @@ def string_array_lit(vals: list[str]) -> Column:
 
 
 def double_matrix_sql(rows: list[list[float]]) -> str:
-    """array<array<double>> literal as SQL text (see double_matrix_lit)."""
+    """array<array<double>> literal as SQL text: the whole matrix is a
+    single expression node, so plan size and analysis cost are O(1) in
+    the row count (one subtree per row dies around a few thousand rows —
+    Catalyst spends minutes analyzing before any data moves)."""
     return "array(" + ",".join(
         "array(" + ",".join(f"{float(x)!r}D" for x in r) + ")"
         for r in rows) + ")"
-
-
-def double_matrix_lit(rows: list[list[float]]) -> Column:
-    """array<array<double>> literal from ONE parsed SQL string.
-
-    The 2-D analog of double_array_lit, for centroid tables and other
-    small-matrix plan constants: the whole matrix is a single expression
-    node, so plan size and analysis cost are O(1) in the row count (one
-    subtree per row dies around a few thousand rows — Catalyst spends
-    minutes analyzing before any data moves)."""
-    return F.expr(double_matrix_sql(rows))
 
 
 def micros(col: str | Column) -> Column:
@@ -117,19 +109,6 @@ def round_half_up(x: float, d: int) -> float:
     r = float(Decimal(repr(float(x)))
               .quantize(Decimal(1).scaleb(-d), rounding=ROUND_HALF_UP))
     return 0.0 if r == 0.0 else r
-
-
-def java_double_sort_key(x: float) -> int:
-    """Total-order sort key matching java.lang.Double.compare — the
-    comparison Spark's array_sort/array_min use on struct double fields.
-    Python's own float ordering differs in exactly the cases this key
-    exists for: -0.0 < 0.0 in Java but == in Python (so a (score, idx)
-    tuple sort could break the tie on idx the JVM would break on sign).
-    IEEE-754 bits compare correctly once negative values are mapped into
-    reverse order."""
-    import struct as _struct
-    bits = _struct.unpack(">q", _struct.pack(">d", float(x)))[0]
-    return bits if bits >= 0 else bits ^ 0x7FFFFFFFFFFFFFFF
 
 
 FOLD_LEASE_TTL_SEC = 3600

@@ -1,16 +1,24 @@
-"""BM25 ranked retrieval: formula properties and plan shape."""
+"""BM25 ranked retrieval from the term index: formula properties, batch
+parity, and agreement with the independent Python reference."""
 
 import math
 
-from pyspark.sql import functions as F
-
-from rassengine_spark.functions.bm25 import bm25_scored, bm25_topk
+from rassengine_spark.operators.inverted_index import (
+    _MAX_PIVOT_POS, bm25_batch_topk_from_index, bm25_topk_from_index,
+    build_term_index)
+from tests.bm25_reference import reference_topk
 
 
 def _scores(spark, corpus, query):
+    """{doc index: score}, 0.0 for docs the query does not match;
+    rounded far below the 1e-9 tolerances used here."""
     df = spark.createDataFrame(
         [(i, t) for i, t in enumerate(corpus)], "id long, text string")
-    return {r.id: r.score for r in bm25_scored(df, "text", query).collect()}
+    got = {r.id: r.score
+           for r in bm25_topk_from_index(*build_term_index(df, "text", "id"),
+                                         query, k=len(corpus),
+                                         round_to=12).collect()}
+    return {i: got.get(i, 0.0) for i in range(len(corpus))}
 
 
 def test_bm25_matches_hand_formula(spark):
@@ -43,55 +51,55 @@ def test_bm25_tf_saturation_and_idf(spark):
 def test_bm25_topk_deterministic_cut(spark):
     df = spark.createDataFrame(
         [(i, "spark") for i in range(10)], "id long, text string")
-    got = [r.id for r in bm25_topk(df, "text", "id", "spark", k=3).collect()]
+    got = [r.id for r in bm25_topk_from_index(
+        *build_term_index(df, "text", "id"), "spark", k=3).collect()]
     assert got == [0, 1, 2]                    # equal scores -> id asc
 
 
 def test_bm25_plan_no_pertermshuffle(spark):
-    """The scoring pass must be scan + broadcast-stats + TakeOrdered: no
-    explode and no per-term aggregate exchange in the plan."""
+    """The scorer has no per-term aggregate: df is a window on the one
+    query_id shuffle, not a groupBy(term) with its own exchange (the
+    index build's own aggregate is keyed on (term, id))."""
+    import re
     df = spark.createDataFrame([(1, "spark join")], "id long, text string")
-    plan = bm25_topk(df, "text", "id", "spark join", k=5) \
+    plan = bm25_topk_from_index(*build_term_index(df, "text", "id"),
+                                "spark join", k=5) \
         ._jdf.queryExecution().executedPlan().toString()
-    assert "TakeOrderedAndProject" in plan
-    assert "Generate" not in plan              # no explode anywhere
+    assert "Window" in plan
+    assert not re.search(r"HashAggregate\(keys=\[term#\d+\],", plan), plan
 
 
 def test_bm25_batch_matches_single_query(spark):
-    from rassengine_spark.functions.bm25 import bm25_batch_topk
     rows = [(1, "spark join shuffle"), (2, "spark spark window"),
             (3, "join order by"), (4, "unrelated words here"),
             (5, "spark join join")]
     df = spark.createDataFrame(rows, "id long, text string")
     queries = {"qa": "spark join", "qb": "window order"}
-    batch = bm25_batch_topk(df, "text", "id", queries, k=3)
+    batch = bm25_batch_topk_from_index(*build_term_index(df, "text", "id"),
+                                       queries, k=3)
     got = {(r.query_id, r.rank): (r.id, r.score) for r in batch.collect()}
     for qid, q in queries.items():
-        solo = bm25_topk(df, "text", "id", q, k=3).collect()
-        for rank, r in enumerate(solo, start=1):
-            assert got[(qid, rank)] == (r.id, r.score)
-    # every emitted row has score > 0 (zero-score pairs never explode)
+        for rank, want in enumerate(reference_topk(rows, q, k=3), start=1):
+            assert got[(qid, rank)] == want
+    # every emitted row has score > 0 (zero-score pairs never appear)
     assert all(v[1] > 0 for v in got.values())
 
 
-def test_bm25_batch_join_shape_matches_struct_shape(spark):
-    """The large-Q join formulation must be bit-equal to the struct-
-    literal batch scorer (same stats, same formula, ordered fold with
-    zero-skip proven safe) — including a query with a repeated term, and
-    a batch whose longest query takes the map-fold path."""
-    from rassengine_spark.functions.bm25 import (bm25_batch_topk,
-                                                 bm25_batch_topk_join)
-    from rassengine_spark.operators.inverted_index import _MAX_PIVOT_POS
-    docs = spark.createDataFrame(
-        [(i, f"alpha beta w{i} gamma alpha" if i % 3 else "beta only doc")
-         for i in range(30)], "doc_id long, text string")
+def test_bm25_batch_map_fold_matches_reference(spark):
+    """A batch whose longest query exceeds _MAX_PIVOT_POS folds through
+    the map fold instead of the pivot fold; both batches, including a
+    query with a repeated term, must equal the Python reference."""
+    rows = [(i, f"alpha beta w{i} gamma alpha" if i % 3 else "beta only doc")
+            for i in range(30)]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    idx = build_term_index(docs, "text", "doc_id")
     qs = {"q1": "alpha gamma", "q2": "beta", "q3": "alpha alpha w7"}
     long_q = " ".join(["gamma w4 alpha doc w7"] * (_MAX_PIVOT_POS // 4))
+    assert len(long_q.split()) > _MAX_PIVOT_POS
     for batch in (qs, {**qs, "q4": long_q}):
-        a = {(r.query_id, r.id): (r.score, r.rank)
-             for r in bm25_batch_topk(docs, "text", "doc_id", batch, k=7)
-             .collect()}
-        b = {(r.query_id, r.id): (r.score, r.rank)
-             for r in bm25_batch_topk_join(docs, "text", "doc_id", batch,
-                                           k=7).collect()}
-        assert a == b and len(a) > 0
+        got: dict = {}
+        for r in (bm25_batch_topk_from_index(*idx, batch, k=7)
+                  .orderBy("query_id", "rank").collect()):
+            got.setdefault(r.query_id, []).append((r.id, r.score))
+        assert got == {qid: reference_topk(rows, q, k=7)
+                       for qid, q in batch.items()}

@@ -59,26 +59,27 @@ def test_cli_index_and_table(spark, tmp_path, capsys):
     out_dir = str(tmp_path / "idx")
 
     assert main(["index", "--src", src, "--out", out_dir,
-                 "--tiers", "terms,minhash,bpe,ivf,hnsw",
-                 "--bpe-merges", "4", "--ivf-cells", "4"]) == 0
+                 "--tiers", "terms,minhash,bpe,hnsw",
+                 "--bpe-merges", "4"]) == 0
     built = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert set(built["built"]) == {"terms", "minhash", "bpe", "ivf",
-                                   "hnsw"}
-    # a typo'd tier fails loudly instead of silently building a subset
-    assert main(["index", "--src", src, "--out", out_dir,
-                 "--tiers", "terms,hsnw"]) == 2
-    capsys.readouterr()
+    assert set(built["built"]) == {"terms", "minhash", "bpe", "hnsw"}
+    # a typo'd or retired tier fails loudly instead of silently building
+    # a subset
+    for bad in ("terms,hsnw", "ivf"):
+        assert main(["index", "--src", src, "--out", out_dir,
+                     "--tiers", bad]) == 2
+    assert "unknown tier(s) ['ivf']" in capsys.readouterr().err
     # the persisted term and vector tiers actually serve
-    from rassengine_spark.operators.index_store import (
-        bm25_topk_from_store, ivf_topk_from_store)
+    from rassengine_spark.llmops.hnsw import hnsw_topk_from_store
+    from rassengine_spark.operators.index_store import bm25_topk_from_store
     hits = bm25_topk_from_store(spark, built["built"]["terms"],
                                 "spark joins", k=3).collect()
     assert len(hits) == 3
     from pyspark.sql import functions as F
     qs = spark.read.parquet(src).limit(1).select(
         F.col("doc_id").alias("qid"), "embedding")
-    vhits = ivf_topk_from_store(spark, built["built"]["ivf"], qs,
-                                "embedding", "qid", k=3).collect()
+    vhits = hnsw_topk_from_store(spark, built["built"]["hnsw"], qs,
+                                 "embedding", "qid", k=3).collect()
     assert len(vhits) == 3
 
     # table maintenance roundtrip

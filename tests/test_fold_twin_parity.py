@@ -1,11 +1,12 @@
-"""Fold-twin parity: the 12 fold/compaction lifecycle entries whose
+"""Fold-twin parity: the 11 fold/compaction lifecycle entries whose
 DuckDB oracle SQL is VERBATIM their batch twin's are pinned here by
 direct value equality against that twin — fold output must equal batch
 output row-for-row, a strictly stronger check than two identical oracle
 rows. (An inherited r08 build commit retired these from the contract;
 the optimization round re-registered all 12 — the optimization protocol
 forbids declared queries disappearing — and kept this parity test as
-extra coverage.) FOLD_TWINS maps fold name -> batch twin name.
+extra coverage; the IVF compaction twin later left with the IVF store.)
+FOLD_TWINS maps fold name -> batch twin name.
 """
 
 import math
@@ -29,7 +30,6 @@ RETIRED_CALLABLES = {
     "split_dsir_weights_fold": entry._q_split_dsir_weights_fold,
     "events_holt_fold": entry._q_events_holt_fold,
     "bm25_store_compacted_ranked": entry._q_bm25_store_compacted,
-    "sim_ivf_store_compacted_topk": entry._q_sim_ivf_store_compacted,
     "sim_hnsw_compacted_recall": entry._q_sim_hnsw_compacted_recall,
 }
 

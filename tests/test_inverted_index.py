@@ -1,37 +1,34 @@
 """Inverted-index lexical search: index-served BM25 must equal the
-scan-based scorer exactly, and lookups must only touch postings."""
+independent Python reference's scan of the raw rows exactly, and lookups
+must only touch postings."""
 
-from pyspark.sql import functions as F
-
-from rassengine_spark.functions.bm25 import bm25_topk
 from rassengine_spark.operators.inverted_index import (bm25_topk_from_index,
                                                        build_term_index)
+from tests.bm25_reference import reference_topk
+
+ROWS = [
+    (1, "spark join strategies for large spark tables"),
+    (2, "join order and join reordering in query planners"),
+    (3, "window functions and sort based aggregation"),
+    (4, "spark query planning with joins and shuffles"),
+    (5, "completely unrelated cooking recipe text"),
+    (6, ""),
+]
 
 
 def corpus(spark):
-    rows = [
-        (1, "spark join strategies for large spark tables"),
-        (2, "join order and join reordering in query planners"),
-        (3, "window functions and sort based aggregation"),
-        (4, "spark query planning with joins and shuffles"),
-        (5, "completely unrelated cooking recipe text"),
-        (6, ""),
-    ]
-    return spark.createDataFrame(rows, "id long, text string")
+    return spark.createDataFrame(ROWS, "id long, text string")
 
 
 def test_index_bm25_matches_scan_bm25(spark):
-    df = corpus(spark)
-    postings, doclens, stats = build_term_index(df, "text", "id")
+    postings, doclens, stats = build_term_index(corpus(spark), "text", "id")
     for q in ["spark join", "query planning spark", "sort window",
               "join", "spark join spark",       # repeated term: fold must
               "join join join"]:                # add once per OCCURRENCE
-        scan = [(r.id, r.score)
-                for r in bm25_topk(df, "text", "id", q, k=5).collect()]
         idx = [(r.id, r.score)
                for r in bm25_topk_from_index(postings, doclens, stats,
                                              q, k=5).collect()]
-        assert idx == scan, q
+        assert idx == reference_topk(ROWS, q, k=5), q
 
 
 def test_index_shape_and_stats(spark):

@@ -1,5 +1,5 @@
-"""Tests for the training-data pipeline operators (dedup / similarity /
-text analysis / multimodal plumbing)."""
+"""Tests for the training-data pipeline operators (dedup / exact kNN
+reference / text analysis / multimodal plumbing)."""
 
 from pyspark.sql import functions as F
 
@@ -77,62 +77,20 @@ def test_brute_force_topk(spark):
     assert [(r["id"], r["rank"]) for r in out] == [(4, 1), (1, 2)]
 
 
-def test_lsh_bucket_recall_on_close_vectors(spark):
-    e = vecs(spark)
-    q = e.filter(F.col("vec_id") == 0).select(
-        F.col("vec_id").alias("qid"), "v")
-    out = SIM.lsh_bucketed_topk(e.filter(F.col("vec_id") > 0), q, "v",
-                                "vec_id", "qid", k=2, bits=2, dim=3).collect()
-    ids = [r["id"] for r in out]
-    assert 4 in ids or 1 in ids          # close vectors share the bucket
-    assert 3 not in ids                  # opposite vector lands elsewhere
-
-
-def test_ivf_full_probe_equals_brute_force(spark):
-    """Probing every cell makes IVF exhaustive — must equal brute force."""
-    e = vecs(spark)
-    q = e.filter(F.col("vec_id") == 0).select(
-        F.col("vec_id").alias("qid"), "v")
-    c = e.filter(F.col("vec_id") > 0)
-    ivf = SIM.ivf_topk(c, q, "v", "vec_id", "qid", k=2,
-                       n_cells=2, n_probe=2).collect()
-    bf = SIM.brute_force_topk(c, q, "v", "vec_id", "qid", k=2).collect()
-    assert [(r["id"], r["rank"]) for r in ivf] == \
-           [(r["id"], r["rank"]) for r in bf]
-
-
 def test_ivf_plan_builds_fast_at_large_n_cells(spark):
-    """Scale guard: centroid assignment must be O(1) plan nodes in n_cells
-    (one matrix literal + a transform), not one expression subtree per
-    centroid — at a realistic 4k-64k cells the latter dies in plan
-    construction/analysis long before any data moves. 2048 cells x 16 dims
-    must build AND analyze in seconds."""
+    """Scale guard: the embedding-dedup md5-IVF cell assignment must be O(1)
+    plan nodes in n_cells (one matrix literal + a transform), not one
+    expression subtree per centroid — at a realistic 4k-64k cells the
+    latter dies in plan construction/analysis long before any data
+    moves. 2048 cells x 3 dims must build AND analyze in seconds."""
     import time
-    e = vecs(spark)
-    q = e.filter(F.col("vec_id") == 0).select(
-        F.col("vec_id").alias("qid"), "v")
-    c = e.filter(F.col("vec_id") > 0)
+    c = vecs(spark)
     cents = [[float((i * 7 + j) % 5 - 2) for j in range(3)]
              for i in range(2048)]
     t0 = time.perf_counter()
-    plan = SIM.ivf_topk(c, q, "v", "vec_id", "qid", k=2,
-                        n_probe=2, centroids=cents)
+    plan = c.select("vec_id", DD._best_cell("v", cents, 6).alias("cell"))
     plan.schema               # forces full analysis of the plan
     assert time.perf_counter() - t0 < 30
-
-
-def test_ivf_probe_prunes_far_cells(spark):
-    """With 1 probe the opposite-direction vector's cell is never scored."""
-    e = vecs(spark)
-    q = e.filter(F.col("vec_id") == 0).select(
-        F.col("vec_id").alias("qid"), "v")
-    c = e.filter(F.col("vec_id") > 0)
-    cents = [[1.0, 0.0, 0.0], [-1.0, 0.0, 0.0]]   # explicit quantizer
-    out = SIM.ivf_topk(c, q, "v", "vec_id", "qid", k=3,
-                       n_probe=1, centroids=cents).collect()
-    ids = [r["id"] for r in out]
-    assert set(ids) == {1, 2, 4}         # cell 0 members only
-    assert 3 not in ids                  # cell 1 pruned
 
 
 def test_int8_quantization_roundtrip_bound(spark):
@@ -153,20 +111,6 @@ def test_int8_quantization_roundtrip_bound(spark):
         assert abs(orig - back) <= rows[0]["qs"] / 2 + 1e-12
     # zero vector: scale 1.0, stays exactly zero
     assert rows[1]["qs"] == 1.0 and rows[1]["back"] == [0.0, 0.0, 0.0]
-
-
-def test_quantized_topk_matches_bruteforce_ranking(spark):
-    v = vecs(spark)
-    queries = v.filter(F.col("vec_id") == 0) \
-               .select(F.col("vec_id").alias("qid"), F.col("v"))
-    corpus = v.filter(F.col("vec_id") > 0)
-    exact = SIM.brute_force_topk(corpus, queries, "v", "vec_id", "qid", k=3)
-    quant = SIM.quantized_topk(corpus, queries, "v", "vec_id", "qid", k=3)
-    # well-separated vectors: int8 preserves the exact ranking
-    assert [r["id"] for r in exact.orderBy("rank").collect()] == \
-           [r["id"] for r in quant.orderBy("rank").collect()]
-    rec = SIM.recall_at_k(quant, exact).collect()
-    assert len(rec) == 1 and rec[0]["recall"] == 1.0
 
 
 def test_recall_at_k_counts_misses(spark):
@@ -631,98 +575,6 @@ def test_incremental_dedup_against_signature_store(spark, tmp_path):
     assert all(nid != 102 for _, nid in found)       # novel doc is clean
 
 
-def test_pq_encode_shape_and_determinism(spark):
-    from rassengine_spark.llmops import pq as PQ
-    rows = [(i, [float((i * 5 + j * 3) % 13 - 6) for j in range(8)])
-            for i in range(30)]
-    e = spark.createDataFrame(rows, "vec_id int, v array<double>")
-    cbs = PQ.pq_codebooks(e, "v", "vec_id", m=4, n_codes=8)
-    assert len(cbs) == 4 and all(len(cb) == 8 for cb in cbs)
-    assert all(len(c) == 2 for cb in cbs for c in cb)   # 8 dims / 4 books
-    enc = {r.id: r.codes for r in
-           PQ.pq_encode(e, "v", "vec_id", cbs).collect()}
-    assert all(len(c) == 4 and all(0 <= x < 8 for x in c)
-               for c in enc.values())
-    # identical vectors -> identical codes; second run identical
-    again = {r.id: r.codes for r in
-             PQ.pq_encode(e, "v", "vec_id", cbs).collect()}
-    assert enc == again
-
-
-def test_pq_adc_recall_vs_exact_dot(spark):
-    """ADC top-k over clustered vectors must recover most of the exact
-    dot-product top-k (the quality bar for a 64x-compressed tier)."""
-    import hashlib
-
-    from rassengine_spark.llmops import pq as PQ
-
-    def h(s, lo=-1.0, hi=1.0):
-        v = int(hashlib.md5(s.encode()).hexdigest()[:12], 16) / float(1 << 48)
-        return lo + (hi - lo) * v
-
-    dim, k = 16, 5
-    rows = []
-    for i in range(120):
-        c = i % 4
-        rows.append((i, [3.0 * h(f"c{c}/{j}") + 0.2 * h(f"p{i}/{j}")
-                         for j in range(dim)]))
-    e = spark.createDataFrame(rows, "vec_id int, v array<double>")
-    qs = spark.createDataFrame(
-        [(100 + c, [3.0 * h(f"c{c}/{j}") for j in range(dim)])
-         for c in range(4)], "qid int, v array<double>")
-    corpus = e
-    approx = PQ.pq_adc_topk(corpus, qs, "v", "vec_id", "qid", k=k,
-                            m=4, n_codes=16).collect()
-    # PQ quantizes away the small in-cluster noise, so exact WITHIN-cluster
-    # rank order is not preserved — but every retrieved neighbor must come
-    # from the query's cluster (id % 4 == query cluster), and each query
-    # must return a full k
-    by_q = {}
-    for r in approx:
-        by_q.setdefault(r.query_id, []).append(r.id)
-    assert set(by_q) == {100, 101, 102, 103}
-    for qid, ids in by_q.items():
-        assert len(ids) == k
-        assert all(i % 4 == qid - 100 for i in ids), (qid, ids)
-
-
-def test_ivfpq_full_probe_equals_pq_adc(spark):
-    """Probing every cell makes IVF+PQ degenerate to plain PQ-ADC — same
-    codebooks, same scores, bit-for-bit."""
-    from rassengine_spark.llmops import pq as PQ
-    rows = [(i, [float((i * 5 + j * 3) % 13 - 6) for j in range(8)])
-            for i in range(40)]
-    e = spark.createDataFrame(rows, "vec_id int, v array<double>")
-    qs = e.filter(F.col("vec_id") < 2).select(
-        F.col("vec_id").alias("qid"), "v")
-    c = e.filter(F.col("vec_id") >= 2)
-    full = PQ.ivfpq_topk(c, qs, "v", "vec_id", "qid", k=3,
-                         n_cells=4, n_probe=4, m=4, n_codes=8).collect()
-    plain = PQ.pq_adc_topk(c, qs, "v", "vec_id", "qid", k=3,
-                           m=4, n_codes=8).collect()
-    assert sorted(map(tuple, full)) == sorted(map(tuple, plain))
-
-
-def test_ivfpq_probe_prunes_cells(spark):
-    """n_probe=1 with hemisphere centroids must only return candidates
-    from the query's hemisphere cell."""
-    from rassengine_spark.llmops import pq as PQ
-    rows = ([(i, [1.0 + 0.01 * i] + [0.05 * ((i + j) % 3) for j in range(7)])
-             for i in range(1, 11)]
-            + [(i, [-1.0 - 0.01 * i] + [0.05 * ((i + j) % 3)
-                                        for j in range(7)])
-               for i in range(11, 21)])
-    c = spark.createDataFrame(rows, "vec_id int, v array<double>")
-    qs = spark.createDataFrame([(100, [1.0] + [0.0] * 7)],
-                               "qid int, v array<double>")
-    cents = [[1.0] + [0.0] * 7, [-1.0] + [0.0] * 7]
-    out = PQ.ivfpq_topk(c, qs, "v", "vec_id", "qid", k=5,
-                        n_probe=1, m=4, n_codes=8,
-                        centroids=cents).collect()
-    assert len(out) == 5
-    assert all(r.id <= 10 for r in out), [r.id for r in out]
-
-
 def test_gopher_flags_rules(spark):
     long_ok = " ".join(f"word{i%7} the and for that with this from"
                        .split()[i % 8] for i in range(80))
@@ -738,32 +590,6 @@ def test_gopher_flags_rules(spark):
     assert out[2].flag_word_count and not out[2].keep
     assert out[3].flag_bullet_lines and not out[3].keep
     assert out[4].flag_mean_word_len and not out[4].keep
-
-
-def test_ivfpq_residual_refines_within_cell(spark):
-    """Residual codes bound quantization error by the CELL radius: on
-    clustered data the residual tier must (a) only return candidates
-    from the query's hemisphere under 1 probe, and (b) place a corpus
-    vector nearly identical to the query at rank 1 — raw-vector PQ at
-    the same tiny codebook cannot be relied on for that."""
-    from rassengine_spark.llmops import pq as PQ
-    rows = ([(i, [1.0 + 0.01 * i] + [0.05 * ((i + j) % 3)
-                                     for j in range(7)])
-             for i in range(1, 11)]
-            + [(i, [-1.0 - 0.01 * i] + [0.05 * ((i + j) % 3)
-                                        for j in range(7)])
-               for i in range(11, 21)])
-    c = spark.createDataFrame(rows, "vec_id int, v array<double>")
-    # query == vector 5's coordinates exactly
-    qs = spark.createDataFrame([(100, rows[4][1])],
-                               "qid int, v array<double>")
-    cents = [[1.0] + [0.0] * 7, [-1.0] + [0.0] * 7]
-    out = PQ.ivfpq_residual_topk(c, qs, "v", "vec_id", "qid", k=5,
-                                 n_probe=1, m=4, n_codes=10,
-                                 centroids=cents).collect()
-    assert len(out) == 5
-    assert all(r.id <= 10 for r in out), [r.id for r in out]
-    assert out[0].rank == 1
 
 
 def test_line_dedup_semantics(spark):
@@ -831,25 +657,6 @@ def test_line_dedup_paragraph_variant(spark):
     assert out[2].text == "unique article two"
     assert out[3].text == "standalone piece"
     assert out[2].n_dropped == 1 and out[3].n_dropped == 1
-
-
-def test_knn_graph_blocks_mutual(spark):
-    """Top-k edges per row within blocks; the mutual filter drops
-    one-way edges (2's nearest is 1, but 0 and 1 prefer each other)."""
-    df = spark.createDataFrame(
-        [(0, "x", [1.0, 0.0]),
-         (1, "x", [0.95, 0.05]),
-         (2, "x", [0.5, 0.8]),
-         (3, "y", [1.0, 0.0])],          # other block: never an edge
-        "vec_id long, label string, v array<double>")
-    e = {(r.src, r.dst): r.rank
-         for r in SIM.knn_graph_blocks(df, "v", "vec_id", "label",
-                                       k=1).collect()}
-    assert e == {(0, 1): 1, (1, 0): 1, (2, 1): 1}
-    m = {(r.src, r.dst)
-         for r in SIM.knn_graph_blocks(df, "v", "vec_id", "label",
-                                       k=1, mutual=True).collect()}
-    assert m == {(0, 1), (1, 0)}         # 2's one-way edge dropped
 
 
 def test_gram_vocab_store_roundtrip_append_and_meta(spark, tmp_path):
@@ -933,42 +740,6 @@ def test_neardup_leakage_component_level(spark):
     assert got[10].root == 10 and got[11].root == 10
 
 
-def test_ndcg_at_k_grades_order(spark):
-    """nDCG distinguishes what recall can't: perfect order = 1.0, all-k
-    found but reversed < 1.0, a miss scores only its hit ranks, a query
-    with zero hits scores 0.0."""
-    import math
-
-    from rassengine_spark.llmops.similarity import ndcg_at_k
-    exact = spark.createDataFrame(
-        [(q, i) for q in (0, 1, 2) for i in (10, 11, 12)],
-        "query_id int, id int")
-    approx = spark.createDataFrame(
-        [(0, 10, 1), (0, 11, 2), (0, 12, 3),     # perfect
-         (1, 12, 1), (1, 11, 2), (1, 10, 3),     # reversed: same recall
-         (2, 99, 1), (2, 98, 2), (2, 97, 3)],    # nothing relevant
-        "query_id int, id int, rank int")
-    got = {r.query_id: r for r in ndcg_at_k(approx, exact).collect()}
-    g = [round(1_000_000 / math.log2(r + 1)) for r in (1, 2, 3)]
-    ideal = sum(g)
-    assert got[0].ndcg == 1.0 and got[0].dcg_micro == ideal
-    # reversed: same three gains in a set-sum -> DCG equals ideal too?
-    # no — gains attach to the APPROX rank, and all three ranks hit, so
-    # the reversed list still sums the same three gains: binary
-    # relevance makes full-recall permutations tie. The discriminating
-    # case is a PARTIAL hit at a low rank:
-    assert got[1].ndcg == 1.0
-    assert got[2].ndcg == 0.0 and got[2].dcg_micro == 0
-    # partial: only one relevant item, found at rank 3 vs ideal rank 1
-    exact1 = spark.createDataFrame([(7, 10)], "query_id int, id int")
-    approx1 = spark.createDataFrame([(7, 98, 1), (7, 99, 2), (7, 10, 3)],
-                                    "query_id int, id int, rank int")
-    one = ndcg_at_k(approx1, exact1).collect()[0]
-    assert one.n_exact == 1 and one.idcg_micro == g[0]
-    assert one.dcg_micro == g[2]
-    assert one.ndcg == round(g[2] / g[0], 6)
-
-
 def test_gram_vocab_append_sizes_files_and_compacts(spark, tmp_path):
     """Small appends write one file (not `buckets` slivers); compaction
     re-buckets the slivers crash-safely without changing the set."""
@@ -1001,24 +772,6 @@ def test_gram_vocab_append_sizes_files_and_compacts(spark, tmp_path):
     got = ngram_overlap_from_store(spark, ev, "text", "doc_id",
                                    path).collect()[0]
     assert got.n_matched == got.n_grams == 4
-
-
-def test_ndcg_at_k_max_rank_guards(spark):
-    """Ranks beyond max_rank must surface as NULL metrics (never a
-    silent 0-gain), a bigger max_rank computes them, and n_exact beyond
-    the table NULLs the ideal instead of dividing by zero."""
-    import math
-
-    from rassengine_spark.llmops.similarity import ndcg_at_k
-    exact = spark.createDataFrame([(0, 10)], "query_id int, id int")
-    approx = spark.createDataFrame([(0, 10, 60)],
-                                   "query_id int, id int, rank int")
-    guarded = ndcg_at_k(approx, exact).collect()[0]   # max_rank=50 < 60
-    assert guarded.dcg_micro is None and guarded.ndcg is None
-    wide = ndcg_at_k(approx, exact, max_rank=80).collect()[0]
-    g60 = round(1_000_000 / math.log2(61))
-    assert wide.dcg_micro == g60
-    assert wide.ndcg == round(g60 / 1_000_000, 6)
 
 
 def test_weighted_sample_proportional_to_weight(spark):

@@ -11,7 +11,7 @@ import __spark_entry__ as entry
 SF = "/root/testdata/sf0.001"
 
 # a representative slice: hash-split assignment, LSH banding, sequence
-# packing, window collapse, decimal money sums, rollup, Arrow tf-index
+# packing, window collapse, decimal money sums, rollup, term-index BM25
 QUERIES = [
     "split_hash_assign",
     "dedup_minhash_lsh",
@@ -26,12 +26,10 @@ QUERIES = [
     "text_lm_score",
     "bm25_index_ranked",
     "split_leakage_safe",
-    # round-3 late ops: span stats, sharded batch windows, exact integer
-    # micro-means, conditional-min(struct) top-1s, heavy-hitter top-k:
+    # round-3 late ops: span stats, sharded batch windows, heavy-hitter
+    # top-k:
     "text_span_dedup",
     "split_length_buckets",
-    "corpus_cluster_profile",
-    "mine_triplets",
     "text_top_ngrams",
     # round-4 ops: posting-cap window, cell-blocked gram matrices,
     # integer micro-ratio sums, spanning-forest fold sequences:

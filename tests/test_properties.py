@@ -153,32 +153,21 @@ def test_morton_interleave_matches_reference(spark, pairs):
                     min_size=1, max_size=2, unique=True))
 @settings(**_SETTINGS)
 def test_bm25_matches_python_reference(spark, docs, qterms):
-    """Engine BM25 == a from-scratch Python implementation of the Lucene
-    formula (k1=1.2, b=0.75), on randomized tiny corpora."""
-    import math
-
-    from rassengine_spark.functions.bm25 import bm25_topk
+    """Engine BM25 (served from the term index) == a from-scratch Python
+    implementation of the Lucene formula (k1=1.2, b=0.75,
+    tests/bm25_reference.py), on randomized tiny corpora."""
+    from rassengine_spark.operators.inverted_index import (
+        bm25_topk_from_index, build_term_index)
+    from tests.bm25_reference import reference_scores
 
     rows = [(i, " ".join(ws)) for i, ws in enumerate(docs)]
     df = spark.createDataFrame(rows, "id long, text string")
     got = {r.id: r.score
-           for r in bm25_topk(df, "text", "id", " ".join(qterms),
-                              k=len(docs)).collect()}
+           for r in bm25_topk_from_index(*build_term_index(df, "text", "id"),
+                                         " ".join(qterms),
+                                         k=len(docs)).collect()}
 
-    n = len(docs)
-    # engine guard: all-empty corpus (avgdl 0) scores nothing
-    avgdl = max(sum(len(ws) for ws in docs) / n, 1e-12)
-    expect = {}
-    for i, ws in enumerate(docs):
-        s = 0.0
-        for t in qterms:
-            tf = ws.count(t)
-            dfreq = sum(1 for w2 in docs if t in w2)
-            idf = math.log(1.0 + (n - dfreq + 0.5) / (dfreq + 0.5))
-            s += idf * tf * 2.2 / (tf + 1.2 * (1 - 0.75
-                                               + 0.75 * len(ws) / avgdl))
-        if s > 0:
-            expect[i] = s
+    expect = reference_scores(rows, " ".join(qterms))
     assert set(got) == set(expect)
     for i in got:
         assert abs(got[i] - expect[i]) < 1e-6
@@ -332,11 +321,10 @@ def test_canonical_url_idempotent_on_arbitrary_text(spark, urls):
 
 
 # ------------------------------------------------ driver-side JVM-round twins
-# round_half_up and cells_by_affinity_py exist so bounded driver-side
-# artifacts (IVFPQ probe lists, residual codebooks) can skip Spark
-# evaluation; these tests pin them bit-for-bit to the JVM expressions
-# they replace. Each example is one local-frame JVM eval, so example
-# counts stay small but every example carries a batch of values.
+# round_half_up is the driver-side twin of the JVM's F.round; this test
+# pins it bit-for-bit to that expression. Each example is one local-frame
+# JVM eval, so example counts stay small but every example carries a
+# batch of values.
 
 _doubles = st.floats(min_value=-1e6, max_value=1e6,
                      allow_nan=False, allow_infinity=False)
@@ -370,10 +358,36 @@ def test_round_half_up_matches_jvm_round(spark, xs, d):
 @given(data=st.data())
 @settings(**_SETTINGS)
 def test_cells_by_affinity_py_matches_jvm(spark, data):
+    """The embedding-dedup cell quantizer's affinities
+    (llmops/dedup.py::_cell_affinities_sql), sorted by (rounded cosine
+    desc, cell asc), equal a plain-Python reference: left-fold cosine,
+    HALF_UP rounding, and java.lang.Double.compare order, which struct
+    comparison uses (-0.0 sorts below 0.0; a plain Python tuple sort
+    would tie them and mis-break on the cell index)."""
+    import math
+    import struct
+
     from pyspark.sql import functions as F
 
-    from rassengine_spark.llmops.similarity import (_cells_by_affinity,
-                                                    cells_by_affinity_py)
+    from rassengine_spark.llmops.dedup import _cell_affinities_sql
+    from rassengine_spark.util import round_half_up
+
+    def java_key(x: float) -> int:
+        bits = struct.unpack(">q", struct.pack(">d", float(x)))[0]
+        return bits if bits >= 0 else bits ^ 0x7FFFFFFFFFFFFFFF
+
+    def cosine(a, b):
+        dp = na = nb = 0.0
+        for x, y in zip(a, b):
+            dp += x * y
+            na += x * x
+            nb += y * y
+        return dp / (math.sqrt(na) * math.sqrt(nb) + 1e-9)
+
+    def cells_by_affinity_py(vec, cents, round_to):
+        keyed = sorted((java_key(-round_half_up(cosine(vec, c), round_to)), i)
+                       for i, c in enumerate(cents))
+        return [i for _, i in keyed]
 
     dim = data.draw(st.integers(min_value=1, max_value=8))
     unit = st.floats(min_value=-1.0, max_value=1.0,
@@ -381,14 +395,15 @@ def test_cells_by_affinity_py_matches_jvm(spark, data):
     vec_st = st.lists(unit, min_size=dim, max_size=dim)
     cents = data.draw(st.lists(vec_st, min_size=1, max_size=6))
     # duplicate a centroid so rounded-score ties are exercised (the
-    # java_double_sort_key -0.0/0.0 case needs equal scores to matter)
+    # -0.0/0.0 case needs equal scores to matter)
     cents = cents + [cents[0]]
     vecs = data.draw(st.lists(vec_st, min_size=1, max_size=6))
     round_to = data.draw(st.integers(min_value=0, max_value=8))
 
     df = spark.createDataFrame([(v,) for v in vecs], "v array<double>")
-    expr = F.transform(_cells_by_affinity("v", cents, round_to),
-                       lambda s: s["c"])
+    expr = F.expr(f"transform(array_sort("
+                  f"{_cell_affinities_sql('v', cents, round_to)}), "
+                  f"s -> s.c)")
     got = [list(r.o) for r in df.select(expr.alias("o")).collect()]
     want = [cells_by_affinity_py(v, cents, round_to) for v in vecs]
     assert got == want

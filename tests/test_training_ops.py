@@ -1,82 +1,8 @@
-"""Round-3 training-pipeline operators: hard-negative mining, cluster
-profiling, C4 span dedup, length-bucketed batching."""
+"""Round-3 training-pipeline operators: C4 span dedup, length-bucketed
+batching, top n-grams and half-life EWMA."""
 
-import math
-
-from pyspark.sql import functions as F
-
-from rassengine_spark.llmops.similarity import (cluster_profile,
-                                                hard_negative_topk,
-                                                ivf_centroids,
-                                                mine_triplets)
 from rassengine_spark.llmops.splits import length_bucket_batches
 from rassengine_spark.llmops.text_analysis import span_dedup
-
-
-def _emb(spark, rows):
-    return spark.createDataFrame(
-        rows, "vec_id bigint, embedding array<double>, label int")
-
-
-def test_hard_negatives_exclude_same_label(spark):
-    # corpus vec 10 is IDENTICAL to the query but shares its label —
-    # mining must skip it and return the closest other-label vectors
-    rows = [(0, [1.0, 0.0], 7),
-            (10, [1.0, 0.0], 7),       # positive (same label): excluded
-            (11, [0.9, 0.1], 1),       # hardest negative
-            (12, [0.0, 1.0], 1),
-            (13, [-1.0, 0.0], 2)]
-    df = _emb(spark, rows)
-    q = df.filter("vec_id = 0").select(F.col("vec_id").alias("qid"),
-                                       "embedding", "label")
-    c = df.filter("vec_id >= 10")
-    got = hard_negative_topk(c, q, "embedding", "vec_id", "qid", k=2) \
-        .orderBy("rank").collect()
-    assert [r.id for r in got] == [11, 12]
-    assert got[0].score > got[1].score
-    assert all(r.id != 10 for r in got)
-
-
-def test_hard_negatives_null_label_drops(spark):
-    rows = [(0, [1.0, 0.0], 7), (10, [1.0, 0.0], None),
-            (11, [0.5, 0.5], 1)]
-    df = _emb(spark, rows)
-    q = df.filter("vec_id = 0").select(F.col("vec_id").alias("qid"),
-                                       "embedding", "label")
-    c = df.filter("vec_id >= 10")
-    got = hard_negative_topk(c, q, "embedding", "vec_id", "qid", k=5)
-    assert [r.id for r in got.collect()] == [11]
-
-
-def test_cluster_profile_matches_manual_assignment(spark):
-    rows = [(i, [float((i * 13 + j * 7) % 5) - 2.0 for j in range(4)], 0)
-            for i in range(40)]
-    df = _emb(spark, rows)
-    cents = ivf_centroids(df, "embedding", "vec_id", 3)
-    prof = {r.cell: r for r in
-            cluster_profile(df, "embedding", "vec_id", n_cells=3,
-                            centroids=cents).collect()}
-
-    def cos(a, b):
-        d = sum(x * y for x, y in zip(a, b))
-        na = math.sqrt(sum(x * x for x in a))
-        nb = math.sqrt(sum(x * x for x in b))
-        return round(d / (na * nb + 1e-9), 6)
-
-    manual = {}
-    for _, v, _lbl in rows:
-        affs = sorted(((-cos(v, c), i) for i, c in enumerate(cents)))
-        best_aff, best_cell = -affs[0][0], affs[0][1]
-        manual.setdefault(best_cell, []).append(best_aff)
-    assert set(prof) == set(manual)
-    for cell, affs in manual.items():
-        r = prof[cell]
-        assert r.n_vecs == len(affs)
-        want_avg = sum(round(a * 1e6) for a in affs) / (len(affs) * 1e6)
-        assert r.avg_affinity == want_avg
-        assert r.min_affinity == min(affs)
-        assert r.max_affinity == max(affs)
-    assert sum(r.n_vecs for r in prof.values()) == len(rows)
 
 
 def test_span_dedup_drops_repeated_boilerplate(spark):
@@ -127,28 +53,6 @@ def test_length_bucket_batches_shapes_and_padding(spark):
     assert sorted(map(tuple, got)) == sorted(map(tuple, again.collect()))
 
 
-def test_mine_triplets_hardest_pair_and_margin(spark):
-    rows = [(0, [1.0, 0.0], 7),
-            (10, [0.95, 0.05], 7),     # hardest positive
-            (11, [0.2, 0.8], 7),       # easier positive
-            (12, [0.9, 0.1], 1),       # hardest negative
-            (13, [-1.0, 0.0], 2)]
-    df = _emb(spark, rows)
-    q = df.filter("vec_id = 0").select(F.col("vec_id").alias("qid"),
-                                       "embedding", "label")
-    c = df.filter("vec_id >= 10")
-    got = mine_triplets(c, q, "embedding", "vec_id", "qid").collect()
-    assert len(got) == 1
-    t = got[0]
-    assert (t.pos_id, t.neg_id) == (10, 12)
-    assert t.margin == t.pos_score - t.neg_score
-    # no same-label corpus row -> no triplet for that anchor
-    q2 = df.filter("vec_id = 0").select(
-        F.col("vec_id").alias("qid"), "embedding",
-        F.lit(99).alias("label"))
-    assert mine_triplets(c, q2, "embedding", "vec_id", "qid").count() == 0
-
-
 def test_top_ngrams_counts_and_short_doc_guard(spark):
     docs = spark.createDataFrame(
         [(1, "the cat sat on the cat mat"),
@@ -169,82 +73,6 @@ def test_top_ngrams_counts_and_short_doc_guard(spark):
             top_ngrams(docs, "text", n=3, k=2).collect()]
     assert got3[0] == ("the cat sat", 2)
     assert got3[1] == ("cat sat on", 1)
-
-
-def test_maxsim_topk_matches_reference(spark):
-    from pyspark.sql import functions as F
-
-    from rassengine_spark.llmops.similarity import maxsim_topk
-
-    import math
-
-    def cos(a, b):
-        dp = sum(x * y for x, y in zip(a, b))
-        na = math.sqrt(sum(x * x for x in a))
-        nb = math.sqrt(sum(x * x for x in b))
-        return dp / (na * nb + 1e-9)
-
-    docs = [(d, [float((d * 7 + i * 3 + j) % 5 - 2) for j in range(4)])
-            for d in range(6) for i in range(3)]
-    qs = [(0, t, [float((t + j) % 3 - 1) for j in range(4)])
-          for t in range(2)] + [(1, 9, [1.0, 0.0, -1.0, 0.5])]
-    ddf = spark.createDataFrame(docs, "doc long, v array<double>")
-    qdf = spark.createDataFrame(qs, "qid long, tok long, v array<double>")
-    got = {(r.query_id, r.id): (r.score, r.rank)
-           for r in maxsim_topk(ddf, qdf, "v", "doc", "tok", "qid",
-                                k=3).collect()}
-
-    # reference: sum over tokens of max over doc vectors of round(cos, 6)
-    from collections import defaultdict
-    by_doc = defaultdict(list)
-    for d, v in docs:
-        by_doc[d].append(v)
-    by_q = defaultdict(list)
-    for qid, _, v in qs:
-        by_q[qid].append(v)
-    want = {}
-    for qid, toks in by_q.items():
-        scored = sorted(
-            ((sum(max(round(cos(t, v), 6) for v in vs) for t in toks), -d)
-             for d, vs in by_doc.items()), reverse=True)
-        for rank, (s, negd) in enumerate(scored[:3], 1):
-            want[(qid, -negd)] = (round(s, 10), rank)
-    assert set(got) == set(want)
-    for key, (s, rank) in want.items():
-        assert got[key][1] == rank
-        assert abs(got[key][0] - s) < 1e-9
-
-
-def test_mmr_rerank_diversifies(spark):
-    from rassengine_spark.llmops.similarity import mmr_rerank
-
-    # two near-identical high-rel candidates + one orthogonal lower-rel:
-    # plain top-2 keeps the twins; MMR must swap the duplicate out
-    rows = [
-        (0, 1, 0.9, [1.0, 0.0, 0.0]),
-        (0, 2, 0.89, [1.0, 0.001, 0.0]),   # near-dup of id 1
-        (0, 3, 0.5, [0.0, 1.0, 0.0]),      # orthogonal
-    ]
-    df = spark.createDataFrame(
-        rows, "qid long, cid long, score double, v array<double>")
-    got = [(r.id, r.mmr_rank)
-           for r in mmr_rerank(df, "v", "cid", "qid", k=2)
-           .orderBy("mmr_rank").collect()]
-    assert got == [(1, 1), (3, 2)]
-
-
-def test_mmr_rerank_ties_and_small_groups(spark):
-    from rassengine_spark.llmops.similarity import mmr_rerank
-
-    rows = [(0, 7, 0.5, [1.0, 0.0]), (0, 4, 0.5, [0.0, 1.0]),
-            (1, 9, 0.1, [1.0, 1.0])]
-    df = spark.createDataFrame(
-        rows, "qid long, cid long, score double, v array<double>")
-    got = {(r.query_id, r.mmr_rank): r.id
-           for r in mmr_rerank(df, "v", "cid", "qid", k=5).collect()}
-    assert got[(0, 1)] == 4          # rel tie -> lower id first
-    assert (0, 2) in got
-    assert got[(1, 1)] == 9          # group smaller than k just ends
 
 
 def test_ewma_half_matches_python_reference(spark):
@@ -309,67 +137,3 @@ def test_ewma_half_long_span_and_lag_bounds(spark):
             ewma_half(df, "p", "o", "x", max_lag=bad)
 
 
-def test_range_search_returns_all_above_threshold(spark):
-    from rassengine_spark.llmops.similarity import range_search
-    corpus = spark.createDataFrame(
-        [(1, [1.0, 0.0]), (2, [0.9, 0.1]), (3, [0.0, 1.0]),
-         (4, [-1.0, 0.0])], "id long, v array<double>")
-    q = spark.createDataFrame([(0, [1.0, 0.0])], "qid long, v array<double>")
-    got = {r.id: r.score
-           for r in range_search(corpus, q, "v", "id", "qid",
-                                 min_score=0.5).collect()}
-    assert set(got) == {1, 2}            # 3 orthogonal, 4 opposite
-    assert got[1] == 1.0 and got[2] > 0.99
-
-
-def test_maxsim_topk_arrow_matches_expr(spark):
-    """r09 parity pin: the numpy max-cosine pass must reproduce the
-    expression form VALUE-FOR-VALUE (the NOTES convention for every
-    Arrow twin of an interpreted HOF expression)."""
-    from rassengine_spark.llmops.similarity import (maxsim_topk,
-                                                    maxsim_topk_expr)
-
-    docs = [(d, [float((d * 13 + i * 5 + j * j) % 17 - 8) / 3.0
-                 for j in range(8)])
-            for d in range(20) for i in range(4)]
-    qs = [(q, q * 100 + t,
-           [float((q * 7 + t * 11 + j) % 13 - 6) / 5.0 for j in range(8)])
-          for q in range(3) for t in range(5)]
-    ddf = spark.createDataFrame(docs, "doc long, v array<double>")
-    qdf = spark.createDataFrame(qs, "qid long, tok long, v array<double>")
-    a = sorted(map(tuple, maxsim_topk(
-        ddf, qdf, "v", "doc", "tok", "qid", k=4).collect()))
-    b = sorted(map(tuple, maxsim_topk_expr(
-        ddf, qdf, "v", "doc", "tok", "qid", k=4).collect()))
-    assert a == b
-    # empty query batch: schema-stable empty result
-    empty = maxsim_topk(ddf, qdf.filter("qid < 0"), "v", "doc", "tok",
-                        "qid", k=4)
-    assert empty.columns == ["query_id", "id", "score", "rank"]
-    assert empty.count() == 0
-
-
-def test_brute_force_topk_arrow_matches_expr(spark):
-    """r09 parity pin: the numpy brute-force scorer must reproduce the
-    expression form VALUE-FOR-VALUE across metrics and roundings —
-    including score ties (rounded equal scores must break on id asc
-    exactly as the JVM window does)."""
-    from rassengine_spark.llmops.similarity import (brute_force_topk,
-                                                    brute_force_topk_expr)
-
-    # duplicate vectors force exact score ties across ids
-    docs = [(d, [float((d % 4) * 3 + j) / 7.0 for j in range(6)])
-            for d in range(24)]
-    qs = [(q, [float((q + j * 2) % 5 - 2) / 3.0 for j in range(6)])
-          for q in range(4)]
-    ddf = spark.createDataFrame(docs, "vid long, v array<double>")
-    qdf = spark.createDataFrame(qs, "qid long, v array<double>")
-    for metric in ("cosine", "dot"):
-        for rt in (6, 2, None):
-            a = sorted(map(tuple, brute_force_topk(
-                ddf, qdf, "v", "vid", "qid", k=5, metric=metric,
-                round_to=rt).collect()))
-            b = sorted(map(tuple, brute_force_topk_expr(
-                ddf, qdf, "v", "vid", "qid", k=5, metric=metric,
-                round_to=rt).collect()))
-            assert a == b, (metric, rt)

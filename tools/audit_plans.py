@@ -34,19 +34,6 @@ PYTHON_OK = {
     "dedup_embedding_cosine_cells",
     # per-block gram-matrix prune (same numpy pass as the pairs entry):
     "dedup_semantic_prune",
-    # per-block gram-matrix kNN edges (same numpy pass, per-row top-k):
-    "sim_knn_graph_mutual",
-    # same kNN-edge Arrow pass feeding component resolution:
-    "sim_semantic_clusters",
-    # late-interaction max-cosine runs the same per-block numpy pass
-    # (r09 twin of the HOF expression form, parity-tested):
-    "sim_maxsim_topk",
-    # brute_force_topk's scorer is the same r09 numpy pass (provably
-    # exact fold + java-order k-cut; expression twin parity-tested) —
-    # it is the exact arm of every recall eval:
-    "sim_bruteforce_topk", "sim_mmr_rerank", "sim_ivf_recall",
-    "sim_ivf_ndcg_eval", "sim_matryoshka_recall", "sim_pq_recall",
-    "sim_quantized_recall",
     "s7_embed_hash_ngram", "mm_binary_metadata",
     # Arrow-batched shingle/minhash index passes (vectorized twins of the
     # interpreted expression forms — deliberate, see llmops/dedup.py);
@@ -85,12 +72,6 @@ PYTHON_OK = {
     # DoReMi reweight step, and the folded-store KN entry all score
     # through it):
     "text_kn_lm_score", "split_domain_reweight",
-    # Arrow tf-index pass (vectorized twin of the interpreted per-term
-    # expressions; batch==solo parity-tested); the known-item eval runs
-    # the same batch scorer:
-    # (ndcg/mrr + chunk-credit evals project from the same scorer):
-    "bm25_batch_ranked", "bm25_known_item_eval", "bm25_ndcg_mrr_eval",
-    "rag_chunk_known_item_eval",
     # winnowing fingerprint sweep (monotone-deque sliding min over md5
     # digests — Arrow twin of winnow_expr, parity-tested); the pairs
     # entry is the inverted-index join over the same sweep:
@@ -98,10 +79,6 @@ PYTHON_OK = {
     # Misra-Gries summaries ARE the per-partition Arrow pass (fixed k
     # counters per partition — the point of the sketch):
     "text_heavy_hitters_mg",
-    # MMR greedy rerank over the BOUNDED per-query candidate set — the
-    # applyInPandas group never exceeds the prior top-N (same bounded-
-    # group shape as the per-block gram passes):
-    "sim_mmr_rerank",
     # the 12 restored fold/compaction twins (round 8) serve through the
     # SAME deliberate Arrow passes as their whitelisted batch twins:
     # text_kn_fold scores via _doc_bigrams like text_kn_lm_score;
@@ -153,21 +130,12 @@ SORT_OK = {
     # (edges x edges — both graph-scale), not a result sort:
     "basket_part_triangles",
     "basket_part_triangles_frac",
-    # mutual-reciprocity self-join of the k*N-row edge list (graph-scale
-    # at 100 TB, broadcast is wrong), not a result sort:
-    "sim_knn_graph_mutual",
     # SMJ sorts of the (partitions x steps)-row daily-rollup self-join +
     # the partition-local row_number sort; never a corpus-scale sort:
     "events_ewma_daily",
-    # knn-edge reciprocity join sorts (edge list is graph-scale at
-    # 100 TB); component resolution is the dedup CC tier:
-    "sim_semantic_clusters",
     # same shape one level up (normalized SPAN stats join) + the
     # sort-based min(struct) aggregate's partition-local sorts:
     "text_span_dedup",
-    # conditional min(struct) top-1 aggregate: SortAggregate's
-    # partition-local sorts (partial+final, map-side combined):
-    "mine_triplets",
     # per-(shard, bucket) partition-local window sort — the
     # pack_sequences sharded shape, never a global order-by:
     "split_length_buckets",

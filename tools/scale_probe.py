@@ -73,7 +73,6 @@ FIXED_ROWS = {
     "tokenizer_fertility_by_lang",  # one row per language
     "sim_hnsw_recall",             # fixed query set
     "sim_bruteforce_topk",         # |Q| x k, both fixed
-    "sim_ivfpq_residual_topk",
     "m_quality_classifier_eval",   # 1 summary row
     "tpch_q1_pricing",             # grouping cardinality <= 6
     "events_mg_rollup_bounds",     # top-5 per event type
@@ -140,7 +139,7 @@ DEFAULT_ENTRIES = [
     "dedup_cc_clusters",
     "dedup_incremental", "dedup_substring_pairs", "dedup_embedding_cosine",
     "dedup_embedding_cosine_cells", "split_dsir_weights",
-    "sim_ivfpq_residual_topk", "sim_bruteforce_topk", "sim_hnsw_recall",
+    "sim_bruteforce_topk", "sim_hnsw_recall",
     "tokenizer_bpe_merges", "tokenizer_bpe_token_counts",
     "text_winnow_fingerprints", "text_line_dedup", "text_span_dedup",
     "bm25_known_item_eval", "m_quality_classifier_eval",
@@ -149,8 +148,7 @@ DEFAULT_ENTRIES = [
     "events_mg_rollup_bounds", "text_heavy_hitters_mg",
     # round-5 additions
     "orders_scd2_priority", "split_curriculum_order", "q13_fuzzy_trigram",
-    "sim_knn_graph_mutual", "sim_semantic_clusters", "events_ewma_daily",
-    "sim_range_search", "mm_phash_near_dup", "mm_ahash_near_dup",
+    "events_ewma_daily", "mm_phash_near_dup", "mm_ahash_near_dup",
     "mm_media_dedup_prep",
     "tokenizer_compression_eval", "mm_ahash_incremental",
     "skew_salted_join",
