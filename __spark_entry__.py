@@ -773,13 +773,12 @@ WHERE len(words) > 0
 
 # ---------------------------------------------------------------- wave 3
 # LLM-training-data pipeline operators (BASELINE.json north star): dedup,
-# similarity search, text analysis, multimodal plumbing.
+# similarity search, text analysis.
 
 from rassengine_spark.llmops import dedup as DD
 from rassengine_spark.llmops import similarity as SIM
 from rassengine_spark.llmops import splits as SP
 from rassengine_spark.llmops import text_analysis as TA
-from rassengine_spark.llmops import multimodal as MM
 from rassengine_spark.sources.chunker import words_of
 
 
@@ -1477,37 +1476,6 @@ FROM c
 """
 
 
-def _q_m_quality_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """In-engine learned-quality-filter loop
-    (llmops/mllib_quality.py): Gopher rules weak-label the corpus, a
-    hashed-BoW logistic regression trains on even doc_ids (MLlib — the
-    CCNet/fastText-filter recipe), and the odd-id holdout reports exact
-    counts + an accuracy>=0.7 floor boolean (observed ~0.86-0.89 at all
-    sfs; the floor absorbs LBFGS partitioning wiggle). Exact counts
-    hash-compare against the gopher-rule SQL; the floor is the
-    recall-floor pattern."""
-    from rassengine_spark.llmops.mllib_quality import (quality_holdout_eval,
-                                                       weak_label_from_gopher)
-    docs = load_tables(spark, sf_dir)["documents"]
-    lab = weak_label_from_gopher(docs, "text", "doc_id")
-    # hash width sized to the corpus: 2^15 >> the distinct-token count
-    # at every test sf (collision rate negligible, results identical to
-    # the 2^18 production default, 4x less coefficient traffic per
-    # LBFGS round)
-    return quality_holdout_eval(lab.filter(F.col("id") % 2 == 0),
-                                lab.filter(F.col("id") % 2 == 1),
-                                "text", floor=0.7, n_features=1 << 15)
-
-
-def _sql_m_quality_eval() -> str:
-    return f"""
-SELECT CAST(count(*) AS BIGINT) AS n_eval,
-       CAST(SUM(CASE WHEN keep THEN 1 ELSE 0 END) AS BIGINT) AS n_pos,
-       TRUE AS acc_ok
-FROM ({_sql_text_gopher()}) g WHERE id % 2 = 1
-"""
-
-
 def _q_text_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Misra-Gries heavy-hitter words
     (operators/sketches.py::heavy_hitters_mg): the frequency-sketch
@@ -1697,146 +1665,6 @@ SELECT c.source, c.norm AS line, c.n_docs, s.src_docs,
        ((c.n_docs * 1000000) // s.src_docs) >= 400000 AS flagged
 FROM cnt c JOIN src s USING (source)
 WHERE c.n_docs >= 3
-"""
-
-
-def _q_text_datacard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus data-card: one ROLLUP pass over (lang, source) — doc counts,
-    global exact-dup membership, token volume, length means at every
-    grain from a single shuffle (llmops/datacard.py)."""
-    from rassengine_spark.llmops.datacard import datacard
-    docs = load_tables(spark, sf_dir)["documents"]
-    return datacard(docs, "text", ["lang", "source"])
-
-
-_SQL_TEXT_DATACARD = f"""
-WITH per_row AS (
-  SELECT lang, source,
-         len({_SQL_WORDS.format(col="text")}) AS toks,
-         length(text) AS chars,
-         CASE WHEN COUNT(*) OVER (PARTITION BY md5(text)) > 1
-              THEN 1 ELSE 0 END AS dup
-  FROM documents)
-SELECT lang, source,
-       CAST(GROUPING(lang, source) AS INT) AS gid,
-       COUNT(*) AS n_docs,
-       CAST(SUM(dup) AS BIGINT) AS n_dup_docs,
-       CAST(SUM(toks) AS BIGINT) AS tot_tokens,
-       ((CAST(SUM(toks) AS BIGINT) * 20000 + COUNT(*)) // (2 * COUNT(*)))
-         / 10000.0 AS avg_tokens,
-       ((CAST(SUM(chars) AS BIGINT) * 20000 + COUNT(*)) // (2 * COUNT(*)))
-         / 10000.0 AS avg_chars
-FROM per_row
-GROUP BY ROLLUP (lang, source)
-"""
-
-
-def _q_prep_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Full training-corpus prep pipeline (llmops/prep.py): exact dedup ->
-    MinHash-LSH near-dup clusters -> eval decontamination -> quality
-    filter -> split assignment, composed end-to-end. Eval set = every
-    97th doc; output = surviving (doc_id, split). Every stage is also
-    oracle-checked on its own elsewhere in this contract; this entry pins
-    the COMPOSITION (stage order + anti-join semantics)."""
-    from rassengine_spark.llmops.prep import prepare_training_corpus
-    docs = load_tables(spark, sf_dir)["documents"]
-    train = docs.filter(F.col("doc_id") % 97 != 0)
-    ev = docs.filter(F.col("doc_id") % 97 == 0)
-    out, _ = prepare_training_corpus(
-        train, ev, text_col="text", id_col="doc_id",
-        split_weights=_SPLIT_WEIGHTS, count_stages=False,
-        materialize=True)   # dedup output feeds 4 consumers — pin it
-    return out.select("doc_id", "split")
-
-
-def _sql_prep_corpus() -> str:
-    words = _SQL_WORDS.format(col="text")
-    h1 = "CAST('0x' || substr(md5(s), 1, 12) AS BIGINT)"
-    h2 = "CAST('0x' || substr(md5(s), 13, 12) AS BIGINT)"
-    sig_cols = ", ".join(
-        f"list_min(list_transform(sh, s -> ({h1} + {i} * {h2}) % 2147483647))"
-        f" AS s{i}"
-        for i in range(16))
-    band_selects = " UNION ALL ".join(
-        "SELECT id, sh, {b} AS band, md5(concat_ws(',', {parts})) AS key "
-        "FROM psig".format(
-            b=b, parts=", ".join(f"CAST(s{b*4+r} AS VARCHAR)"
-                                 for r in range(4)))
-        for b in range(4))
-    qtoks = _SQL_WORDS.format(col="lower(text)").replace(
-        "'\\s+'", "'[^a-z0-9]+'")
-    stop_hits = " + ".join(
-        f"CAST(list_contains(toks, '{w}') AS INT)" for w in TA.STOPWORDS_EN)
-    u = _sql_hash60("('split/' || CAST(doc_id AS VARCHAR))")
-    return f"""
-WITH RECURSIVE
-d0 AS (SELECT doc_id, text FROM documents WHERE doc_id % 97 <> 0),
-ev AS (SELECT text FROM documents WHERE doc_id % 97 = 0),
-d1 AS (SELECT doc_id, text FROM d0
-       QUALIFY row_number() OVER (PARTITION BY md5(text)
-                                  ORDER BY doc_id) = 1),
-psh AS (SELECT doc_id AS id, {_sql_shingles(3)} AS sh
-        FROM (SELECT doc_id, {words} AS words FROM d1)),
-psig AS (SELECT id, sh, {sig_cols} FROM psh),
-pbanded AS ({band_selects}),
-pcand AS (
-  SELECT DISTINCT l.id AS id_a, r.id AS id_b
-  FROM pbanded l JOIN pbanded r ON l.band = r.band AND l.key = r.key
-  WHERE l.id < r.id),
-fpairs AS (
-  SELECT c.id_a, c.id_b
-  FROM pcand c JOIN psh a ON c.id_a = a.id JOIN psh b ON c.id_b = b.id
-  WHERE round(CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-              / CAST(len(a.sh) + len(b.sh)
-                     - len(list_intersect(a.sh, b.sh)) AS DOUBLE), 6)
-        >= 0.5),
-sym AS (
-  SELECT id_a AS u, id_b AS v FROM fpairs
-  UNION SELECT id_b, id_a FROM fpairs),
-reach(node, r) AS (
-  SELECT DISTINCT u, u FROM sym
-  UNION
-  SELECT s.u, r.r FROM sym s JOIN reach r ON s.v = r.node),
-cc AS (SELECT node, MIN(r) AS root FROM reach GROUP BY node),
-d2 AS (SELECT doc_id, text FROM d1
-       WHERE doc_id NOT IN (SELECT node FROM cc WHERE node <> root)),
-tg AS (SELECT doc_id, unnest({_sql_shingles(8)}) AS gram
-       FROM (SELECT doc_id, {words} AS words FROM d2)),
-vocab AS (SELECT DISTINCT unnest({_sql_shingles(8)}) AS gram
-          FROM (SELECT {words} AS words FROM ev)),
-ovl AS (SELECT t.doc_id, COUNT(*) AS n_grams, COUNT(v.gram) AS n_matched
-        FROM tg t LEFT JOIN vocab v ON t.gram = v.gram
-        GROUP BY t.doc_id),
-d3 AS (SELECT doc_id, text FROM d2
-       WHERE doc_id NOT IN (
-         SELECT doc_id FROM ovl
-         WHERE round(CAST(n_matched AS DOUBLE) / n_grams, 6) >= 0.8)),
-q AS (SELECT doc_id, text, {qtoks} AS toks FROM d3),
-qf AS (
-  SELECT doc_id,
-    len(toks) AS n_tokens,
-    CASE WHEN len(toks) > 0
-         THEN CAST(list_sum(list_transform(toks, x -> len(x))) AS DOUBLE)
-              / len(toks)
-         ELSE 0.0 END AS avg_token_len,
-    CASE WHEN len(text) > 0
-         THEN CAST(len(regexp_replace(text, '[a-zA-Z0-9\\s]', '', 'g'))
-                   AS DOUBLE) / len(text)
-         ELSE 0.0 END AS punct_ratio
-  FROM q),
-d4 AS (
-  SELECT doc_id FROM qf
-  WHERE round(((CASE WHEN n_tokens >= 5 AND n_tokens <= 100000
-                     THEN 1.0 ELSE 0.0 END)
-             + (CASE WHEN avg_token_len >= 2.0 AND avg_token_len <= 12.0
-                     THEN 1.0 ELSE 0.0 END)
-             + (CASE WHEN punct_ratio <= 0.2 THEN 1.0 ELSE 0.0 END))
-            / 3.0, 6) >= 0.66)
-SELECT doc_id,
-       CASE WHEN CAST({u} AS DOUBLE) / {_HASH_SPACE_SQL} < 0.75 THEN 'train'
-            WHEN CAST({u} AS DOUBLE) / {_HASH_SPACE_SQL} < 0.875 THEN 'val'
-            ELSE 'test' END AS split
-FROM d4
 """
 
 
@@ -2502,7 +2330,7 @@ def _q_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     fragments one language inflates its training cost and shrinks its
     effective context). Composes the learned-BPE per-doc counts with the
     tokenizer's own word count, grouped per lang: exact integer sums,
-    ratio via the half-up integer formula (datacard's rule), one
+    ratio via the half-up integer formula, one
     division at the end — engine-exact at 4dp."""
     from rassengine_spark.functions.text import tokenize
     from rassengine_spark.llmops.tokenizer import bpe_token_counts
@@ -3126,7 +2954,7 @@ def _q_decontam_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     contamination_report): the same 90/10 decontam split, eval docs
     labeled into three deterministic eval suites (doc_id mod 3 — stand-
     ins for benchmark families), per-doc 5-gram overlap rolled up per
-    (suite, lang) with the datacard ROLLUP shape — the release-gate
+    (suite, lang) as a ROLLUP — the release-gate
     view of eval hygiene. Integer-exact sums; macro mean via the
     half-up integer micro fold."""
     from rassengine_spark.llmops import decontam as DC
@@ -3195,10 +3023,8 @@ def _build_decontam_counter_store(spark: SparkSession, sf_dir: str) -> str:
 
 def _sql_decontam_perdoc_ctes() -> str:
     """The lab/evg/vocab/per_doc CTE chain of the decontamination family
-    (90/10 hash split, 5-gram train vocabulary, per-eval-doc overlap) —
-    ONE text shared by _sql_decontam_report and _sql_pipeline_health so
-    the two oracles can never drift from the single Python
-    implementation they both mirror (contamination_counters /
+    (90/10 hash split, 5-gram train vocabulary, per-eval-doc overlap),
+    mirroring the single Python implementation (contamination_counters /
     ngram_overlap_from_store)."""
     u = _sql_hash60("('decon/' || CAST(doc_id AS VARCHAR))")
     words = _SQL_WORDS.format(col="text")
@@ -3331,154 +3157,6 @@ FROM c ORDER BY shard, key
 """
 
 
-def _q_mm_ahash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental perceptual dedup (llmops/multimodal.py::
-    save_ahash_store + incremental_ahash_pairs): the media history's
-    band store persists once (~40 bytes/item); a new crawl batch
-    broadcast-joins its banded hashes against it — history payloads
-    never re-decode, the minhash signature-store discipline applied to
-    the perceptual tier. History = the whole corpus (store round-trips
-    through parquet in this entry); the batch re-crawls every 5th doc
-    verbatim under a fresh id (max+1 offset — the mm_ahash collision
-    discipline), the situation incremental dedup exists to catch;
-    oracle recomputes both sides' bands and the banded join. The
-    history store persists in the prepare phase (_prepared_store);
-    this callable hashes the new batch and serves the banded join —
-    the actual incremental-serving cost."""
-    from rassengine_spark.llmops import multimodal as MM
-    docs = load_tables(spark, sf_dir)["documents"] \
-        .select(F.col("doc_id").alias("id"), "text")
-    off = docs.agg(F.max("id")).first()[0] + 1
-    new = (docs.filter(F.col("id") % 5 == 0)
-               .select((F.col("id") + F.lit(off)).alias("id"), "text"))
-    path = _prepared_store("mm_ahash_incremental", spark, sf_dir)
-    store = spark.read.parquet(path)
-    return MM.incremental_ahash_pairs(
-        store, MM.with_ahash_bands(new, "text"), "id", max_hamming=3)
-
-
-def _build_ahash_history_store(spark: SparkSession, sf_dir: str) -> str:
-    """mm_ahash_incremental's persisted band store over the corpus
-    history (bench BUILD phase)."""
-    from rassengine_spark.llmops import multimodal as MM
-
-    path = _store_tmp_path("rass_ahash_store", sf_dir)
-    docs = load_tables(spark, sf_dir)["documents"] \
-        .select(F.col("doc_id").alias("id"), "text")
-    MM.save_ahash_store(MM.with_ahash_bands(docs, "text"), "id", path)
-    return path
-
-
-_SQL_MM_AHASH_INCR = """
-WITH d AS (
-  SELECT doc_id AS id, text AS t, FALSE AS is_new FROM documents
-  UNION ALL
-  SELECT doc_id + (SELECT MAX(doc_id) + 1 FROM documents), text, TRUE
-  FROM documents WHERE doc_id % 5 = 0),
-cs AS MATERIALIZED (
-  SELECT id, is_new,
-         CASE WHEN t IS NULL OR length(t) = 0 THEN NULL ELSE
-           list_transform(range(0, 64), k ->
-             CAST(unicode(substr(t,
-               1 + CAST(floor(k * length(t) / 64) AS INT), 1)) AS BIGINT))
-         END AS cs
-  FROM d),
-tot AS (SELECT id, is_new, cs, CAST(list_sum(cs) AS BIGINT) AS tot
-        FROM cs WHERE cs IS NOT NULL),
-bands AS MATERIALIZED (
-  SELECT id, is_new,
-         list_transform(range(0, 4), i ->
-           CAST(list_sum(list_transform(range(0, 16), j ->
-             CASE WHEN cs[CAST(16 * i + j + 1 AS INT)] * 64 >= tot
-                  THEN CAST(1 AS BIGINT) << CAST(j AS INT)
-                  ELSE CAST(0 AS BIGINT) END)) AS BIGINT)) AS b
-  FROM tot
-  UNION ALL
-  SELECT id, is_new, [CAST(0 AS BIGINT), 0, 0, 0]
-  FROM cs WHERE cs IS NULL),
-expl AS (SELECT id, is_new, b, u.i AS bi, b[CAST(u.i + 1 AS INT)] AS bv
-         FROM bands, UNNEST(range(0, 4)) u(i))
-SELECT DISTINCT o.id AS id_old, n.id AS id_new,
-       CAST(list_sum(list_transform(range(0, 4), i ->
-         bit_count(xor(o.b[CAST(i + 1 AS INT)],
-                       n.b[CAST(i + 1 AS INT)])))) AS BIGINT) AS hamming
-FROM expl o JOIN expl n
-  ON o.bi = n.bi AND o.bv = n.bv
- AND NOT o.is_new AND n.is_new
-WHERE CAST(list_sum(list_transform(range(0, 4), i ->
-        bit_count(xor(o.b[CAST(i + 1 AS INT)],
-                      n.b[CAST(i + 1 AS INT)])))) AS BIGINT) <= 3
-"""
-
-
-def _q_mm_media_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Composed MEDIA dedup prep — the multimodal twin of
-    prep_training_corpus's near-dup stage: perceptual-hash the corpus
-    (with_ahash_bands stub pixels; real images flow through
-    ahash_ppm_bands into the same band layout), banded Hamming pairs
-    (d <= 3, recall-complete by pigeonhole), resolve duplicate CLUSTERS
-    (connected_components), keep min-id per cluster. Output: every doc
-    with its cluster root and keep decision — the keeper list a media
-    training set ships. Oracle recomputes hash -> pairs -> recursive-CTE
-    reachability -> keeper rule end-to-end."""
-    from rassengine_spark.llmops import multimodal as MM
-    docs = load_tables(spark, sf_dir)["documents"] \
-        .select(F.col("doc_id").alias("id"), "text")
-    hashed = MM.with_ahash_bands(docs, "text")
-    pairs = MM.ahash_near_pairs(hashed, "id", max_hamming=3)
-    cc = DD.connected_components(pairs, "id_a", "id_b")
-    return (docs.join(cc, docs.id == cc.node, "left")
-                .select(docs.id.alias("doc_id"),
-                        F.coalesce(cc.root, docs.id).alias("root"),
-                        (cc.root.isNull() | (cc.root == docs.id))
-                        .alias("kept")))
-
-
-_SQL_MM_MEDIA_PREP = """
-WITH RECURSIVE
-cs AS MATERIALIZED (
-  SELECT doc_id AS id,
-         CASE WHEN text IS NULL OR length(text) = 0 THEN NULL ELSE
-           list_transform(range(0, 64), k ->
-             CAST(unicode(substr(text,
-               1 + CAST(floor(k * length(text) / 64) AS INT), 1)) AS BIGINT))
-         END AS cs
-  FROM documents),
-tot AS (SELECT id, cs, CAST(list_sum(cs) AS BIGINT) AS tot
-        FROM cs WHERE cs IS NOT NULL),
-bands AS MATERIALIZED (
-  SELECT id,
-         list_transform(range(0, 4), i ->
-           CAST(list_sum(list_transform(range(0, 16), j ->
-             CASE WHEN cs[CAST(16 * i + j + 1 AS INT)] * 64 >= tot
-                  THEN CAST(1 AS BIGINT) << CAST(j AS INT)
-                  ELSE CAST(0 AS BIGINT) END)) AS BIGINT)) AS b
-  FROM tot
-  UNION ALL
-  SELECT id, [CAST(0 AS BIGINT), 0, 0, 0] FROM cs WHERE cs IS NULL),
-expl AS (SELECT id, b, u.i AS bi, b[CAST(u.i + 1 AS INT)] AS bv
-         FROM bands, UNNEST(range(0, 4)) u(i)),
-cand AS MATERIALIZED (
-  SELECT id_a, id_b FROM (
-    SELECT DISTINCT a.id AS id_a, c.id AS id_b, a.b AS ba, c.b AS bb
-    FROM expl a JOIN expl c
-      ON a.bi = c.bi AND a.bv = c.bv AND a.id < c.id)
-  WHERE CAST(list_sum(list_transform(range(0, 4), i ->
-          bit_count(xor(ba[CAST(i + 1 AS INT)],
-                        bb[CAST(i + 1 AS INT)])))) AS BIGINT) <= 3),
-sym AS (SELECT id_a AS u, id_b AS v FROM cand
-        UNION SELECT id_b, id_a FROM cand),
-reach(node, r) AS (
-  SELECT DISTINCT u, u FROM sym
-  UNION
-  SELECT s.u, r.r FROM sym s JOIN reach r ON s.v = r.node),
-cc AS (SELECT node, MIN(r) AS root FROM reach GROUP BY node)
-SELECT d.doc_id, COALESCE(cc.root, d.doc_id) AS root,
-       (cc.root IS NULL OR cc.root = d.doc_id) AS kept
-FROM documents d LEFT JOIN cc ON cc.node = d.doc_id
-"""
-
-
 def _q_text_pii(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PII scrub: plant synthetic emails/phones/SSNs into a slice of the
     corpus, then count + redact (typed placeholders) per document."""
@@ -3518,236 +3196,6 @@ SELECT id,
            '{ssn}', '[SSN]', 'g'),
            '{phone}', '[PHONE]', 'g') AS redacted
 FROM aug
-"""
-
-
-def _q_mm_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multimodal plumbing: opaque binary column + typed metadata (decode
-    stubs run via mapInPandas in llmops.multimodal; metadata stays
-    expression-level so column pruning avoids fetching blobs)."""
-    docs = load_tables(spark, sf_dir)["documents"]
-    media = MM.to_media_table(docs, "doc_id", "text", media_type="image")
-    return media.select("media_id", "media_type", "n_bytes", "sha256")
-
-
-def _q_mm_ahash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Perceptual-hash near-dup — the image-dedup primitive of the media
-    tier (llmops/multimodal.py::with_ahash_bands + ahash_near_pairs):
-    64-bit average hash in 4 Hamming bands, banded equi-join
-    recall-complete for distance <= 3 by pigeonhole (the deterministic
-    sibling of minhash banding). The stub pixel source is character
-    codes of the payload (Spark ascii == DuckDB unicode == Python ord,
-    astral-verified), so the WHOLE pipeline is integer-exact and
-    oracle-recomputed; real images run the same pairs operator over
-    ahash_ppm_bands (unit-tested kernel). Every 25th doc gains a
-    re-crawl copy with its first char replaced — the length-preserving
-    perturbation aHash absorbs — so the join has non-trivial work. The
-    synthetic copy ids offset by max(doc_id)+1 (one bounded agg job,
-    oracle recomputes the same scalar) so they are collision-free at ANY
-    corpus size — a fixed constant would collide once real ids reach it
-    and silently corrupt the eval while the stamp stayed green."""
-    from rassengine_spark.llmops import multimodal as MM
-    docs = load_tables(spark, sf_dir)["documents"] \
-        .select(F.col("doc_id").alias("id"), "text")
-    off = docs.agg(F.max("id")).first()[0] + 1
-    copies = (docs.filter(F.col("id") % 25 == 0)
-              .select((F.col("id") + F.lit(off)).alias("id"),
-                      F.expr("concat('Z', substring(text, 2))")
-                      .alias("text")))
-    hashed = MM.with_ahash_bands(docs.unionByName(copies), "text")
-    return MM.ahash_near_pairs(hashed, "id", max_hamming=3)
-
-
-_SQL_MM_AHASH = """
-WITH d AS (
-  SELECT doc_id AS id, text AS t FROM documents
-  UNION ALL
-  SELECT doc_id + (SELECT MAX(doc_id) + 1 FROM documents),
-         'Z' || substr(text, 2)
-  FROM documents WHERE doc_id % 25 = 0),
-cs AS MATERIALIZED (
-  SELECT id,
-         CASE WHEN t IS NULL OR length(t) = 0 THEN NULL ELSE
-           list_transform(range(0, 64), k ->
-             CAST(unicode(substr(t,
-               1 + CAST(floor(k * length(t) / 64) AS INT), 1)) AS BIGINT))
-         END AS cs
-  FROM d),
-tot AS (SELECT id, cs, CAST(list_sum(cs) AS BIGINT) AS tot
-        FROM cs WHERE cs IS NOT NULL),
-bands AS MATERIALIZED (
-  SELECT id,
-         list_transform(range(0, 4), i ->
-           CAST(list_sum(list_transform(range(0, 16), j ->
-             CASE WHEN cs[CAST(16 * i + j + 1 AS INT)] * 64 >= tot
-                  THEN CAST(1 AS BIGINT) << CAST(j AS INT)
-                  ELSE CAST(0 AS BIGINT) END)) AS BIGINT)) AS b
-  FROM tot
-  UNION ALL
-  SELECT id, [CAST(0 AS BIGINT), 0, 0, 0] FROM cs WHERE cs IS NULL),
-expl AS (SELECT id, b, u.i AS bi, b[CAST(u.i + 1 AS INT)] AS bv
-         FROM bands, UNNEST(range(0, 4)) u(i)),
-cand AS (SELECT DISTINCT a.id AS id_a, c.id AS id_b
-         FROM expl a JOIN expl c
-           ON a.bi = c.bi AND a.bv = c.bv AND a.id < c.id)
-SELECT cand.id_a, cand.id_b,
-       CAST(list_sum(list_transform(range(0, 4), i ->
-         bit_count(xor(ba.b[CAST(i + 1 AS INT)],
-                       bb.b[CAST(i + 1 AS INT)])))) AS BIGINT) AS hamming
-FROM cand JOIN bands ba ON ba.id = cand.id_a
-          JOIN bands bb ON bb.id = cand.id_b
-WHERE CAST(list_sum(list_transform(range(0, 4), i ->
-        bit_count(xor(ba.b[CAST(i + 1 AS INT)],
-                      bb.b[CAST(i + 1 AS INT)])))) AS BIGINT) <= 3
-"""
-
-
-_SQL_MM_METADATA = """
-SELECT CAST(doc_id AS VARCHAR) AS media_id,
-       'image' AS media_type,
-       CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
-       sha256(text) AS sha256
-FROM documents
-"""
-
-
-def _q_mm_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DCT perceptual-hash near-dup (llmops/multimodal.py::
-    with_phash_bands): the structure-sensitive sibling of mm_ahash —
-    256 stub pixels, integer 2D DCT over the fixed-point cosine basis
-    (every coefficient BIGINT-exact: libm cos never touches either
-    engine's data path; the basis ints interpolate into the oracle),
-    bit = low-frequency coefficient > lower median, packed in the aHash
-    band layout so ahash_near_pairs serves BOTH hash families. Same
-    copy-id discipline as mm_ahash (max(doc_id)+1 offset). The planted
-    near-dups flip ONE bit of band 0 post-hash (deterministic hamming-1
-    pairs — a text perturbation either vanishes entirely under the DCT,
-    brightness shifts hash identically as the unit test pins, or blows
-    past the d<4 pigeonhole guarantee; the bit flip plants pairs the
-    banded join MUST recover). Engine side is two 8x16 int64 matmuls
-    per row in Arrow; the oracle recomputes the whole pipeline as 64 x
-    256-term BIGINT list folds."""
-    from rassengine_spark.llmops import multimodal as MM
-    docs = load_tables(spark, sf_dir)["documents"] \
-        .select(F.col("doc_id").alias("id"), "text")
-    off = docs.agg(F.max("id")).first()[0] + 1
-    hashed = MM.with_phash_bands(docs, "text")
-    copies = (hashed.filter(F.col("id") % 25 == 0)
-              .filter(F.col("bands").isNotNull())
-              .select((F.col("id") + F.lit(off)).alias("id"),
-                      F.col("text"),
-                      F.expr("transform(bands, (x, i) -> CASE WHEN i = 0"
-                             " THEN CAST(x ^ 1 AS BIGINT) ELSE x END)")
-                      .alias("bands")))
-    return MM.ahash_near_pairs(hashed.unionByName(copies), "id",
-                               max_hamming=3)
-
-
-def _sql_mm_phash() -> str:
-    from rassengine_spark.llmops.multimodal import (PHASH_BLOCK, PHASH_C,
-                                                    PHASH_GRID)
-    n2 = PHASH_GRID * PHASH_GRID
-    b2 = PHASH_BLOCK * PHASH_BLOCK
-    cmat = ("[" + ", ".join(
-        "[" + ", ".join(str(v) for v in row) + "]" for row in PHASH_C)
-        + "]")
-    return f"""
-WITH cs AS MATERIALIZED (
-  SELECT doc_id AS id,
-         list_transform(range(0, {n2}), k ->
-           CAST(unicode(substr(text,
-             1 + CAST(floor(k * length(text) / {n2}) AS INT), 1))
-             AS BIGINT)) AS cs
-  FROM documents WHERE text IS NOT NULL AND length(text) > 0),
-cm AS MATERIALIZED (SELECT {cmat} AS c),
-co AS MATERIALIZED (
-  -- the basis rides in via a 1-row cross join: INLINING the 128-int
-  -- literal into the fold body makes DuckDB rebuild it per term
-  -- (measured: >400 s vs 0.7 s at sf0.001)
-  SELECT id,
-         list_transform(range(0, {b2}), uv ->
-           CAST(list_sum(list_transform(range(0, {n2}), k ->
-             cm.c[CAST(uv // {PHASH_BLOCK} + 1 AS INT)]
-                 [CAST(k // {PHASH_GRID} + 1 AS INT)]
-             * cs[CAST(k + 1 AS INT)]
-             * cm.c[CAST(uv % {PHASH_BLOCK} + 1 AS INT)]
-                   [CAST(k % {PHASH_GRID} + 1 AS INT)]))
-            AS BIGINT)) AS co
-  FROM cs CROSS JOIN cm),
-med AS MATERIALIZED (
-  SELECT id, co, list_sort(co)[{b2 // 2}] AS med FROM co),
-base_bands AS MATERIALIZED (
-  SELECT id,
-         list_transform(range(0, 4), i ->
-           CAST(list_sum(list_transform(range(0, {b2 // 4}), j ->
-             CASE WHEN co[CAST({b2 // 4} * i + j + 1 AS INT)] > med
-                  THEN CAST(1 AS BIGINT) << CAST(j AS INT)
-                  ELSE CAST(0 AS BIGINT) END)) AS BIGINT)) AS b
-  FROM med),
-bands AS MATERIALIZED (
-  SELECT id, b FROM base_bands
-  UNION ALL
-  SELECT id + (SELECT MAX(doc_id) + 1 FROM documents),
-         [CAST(xor(b[1], 1) AS BIGINT), b[2], b[3], b[4]]
-  FROM base_bands WHERE id % 25 = 0),
-expl AS (SELECT id, b, u.i AS bi, b[CAST(u.i + 1 AS INT)] AS bv
-         FROM bands, UNNEST(range(0, 4)) u(i)),
-cand AS (SELECT DISTINCT a.id AS id_a, c.id AS id_b
-         FROM expl a JOIN expl c
-           ON a.bi = c.bi AND a.bv = c.bv AND a.id < c.id)
-SELECT cand.id_a, cand.id_b,
-       CAST(list_sum(list_transform(range(0, 4), i ->
-         bit_count(xor(ba.b[CAST(i + 1 AS INT)],
-                       bb.b[CAST(i + 1 AS INT)])))) AS BIGINT) AS hamming
-FROM cand JOIN bands ba ON ba.id = cand.id_a
-          JOIN bands bb ON bb.id = cand.id_b
-WHERE CAST(list_sum(list_transform(range(0, 4), i ->
-        bit_count(xor(ba.b[CAST(i + 1 AS INT)],
-                      bb.b[CAST(i + 1 AS INT)])))) AS BIGINT) <= 3
-"""
-
-
-def _q_mm_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stub image resize over mapInPandas (llmops.multimodal.resize_images):
-    binary in → bounded binary out, one row per image. Blob column is
-    dropped from the contract output; the deterministic size math is the
-    oracle-checkable part."""
-    docs = load_tables(spark, sf_dir)["documents"]
-    media = MM.to_media_table(docs, "doc_id", "text", media_type="image")
-    resized = MM.resize_images(media, out_w=64, out_h=64)
-    return resized.select("media_id", "out_w", "out_h", "n_bytes_out")
-
-
-_SQL_MM_RESIZE = """
-SELECT CAST(doc_id AS VARCHAR) AS media_id,
-       64 AS out_w, 64 AS out_h,
-       CAST(LEAST(octet_length(encode(text)), 64 * 64) AS BIGINT)
-         AS n_bytes_out
-FROM documents
-"""
-
-
-def _q_mm_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stub video frame sampling: 1 row in → n frames out, fanned out inside
-    the Arrow batch (llmops.multimodal.sample_frames). Frame count/id/ts are
-    deterministic functions of (media_id, blob size) so the whole fan-out is
-    oracle-checked; frame_bytes (the non-SQL part) is excluded."""
-    docs = load_tables(spark, sf_dir)["documents"]
-    media = MM.to_media_table(docs, "doc_id", "text", media_type="video")
-    frames = MM.sample_frames(media, frame_ms=40, max_frames=4)
-    return frames.select("media_id", "frame_idx", "ts_ms", "frame_sha")
-
-
-_SQL_MM_FRAMES = """
-WITH f AS (
-  SELECT CAST(doc_id AS VARCHAR) AS media_id,
-         CAST(UNNEST(range(0, 1 + octet_length(encode(text)) % 4))
-              AS INTEGER) AS frame_idx
-  FROM documents)
-SELECT media_id, frame_idx,
-       CAST(frame_idx * 40 AS BIGINT) AS ts_ms,
-       md5(media_id || ':' || frame_idx) AS frame_sha
-FROM f
 """
 
 
@@ -4289,14 +3737,6 @@ def _bm25_index_topk(docs: DataFrame, query: str, k: int) -> DataFrame:
                                 query, k=k)
 
 
-def _q_bm25_ranked(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Lucene-BM25 ranked retrieval (k1=1.2, b=0.75) over documents.text —
-    the reference's multi_match scoring semantic (SURVEY §2.3), served
-    from the term index (operators/inverted_index.py)."""
-    docs = load_tables(spark, sf_dir)["documents"]
-    return _bm25_index_topk(docs, "spark join query", k=15)
-
-
 def bm25_sql(table: str, text_col: str, id_col: str, query: str,
              k: int = 10, k1: float = K1, b: float = B,
              round_to: int = 6) -> str:
@@ -4416,7 +3856,7 @@ def _q_bm25_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     index_store.py): postings written bucketed by md5(term), the query
     read statically prunes to its terms' buckets (PartitionFilters, no
     planning job) — the sublinear lexical serving tier, bit-identical to
-    bm25_ranked's index frames so it shares that oracle. The store is
+    bm25_index_ranked's index frames so it shares that oracle. The store is
     prepared once per process (_prepared_store); this callable is the
     SERVE phase."""
     from rassengine_spark.operators.index_store import bm25_topk_from_store
@@ -4460,8 +3900,7 @@ def _q_bm25_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BM25 served from the inverted-index TABLES (postings/doclens/stats,
     operators/inverted_index.py) — the corpus text is never scanned at
     query time (SURVEY §4 O5: the postings materialized view is Spark's
-    analog of the reference's Lucene index). Since bm25_ranked serves
-    from the same index, the two share one oracle."""
+    analog of the reference's Lucene index)."""
     docs = load_tables(spark, sf_dir)["documents"]
     return _bm25_index_topk(docs, "spark join query", k=15)
 
@@ -7948,130 +7387,6 @@ def _build_psi_counter_store(spark: SparkSession, sf_dir: str) -> str:
     return path
 
 
-def _build_pipeline_health_stores(spark: SparkSession, sf_dir: str) -> str:
-    """Prepare the three persisted counter stores the pipeline-health
-    rollup serves from — each built exactly the way its own lifecycle
-    entry builds it (fold in halves, so the incremental path is what the
-    dashboard actually reads):
-      dq/      row-level DQ check counters over orders (save + append)
-      psi/     PSI drift histogram counters over events (baseline +
-               two current folds with a compact between)
-      contam/  decontamination counters: persisted 5-gram train vocab
-               probed by the eval split, folded in two batches
-    """
-    from concurrent.futures import ThreadPoolExecutor
-
-    from rassengine_spark.llmops import decontam as DC
-    from rassengine_spark.llmops import splits as SP
-
-    root = _store_tmp_path("rass_health", sf_dir)
-    orders = load_tables(spark, sf_dir)["orders"]
-    events = load_tables(spark, sf_dir)["events"]
-    docs = load_tables(spark, sf_dir)["documents"]
-
-    # The three stores live under DIFFERENT paths (independent leases)
-    # and none reads another's output, so their fold chains are
-    # independent job sequences — run them from a small thread pool so
-    # each chain's stage tail back-fills the others' idle executors
-    # (guide §2.6). WITHIN a chain order is unchanged: every fold store
-    # is single-writer by contract.
-    def build_dq() -> None:
-        dq_p = os.path.join(root, "dq")
-        checks = _dq_base_checks()
-        DQ.save_dq_counters(orders.filter(F.col("o_orderkey") % 2 == 0),
-                            checks, dq_p)
-        DQ.append_dq_counters(orders.filter(F.col("o_orderkey") % 2 == 1),
-                              checks, dq_p)
-
-    def build_psi() -> None:
-        psi_p = os.path.join(root, "psi")
-        cutoff = F.to_timestamp(F.lit(_PSI_CUTOFF))
-        DQ.save_psi_counters(events.filter(F.col("ts") < cutoff),
-                             "event_type", "value", psi_p, lo=0.0, hi=500.0)
-        cur = events.filter(F.col("ts") >= cutoff)
-        DQ.append_psi_current(cur.filter(F.col("event_id") % 2 == 0), psi_p)
-        DQ.compact_dq_counters(spark, psi_p)
-        DQ.append_psi_current(cur.filter(F.col("event_id") % 2 == 1), psi_p)
-
-    def build_contam() -> None:
-        vocab_p = os.path.join(root, "contam_vocab")
-        counters_p = os.path.join(root, "contam")
-        lab = docs.withColumn(
-            "split", SP.split_assign(F.col("doc_id"),
-                                     {"train": 0.9, "eval": 0.1},
-                                     seed="decon"))
-        DC.save_gram_vocab(lab.filter(F.col("split") == "train"), "text",
-                           vocab_p, n=5)
-        ev = lab.filter(F.col("split") == "eval").withColumn(
-            "suite", F.concat(F.lit("suite"),
-                              (F.col("doc_id") % 3).cast("string")))
-        for half in (ev.filter(F.col("doc_id") % 2 == 0),
-                     ev.filter(F.col("doc_id") % 2 == 1)):
-            c = DC.contamination_counters(spark, half, "text", "doc_id",
-                                          ["suite", "lang"], vocab_p,
-                                          threshold=0.8)
-            DC.merge_contamination_counters(spark, counters_p, c,
-                                            ["suite", "lang"])
-
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        futures = [pool.submit(fn)
-                   for fn in (build_contam, build_psi, build_dq)]
-        for f in futures:
-            f.result()   # re-raise the first chain failure
-    return root
-
-
-def _q_pipeline_health(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The composed PIPELINE-HEALTH dashboard (VERDICT r07 #4): one
-    (metric, value, flagged) row per curation gate, served from THREE
-    persisted counter stores plus one corpus scan — the single view a
-    100 TB curation run is operated by. Serving reads counters only
-    (DQ check counters, PSI drift histograms, contamination counters —
-    each O(groups), never the history), so the dashboard costs the same
-    at any corpus size; only the dup-rate branch scans the corpus, and
-    it is one hash-aggregate. Every value is an exact integer (counts),
-    so the oracle is engine-portable with no FP surface. The reference
-    has no such composed view — it is the operational layer its
-    OpenSearch cluster dashboards provide out of band; here it is a
-    first-class operator (llmops/health.py::health_report) over the
-    engine's own stores."""
-    from rassengine_spark.llmops.health import (health_report,
-                                                health_store_paths)
-
-    root = _prepared_store("pipeline_health_rollup", spark, sf_dir)
-    p = health_store_paths(root)
-    docs = load_tables(spark, sf_dir)["documents"]
-    return health_report(spark, p["dq"], p["psi"], p["contam"], docs=docs)
-
-
-def _sql_pipeline_health() -> str:
-    return f"""
-WITH {_sql_decontam_perdoc_ctes()}
-SELECT 'dq_row_checks_failed' AS metric, CAST(v AS BIGINT) AS value,
-       v > 0 AS flagged
-FROM (SELECT COUNT(*) AS v FROM ({_sql_dq_report_fold()}) WHERE NOT passed)
-UNION ALL
-SELECT 'drifted_event_types', CAST(v AS BIGINT), v > 0
-FROM (SELECT COUNT(*) AS v FROM ({_sql_drift_psi()}) WHERE drifted)
-UNION ALL
-SELECT 'contaminated_eval_docs',
-       CAST(COALESCE(SUM(CASE WHEN overlap_frac >= 0.8 THEN 1 ELSE 0 END),
-                     0) AS BIGINT) AS value,
-       COALESCE(SUM(CASE WHEN overlap_frac >= 0.8 THEN 1 ELSE 0 END),
-                0) > 0
-FROM per_doc
-UNION ALL
-SELECT 'eval_docs_checked', CAST(COUNT(*) AS BIGINT), FALSE FROM per_doc
-UNION ALL
-SELECT 'duplicate_docs',
-       CAST(COUNT(*) - COUNT(DISTINCT md5(text)) AS BIGINT),
-       COUNT(*) > COUNT(DISTINCT md5(text))
-FROM documents
-UNION ALL
-SELECT 'total_docs', CAST(COUNT(*) AS BIGINT), FALSE FROM documents
-"""
-
-
 def _q_dedup_prefix_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXACT trigram-set Jaccard >= 0.5 pairs via prefix filtering
     (AllPairs/PPJoin candidate generation, dedup.py::
@@ -8148,7 +7463,7 @@ _CHANGED_R8 = [
     # r07 cogroup dispatch left outside the r07 window (ADVICE r07):
     "sim_hnsw_topk",
     # new composed entries this round:
-    "pipeline_health_rollup", "ask_two_tenants_pruned",
+    "ask_two_tenants_pruned",
     # the fold/compaction twins re-registered by the optimization
     # round (their dispatch changed: builds moved behind the seam) —
     # restamp in the round their registration returns:
@@ -8181,7 +7496,6 @@ _BENCH_BUILDERS: dict[str, Callable[[SparkSession, str], str]] = {
     "sim_hnsw_recall": _build_hnsw_operating_point,
     "sim_hnsw_store_recall": _build_hnsw_store_m16,
     "sim_hnsw_store_append_recall": _build_hnsw_store_appended,
-    "pipeline_health_rollup": _build_pipeline_health_stores,
     # r08 optimization round: the remaining inline-store entries join
     # the same seam (fold lifecycle = build phase, counters/table read =
     # serve phase) — the same measurement fix VERDICT r07 #1 prescribed
@@ -8190,7 +7504,6 @@ _BENCH_BUILDERS: dict[str, Callable[[SparkSession, str], str]] = {
     "events_mg_rollup_bounds": _build_mg_rollup_store,
     "split_quantile_threshold_fold": _build_score_hist_store,
     "s9_bucketed_upsert": _build_s9_upsert_table,
-    "mm_ahash_incremental": _build_ahash_history_store,
     # the 9 re-registered fold twins (r08 optimization round) join the
     # same seam — fold lifecycle = build phase, store read = serve:
     "boilerplate_store_fold": _build_boilerplate_fold_store,
@@ -8304,8 +7617,6 @@ def _queries_base() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "text_fingerprint": _q_text_fingerprint,
         "text_repetition": _q_text_repetition,
         "text_gopher_flags": _q_text_gopher,
-        "m_quality_classifier_eval": _q_m_quality_eval,
-        "text_datacard": _q_text_datacard,
         "text_boilerplate_by_source": _q_text_boilerplate,
         "boilerplate_store_fold": _q_boilerplate_store_fold,
         "text_boilerplate_strip": _q_text_boilerplate_strip,
@@ -8314,7 +7625,6 @@ def _queries_base() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "profile_orders_columns": _q_profile_orders,
         "drift_psi_events": _q_drift_psi,
         "drift_psi_fold": _q_drift_psi_fold,
-        "pipeline_health_rollup": _q_pipeline_health,
         "dedup_prefix_jaccard": _q_dedup_prefix_jaccard,
         "text_lm_score": _q_text_lm_score,
         "text_kn_lm_score": _q_text_kn_lm_score,
@@ -8330,7 +7640,6 @@ def _queries_base() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "tokenizer_fertility_by_lang": _q_tokenizer_fertility,
         "tokenizer_bpe_segment_hi": _q_tokenizer_bpe_segment_hi,
         "tokenizer_compression_eval": _q_tokenizer_compression,
-        "prep_training_corpus": _q_prep_corpus,
         "dedup_cc_clusters": _q_dedup_cc_clusters,
         "dedup_cluster_store_merge": _q_dedup_cluster_store,
         "dedup_keeper_policy": _q_dedup_keeper_policy,
@@ -8355,13 +7664,6 @@ def _queries_base() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "split_dsir_weights_fold": _q_split_dsir_weights_fold,
         "pack_sequences": _q_pack_sequences,
         "text_pii_redact": _q_text_pii,
-        "mm_binary_metadata": _q_mm_metadata,
-        "mm_resize_meta": _q_mm_resize,
-        "mm_frame_sample": _q_mm_frames,
-        "mm_ahash_near_dup": _q_mm_ahash,
-        "mm_phash_near_dup": _q_mm_phash,
-        "mm_media_dedup_prep": _q_mm_media_prep,
-        "mm_ahash_incremental": _q_mm_ahash_incremental,
         "tpch_q5_region_revenue": _q_tpch_q5,
         "j1_semi_join_resolved": _q_j1_semi_join,
         "j2_content_join": _q_j2_content_join,
@@ -8383,7 +7685,6 @@ def _queries_base() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "m_synth_intent_corpus": _q_m_synth_corpus,
         "m_synth_ner_corpus": _q_m_synth_ner_corpus,
         "m_intent_eval": _q_m_intent_eval,
-        "bm25_ranked": _q_bm25_ranked,
         "bm25_batch_ranked": _q_bm25_batch,
         "bm25_known_item_eval": _q_bm25_known_item,
         "bm25_ndcg_mrr_eval": _q_bm25_ndcg_mrr,
@@ -8510,8 +7811,6 @@ def oracle_sql() -> dict[str, str]:
         "text_fingerprint": _sql_text_fingerprint(),
         "text_repetition": _sql_text_repetition(),
         "text_gopher_flags": _sql_text_gopher(),
-        "m_quality_classifier_eval": _sql_m_quality_eval(),
-        "text_datacard": _SQL_TEXT_DATACARD,
         "text_boilerplate_by_source": _SQL_BOILERPLATE,
         "boilerplate_store_fold": _SQL_BOILERPLATE,
         "text_boilerplate_strip": _SQL_BOILERPLATE_STRIP,
@@ -8520,7 +7819,6 @@ def oracle_sql() -> dict[str, str]:
         "profile_orders_columns": _sql_profile_orders(),
         "drift_psi_events": _sql_drift_psi(),
         "drift_psi_fold": _sql_drift_psi(),
-        "pipeline_health_rollup": _sql_pipeline_health(),
         "dedup_prefix_jaccard": _sql_dedup_prefix_jaccard(),
         "text_lm_score": _sql_text_lm_score(),
         "text_kn_lm_score": _sql_text_kn_lm_score(),
@@ -8539,7 +7837,6 @@ def oracle_sql() -> dict[str, str]:
         "tokenizer_fertility_by_lang": _sql_tokenizer_fertility(),
         "tokenizer_bpe_segment_hi": _sql_tokenizer_bpe_segment_hi(),
         "tokenizer_compression_eval": _sql_tokenizer_compression(),
-        "prep_training_corpus": _sql_prep_corpus(),
         "dedup_cc_clusters": _sql_dedup_cc(),
         "dedup_cluster_store_merge": _sql_dedup_cc(),
         "dedup_keeper_policy": _sql_dedup_keeper_policy(),
@@ -8565,13 +7862,6 @@ def oracle_sql() -> dict[str, str]:
         # fold invisibility IS the stamped property: same oracle verbatim
         "pack_sequences": _sql_pack_sequences(),
         "text_pii_redact": _sql_text_pii(),
-        "mm_binary_metadata": _SQL_MM_METADATA,
-        "mm_resize_meta": _SQL_MM_RESIZE,
-        "mm_frame_sample": _SQL_MM_FRAMES,
-        "mm_ahash_near_dup": _SQL_MM_AHASH,
-        "mm_phash_near_dup": _sql_mm_phash(),
-        "mm_media_dedup_prep": _SQL_MM_MEDIA_PREP,
-        "mm_ahash_incremental": _SQL_MM_AHASH_INCR,
         "tpch_q5_region_revenue": _SQL_TPCH_Q5,
         "j1_semi_join_resolved": _SQL_J1_SEMI,
         "j2_content_join": _SQL_J2_CONTENT,
@@ -8593,7 +7883,6 @@ def oracle_sql() -> dict[str, str]:
         "m_synth_intent_corpus": _sql_m_synth_corpus(),
         "m_synth_ner_corpus": _sql_m_synth_ner_corpus(),
         "m_intent_eval": _sql_m_intent_eval(),
-        "bm25_ranked": _sql_bm25_ranked(),
         "bm25_batch_ranked": _sql_bm25_batch(),
         "bm25_known_item_eval": _sql_bm25_known_item(),
         "bm25_ndcg_mrr_eval": _sql_bm25_ndcg_mrr(),

@@ -30,15 +30,15 @@ HEADLINE = [
     "s6_chunker",
 ]
 
-# Same-run sentinel normalization (VERDICT r06 #1): a fixed 10-query set
+# Same-run sentinel normalization (VERDICT r06 #1): a fixed 9-query set
 # whose CODE has been untouched since round 1, with their round-1
-# driver-recorded times at sf0.1 (BENCH_r01.json tail). host_factor =
+# driver-recorded times at sf0.1. host_factor =
 # median(t_now / t_r01) over these — a pure measure of the machine, since
 # the plans are identical. Per-query regression judgment divides the raw
 # seconds by this factor, so host CPU contention (measured 1.8x uniform
 # on unchanged entries in round 6) can never masquerade as a plan
 # regression again. Spans plan classes: scan-agg, join, as-of join,
-# window, sessionize, text expr, regex, Arrow pandas path.
+# window, sessionize, text expr, regex.
 SENTINELS_R01_SF01 = {
     "s3_markdown_strip": 0.383,
     "events_funnel": 0.324,
@@ -49,7 +49,6 @@ SENTINELS_R01_SF01 = {
     "orders_running_total": 0.182,
     "events_sessionize": 1.349,
     "text_pii_redact": 0.490,
-    "mm_resize_meta": 0.311,
 }
 
 # The slowest entries of the last committed bench snapshot, warmed once
@@ -59,9 +58,6 @@ WARM_FIRST = [
     # (FOLD_TWINS; re-registered later in r08)
     "sim_hnsw_recall",
     "basket_part_pagerank",
-    "prep_training_corpus",
-    "m_quality_classifier_eval",
-    "mm_ahash_incremental",
     "bm25_store_append_ranked",
     "basket_part_communities",
     "decontam_neardup_leakage",
@@ -71,7 +67,6 @@ WARM_FIRST = [
     "text_kn_lm_score",
     "dedup_cc_clusters",
     "split_dsir_weights",
-    "pipeline_health_rollup",
 ]
 
 
@@ -276,8 +271,8 @@ def main():
         # 2000-byte tail window instead of ~7 (VERDICT r08 #2; the
         # round-over-round PERF set had shrunk to 5 comparable entries).
         "build_tot_s": round(build_tot, 1),
-        # median same-run ratio of 10 untouched-since-round-1 sentinel
-        # queries to their BENCH_r01 times: divide raw seconds by this
+        # median same-run ratio of 9 untouched-since-round-1 sentinel
+        # queries to their round-1 times: divide raw seconds by this
         # to remove host speed from round-over-round comparison
         "host_factor": host_factor,
         "norm_tot_s": (round(total / host_factor, 1)
@@ -287,7 +282,7 @@ def main():
         "queries_omitted": len(ok),
         "full": detail_name,
     }
-    # the driver's tail window is exactly 2000 bytes (BENCH_r02's 3.5 KB
+    # the driver's tail window is exactly 2000 bytes (the round-2 3.5 KB
     # line lost its start and parsed as null; every kept tail since is
     # len 2000) — budget the WHOLE line comfortably under it
     line_budget = 1850

@@ -18,7 +18,7 @@ data plane as idiomatic Spark DataFrame pipelines:
 - ``llmops/``     — large-scale training-data pipeline ops: dedup (exact,
   minhash-LSH, simhash, n-gram Jaccard, embedding cosine), the one ANN
   scorer (the sharded-HNSW store) with its exact kNN reference, text
-  analysis, multimodal column plumbing.
+  analysis, splits, decontamination and data-quality suites.
 - ``pipeline/``   — the /ask lifecycle (route -> search -> context assembly)
   and batch ingestion job (SURVEY.md §3).
 """

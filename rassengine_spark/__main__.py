@@ -12,32 +12,15 @@ of the reference's REST endpoints has a direct equivalent for each flow.
         intent, hits, and the answer. `--rerank` enables the second-stage
         term-overlap rerank.
 
-    python -m rassengine_spark prep --src PARQUET --out DIR
-        the training-data prep pipeline (llmops/prep.py) over a parquet of
-        (doc_id, text [, ...]): dedup -> quality -> PII -> split; writes
-        the cleaned corpus partitioned by split and prints the stage
-        report.
-
     python -m rassengine_spark index --src PARQUET --out DIR --tiers LIST
         build + persist serving index tiers from a corpus parquet:
         `terms` (bucketed BM25 postings), `minhash` (dedup signature
         store), `bpe` (tokenizer merges + vocab), and `hnsw` (the
         sharded-HNSW vector store over --vec-col).
 
-    python -m rassengine_spark health --dq DIR --psi DIR --contam DIR
-        the pipeline-health dashboard (llmops/health.py): one JSON line
-        per curation gate, read from the persisted counter stores alone
-        (add --docs PARQUET for the corpus dup-rate rows).
-
     python -m rassengine_spark table --path DIR ACTION
         dataset maintenance: --publish [NAME] / --list / --drop NAME
         snapshots, --compact MB small-file compaction, --prune retention.
-
-    python -m rassengine_spark crawl --src WARC_DIR --out DIR
-        crawl-to-corpus: WARC/WARC.GZ records -> HTML->text documents
-        (doc_id = md5(url@date)) -> optional URL domain gating
-        (--block-domains FILE) -> optional full prep pipeline (--prep);
-        writes the corpus parquet and prints counts.
 
 Models stay pluggable: the CLI wires the deterministic defaults; swap in
 ml/plugins.py constructors programmatically for real models.
@@ -77,86 +60,6 @@ def _cmd_ask(args) -> int:
         for r in res.hits.select("doc_id").collect():
             print(f"hit: {r['doc_id']}")
     print(f"answer: {res.answer}")
-    return 0
-
-
-def _cmd_health(args) -> int:
-    """Print the pipeline-health dashboard (llmops/health.py) from the
-    persisted counter stores the maintenance jobs keep fresh — one JSON
-    line per (metric, value, flagged) gate, store-only unless --docs
-    points at a corpus parquet for the dup-rate rows."""
-    import json as _json
-
-    from .llmops.health import health_report
-    from .session import get_spark
-
-    spark = get_spark("cli-health")
-    docs = spark.read.parquet(args.docs) if args.docs else None
-    rows = health_report(spark, args.dq, args.psi, args.contam,
-                         docs=docs, text_col=args.text_col).collect()
-    for r in rows:
-        print(_json.dumps({"metric": r.metric, "value": r.value,
-                           "flagged": r.flagged}))
-    return 0
-
-
-def _cmd_prep(args) -> int:
-    from pyspark.sql import functions as F
-
-    from .llmops.prep import prepare_training_corpus
-    from .session import get_spark
-
-    spark = get_spark("cli-prep")
-    docs = spark.read.parquet(args.src)
-    target = (spark.read.parquet(args.dsir_target)
-              if args.dsir_target else None)
-    out, report = prepare_training_corpus(
-        docs, None, text_col=args.text_col, id_col=args.id_col,
-        dsir_target=target, dsir_keep_pct=args.dsir_keep_pct,
-        materialize=True)
-    (out.write.mode("overwrite").partitionBy("split").parquet(args.out))
-    n = spark.read.parquet(args.out).count()
-    print(json.dumps({"stages": report, "out": args.out, "rows": n}))
-    return 0
-
-
-def _cmd_crawl(args) -> int:
-    from pyspark.sql import functions as F
-
-    from .session import get_spark
-    from .sources.warc import read_warc, warc_text_documents
-
-    spark = get_spark("cli-crawl")
-    docs = warc_text_documents(read_warc(spark, args.src))
-    n_raw = docs.count()
-    # URL-level dedup before any text processing: raw crawls spell the
-    # same page many ways (case, ports, tracking params, fragments);
-    # keep the smallest doc_id per canonical key (deterministic)
-    from .llmops.urls import canonical_url
-    from pyspark.sql.window import Window as _W
-    docs = (docs.withColumn("_cu", canonical_url(F.col("url")))
-            .withColumn("_rn", F.row_number().over(
-                _W.partitionBy("_cu").orderBy("doc_id")))
-            .filter(F.col("_rn") == 1).drop("_cu", "_rn"))
-    if args.block_domains:
-        from .llmops.urls import filter_by_domain
-        block = (spark.read.text(args.block_domains)
-                 .select(F.trim(F.col("value")).alias("domain"))
-                 .filter(F.col("domain") != ""))
-        docs = filter_by_domain(docs, "url", blocklist=block)
-    stages: list = []
-    if args.prep:
-        from .llmops.prep import prepare_training_corpus
-        docs, stages = prepare_training_corpus(
-            docs, None, text_col="text", id_col="doc_id",
-            unicode_normalize=True, drop_boilerplate_lines=True,
-            materialize=True)
-        docs.write.mode("overwrite").partitionBy("split").parquet(args.out)
-    else:
-        docs.write.mode("overwrite").parquet(args.out)
-    n = spark.read.parquet(args.out).count()
-    print(json.dumps({"records_to_docs": n_raw, "rows": n,
-                      "stages": stages, "out": args.out}))
     return 0
 
 
@@ -277,17 +180,6 @@ def build_parser() -> argparse.ArgumentParser:
     pa.add_argument("--rerank", action="store_true")
     pa.set_defaults(fn=_cmd_ask)
 
-    pp = sub.add_parser("prep", help="training-data prep pipeline")
-    pp.add_argument("--src", required=True)
-    pp.add_argument("--out", required=True)
-    pp.add_argument("--text-col", default="text")
-    pp.add_argument("--id-col", default="doc_id")
-    pp.add_argument("--dsir-target", default=None,
-                    help="parquet of target-domain docs: keep only the "
-                         "most target-like fraction (DSIR stage)")
-    pp.add_argument("--dsir-keep-pct", type=int, default=25)
-    pp.set_defaults(fn=_cmd_prep)
-
     px = sub.add_parser("index", help="build + persist serving index tiers")
     px.add_argument("--src", required=True)
     px.add_argument("--out", required=True)
@@ -300,33 +192,6 @@ def build_parser() -> argparse.ArgumentParser:
                          "the corpus size)")
     px.add_argument("--bpe-merges", type=int, default=64)
     px.set_defaults(fn=_cmd_index)
-
-    pc = sub.add_parser("crawl", help="WARC crawl -> text corpus")
-    pc.add_argument("--src", required=True,
-                    help="dir of .warc / .warc.gz files")
-    pc.add_argument("--out", required=True)
-    pc.add_argument("--block-domains", default=None,
-                    help="text file, one blocked registered domain/line")
-    pc.add_argument("--prep", action="store_true",
-                    help="run the full prep pipeline (unicode + line "
-                         "dedup + dedup/quality/PII/split)")
-    pc.set_defaults(fn=_cmd_crawl)
-
-    ph = sub.add_parser(
-        "health",
-        help="pipeline-health dashboard from persisted counter stores")
-    ph.add_argument("--dq", required=True,
-                    help="DQ counter store dir (save_dq_counters layout)")
-    ph.add_argument("--psi", required=True,
-                    help="PSI drift store dir (save_psi_counters layout)")
-    ph.add_argument("--contam", required=True,
-                    help="contamination counter store dir "
-                         "(merge_contamination_counters layout)")
-    ph.add_argument("--docs", default=None,
-                    help="corpus parquet for the dup-rate rows "
-                         "(omit for store-only online mode)")
-    ph.add_argument("--text-col", default="text")
-    ph.set_defaults(fn=_cmd_health)
 
     pt = sub.add_parser("table", help="snapshots / compaction / retention")
     pt.add_argument("--path", required=True)

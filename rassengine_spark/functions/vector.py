@@ -78,35 +78,3 @@ def l2_normalize(col: Column, eps: float = 1e-9) -> Column:
 def cosine(a: Column, b: Column, eps: float = 1e-9) -> Column:
     """Cosine similarity for not-necessarily-normalized vectors."""
     return dot(a, b) / ((l2_norm(a) * l2_norm(b)) + F.lit(eps))
-
-
-# ---------------------------------------------------------- int8 quantization
-# Symmetric per-vector quantization: scale = max|x| / 127, q_i =
-# floor(x_i/scale + 0.5) in [-127, 127]. An array<float> embedding column is
-# the dominant storage cost of an embedding corpus (dim=1024 floats = 4 KiB
-# per row); int8 cuts it 4x on disk AND 4x through every shuffle that carries
-# vectors. Rounding is spelled floor(x + 0.5) — not round() — because
-# HALF_UP/HALF_EVEN conventions differ across engines while floor is exact
-# everywhere, keeping quantized values oracle-checkable bit-for-bit.
-
-
-def quantize_scale(col: Column) -> Column:
-    """Per-vector scale: max|x|/127; 1.0 for the all-zero vector (so its
-    quantized form is all zeros rather than a 0/0)."""
-    amax = F.aggregate(
-        col, F.lit(0.0),
-        lambda acc, x: F.greatest(acc, F.abs(x.cast("double"))))
-    return F.when(amax == 0.0, F.lit(1.0)).otherwise(amax / F.lit(127.0))
-
-
-def quantize_int8(col: Column, scale: Column) -> Column:
-    """array<int> in [-127, 127]: floor(x/scale + 0.5)."""
-    return F.transform(
-        col,
-        lambda x: F.floor(x.cast("double") / scale + F.lit(0.5))
-                   .cast("int"))
-
-
-def dequantize(qcol: Column, scale: Column) -> Column:
-    """array<double> reconstruction: q_i * scale."""
-    return F.transform(qcol, lambda q: q.cast("double") * scale)

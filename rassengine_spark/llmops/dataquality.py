@@ -13,13 +13,14 @@ Cross-table checks (referential integrity, aggregate consistency) are
 inherently join-shaped and run as their own passes; their reports union
 onto the single-pass block.  All fractional metrics are integer
 round-half-up — ``(2*num*10^d + den) div (2*den) / 10^d`` — so the
-report hashes identically on any engine/partitioning (see
-datacard.datacard for the rationale).
+report hashes identically on any engine/partitioning: the ratio comes
+from exact integer counts, so no floating-point rounding step can
+differ between engines.
 
 The reference engine validates payloads imperatively per-request
 (app/main.py:2890-2933 upload checks); this table-level suite is the
 batch/scale generalization of that surface, extending the
-training-data-pipeline tier like datacard.py does.
+training-data-pipeline tier.
 """
 
 from __future__ import annotations

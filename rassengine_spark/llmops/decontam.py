@@ -141,7 +141,7 @@ def contamination_report(eval_df: DataFrame, train_df: DataFrame,
                          threshold: float = 0.8,
                          fast: bool = True) -> DataFrame:
     """Corpus-level contamination report: the per-doc overlap rolled up
-    per `slice_cols` grain (eval-suite x domain, datacard's ROLLUP
+    per `slice_cols` grain (eval-suite x domain, a ROLLUP
     shape) — the release-gate view an eval-hygiene review reads, instead
     of 50k per-doc rows.
 
@@ -150,7 +150,7 @@ def contamination_report(eval_df: DataFrame, train_df: DataFrame,
     matched_frac (pooled micro-average: one division over the exact
     sums) and avg_overlap (macro-average of per-doc fractions). The
     macro mean folds integer MICRO-units of the already-6dp-rounded
-    per-doc fraction with the half-up integer formula datacard uses —
+    per-doc fraction with the half-up integer formula —
     no double accumulation, so every engine agrees at the 6th decimal.
 
     Scale: the vocabulary join dominates and is shared with the per-doc

@@ -48,13 +48,6 @@ def exact_dup_groups(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
               .filter(F.col("dup_count") > 1))
 
 
-def exact_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    """Keep one row (min id) per distinct value of text_col."""
-    w = Window.partitionBy(F.md5(F.col(text_col))).orderBy(F.col(id_col).asc())
-    return (df.withColumn("_rn", F.row_number().over(w))
-              .filter(F.col("_rn") == 1).drop("_rn"))
-
-
 # ---------------------------------------------------------------- shingles
 def word_shingles(col: Column, n: int = 3) -> Column:
     """Distinct word n-gram shingles; texts shorter than n words collapse to

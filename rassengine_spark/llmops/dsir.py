@@ -171,22 +171,3 @@ def read_gram_counts(spark, path: str) -> DataFrame:
     from ..util import heal_swapped_dir
     heal_swapped_dir(os.path.join(path, "data"))
     return spark.read.parquet(os.path.join(path, "data"))
-
-
-def select_target_like(raw: DataFrame, target: DataFrame, text_col: str,
-                       id_col: str, keep_fraction_pct: int = 25,
-                       n: int = 2, n_buckets: int = 8192) -> DataFrame:
-    """Curation wrapper: keep raw docs whose mean per-gram importance
-    clears the fraction's threshold — computed as a 1-row broadcast
-    percentile over the weight table, NOT a global sort/rank of the
-    corpus (the two-phase shape every selection op here uses). Returns
-    the surviving (id, n_grams, imp_micro, mean_micro) rows."""
-    wts = importance_weights(raw, target, text_col, id_col, n, n_buckets)
-    wts = wts.withColumn("mean_micro",
-                         F.expr("imp_micro div n_grams"))
-    q = 1.0 - keep_fraction_pct / 100.0
-    thr = wts.agg(F.percentile_approx("mean_micro", q, 10000)
-                  .alias("_thr"))
-    return (wts.crossJoin(F.broadcast(thr))
-               .filter(F.col("mean_micro") >= F.col("_thr"))
-               .drop("_thr"))

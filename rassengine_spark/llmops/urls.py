@@ -1,8 +1,7 @@
 """URL-level curation for crawl corpora: the filter stage that runs
 BEFORE any text is even decoded (C4/RefinedWeb both gate on URL lists —
 it is the cheapest possible reject). All pure Column expressions: domain
-extraction and flags fuse into the scan; list matching is a broadcast
-join against the (small) domain list, never a per-row Python call.
+extraction and flags fuse into the scan, never a per-row Python call.
 """
 
 from __future__ import annotations
@@ -69,23 +68,6 @@ def url_features(df: DataFrame, url_col: str, id_col: str) -> DataFrame:
         ext.isin("jpg", "jpeg", "png", "gif", "css", "js", "ico", "svg",
                  "woff", "zip", "exe", "mp3", "mp4", "pdf")
            .alias("suspect_ext"))
-
-
-def filter_by_domain(df: DataFrame, url_col: str,
-                     blocklist: DataFrame | None = None,
-                     allowlist: DataFrame | None = None) -> DataFrame:
-    """Gate rows on their registered domain: drop blocklisted domains,
-    and (when an allowlist is given) keep ONLY allowlisted ones. The
-    lists are (domain string) frames — broadcast anti/semi joins, so the
-    corpus side never shuffles."""
-    out = df.withColumn("_dom", registered_domain(F.col(url_col)))
-    if blocklist is not None:
-        b = blocklist.select(F.col("domain").alias("_dom")).distinct()
-        out = out.join(F.broadcast(b), "_dom", "left_anti")
-    if allowlist is not None:
-        a = allowlist.select(F.col("domain").alias("_dom")).distinct()
-        out = out.join(F.broadcast(a), "_dom", "left_semi")
-    return out.drop("_dom")
 
 
 # tracking params every major canonicalizer strips (param name alone or

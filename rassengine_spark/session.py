@@ -36,7 +36,7 @@ def get_spark(app_name: str = "rassengine-spark", master: str | None = None,
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # dims like region/nation (and resolved-id semi-join sides) broadcast
         .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-        # Arrow for the few pandas_udf paths (embedding/multimodal)
+        # Arrow for the few pandas_udf paths (embedding/text analysis)
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "4096")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))

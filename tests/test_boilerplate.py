@@ -187,33 +187,6 @@ def test_strip_removes_every_flagged_occurrence(spark):
     assert out[2] == ("baz\npromo", 2, 1)
 
 
-def test_prep_per_source_boilerplate_stage(spark):
-    """prep's opt-in 0c stage strips per-source boilerplate before dedup
-    so shared domain headers don't glue distinct docs into clusters."""
-    from rassengine_spark.llmops.prep import prepare_training_corpus
-    rows = [
-        (1, "d1", "news", "promo header\nalpha words entirely distinct one"),
-        (2, "d2", "news", "promo header\nbeta words entirely distinct two"),
-        (3, "d3", "blog", "promo header\ngamma words entirely distinct three"),
-    ]
-    docs = spark.createDataFrame(
-        rows, "doc_id long, name string, source string, text string")
-    out, report = prepare_training_corpus(
-        docs, None, text_col="text", id_col="doc_id",
-        strip_boilerplate_sources="source", boilerplate_min_docs=2,
-        boilerplate_min_frac_ppm=600_000, min_quality=0.0, redact=False)
-    stages = dict(report)
-    assert stages["boilerplate_by_source"] == 3
-    texts = {r.doc_id: r.text for r in out.collect()}
-    # 'promo header' is 2/2 of news -> stripped there; 1/1 of blog meets
-    # the frac but not min_docs -> kept
-    assert texts[1] == "alpha words entirely distinct one"
-    assert texts[2] == "beta words entirely distinct two"
-    assert texts[3] == "promo header\ngamma words entirely distinct three"
-    # ride-along columns survive the stage rejoin
-    assert {r.name for r in out.collect()} == {"d1", "d2", "d3"}
-
-
 def test_gc_removes_only_unreferenced_dirs(spark, tmp_path):
     from rassengine_spark.llmops.boilerplate import gc_line_stats
     path = str(tmp_path / "stats")

@@ -1,8 +1,9 @@
-"""CLI surface: ingest -> ask -> prep flows through python -m
+"""CLI surface: ingest -> ask, index and table flows through python -m
 rassengine_spark's main(), end to end on a tiny corpus."""
 
 import json
-import os
+
+import pytest
 
 from rassengine_spark.__main__ import main
 
@@ -31,22 +32,6 @@ def test_cli_ingest_then_ask(spark, tmp_path, capsys):
     assert "intent: EXPLANATORY" in text and "hit:" in text
 
 
-def test_cli_prep(spark, tmp_path, capsys):
-    src = str(tmp_path / "docs")
-    rows = [(i, f"some sufficiently long document text number {i} with "
-                f"several words in it") for i in range(20)]
-    rows += [(100, rows[0][1])]                 # exact dup
-    spark.createDataFrame(rows, "doc_id int, text string") \
-         .write.parquet(src)
-    out_dir = str(tmp_path / "clean")
-    assert main(["prep", "--src", src, "--out", out_dir]) == 0
-    rep = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    stages = dict(rep["stages"])
-    assert stages["input"] == 21 and stages["exact_dedup"] == 20
-    assert rep["rows"] == stages["split"]
-    assert os.path.isdir(out_dir)
-
-
 def test_cli_index_and_table(spark, tmp_path, capsys):
     src = str(tmp_path / "docs2")
     rows = [(i, f"document number {i} about spark joins and shuffles "
@@ -69,6 +54,11 @@ def test_cli_index_and_table(spark, tmp_path, capsys):
         assert main(["index", "--src", src, "--out", out_dir,
                      "--tiers", bad]) == 2
     assert "unknown tier(s) ['ivf']" in capsys.readouterr().err
+    # retired subcommands are argparse usage errors
+    for retired in ("prep", "crawl", "health"):
+        with pytest.raises(SystemExit) as exc:
+            main([retired, "--src", src, "--out", out_dir])
+        assert exc.value.code == 2
     # the persisted term and vector tiers actually serve
     from rassengine_spark.llmops.hnsw import hnsw_topk_from_store
     from rassengine_spark.operators.index_store import bm25_topk_from_store
@@ -94,34 +84,6 @@ def test_cli_index_and_table(spark, tmp_path, capsys):
     res = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert res["files_after_compact"] >= 1
     assert res["pruned_files"] == 0       # snapshot still pins old files
-
-
-def test_cli_crawl(spark, tmp_path, capsys):
-    """crawl: WARC dir -> text corpus, with domain blocking."""
-    import gzip
-
-    from tests.test_warc import HTTP, _record
-
-    src = tmp_path / "warcs"
-    src.mkdir()
-    blob = (_record("response", "http://good.org/a", HTTP)
-            # same page as above, spelled differently: URL-level dedup
-            # must collapse it before any text processing
-            + _record("response", "HTTP://GOOD.org:80/a?utm_source=x#top",
-                      HTTP)
-            + _record("response", "http://spam.biz/x", HTTP))
-    (src / "c.warc.gz").write_bytes(gzip.compress(blob))
-    block = tmp_path / "block.txt"
-    block.write_text("spam.biz\n")
-    out = str(tmp_path / "corpus")
-
-    from rassengine_spark.__main__ import main
-    assert main(["crawl", "--src", str(src), "--out", out,
-                 "--block-domains", str(block)]) == 0
-    res = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert res["records_to_docs"] == 3 and res["rows"] == 1
-    urls = {r.url for r in spark.read.parquet(out).collect()}
-    assert urls == {"http://good.org/a"}
 
 
 def test_cli_table_compact_store(spark, tmp_path, capsys):
@@ -157,53 +119,3 @@ def test_cli_table_compact_store(spark, tmp_path, capsys):
     assert [(r.id, r.score)
             for r in bm25_topk_from_store(spark, path, "spark join",
                                           k=3).collect()] == before
-
-
-def test_cli_health(spark, tmp_path, capsys):
-    """`health` prints one JSON gate row per metric from the persisted
-    counter stores (store-only mode; --docs adds the dup-rate rows)."""
-    from pyspark.sql import functions as F
-
-    from rassengine_spark.llmops import dataquality as DQ
-    from rassengine_spark.llmops import decontam as DC
-
-    dq_p, psi_p = str(tmp_path / "dq"), str(tmp_path / "psi")
-    contam_p, vocab_p = str(tmp_path / "ct"), str(tmp_path / "vb")
-    docs_p = str(tmp_path / "docs")
-
-    DQ.save_dq_counters(
-        spark.createDataFrame([(i, i % 3) for i in range(30)],
-                              "id long, v long"),
-        [DQ.completeness("v")], dq_p)
-    ev = spark.createDataFrame(
-        [(f"t{i % 2}", float(i % 10)) for i in range(80)],
-        "g string, value double")
-    DQ.save_psi_counters(ev, "g", "value", psi_p, lo=0.0, hi=10.0)
-    DQ.append_psi_current(ev, psi_p)
-    docs = spark.createDataFrame(
-        [(i, f"alpha beta gamma {i} delta common words") for i in range(12)],
-        "doc_id long, text string")
-    docs.write.parquet(docs_p)
-    DC.save_gram_vocab(docs.filter("doc_id % 2 = 0"), "text", vocab_p, n=3)
-    evd = (docs.filter("doc_id % 2 = 1")
-           .withColumn("suite", F.lit("s0")).withColumn("lang", F.lit("en")))
-    c = DC.contamination_counters(spark, evd, "text", "doc_id",
-                                  ["suite", "lang"], vocab_p)
-    DC.merge_contamination_counters(spark, contam_p, c, ["suite", "lang"])
-
-    assert main(["health", "--dq", dq_p, "--psi", psi_p,
-                 "--contam", contam_p]) == 0
-    rows = [json.loads(ln) for ln in
-            capsys.readouterr().out.strip().splitlines()]
-    metrics = {r["metric"] for r in rows}
-    assert metrics == {"dq_row_checks_failed", "drifted_event_types",
-                       "contaminated_eval_docs", "eval_docs_checked"}
-
-    assert main(["health", "--dq", dq_p, "--psi", psi_p,
-                 "--contam", contam_p, "--docs", docs_p]) == 0
-    rows = [json.loads(ln) for ln in
-            capsys.readouterr().out.strip().splitlines()]
-    by = {r["metric"]: r for r in rows}
-    assert by["total_docs"]["value"] == 12
-    assert by["duplicate_docs"]["value"] == 0
-    assert by["drifted_event_types"]["value"] == 0   # cur == baseline

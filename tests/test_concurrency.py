@@ -10,7 +10,7 @@ import __spark_entry__ as entry
 SF = "/root/testdata/sf0.001"
 
 QUERIES = ["q1_keyword_phrase", "q2_semantic_knn", "q6_terms_agg",
-           "bm25_ranked", "events_funnel", "text_langid"]
+           "bm25_index_ranked", "events_funnel", "text_langid"]
 
 
 def _rows(df):

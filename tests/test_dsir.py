@@ -1,11 +1,10 @@
 """llmops/dsir.py: hashed n-gram importance weights (DSIR-style data
-selection) — target-likeness ordering, smoothing, short-text fallback,
-and the selection wrapper."""
+selection) — target-likeness ordering, smoothing and short-text
+fallback."""
 
 from pyspark.sql import functions as F
 
-from rassengine_spark.llmops.dsir import (MICRO, importance_weights,
-                                          select_target_like)
+from rassengine_spark.llmops.dsir import MICRO, importance_weights
 
 
 def _docs(spark, rows):
@@ -39,19 +38,6 @@ def test_short_text_whole_doc_fallback(spark):
     assert w[1].n_grams == 1 and w[2].n_grams == 1
     assert w[1].imp_micro == MICRO          # (1+1)*M div (1+1)
     assert w[2].imp_micro == MICRO // 2     # (0+1)*M div (1+1)
-
-
-def test_select_target_like_keeps_the_right_half(spark):
-    target = _docs(spark, [(100, "patient has hypertension")])
-    raw = _docs(spark, [
-        (1, "patient has hypertension"), (2, "patient has hypertension"),
-        (3, "stock market news flash"), (4, "weather report for tuesday")])
-    kept = select_target_like(raw, target, "text", "doc_id",
-                              keep_fraction_pct=25)
-    # >= threshold keeps AT LEAST the fraction; the two target-identical
-    # docs tie at the top and both survive, the unrelated pair drops
-    ids = {r.id for r in kept.collect()}
-    assert ids == {1, 2}
 
 
 def test_weight_fn_override_runs(spark):

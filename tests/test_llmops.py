@@ -1,10 +1,9 @@
 """Tests for the training-data pipeline operators (dedup / exact kNN
-reference / text analysis / multimodal plumbing)."""
+reference / text analysis)."""
 
 from pyspark.sql import functions as F
 
 from rassengine_spark.llmops import dedup as DD
-from rassengine_spark.llmops import multimodal as MM
 from rassengine_spark.llmops import similarity as SIM
 from rassengine_spark.llmops import text_analysis as TA
 
@@ -18,15 +17,6 @@ def docs(spark):
         (5, "el zorro marron salta sobre el perro perezoso", "es"),
     ]
     return spark.createDataFrame(rows, "id int, text string, lang string")
-
-
-def test_exact_dedup(spark):
-    d = docs(spark)
-    groups = DD.exact_dup_groups(d, "text", "id").collect()
-    assert len(groups) == 1
-    assert groups[0]["dup_count"] == 2 and groups[0]["keeper_id"] == 1
-    kept = DD.exact_dedup(d, "text", "id")
-    assert sorted(r["id"] for r in kept.collect()) == [1, 3, 4, 5]
 
 
 def test_minhash_lsh_finds_near_dups(spark):
@@ -91,26 +81,6 @@ def test_ivf_plan_builds_fast_at_large_n_cells(spark):
     plan = c.select("vec_id", DD._best_cell("v", cents, 6).alias("cell"))
     plan.schema               # forces full analysis of the plan
     assert time.perf_counter() - t0 < 30
-
-
-def test_int8_quantization_roundtrip_bound(spark):
-    from rassengine_spark.functions.vector import (dequantize, quantize_int8,
-                                                   quantize_scale)
-    df = (spark.createDataFrame(
-            [(0, [0.5, -1.5, 3.0]), (1, [0.0, 0.0, 0.0])],
-            "id int, v array<double>")
-          .withColumn("qs", quantize_scale(F.col("v"))))
-    df = df.withColumn("q8", quantize_int8(F.col("v"), F.col("qs"))) \
-           .withColumn("back", dequantize(F.col("q8"), F.col("qs")))
-    rows = {r["id"]: r for r in df.collect()}
-    # all quantized values in [-127, 127]; max|x| maps to exactly +-127
-    assert all(-127 <= q <= 127 for q in rows[0]["q8"])
-    assert rows[0]["q8"][2] == 127
-    # reconstruction error bounded by scale/2 per element
-    for orig, back in zip([0.5, -1.5, 3.0], rows[0]["back"]):
-        assert abs(orig - back) <= rows[0]["qs"] / 2 + 1e-12
-    # zero vector: scale 1.0, stays exactly zero
-    assert rows[1]["qs"] == 1.0 and rows[1]["back"] == [0.0, 0.0, 0.0]
 
 
 def test_recall_at_k_counts_misses(spark):
@@ -192,49 +162,6 @@ def test_text_analysis_columns(spark):
     assert fp[1] == fp[2] and fp[1] != fp[4]
 
 
-def test_multimodal_plumbing(spark):
-    media = MM.to_media_table(docs(spark), "id", "text")
-    feats = MM.decode_features(media).collect()
-    assert len(feats) == 5
-    by_id = {r["media_id"]: r for r in feats}
-    assert by_id["1"]["n_bytes"] == by_id["2"]["n_bytes"]
-    # deterministic fake decode: same bytes -> same features
-    assert (by_id["1"]["width"], by_id["1"]["height"]) == \
-           (by_id["2"]["width"], by_id["2"]["height"])
-    assert all(r["width"] >= 16 for r in feats)
-
-
-def test_multimodal_resize_stub(spark):
-    media = MM.to_media_table(docs(spark), "id", "text")
-    out = {r["media_id"]: r
-           for r in MM.resize_images(media, out_w=8, out_h=8).collect()}
-    assert len(out) == 5
-    for r in out.values():
-        assert (r["out_w"], r["out_h"]) == (8, 8)
-        assert r["n_bytes_out"] <= 64
-        assert len(r["content"]) == r["n_bytes_out"]
-
-
-def test_multimodal_frame_sample(spark):
-    import hashlib
-    media = MM.to_media_table(docs(spark), "id", "text", media_type="video")
-    sizes = {r["media_id"]: r["n_bytes"] for r in media.collect()}
-    frames = MM.sample_frames(media, frame_ms=40, max_frames=4).collect()
-    by_media = {}
-    for r in frames:
-        by_media.setdefault(r["media_id"], []).append(r)
-    for mid, fs in by_media.items():
-        n = 1 + sizes[mid] % 4
-        assert sorted(f["frame_idx"] for f in fs) == list(range(n))
-        for f in fs:
-            assert f["ts_ms"] == f["frame_idx"] * 40
-            assert f["frame_sha"] == hashlib.md5(
-                f"{mid}:{f['frame_idx']}".encode()).hexdigest()
-    # strided slices partition the blob: total frame bytes == blob bytes
-    for mid, fs in by_media.items():
-        assert sum(len(f["frame_bytes"]) for f in fs) == sizes[mid]
-
-
 def test_minhash_bucket_cap_drops_boilerplate(spark):
     from rassengine_spark.llmops.dedup import minhash_lsh_pairs
     # 8 identical boilerplate docs (collide in every band bucket) + one
@@ -280,28 +207,6 @@ def test_ngram_posting_cap_bounds_boilerplate_work(spark):
     assert all(a >= 100 for a, b in capped_pairs)
     # capped jaccards are lower bounds of the exact values
     assert all(capped_pairs[k] <= full_pairs[k] for k in capped_pairs)
-
-
-def test_datacard_rollup_grains_and_dup_rate(spark):
-    from rassengine_spark.llmops.datacard import datacard
-    rows = [(1, "a b c", "en", "s1"), (2, "a b c", "en", "s2"),
-            (3, "x y", "en", "s1"), (4, "p q r s", "es", "s1")]
-    df = spark.createDataFrame(rows, "id int, text string, lang string, "
-                                     "source string")
-    out = {(r["lang"], r["source"]): r
-           for r in datacard(df, "text", ["lang", "source"]).collect()}
-    # finest grain: (en, s1) has 2 docs, 1 of them a global exact dup
-    assert out[("en", "s1")]["n_docs"] == 2
-    assert out[("en", "s1")]["n_dup_docs"] == 1
-    assert out[("en", "s1")]["tot_tokens"] == 5
-    # lang margin: en = 3 docs, 2 dup members, 8 tokens
-    en = out[("en", None)]
-    assert (en["gid"], en["n_docs"], en["n_dup_docs"],
-            en["tot_tokens"]) == (1, 3, 2, 8)
-    # corpus total
-    tot = out[(None, None)]
-    assert (tot["gid"], tot["n_docs"], tot["tot_tokens"]) == (3, 4, 12)
-    assert tot["avg_tokens"] == 3.0
 
 
 # ---------------------------------------------------------------- decontam
@@ -471,85 +376,9 @@ def test_langid_fast_matches_expression_form(spark):
     assert slow == fast
 
 
-def test_audio_features_pcm16_real_decode(spark):
-    import math
-    import struct
-    sr = 16000
-    # 100 Hz sine, amplitude 10000, 0.1 s -> rms ~ 10000/sqrt(2)
-    n = sr // 10
-    samples = [int(10000 * math.sin(2 * math.pi * 100 * i / sr))
-               for i in range(n)]
-    pcm = struct.pack(f"<{n}h", *samples)
-    media = spark.createDataFrame(
-        [("a1", "audio", bytearray(pcm), len(pcm), "x"),
-         ("a2", "audio", bytearray(b"odd"), 3, "y")],
-        "media_id string, media_type string, content binary, "
-        "n_bytes long, sha256 string")
-    rows = {r["media_id"]: r
-            for r in MM.audio_features_pcm16(media, sr).collect()}
-    a1 = rows["a1"]
-    assert a1["n_samples"] == n and a1["duration_ms"] == 100
-    assert abs(a1["rms"] - 10000 / math.sqrt(2)) < 60
-    assert a1["peak"] <= 10000
-    # 100 Hz for 0.1 s -> ~20 zero crossings
-    assert 18 <= a1["zero_crossings"] <= 22
-    assert a1["decode_error"] is None
-    assert rows["a2"]["decode_error"] == "not 16-bit PCM"
-    assert rows["a2"]["rms"] is None
-
-
 def _ppm(w, h, rgb):
     header = b"P6\n%d %d\n255\n" % (w, h)
     return header + bytes(rgb) * (w * h)
-
-
-def test_image_features_and_resize_ppm(spark):
-    blob = _ppm(8, 4, (10, 20, 30))
-    media = spark.createDataFrame(
-        [("i1", "image", bytearray(blob), len(blob), "x"),
-         ("i2", "image", bytearray(b"JPEGnope"), 8, "y")],
-        "media_id string, media_type string, content binary, "
-        "n_bytes long, sha256 string")
-    feats = {r["media_id"]: r
-             for r in MM.image_features_ppm(media).collect()}
-    assert (feats["i1"]["width"], feats["i1"]["height"]) == (8, 4)
-    assert (feats["i1"]["mean_r"], feats["i1"]["mean_g"],
-            feats["i1"]["mean_b"]) == (10.0, 20.0, 30.0)
-    assert feats["i2"]["decode_error"] == "not P6"
-
-    resized = {r["media_id"]: r
-               for r in MM.resize_images_ppm(media, 4, 2).collect()}
-    out = bytes(resized["i1"]["content"])
-    assert out.startswith(b"P6\n4 2\n255\n")
-    # uniform image stays uniform after nearest-neighbor resize
-    assert out[len(b"P6\n4 2\n255\n"):] == bytes((10, 20, 30)) * 8
-    assert resized["i2"]["content"] is None
-
-
-def test_audio_features_wav_container(spark):
-    import math
-    import struct
-    sr, n = 8000, 800
-    samples = [int(9000 * math.sin(2 * math.pi * 50 * i / sr))
-               for i in range(n)]
-    pcm = struct.pack(f"<{n}h", *samples)
-    wav = (b"RIFF" + struct.pack("<I", 36 + len(pcm)) + b"WAVE"
-           + b"fmt " + struct.pack("<I", 16)
-           + struct.pack("<HHIIHH", 1, 1, sr, sr * 2, 2, 16)
-           + b"data" + struct.pack("<I", len(pcm)) + pcm)
-    media = spark.createDataFrame(
-        [("w1", "audio", bytearray(wav), len(wav), "x"),
-         ("w2", "audio", bytearray(b"RIFFxxxxNOPE"), 12, "y")],
-        "media_id string, media_type string, content binary, "
-        "n_bytes long, sha256 string")
-    rows = {r["media_id"]: r
-            for r in MM.audio_features_wav(media).collect()}
-    w1 = rows["w1"]
-    assert w1["n_samples"] == n
-    assert w1["duration_ms"] == 100           # 800 samples @ 8 kHz
-    assert abs(w1["rms"] - 9000 / math.sqrt(2)) < 60
-    assert w1["decode_error"] is None
-    assert rows["w2"]["decode_error"] == "not RIFF/WAVE"
 
 
 def test_incremental_dedup_against_signature_store(spark, tmp_path):

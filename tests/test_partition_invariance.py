@@ -18,7 +18,6 @@ QUERIES = [
     "pack_sequences",
     "q12_collapse_best_per_key",
     "tpch_q1_pricing",
-    "text_datacard",
     "bm25_batch_ranked",
     "events_funnel",
     # ordered-fold scores and cluster-keyed splits must also be

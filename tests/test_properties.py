@@ -91,34 +91,6 @@ def test_double_array_lit_roundtrips_exactly(spark, vals):
         assert g == v or (g != g and v != v)   # bit-exact (no NaN here)
 
 
-@given(vecs=st.lists(
-    st.lists(st.floats(min_value=-1e6, max_value=1e6,
-                       allow_nan=False, allow_infinity=False,
-                       width=32),
-             min_size=1, max_size=8),
-    min_size=1, max_size=6))
-@settings(**_SETTINGS)
-def test_int8_quantization_properties(spark, vecs):
-    """For any vector: q in [-127,127]; |x - deq(q)| <= scale/2; the
-    max-|x| element hits +-127 exactly (when nonzero)."""
-    from rassengine_spark.functions.vector import (dequantize, quantize_int8,
-                                                   quantize_scale)
-    from pyspark.sql import functions as F
-    df = spark.createDataFrame([(i, v) for i, v in enumerate(vecs)],
-                               "id int, v array<double>")
-    rows = (df.withColumn("qs", quantize_scale(F.col("v")))
-              .withColumn("q8", quantize_int8(F.col("v"), F.col("qs")))
-              .withColumn("back", dequantize(F.col("q8"), F.col("qs")))
-              .collect())
-    for r in rows:
-        assert all(-127 <= q <= 127 for q in r["q8"])
-        for orig, back in zip(r["v"], r["back"]):
-            assert abs(orig - back) <= r["qs"] / 2 + 1e-9
-        amax = max(abs(x) for x in r["v"])
-        if amax > 0:
-            assert 127 in [abs(q) for q in r["q8"]]
-
-
 @given(pairs=st.lists(st.tuples(st.integers(0, 255), st.integers(0, 255)),
                       min_size=1, max_size=20))
 @settings(**_SETTINGS)
@@ -435,23 +407,3 @@ def test_winnow_expr_arrow_parity(spark, texts):
     a = set(map(tuple,
                 winnow_fingerprints(df, "text", "id", 8, 4).collect()))
     assert e == a
-
-
-@settings(**_SETTINGS)
-@given(texts=st.lists(
-    st.text(alphabet=st.characters(min_codepoint=1, max_codepoint=0x2FFF),
-            max_size=150),
-    min_size=1, max_size=10))
-def test_ahash_expression_matches_python_twin_random(spark, texts):
-    """with_ahash_bands (JVM HOF expressions) vs ahash_bands_py on random
-    unicode — the integer cross-multiplication threshold, code-point
-    sampling, and band packing must agree exactly (ascii == ord parity
-    holds for any code point; astral verified in test_ahash.py)."""
-    from rassengine_spark.llmops.multimodal import (ahash_bands_py,
-                                                    with_ahash_bands)
-    df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)],
-                               "id int, t string")
-    got = {r.id: list(r.bands)
-           for r in with_ahash_bands(df, "t").collect()}
-    for i, t in enumerate(texts):
-        assert got[i] == ahash_bands_py(t), (i, repr(t))

@@ -1,10 +1,9 @@
-"""URL-level curation: host/domain extraction, per-URL feature flags,
-block/allow gating via broadcast joins."""
+"""URL-level curation: host/domain extraction and per-URL feature
+flags."""
 
 from pyspark.sql import functions as F
 
-from rassengine_spark.llmops.urls import (filter_by_domain,
-                                          registered_domain, url_features)
+from rassengine_spark.llmops.urls import registered_domain, url_features
 
 
 def test_url_features(spark):
@@ -27,23 +26,6 @@ def test_url_features(spark):
     assert out[3].is_ip
     assert out[4].suspect_ext
     assert out[5].host == "" and not out[5].is_ip
-
-
-def test_filter_by_domain(spark):
-    df = spark.createDataFrame(
-        [(1, "https://a.spam.biz/x"), (2, "https://www.good.org/y"),
-         (3, "https://other.net/z")], "doc_id long, url string")
-    block = spark.createDataFrame([("spam.biz",)], "domain string")
-    allow = spark.createDataFrame([("good.org",), ("spam.biz",)],
-                                  "domain string")
-    blocked = filter_by_domain(df, "url", blocklist=block)
-    assert {r.doc_id for r in blocked.collect()} == {2, 3}
-    gated = filter_by_domain(df, "url", blocklist=block, allowlist=allow)
-    assert {r.doc_id for r in gated.collect()} == {2}
-    # plan: the gates broadcast — no sort-merge join of the corpus
-    plan = gated._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan
 
 
 def test_registered_domain_single_label(spark):

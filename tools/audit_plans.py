@@ -34,7 +34,7 @@ PYTHON_OK = {
     "dedup_embedding_cosine_cells",
     # per-block gram-matrix prune (same numpy pass as the pairs entry):
     "dedup_semantic_prune",
-    "s7_embed_hash_ngram", "mm_binary_metadata",
+    "s7_embed_hash_ngram",
     # Arrow-batched shingle/minhash index passes (vectorized twins of the
     # interpreted expression forms — deliberate, see llmops/dedup.py);
     # dedup_incremental signatures both sides with the same pass:
@@ -45,12 +45,6 @@ PYTHON_OK = {
     # store variant serves persisted graphs through the cogroup pass):
     "sim_hnsw_topk", "sim_hnsw_recall", "sim_hnsw_store_recall",
     "sim_hnsw_store_append_recall",
-    # stub decode kernels over mapInPandas — the plumbing under audit:
-    "mm_resize_meta", "mm_frame_sample",
-    # int64 DCT kernel over mapInPandas (BIGINT-exact, oracle recomputes
-    # it relationally); the lazy checkpoint in ahash_near_pairs hides it
-    # from the displayed plan, listed here for robustness:
-    "mm_phash_near_dup",
     # Arrow-batched integer-stats / gram-hash passes (expression twins
     # parity-tested):
     "text_repetition", "decontam_ngram_overlap", "text_quality",
@@ -62,9 +56,6 @@ PYTHON_OK = {
     # NFC normalization has no Spark built-in — Arrow-vectorized
     # pandas_udf, oracle twin is DuckDB's utf8proc nfc_normalize:
     "text_unicode_clean",
-    # composed prep pipeline: its LSH + decontam stages are the same
-    # deliberate Arrow passes as dedup_minhash_lsh / decontam above:
-    "prep_training_corpus",
     # compose the lm-score pipeline (same deliberate pass as
     # text_lm_score above):
     "split_token_budget", "split_mixture_token_budget",
@@ -118,11 +109,6 @@ SORT_OK = {
     # SMJ per-partition sorts on the normalized-line join key (line stats
     # x exploded lines — both corpus-scale at 100 TB, broadcast is wrong):
     "text_line_dedup",
-    # SMJ sorts on the (band_idx, band_value) self-join key (both sides
-    # are the exploded corpus — broadcast is wrong), not a result sort:
-    "mm_ahash_near_dup",
-    # same banded join + the CC label-propagation SMJ sorts:
-    "mm_media_dedup_prep",
     # SMJ sorts per PageRank round (edges x |V|-row rank/degree frames —
     # every side is graph-scale at 100 TB, broadcast is wrong):
     "basket_part_pagerank",
@@ -175,10 +161,8 @@ SORT_OK = {
     # (brand,type,size) grains / <=|supplier| rows:
     "tpch_q11_important_parts", "tpch_q12_priority_mix",
     "tpch_q16_supplier_counts", "tpch_q20_heavy_shippers",
-    # window COUNT over md5(text) partitions (the dup flag): the Sort is
+    # window COUNT over the shingle key (posting-length cap): the Sort is
     # partition-local on the window key, not a global order-by:
-    "text_datacard",
-    # same shape on the shingle key (posting-length cap's COUNT window):
     "dedup_ngram_jaccard_capped",
     # SortMergeJoin's per-partition sorts on the cluster-map join (the map
     # comes from driver union-find -> createDataFrame, so no stats for a

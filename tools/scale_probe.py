@@ -73,7 +73,6 @@ FIXED_ROWS = {
     "tokenizer_fertility_by_lang",  # one row per language
     "sim_hnsw_recall",             # fixed query set
     "sim_bruteforce_topk",         # |Q| x k, both fixed
-    "m_quality_classifier_eval",   # 1 summary row
     "tpch_q1_pricing",             # grouping cardinality <= 6
     "events_mg_rollup_bounds",     # top-5 per event type
     "text_heavy_hitters_mg",       # top-10
@@ -129,7 +128,7 @@ EXPECTED_SUPERLINEAR = {
 }
 
 DEFAULT_ENTRIES = [
-    "prep_training_corpus", "basket_part_pagerank", "basket_part_lift",
+    "basket_part_pagerank", "basket_part_lift",
     "basket_part_lift_frac", "basket_part_triangles",
     "basket_part_triangles_frac",
     # dedup_ngram_jaccard_exact_unbounded is EXEMPT by design: it is the
@@ -142,18 +141,16 @@ DEFAULT_ENTRIES = [
     "sim_bruteforce_topk", "sim_hnsw_recall",
     "tokenizer_bpe_merges", "tokenizer_bpe_token_counts",
     "text_winnow_fingerprints", "text_line_dedup", "text_span_dedup",
-    "bm25_known_item_eval", "m_quality_classifier_eval",
+    "bm25_known_item_eval",
     "split_token_budget", "split_epoch_shuffle", "events_sessionize",
     "tpch_q1_pricing", "tpch_q21_waiting_orders", "s7_embed_hash_ngram",
     "events_mg_rollup_bounds", "text_heavy_hitters_mg",
     # round-5 additions
     "orders_scd2_priority", "split_curriculum_order", "q13_fuzzy_trigram",
-    "events_ewma_daily", "mm_phash_near_dup", "mm_ahash_near_dup",
-    "mm_media_dedup_prep",
-    "tokenizer_compression_eval", "mm_ahash_incremental",
+    "events_ewma_daily", "tokenizer_compression_eval",
     "skew_salted_join",
-    # round-8 composed entries
-    "pipeline_health_rollup", "ask_two_tenants_pruned",
+    # round-8 composed entry
+    "ask_two_tenants_pruned",
 ]
 
 
