@@ -6,8 +6,10 @@ of the reference's REST endpoints has a direct equivalent for each flow.
         text / markdown, chunk, embed (deterministic default embedder),
         upsert into warehouse parquet tables.
 
-    python -m rassengine_spark ask "QUESTION" --warehouse DIR [--top-k K]
-        the /ask flow (SURVEY §3.1): NER filter -> intent route ->
+    python -m rassengine_spark ask "QUESTION" --warehouse DIR [--user U]
+            [--top-k K]
+        the /ask flow (SURVEY §3.1) over user U's rows (the same default
+        as ingest's): NER filter -> intent route ->
         dispatched search -> context assembly -> (template) answer. Prints
         intent, hits, and the answer. `--rerank` enables the second-stage
         term-overlap rerank.
@@ -54,7 +56,7 @@ def _cmd_ask(args) -> int:
     docs = spark.read.parquet(os.path.join(args.warehouse, "documents"))
     chunks = spark.read.parquet(os.path.join(args.warehouse, "chunks"))
     pipe = AskPipeline(docs, chunks, dim=args.dim, rerank=args.rerank)
-    res = pipe.ask(args.question, top_k=args.top_k)
+    res = pipe.ask(args.question, args.user, top_k=args.top_k)
     print(f"intent: {res.intent}")
     if res.hits is not None:
         for r in res.hits.select("doc_id").collect():
@@ -175,6 +177,7 @@ def build_parser() -> argparse.ArgumentParser:
     pa = sub.add_parser("ask", help="intent-routed search + answer")
     pa.add_argument("question")
     pa.add_argument("--warehouse", required=True)
+    pa.add_argument("--user", default="default")
     pa.add_argument("--top-k", type=int, default=3)
     pa.add_argument("--dim", type=int, default=64)
     pa.add_argument("--rerank", action="store_true")

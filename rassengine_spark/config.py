@@ -19,7 +19,6 @@ class EngineConfig:
     embed_dim: int = 1024
     chunk_size: int = 512           # words per chunk, no overlap
     max_chat_history: int = 10
-    max_files_per_patient: int = 5
 
     # Ingestion caps (reference: app/embedding_gen.py:68-70)
     max_files_per_request: int = 5

@@ -12,10 +12,11 @@ Semantics reproduced (SURVEY.md §2.3; public OpenSearch docs):
 - `filter` clauses are non-scoring predicates.
 
 All builders return Spark SQL text (see functions/text.py for why), which
-the search operator parses with one `F.expr`; the operator is then
-`df.withColumn("score", F.expr(sql)).orderBy(desc, id).limit(k)` and a
-`score > 0` filter on the k rows, which Spark executes as scan -> project
--> TakeOrderedAndProject: a k-heap per partition, so only k rows per
+the search operator parses with one `F.expr`. The operator's top-k
+(operators/search.py::_topk) evaluates it once in a generator that emits
+only rows with score > 0, then orders by (score desc, id) and limits to k.
+A collect runs that as scan -> generate -> TakeOrderedAndProject in one
+stage: a k-heap per partition, merged on the driver, so only k rows per
 partition leave it — the same early termination the reference gets from
 `terminate_after: k` (app/main.py:1515).
 """
@@ -96,7 +97,7 @@ def prefix_and_best_fields(fields: list[str], query: str,
 def should_sum(*clauses: str) -> str:
     """bool.should scoring: sum of clause scores (each already boosted),
     folded left from 0.0. minimum_should_match:1 is enforced by the
-    caller's `score > 0` filter."""
+    top-k's `score > 0` cut."""
     out = "0.0D"
     for c in clauses:
         out = f"({out} + coalesce({c}, 0.0D))"

@@ -9,13 +9,16 @@ data, so the same operators run on any corpus).
 Scale notes (every operator):
 - score is one SQL-text expression (functions/scoring.py), parsed by a
   single `F.expr`, whose shape does not depend on the query's terms.
-- score is a pure projection -> stays in one WholeStageCodegen span with the
-  parquet scan; filters and non-scoring predicates (`filter_expr`,
-  `patient_id`) are plain predicates Catalyst pushes into the scan.
-- top-k uses orderBy(...).limit(k) -> TakeOrderedAndProject: each partition
-  keeps a k-heap and one task merges the P heaps; no global sort shuffle.
-  This is the distributed analog of the reference's `terminate_after: k`.
+- filters and non-scoring predicates (`filter_expr`, `partition_key`) are
+  plain predicates Catalyst pushes into the scan.
+- top-k (`_topk`) is orderBy(...).limit(k) over a generator that scores
+  each row once and emits it only when score > 0, so the plan's top is
+  Limit(Sort): a collect runs it as TakeOrderedAndProject, a k-heap per
+  partition merged on the driver, in one job of one stage. This is the
+  distributed analog of the reference's `terminate_after: k`.
 - ties are broken on the corpus id column so results are deterministic.
+- a `NameMatch` partition key resolves a patient name inside the route's
+  own plan, with one shuffle (`_per_patient_topk`).
 """
 
 from __future__ import annotations
@@ -47,21 +50,93 @@ class CorpusSpec:
     partition_col: str | None = None                        # patientId analog
 
 
-def _topk(df: DataFrame, spec: CorpusSpec, k: int,
-          round_to: int | None = None) -> DataFrame:
-    """score>0, order by (score desc, id asc), limit k — deterministic.
+@dataclass(frozen=True)
+class NameMatch:
+    """A route's `partition_key` when the query names a person (Q13,
+    app/main.py:2774-2778): the route runs per patient whose `name_col`
+    matches `name`, and its rows carry the top `ids` patient ids."""
+    name: str
+    name_col: str
+    ids: int = 3
+
+
+def name_score_sql(name_col: str, query_name: str) -> str:
+    """Q13's 3-tier name score: exact term 3, phrase 2, fuzzy AND 1."""
+    terms = T.terms_of(query_name)
+    name = sql_quote(" ".join(terms))
+    return (
+        f"greatest(CAST(lower({qident(name_col)}) = {name} AS DOUBLE) * 3.0D, "
+        f"CAST({T.phrase_match_sql(name_col, query_name)} AS DOUBLE) * 2.0D, "
+        f"CAST({T.all_terms_fuzzy_sql(T.tokens_sql(name_col), terms)} "
+        f"AS DOUBLE) * 1.0D)")
+
+
+def _name_max(name: NameMatch) -> Column:
+    """A key's name score: the best of its rows (OpenSearch collapse)."""
+    return F.max(F.expr(name_score_sql(name.name_col, name.name)))
+
+
+def matched_ids(rows: list, key_col: str, n: int) -> list:
+    """The first `n` distinct keys of a NameMatch frame's collected rows,
+    which come grouped by key in name-score order."""
+    return list(dict.fromkeys(r[key_col] for r in rows))[:n]
+
+
+def _topk(df: DataFrame, spec: CorpusSpec, score_sql: str, k: int,
+          filter_expr: Column | None = None, partition_key=None,
+          round_to: int | None = None, where: str | None = None,
+          order: list[Column] | None = None) -> DataFrame:
+    """Rows passing `filter_expr` and `where` with score > 0, ordered by
+    `order` (default score desc) then id asc, limit k — deterministic.
 
     `round_to` rounds the score BEFORE ordering: scores containing float
     dot-products are only reproducible across engines up to rounding, so
     ranking must happen on the rounded value (indicator/count scores are
     exact dyadic rationals and need no rounding)."""
     if round_to is not None:
-        df = df.withColumn("score", F.round(F.col("score"), round_to))
-    # score>0 after the limit keeps the same rows (positive scores sort
-    # first) and keeps Catalyst from copying the score expression into a
-    # pushed-down filter, which would evaluate and compile it twice
-    return (df.orderBy(F.col("score").desc(), F.col(spec.id_col).asc())
-              .limit(k).filter(F.col("score") > 0))
+        score_sql = f"round({score_sql}, {int(round_to)})"
+    order = [*(order or [F.col("score").desc()]), F.col(spec.id_col).asc()]
+    if isinstance(partition_key, NameMatch):
+        return _per_patient_topk(df, spec, F.expr(score_sql), k, filter_expr,
+                                 partition_key, where, order)
+    df = _apply_filters(df, filter_expr, spec, partition_key, where)
+    # a filter on a projected score would be pushed into the scan as a
+    # second copy of the expression, and one above the limit would plan
+    # the take-ordered mid-plan, with its own merge stage
+    positive = F.expr(f"explode(filter(array({score_sql}), s -> s > 0))")
+    return (df.select("*", positive.alias("score"))
+              .orderBy(*order).limit(k))
+
+
+def _per_patient_topk(df: DataFrame, spec: CorpusSpec, score: Column,
+                      k: int, filter_expr: Column | None, name: NameMatch,
+                      where: str | None, order: list[Column]) -> DataFrame:
+    """The route's top-k per patient that `name` matches, in one shuffle:
+    a generator keeps the rows that match the name or score > 0 under the
+    filters (the score is NULL where a filter fails); one window on the
+    patient holds its name score (`_nmax`) and the route rank (`_rank`);
+    a top-level take-ordered keeps `name.ids` patients' rows ordered (name
+    score desc, patient id asc, rank). Every matched patient keeps a row,
+    so the ids never depend on the route; the caller keeps the first
+    patient's rows with score > 0."""
+    pc = spec.partition_col
+    for cond in [filter_expr, None if where is None else F.expr(where)]:
+        if cond is not None:
+            score = F.when(cond, score)
+    row = F.struct(F.expr(name_score_sql(name.name_col, name.name))
+                   .alias("_name"), score.alias("score"))
+    kept = F.filter(F.array(row),
+                    lambda r: (r["_name"] > 0) | (r["score"] > 0))
+    hit = F.coalesce(F.col("score") > 0, F.lit(False))
+    ranked = Window.partitionBy(pc).orderBy(hit.desc(), *order)
+    patient = ranked.rowsBetween(Window.unboundedPreceding,
+                                 Window.unboundedFollowing)
+    return (df.select("*", F.inline(kept))
+              .select("*", F.max("_name").over(patient).alias("_nmax"),
+                      F.row_number().over(ranked).alias("_rank"))
+              .filter((F.col("_nmax") > 0) & (F.col("_rank") <= k))
+              .orderBy(F.col("_nmax").desc(), F.col(pc).asc(), "_rank")
+              .limit(name.ids * k))
 
 
 def _knn_sql(spec: CorpusSpec, query_vec: list[float]) -> str:
@@ -81,13 +156,18 @@ def _recent_sql(date_fields: list[str], now: str | None,
 
 
 def _apply_filters(df: DataFrame, filter_expr: Column | None,
-                   spec: CorpusSpec, partition_key=None) -> DataFrame:
-    """Non-scoring `filter` context (predicate pushdown; reference P1/P2)."""
+                   spec: CorpusSpec, partition_key=None,
+                   where: str | None = None) -> DataFrame:
+    """Non-scoring `filter` context (predicate pushdown; reference P1/P2),
+    as one filter."""
+    conds = [] if where is None else [F.expr(where)]
     if partition_key is not None and spec.partition_col:
-        df = df.filter(F.col(spec.partition_col) == F.lit(partition_key))
+        conds.append(F.col(spec.partition_col) == F.lit(partition_key))
     if filter_expr is not None:
-        df = df.filter(filter_expr)
-    return df
+        conds.append(filter_expr)
+    for c in conds[1:]:
+        conds[0] = conds[0] & c
+    return df.filter(conds[0]) if conds else df
 
 
 # ---------------------------------------------------------------- Q1
@@ -100,8 +180,7 @@ def exact_match_search(df: DataFrame, spec: CorpusSpec, query: str, k: int = 3,
     score = S.should_sum(
         S.phrase_best_fields(spec.text_fields, query, text_boost),
         S.exact_best_fields(spec.keyword_fields, query, kw_boost))
-    df = _apply_filters(df, filter_expr, spec, partition_key)
-    return _topk(df.withColumn("score", F.expr(score)), spec, k)
+    return _topk(df, spec, score, k, filter_expr, partition_key)
 
 
 # ---------------------------------------------------------------- Q2
@@ -112,9 +191,8 @@ def semantic_search(df: DataFrame, spec: CorpusSpec, query_vec: list[float],
     vector, top-k. (reference `semantic_search`, app/main.py:1527-1560.)
     Exact scan is O(n·d) but embarrassingly parallel; the approximate path
     for huge corpora is the sharded-HNSW store (llmops/hnsw.py)."""
-    df = _apply_filters(df, filter_expr, spec, partition_key)
-    return _topk(df.withColumn("score", F.expr(_knn_sql(spec, query_vec))),
-                 spec, k, round_to)
+    return _topk(df, spec, _knn_sql(spec, query_vec), k, filter_expr,
+                 partition_key, round_to)
 
 
 # ---------------------------------------------------------------- Q3
@@ -131,10 +209,8 @@ def hybrid_search(df: DataFrame, spec: CorpusSpec, query: str,
     lex_kw = S.exact_term_best_fields(spec.keyword_fields, query, kw_boost)
     knn = (f"({_knn_sql(spec, query_vec)} * {S.dlit(knn_boost)})"
            if spec.embedding_col else "0.0D")
-    df = _apply_filters(df, filter_expr, spec, partition_key)
-    return _topk(df.withColumn(
-        "score", F.expr(S.should_sum(lex_text, lex_kw, knn))), spec, k,
-        round_to)
+    return _topk(df, spec, S.should_sum(lex_text, lex_kw, knn), k,
+                 filter_expr, partition_key, round_to)
 
 
 # ---------------------------------------------------------------- Q4
@@ -149,8 +225,7 @@ def structured_search(df: DataFrame, spec: CorpusSpec, query: str, k: int = 3,
     1626-1647); we implement the evident intended semantics using the field
     list it does define at app/main.py:1722-1742 (SURVEY.md §7.3 risk 2)."""
     score = S.prefix_and_best_fields(spec.structured_fields, query, 1.0)
-    df = _apply_filters(df, filter_expr, spec, partition_key)
-    return _topk(df.withColumn("score", F.expr(score)), spec, k)
+    return _topk(df, spec, score, k, filter_expr, partition_key)
 
 
 # ---------------------------------------------------------------- Q5
@@ -171,9 +246,8 @@ def hybrid_structured_search(df: DataFrame, spec: CorpusSpec, query: str,
                f"ELSE 0.0D END")
     else:
         knn = "0.0D"
-    df = _apply_filters(df, filter_expr, spec, partition_key)
-    return _topk(df.withColumn("score", F.expr(S.should_sum(lex, knn))),
-                 spec, k, round_to)
+    return _topk(df, spec, S.should_sum(lex, knn), k, filter_expr,
+                 partition_key, round_to)
 
 
 # ---------------------------------------------------------------- Q6
@@ -181,26 +255,51 @@ def aggregate_search(df: DataFrame, spec: CorpusSpec, group_fields: list[str],
                      size: int = 5, filter_expr: Column | None = None,
                      partition_key=None) -> DataFrame:
     """Q6 AGGREGATE: `terms` aggregations — top-`size` value counts per group
-    field, tie-broken count desc then key asc (OpenSearch terms-agg order).
-    Returns a union frame (dim, key, cnt) — one block per aggregation.
+    field, ranked count desc then key asc (OpenSearch terms-agg order), as
+    unordered (dim, key, cnt) rows; the caller orders them.
     (reference `aggregate_search`, app/main.py:1777-1808.)
 
-    Scale: groupBy().count() gets map-side partial aggregation for free; the
-    per-dim limit is a TakeOrderedAndProject over the agg output."""
-    df = _apply_filters(df, filter_expr, spec, partition_key)
-    blocks = []
-    for gf in group_fields:
-        blocks.append(
-            df.filter(F.col(gf).isNotNull())
-              .groupBy(F.col(gf).cast("string").alias("key"))
-              .agg(F.count(F.lit(1)).alias("cnt"))
-              .orderBy(F.col("cnt").desc(), F.col("key").asc())
-              .limit(size)
-              .select(F.lit(gf).alias("dim"), "key", "cnt"))
-    out = blocks[0]
-    for b in blocks[1:]:
-        out = out.unionAll(b)
-    return out
+    Scale: each row is stacked into its (dim, key) pairs, hash-partitioned
+    by dim once, counted by one groupBy and cut by one rank-per-dim window
+    on that same partitioning: one scan and one shuffle for all the dims.
+    A `NameMatch` key partitions by patient instead, so the name score
+    shares the shuffle: each matched patient's top buckets, plus one
+    dim-NULL row so the patient shows when the filter leaves it none,
+    under a take-ordered of `ids` patients (as in `_per_patient_topk`)."""
+    named = isinstance(partition_key, NameMatch)
+    keep = F.lit(True)
+    if not named:
+        df = _apply_filters(df, filter_expr, spec, partition_key)
+    elif filter_expr is not None:   # named: the filter must not drop rows
+        keep = F.coalesce(filter_expr, F.lit(False))
+    pairs = [F.struct(F.lit(gf).alias("dim"),
+                      F.when(keep, F.col(gf).cast("string")).alias("key"))
+             for gf in group_fields]
+    by: list[str] = []
+    if named:
+        name, pc = partition_key, spec.partition_col
+        pairs.append(F.struct(F.lit(None).cast("string").alias("dim"),
+                              F.lit(None).cast("string").alias("key")))
+        df = (df.select(pc, F.expr(name_score_sql(name.name_col, name.name))
+                        .alias("_name"), F.inline(F.array(*pairs)))
+                .withColumn("_nmax", F.max("_name").over(
+                    Window.partitionBy(pc)))
+                .filter((F.col("_nmax") > 0) & (F.col("dim").isNull()
+                                                | F.col("key").isNotNull())))
+        by = [pc, "_nmax"]
+    else:
+        df = (df.select(F.inline(F.array(*pairs)))
+                .filter(F.col("key").isNotNull()).repartition("dim"))
+    rank = Window.partitionBy(*by[:1], "dim").orderBy(F.col("cnt").desc(),
+                                                      F.col("key").asc())
+    top = (df.groupBy(*by, "dim", "key").agg(F.count(F.lit(1)).alias("cnt"))
+             .withColumn("_rank", F.row_number().over(rank))
+             .filter(F.col("_rank") <= size))
+    if not named:
+        return top.select("dim", "key", "cnt")
+    return (top.orderBy(F.col("_nmax").desc(), F.col(pc).asc(), "dim",
+                        "_rank")
+               .limit(name.ids * (len(group_fields) * size + 1)))
 
 
 # ---------------------------------------------------------------- Q7
@@ -212,8 +311,7 @@ def comparison_search(df: DataFrame, spec: CorpusSpec, query: str, k: int = 3,
     (app/main.py:1850-1861) — we return only hits, same as its output."""
     fields = list(spec.compare_fields.keys())
     score = S.fuzzy_best_fields(fields, query, 1.0, spec.compare_fields)
-    df = _apply_filters(df, filter_expr, spec, partition_key)
-    return _topk(df.withColumn("score", F.expr(score)), spec, k)
+    return _topk(df, spec, score, k, filter_expr, partition_key)
 
 
 # ---------------------------------------------------------------- Q8
@@ -231,14 +329,9 @@ def temporal_search(df: DataFrame, spec: CorpusSpec, query: str, k: int = 3,
         S.fuzzy_best_fields(spec.text_fields, query, 1.0),
         S.exact_term_best_fields(spec.keyword_fields, query, 1.0))
     sort_field = sort_field or spec.date_fields[0]
-    df = _apply_filters(df, filter_expr, spec, partition_key)
-    hit = F.col("score") > 0
-    # matched rows sort first, so filtering after the limit keeps the same
-    # rows without copying `lex` into a pushed-down filter (see _topk)
-    return (df.filter(F.expr(in_range)).withColumn("score", F.expr(lex))
-              .orderBy(hit.desc(), F.col(sort_field).desc_nulls_last(),
-                       F.col(spec.id_col).asc())
-              .limit(k).filter(hit))
+    return _topk(df, spec, lex, k, filter_expr, partition_key,
+                 where=in_range,
+                 order=[F.col(sort_field).desc_nulls_last()])
 
 
 # ---------------------------------------------------------------- Q9
@@ -249,8 +342,7 @@ def explanatory_search(df: DataFrame, spec: CorpusSpec, query: str,
     (reference `explanatory_search`, app/main.py:1920-1967)."""
     fields = list(spec.note_fields.keys())
     score = S.fuzzy_best_fields(fields, query, 1.0, spec.note_fields)
-    df = _apply_filters(df, filter_expr, spec, partition_key)
-    return _topk(df.withColumn("score", F.expr(score)), spec, k)
+    return _topk(df, spec, score, k, filter_expr, partition_key)
 
 
 # ---------------------------------------------------------------- Q10
@@ -276,8 +368,7 @@ def multi_intent_search(df: DataFrame, spec: CorpusSpec, query: str,
         S.exact_term_best_fields(spec.keyword_fields, query, kw_boost),
         knn,
         f"(CAST({recent} AS DOUBLE) * {S.dlit(recency_boost)})")
-    df = _apply_filters(df, filter_expr, spec, partition_key)
-    return _topk(df.withColumn("score", F.expr(score)), spec, k, round_to)
+    return _topk(df, spec, score, k, filter_expr, partition_key, round_to)
 
 
 # ---------------------------------------------------------------- Q11
@@ -290,8 +381,7 @@ def entity_specific_search(df: DataFrame, spec: CorpusSpec, query: str,
     score = S.best_fields(
         [f"CAST({T.phrase_match_sql(f, query)} AS DOUBLE) * {S.dlit(b)}"
          for f, b in spec.identity_fields.items()], 1.0)
-    df = _apply_filters(df, filter_expr, spec, partition_key)
-    return _topk(df.withColumn("score", F.expr(score)), spec, k)
+    return _topk(df, spec, score, k, filter_expr, partition_key)
 
 
 # ---------------------------------------------------------------- Q12 / W1
@@ -307,20 +397,24 @@ def collapse_best_per_key(df: DataFrame, key_col: str, order_col: str,
               .filter(F.col("_rn") == 1).drop("_rn"))
 
 
-def document_fetch_search(df: DataFrame, spec: CorpusSpec, partition_keys,
-                          score_col: str, k: int = 3,
-                          max_per_key: int = 5) -> DataFrame:
-    """Q12 DOCUMENT_FETCH: filter to the resolved keys, collapse to the best
-    doc per key (reference app/main.py:2120-2150), cap at `max_per_key`
-    files per key downstream (app/main.py:108)."""
-    df = df.filter(F.col(spec.partition_col).isin(list(partition_keys)))
-    best = collapse_best_per_key(df, spec.partition_col, score_col,
-                                 spec.id_col)
-    # deterministic size-k cut (the reference's `size: k` keeps the k
-    # highest-scoring collapsed hits): a bare limit() would keep an
-    # arbitrary, partitioning-dependent subset of the keys
-    return (best.orderBy(F.col(score_col).desc(), F.col(spec.id_col).asc())
-                .limit(k))
+def document_fetch_search(df: DataFrame, spec: CorpusSpec,
+                          name: NameMatch) -> DataFrame:
+    """Q12 DOCUMENT_FETCH: the patients `name` matches (Q13), each collapsed
+    to its lowest-id doc (reference app/main.py:2120-2150; every fetched
+    doc scores 1.0, so the collapse's id tie-break decides) by one
+    groupBy that also carries the patient's name score; the top
+    `name.ids` patients by (name score desc, patient id asc). The reference's
+    `size: k` cut keeps the k lowest ids of these rows, which the caller
+    takes from the collected rows."""
+    pc = spec.partition_col
+    best = (df.groupBy(pc)
+              .agg(_name_max(name).alias("_nmax"),
+                   F.min_by(F.struct(*df.columns), F.col(spec.id_col))
+                   .alias("_doc"))
+              .filter(F.col("_nmax") > 0)
+              .orderBy(F.col("_nmax").desc(), F.col(pc).asc())
+              .limit(name.ids))
+    return best.select("_doc.*", F.lit(1.0).alias("score"), "_nmax")
 
 
 # ---------------------------------------------------------------- Q13
@@ -328,18 +422,12 @@ def resolve_ids_from_name(df: DataFrame, name_col: str, id_col: str,
                           query_name: str, k: int = 3) -> DataFrame:
     """Q13 name -> id resolution: 3-tier scored match (exact term=3,
     phrase=2, fuzzy AND=1), collapse per id, top-k ids.
-    (reference `resolve_patient_ids_from_name`, app/main.py:2637-2744.)"""
-    terms = T.terms_of(query_name)
-    name = sql_quote(" ".join(terms))
-    score = (
-        f"greatest(CAST(lower({qident(name_col)}) = {name} AS DOUBLE) * 3.0D, "
-        f"CAST({T.phrase_match_sql(name_col, query_name)} AS DOUBLE) * 2.0D, "
-        f"CAST({T.all_terms_fuzzy_sql(T.tokens_sql(name_col), terms)} "
-        f"AS DOUBLE) * 1.0D)")
-    scored = df.withColumn("score", F.expr(score)).filter(F.col("score") > 0)
-    best = collapse_best_per_key(scored, id_col, "score", id_col)
-    return (best.orderBy(F.col("score").desc(), F.col(id_col).asc())
-                .limit(k).select(id_col, "score"))
+    (reference `resolve_patient_ids_from_name`, app/main.py:2637-2744.)
+    An ask resolves the same score inside its route's plan (`NameMatch`)."""
+    best = (df.groupBy(id_col)
+              .agg(_name_max(NameMatch(query_name, name_col)).alias("score"))
+              .filter(F.col("score") > 0))
+    return best.orderBy(F.col("score").desc(), F.col(id_col).asc()).limit(k)
 
 
 def _char_trigrams(s) -> "F.Column":

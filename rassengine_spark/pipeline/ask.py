@@ -13,23 +13,27 @@ The corpus spec mirrors the reference's hardcoded FHIR field groups
 
 from __future__ import annotations
 
+import datetime as dt
 import uuid
 from dataclasses import dataclass, field
+from functools import cached_property
 from typing import Callable
+from zoneinfo import ZoneInfo, ZoneInfoNotFoundError
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import (ArrayType, DateType, StructType,
+                               TimestampType)
 
 from ..config import EngineConfig, DEFAULT
 from ..ml.embed import EmbedFn, embed_query
 from ..ml.intent import classify_intent
 from ..ml.ner import ner_filter, tag_entities
 from ..operators import search as ops
-from ..operators.search import CorpusSpec
+from ..operators.search import CorpusSpec, NameMatch
 from ..operators.windows import last_n_per_key
 from ..schemas import (DATE_FIELDS, KEYWORD_FIELDS, STRUCTURED_FIELDS,
                        TEXT_FIELDS)
-from ..util import qident, sql_quote
 
 # FHIR corpus spec — field groups from app/main.py:1403-1468; note/identity/
 # compare boosts from the per-method DSL (app/main.py:1819-1826, 1929-1937,
@@ -70,34 +74,74 @@ class AskResult:
     query: str
     intent: str
     answer: str
-    hits: DataFrame | None = None
+    rows: list[Row] | None = None      # the answer's hits, best first
     aggregations: dict | None = None
     patient_ids: list[str] = field(default_factory=list)
+    schema: StructType | None = None   # of `rows`
+
+    @cached_property
+    def hits(self) -> DataFrame | None:
+        """`rows` as a DataFrame, built on first use from the rows the ask
+        collected (the route's plan does not run again)."""
+        if self.rows is None:
+            return None
+        return SparkSession.active().createDataFrame(
+            self.rows, self.schema, verifySchema=False)
 
 
-def render_context(hits: DataFrame, id_col: str = "doc_id",
+# helper columns that ride along with an ask's collected rows
+_HELPERS = ("_name", "_nmax", "_rank")
+
+
+def _session_tz() -> dt.tzinfo:
+    """The session time zone: a region id or a '(+|-)HH:mm' offset."""
+    name = SparkSession.active().conf.get("spark.sql.session.timeZone")
+    try:
+        return ZoneInfo(name)
+    except (ValueError, ZoneInfoNotFoundError):
+        sign = -1 if name[0] == "-" else 1
+        return dt.timezone(sign * dt.timedelta(hours=int(name[1:3]),
+                                               minutes=int(name[4:6])))
+
+
+def _spark_str(v, dtype, tz: dt.tzinfo | None) -> str:
+    """`v` as Spark's CAST(v AS STRING) prints it. Doubles print as Python
+    does, which is Spark's form for magnitudes in [1e-3, 1e7)."""
+    if isinstance(dtype, TimestampType):   # collected as local wall time
+        v = v.astimezone(tz)
+        frac = f".{v.microsecond:06d}".rstrip("0") if v.microsecond else ""
+        return f"{v.year:04d}-{v:%m-%d %H:%M:%S}{frac}"
+    if isinstance(dtype, DateType):
+        return f"{v.year:04d}-{v:%m-%d}"
+    return str(v).lower() if isinstance(v, bool) else str(v)
+
+
+def render_context(rows: list[Row], schema: StructType,
+                   id_col: str = "doc_id",
                    text_col: str = "unstructuredText") -> str:
     """Stage 10 (app/main.py:2894-2921): per-hit snippet — raw text for
-    unstructured docs, 'k: v | k: v' of non-null fields for structured —
-    deduped by doc_id, joined by newlines. Runs on the already-limited top-k
-    frame, so the collect is k rows, not a corpus scan."""
+    unstructured docs, 'k: v | k: v' of the non-null fields for structured
+    ones — deduped by doc_id, joined by newlines. It formats the rows the
+    ask collected, so it runs no Spark job."""
     exclude = {id_col, "doc_type", "resourceType", "embedding", "score",
                "user_id", "file_path", "file_type"}
-    dtypes = hits.dtypes
-    kvs = [f"CASE WHEN {qident(c)} IS NOT NULL THEN "
-           f"concat({sql_quote(c + ': ')}, CAST({qident(c)} AS STRING)) END"
-           for c, t in dtypes
-           if c not in exclude and not t.startswith("array")]
-    snippet = f"array_join(array_compact(array({', '.join(kvs)})), ' | ')"
-    if any(c == text_col for c, _ in dtypes):
-        snippet = f"coalesce({qident(text_col)}, {snippet})"
-    rows = hits.select(id_col, F.expr(snippet)).collect()
+    fields = [f for f in schema.fields if f.name not in exclude
+              and not isinstance(f.dataType, ArrayType)]
+    tz = (_session_tz() if any(isinstance(f.dataType, TimestampType)
+                               for f in fields) else None)
+    has_text = text_col in schema.fieldNames()
     seen: dict[str, str] = {}
     for r in rows:                       # D1 dedup-concat (app/main.py:2894)
-        if r[0] in seen and seen[r[0]] != r[1]:
-            seen[r[0]] += "\n" + r[1]
+        text = r[text_col] if has_text else None
+        if text is None:
+            text = " | ".join(
+                f"{f.name}: {_spark_str(r[f.name], f.dataType, tz)}"
+                for f in fields if r[f.name] is not None)
+        i = r[id_col]
+        if i in seen and seen[i] != text:
+            seen[i] += "\n" + text
         else:
-            seen.setdefault(r[0], r[1])
+            seen.setdefault(i, text)
     return "\n".join(seen.values())
 
 
@@ -168,20 +212,21 @@ class AskPipeline:
                          for r in hist.select("role", "content").collect())
 
     # ---- stage 5: name resolution (Q13, app/main.py:2774-2778)
-    def resolve_patients(self, query: str, k: int = 3) -> list[str]:
+    def resolve_patients(self, query: str, k: int = 3) -> NameMatch | None:
+        """The patient scope of a query that names a person. It runs no
+        job: each route resolves the name inside its own plan and returns
+        the top-k patient ids from the same action (ops.NameMatch)."""
         persons = [e.text for e in tag_entities(query)
                    if e.label == "PERSON"]
-        if not persons:
-            return []
-        resolved = ops.resolve_ids_from_name(
-            self.documents, "patientName", "patientId", persons[0], k)
-        return [r[0] for r in resolved.select("patientId").collect()]
+        return NameMatch(persons[0], "patientName", k) if persons else None
 
     # ---- stage 9: dispatch (app/main.py:2858-2892)
     def dispatch(self, intent: str, query: str, qvec: list[float],
                  k: int, filter_expr: Column | None,
-                 patient_id: str | None) -> DataFrame:
-        c, s = self.corpus, self.spec
+                 patient_id: str | NameMatch | None,
+                 corpus: DataFrame | None = None) -> DataFrame:
+        c = self.corpus if corpus is None else corpus
+        s = self.spec
 
         def hybrid(frame):
             return ops.hybrid_search(frame, s, query, qvec, k, filter_expr,
@@ -197,14 +242,14 @@ class AskPipeline:
                                        patient_id, round_to=6)
         if intent == "HYBRID":
             return hybrid(c)
-        structured = c.filter(F.col("doc_type") == "structured")  # P3
+        structured = F.col("doc_type") == "structured"          # P3
         if intent == "STRUCTURED":
-            return ops.structured_search(structured, s, query, k,
+            return ops.structured_search(c.filter(structured), s, query, k,
                                          filter_expr, patient_id)
         if intent == "HYBRID_STRUCTURED":
             return ops.hybrid_structured_search(
-                structured, s, query, qvec, k, filter_expr, patient_id,
-                round_to=6)
+                c.filter(structured), s, query, qvec, k, filter_expr,
+                patient_id, round_to=6)
         if intent == "COMPARISON":
             return ops.comparison_search(c, s, query, k, filter_expr,
                                          patient_id)
@@ -233,60 +278,96 @@ class AskPipeline:
                                               patient_id)
         return hybrid(c)                                   # default route
 
-    def ask(self, query: str, user_id: str = "", chat_id: str | None = None,
+    def ask(self, query: str, user_id: str, chat_id: str | None = None,
             top_k: int | None = None) -> AskResult:
-        """The full §3.1 lifecycle, LLM pluggable."""
+        """The full §3.1 lifecycle over `user_id`'s rows, LLM pluggable.
+        The route, the name resolution and the context come from one
+        Spark action; a second runs only when the query names a person
+        nobody matches, or for the rerank stage."""
         if not query.strip():
             raise ValueError("query must be non-empty")   # app/main.py:2756
+        if not user_id:
+            raise ValueError("user_id must be non-empty")
         if chat_id and not self.check_chat_ownership(chat_id, user_id):
             raise PermissionError("chat does not belong to user")
         k = top_k or self.cfg.top_k
         filter_expr = ner_filter(query)                   # stage 3 (P2)
         intent = classify_intent(query)                   # stage 4 (M1)
-        pids = self.resolve_patients(query)               # stage 5 (Q13)
+        name = self.resolve_patients(query)               # stage 5 (Q13)
         history = self.chat_history(chat_id) if chat_id else ""
         qvec = embed_query(query, self.embed_fn, self.dim)  # stage 7 (M5)
+        corpus = self.corpus.filter(F.col("user_id") == user_id)
+        pc = self.spec.partition_col
+
+        def collect(frame_of):
+            """(patient ids, rows, frame) of frame_of(name); when nobody
+            matches the name, the route runs again over the whole tenant."""
+            frame = frame_of(name)
+            rows = frame.collect()
+            pids = [] if name is None else ops.matched_ids(rows, pc, name.ids)
+            if name is not None and not pids:
+                frame = frame_of(None)
+                rows = frame.collect()
+            return pids, rows, frame
 
         if intent == "AGGREGATE":                         # app/main.py:2872
-            aggs = ops.aggregate_search(
-                self.corpus, self.spec,
-                ["conditionCodeText", "resourceType", "patientId"],
-                size=5, filter_expr=filter_expr,
-                partition_key=pids[0] if pids else None)
+            dims = ["conditionCodeText", "resourceType", "patientId"]
+            pids, rows, _ = collect(lambda nm: ops.aggregate_search(
+                corpus, self.spec, dims, 5, filter_expr, nm))
+            rows = [r for r in rows
+                    if r["dim"] and (not pids or r[pc] == pids[0])]
             buckets: dict[str, list] = {}
-            for r in aggs.collect():
+            for r in sorted(rows, key=lambda r: (dims.index(r["dim"]),
+                                                 -r["cnt"], r["key"])):
                 buckets.setdefault(r["dim"], []).append((r["key"], r["cnt"]))
             return AskResult(query, intent, answer=str(buckets),
                              aggregations=buckets, patient_ids=pids)
 
-        if intent == "DOCUMENT_FETCH" and pids:           # app/main.py:2804
-            hits = ops.document_fetch_search(
-                self.corpus.withColumn("score", F.lit(1.0)), self.spec,
-                pids, "score", k, self.cfg.max_files_per_patient)
-        elif self.rerank and intent not in ("STRUCTURED",
-                                            "HYBRID_STRUCTURED"):
-            # over-fetch, then second-stage re-score of only those rows.
-            # Structured routes are excluded: their hits carry no free-text
-            # column, so every rerank score would be 0.0 and the re-order
-            # would silently discard first-stage relevance.
-            from ..ml.rerank import rerank_topk
-            first = self.dispatch(intent, query, qvec,
-                                  k * self.rerank_depth, filter_expr,
-                                  pids[0] if pids else None)
-            fn = None if self.rerank is True else self.rerank
-            text_col = (self.spec.text_fields[0] if self.spec.text_fields
-                        else self.spec.id_col)
-            hits = rerank_topk(first, query, text_col,
-                               self.spec.id_col, k=k, rerank_fn=fn)
-        else:
-            hits = self.dispatch(intent, query, qvec, k, filter_expr,
-                                 pids[0] if pids else None)
+        # the rerank stage over-fetches k * rerank_depth first-stage rows.
+        # Structured routes skip it: their hits carry no free-text column,
+        # so every rerank score would be 0.0 and the re-order would
+        # silently discard first-stage relevance.
+        rerank = self.rerank and intent not in ("STRUCTURED",
+                                                "HYBRID_STRUCTURED")
 
-        context = render_context(hits, self.spec.id_col)  # stage 10
+        def route(nm):
+            if intent == "DOCUMENT_FETCH" and nm is not None:
+                return ops.document_fetch_search(corpus, self.spec, nm)
+            return self.dispatch(                         # app/main.py:2804
+                intent, query, qvec, k * self.rerank_depth if rerank else k,
+                filter_expr, nm, corpus)
+
+        pids, rows, frame = collect(route)
+        if pids and intent == "DOCUMENT_FETCH":   # the k lowest ids fetched
+            rows = sorted(rows, key=lambda r: r[self.spec.id_col])[:k]
+        elif pids:     # the first patient's rows: the `score > 0` cut
+            rows = [r for r in rows if r[pc] == pids[0]
+                    and r["score"] is not None and r["score"] > 0]
+        schema = StructType([f for f in frame.schema.fields
+                             if f.name not in _HELPERS])
+        hit = Row(*schema.fieldNames())
+        rows = [hit(*(r[c] for c in schema.fieldNames())) for r in rows]
+        if rerank and not (pids and intent == "DOCUMENT_FETCH"):
+            rows, schema = self._rerank(query, rows, schema, k)
+        context = render_context(rows, schema, self.spec.id_col)  # stage 10
         prompt = build_prompt(query, context, history)    # stage 11
         answer = self.generate_fn(prompt)                 # stage 12
-        return AskResult(query, intent, answer, hits=hits,
-                         patient_ids=pids)
+        return AskResult(query, intent, answer, rows=rows,
+                         patient_ids=pids, schema=schema)
+
+    def _rerank(self, query: str, rows: list[Row], schema: StructType,
+                k: int) -> tuple[list[Row], StructType]:
+        """Second-stage re-score (ml/rerank.py) of the first stage's
+        collected rows, a second action over those rows only."""
+        from ..ml.rerank import rerank_topk
+        first = SparkSession.active().createDataFrame(rows, schema,
+                                                      verifySchema=False)
+        text_col = (self.spec.text_fields[0] if self.spec.text_fields
+                    else self.spec.id_col)
+        hits = rerank_topk(first, query, text_col, self.spec.id_col, k=k,
+                           rerank_fn=None if self.rerank is True
+                           else self.rerank)
+        return hits.collect(), hits.schema
 
     # ---- stage 13: persist (C3, app/main.py:2948-2963)
     def persist_turn(self, spark: SparkSession, messages_path: str,

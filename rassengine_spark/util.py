@@ -90,27 +90,6 @@ def spread(df: DataFrame, partitions: int | None = None) -> DataFrame:
     return df.repartition(target)
 
 
-def round_half_up(x: float, d: int) -> float:
-    """Driver-side twin of JVM ``F.round(double, d)``: HALF_UP on the
-    decimal form of x. Java rounds BigDecimal.valueOf(x) — the
-    Double.toString uniquely-identifying decimal — while this quantizes
-    Decimal(repr(x)), Python's shortest round-tripping decimal. Both
-    decimal strings pin the SAME double, and quantizing at d digits
-    agrees for every such representation unless two round-trip forms
-    straddle a half-way point, which a 28k-value adversarial sweep (and
-    the hypothesis twin test in tests/test_properties.py) never
-    produced. A zero result is normalized to +0.0: BigDecimal has no
-    signed zero, so the JVM rounds every tiny negative to +0.0 while
-    Python's Decimal would keep -0 — which flips downstream
-    Double.compare order (found by the affinity-twin property test).
-    Used only where a bounded driver-side artifact (quantizer seeds,
-    probe lists) must reproduce an in-plan rounded score."""
-    from decimal import ROUND_HALF_UP, Decimal
-    r = float(Decimal(repr(float(x)))
-              .quantize(Decimal(1).scaleb(-d), rounding=ROUND_HALF_UP))
-    return 0.0 if r == 0.0 else r
-
-
 FOLD_LEASE_TTL_SEC = 3600
 
 # token of every lease THIS process holds, keyed by lock path — lets the

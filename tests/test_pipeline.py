@@ -2,6 +2,7 @@
 with idempotent upsert (S9), the /ask lifecycle (§3.1), rollup folds."""
 
 import json
+import uuid
 
 import pytest
 from pyspark.sql import functions as F
@@ -212,6 +213,94 @@ def test_ask_odd_queries(pipeline, query, intent, hits):
     res = pipeline.ask(query, "u1")
     assert res.intent == intent
     assert [(r.doc_id, r.score) for r in res.hits.collect()] == hits
+
+
+def test_render_context_prints_values_as_spark_casts(spark, pipeline):
+    """The context is rendered on the driver from the collected rows; each
+    value must read as Spark's CAST(v AS STRING) prints it: the fixture's
+    rows, plus fractional-second timestamps, early dates and booleans."""
+    import datetime as dt
+
+    from pyspark.sql.types import ArrayType
+
+    from rassengine_spark.pipeline.ask import render_context
+    from rassengine_spark.util import qident, sql_quote
+
+    odd = spark.createDataFrame(
+        [("x1", dt.datetime(2024, 1, 2, 3, 4, 5, 120000),
+          dt.date(987, 6, 5), 7, True, 0.25, None),
+         ("x2", dt.datetime(1999, 12, 31, 23, 59, 59), None, None, False,
+          1234.5, None)],
+        "doc_id string, ts timestamp, d date, n int, b boolean, x double, "
+        "unstructuredText string")
+    for frame in [pipeline.corpus, odd]:
+        fields = [f.name for f in frame.schema.fields
+                  if f.name not in {"doc_id", "doc_type", "resourceType",
+                                    "user_id", "file_path", "file_type"}
+                  and not isinstance(f.dataType, ArrayType)]
+        kvs = ", ".join(f"concat({sql_quote(c + ': ')}, "
+                        f"CAST({qident(c)} AS STRING))" for c in fields)
+        ref = F.expr(f"coalesce(unstructuredText, concat_ws(' | ', {kvs}))")
+        rows = frame.select("*", ref.alias("_ref")).collect()
+        assert rows
+        for r in rows:
+            assert render_context([r], frame.schema) == r["_ref"]
+
+
+# one question per route family; none of the single-scan ones names a
+# person, so each is one scan under one take-ordered
+SINGLE_SCAN = [
+    ("KEYWORD", "Look up ICD-10 code I10."),
+    ("SEMANTIC", "Search for hypertension treatment options."),
+    ("HYBRID", "Find patients with hypertension."),
+    ("STRUCTURED", "List all procedures with CPT code 44950."),
+    ("HYBRID_STRUCTURED", "Search for female patients over 40 with "
+                          "hypertension and high blood pressure."),
+    ("COMPARISON", "Compare the outcomes of appendectomy vs. medication."),
+    ("TEMPORAL", "Show me trends in glucose for patient 1 over time."),
+    ("EXPLANATORY", "What are the symptoms of hypertension?"),
+    ("MULTI_INTENT", "Explain the procedure for appendectomy and list "
+                     "patients who had it."),
+]
+ONE_SHUFFLE = [
+    ("AGGREGATE", "How many patients have hypertension?"),
+    ("DOCUMENT_FETCH", "Fetch the medical records for patient Julian Q "
+                       "Stamm."),
+    ("ENTITY_SPECIFIC", "Get details for patient Julian Q Stamm."),
+]
+
+
+def _jobs_and_stages(spark, fn):
+    """(result, Spark jobs, stages) of fn() run under its own job group."""
+    sc = spark.sparkContext
+    group = f"ask-budget-{uuid.uuid4()}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup(group)
+    stages = sum(len(tracker.getJobInfo(j).stageIds) for j in jobs)
+    return out, len(jobs), stages
+
+
+@pytest.mark.parametrize("intent,query", SINGLE_SCAN + ONE_SHUFFLE)
+def test_ask_job_budget(spark, pipeline, intent, query):
+    """An ask is one Spark action: the route, the name resolution and the
+    context come from one collect. A single-scan route is one job of one
+    stage (the take-ordered merges on the driver); AGGREGATE, and the
+    routes that resolve a patient name, add at most one shuffle, which
+    adaptive execution runs as a job of its own."""
+    res, jobs, stages = _jobs_and_stages(
+        spark, lambda: pipeline.ask(query, "u1"))
+    assert res.intent == intent
+    if (intent, query) in SINGLE_SCAN:
+        assert (jobs, stages) == (1, 1)
+    else:
+        assert jobs <= 2 and stages <= 3
+        if intent != "AGGREGATE":
+            assert res.patient_ids == ["p1"]
 
 
 def test_merge_rollup_incremental_equals_full(spark, tmp_path):

@@ -298,6 +298,27 @@ def test_canonical_url_idempotent_on_arbitrary_text(spark, urls):
 # JVM eval, so example counts stay small but every example carries a
 # batch of values.
 
+def round_half_up(x: float, d: int) -> float:
+    """Driver-side twin of JVM ``F.round(double, d)``: HALF_UP on the
+    decimal form of x. Java rounds BigDecimal.valueOf(x) — the
+    Double.toString uniquely-identifying decimal — while this quantizes
+    Decimal(repr(x)), Python's shortest round-tripping decimal. Both
+    decimal strings pin the SAME double, and quantizing at d digits
+    agrees for every such representation unless two round-trip forms
+    straddle a half-way point, which a 28k-value adversarial sweep (and
+    the hypothesis twin test in tests/test_properties.py) never
+    produced. A zero result is normalized to +0.0: BigDecimal has no
+    signed zero, so the JVM rounds every tiny negative to +0.0 while
+    Python's Decimal would keep -0 — which flips downstream
+    Double.compare order (found by the affinity-twin property test).
+    Used only where a bounded driver-side artifact (quantizer seeds,
+    probe lists) must reproduce an in-plan rounded score."""
+    from decimal import ROUND_HALF_UP, Decimal
+    r = float(Decimal(repr(float(x)))
+              .quantize(Decimal(1).scaleb(-d), rounding=ROUND_HALF_UP))
+    return 0.0 if r == 0.0 else r
+
+
 _doubles = st.floats(min_value=-1e6, max_value=1e6,
                      allow_nan=False, allow_infinity=False)
 
@@ -307,8 +328,6 @@ _doubles = st.floats(min_value=-1e6, max_value=1e6,
 @settings(**_SETTINGS)
 def test_round_half_up_matches_jvm_round(spark, xs, d):
     from pyspark.sql import functions as F
-
-    from rassengine_spark.util import round_half_up
 
     # adversarial companions: exact half-way decimals at scale d around
     # each drawn value, where HALF_UP vs HALF_EVEN actually diverge
@@ -342,7 +361,6 @@ def test_cells_by_affinity_py_matches_jvm(spark, data):
     from pyspark.sql import functions as F
 
     from rassengine_spark.llmops.dedup import _cell_affinities_sql
-    from rassengine_spark.util import round_half_up
 
     def java_key(x: float) -> int:
         bits = struct.unpack(">q", struct.pack(">d", float(x)))[0]

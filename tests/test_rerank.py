@@ -58,7 +58,7 @@ def test_ask_pipeline_with_rerank(spark):
          [0.8, 0.2]),
     ]
     chunks = spark.createDataFrame(
-        [(i, dt, pid, txt, emb, None, None, None)
+        [(i, dt, pid, txt, emb, "u1", None, None)
          for (i, dt, pid, txt, emb) in chunk_rows],
         "doc_id string, doc_type string, patientId string, "
         "unstructuredText string, embedding array<double>, "
@@ -67,7 +67,8 @@ def test_ask_pipeline_with_rerank(spark):
     # EXPLANATORY route scores note/unstructured fields lexically, so all
     # three chunks are first-stage candidates; rerank re-orders by term
     # overlap with the question
-    res = pipe.ask("Explain the headache treatment options note", top_k=2)
+    res = pipe.ask("Explain the headache treatment options note", "u1",
+                   top_k=2)
     assert res.intent == "EXPLANATORY"
     ids = [r["doc_id"] for r in res.hits.select("doc_id").collect()]
     # c3 covers 3 query terms over 5 distinct tokens; c1 2 over 4; c2's
