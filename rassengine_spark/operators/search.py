@@ -18,7 +18,8 @@ Scale notes (every operator):
   distributed analog of the reference's `terminate_after: k`.
 - ties are broken on the corpus id column so results are deterministic.
 - a `NameMatch` partition key resolves a patient name inside the route's
-  own plan, with one shuffle (`_per_patient_topk`).
+  own plan, with one shuffle (`_per_patient_topk`); it suits routes whose
+  score is positive on few rows, since every such row is shuffled.
 """
 
 from __future__ import annotations
@@ -118,7 +119,9 @@ def _per_patient_topk(df: DataFrame, spec: CorpusSpec, score: Column,
     a top-level take-ordered keeps `name.ids` patients' rows ordered (name
     score desc, patient id asc, rank). Every matched patient keeps a row,
     so the ids never depend on the route; the caller keeps the first
-    patient's rows with score > 0."""
+    patient's rows with score > 0. Every row that scores goes through the
+    shuffle, so a route whose score is positive on most rows (kNN) should
+    resolve the name first and pass the patient id as a literal key."""
     pc = spec.partition_col
     for cond in [filter_expr, None if where is None else F.expr(where)]:
         if cond is not None:
@@ -259,47 +262,23 @@ def aggregate_search(df: DataFrame, spec: CorpusSpec, group_fields: list[str],
     unordered (dim, key, cnt) rows; the caller orders them.
     (reference `aggregate_search`, app/main.py:1777-1808.)
 
-    Scale: each row is stacked into its (dim, key) pairs, hash-partitioned
-    by dim once, counted by one groupBy and cut by one rank-per-dim window
-    on that same partitioning: one scan and one shuffle for all the dims.
-    A `NameMatch` key partitions by patient instead, so the name score
-    shares the shuffle: each matched patient's top buckets, plus one
-    dim-NULL row so the patient shows when the filter leaves it none,
-    under a take-ordered of `ids` patients (as in `_per_patient_topk`)."""
-    named = isinstance(partition_key, NameMatch)
-    keep = F.lit(True)
-    if not named:
-        df = _apply_filters(df, filter_expr, spec, partition_key)
-    elif filter_expr is not None:   # named: the filter must not drop rows
-        keep = F.coalesce(filter_expr, F.lit(False))
+    Scale: one scan stacks each row into its (dim, key) pairs, and one
+    groupBy(dim, key) counts them all, pre-aggregating map-side before its
+    shuffle. One rank-per-dim window cuts each dim to `size` keys; Spark's
+    window group limit keeps `size` keys per dim and partition before the
+    window's shuffle, so that second shuffle carries only those."""
+    df = _apply_filters(df, filter_expr, spec, partition_key)
     pairs = [F.struct(F.lit(gf).alias("dim"),
-                      F.when(keep, F.col(gf).cast("string")).alias("key"))
+                      F.col(gf).cast("string").alias("key"))
              for gf in group_fields]
-    by: list[str] = []
-    if named:
-        name, pc = partition_key, spec.partition_col
-        pairs.append(F.struct(F.lit(None).cast("string").alias("dim"),
-                              F.lit(None).cast("string").alias("key")))
-        df = (df.select(pc, F.expr(name_score_sql(name.name_col, name.name))
-                        .alias("_name"), F.inline(F.array(*pairs)))
-                .withColumn("_nmax", F.max("_name").over(
-                    Window.partitionBy(pc)))
-                .filter((F.col("_nmax") > 0) & (F.col("dim").isNull()
-                                                | F.col("key").isNotNull())))
-        by = [pc, "_nmax"]
-    else:
-        df = (df.select(F.inline(F.array(*pairs)))
-                .filter(F.col("key").isNotNull()).repartition("dim"))
-    rank = Window.partitionBy(*by[:1], "dim").orderBy(F.col("cnt").desc(),
-                                                      F.col("key").asc())
-    top = (df.groupBy(*by, "dim", "key").agg(F.count(F.lit(1)).alias("cnt"))
-             .withColumn("_rank", F.row_number().over(rank))
-             .filter(F.col("_rank") <= size))
-    if not named:
-        return top.select("dim", "key", "cnt")
-    return (top.orderBy(F.col("_nmax").desc(), F.col(pc).asc(), "dim",
-                        "_rank")
-               .limit(name.ids * (len(group_fields) * size + 1)))
+    rank = Window.partitionBy("dim").orderBy(F.col("cnt").desc(),
+                                             F.col("key").asc())
+    return (df.select(F.inline(F.array(*pairs)))
+              .filter(F.col("key").isNotNull())
+              .groupBy("dim", "key").agg(F.count(F.lit(1)).alias("cnt"))
+              .withColumn("_rank", F.row_number().over(rank))
+              .filter(F.col("_rank") <= size)
+              .select("dim", "key", "cnt"))
 
 
 # ---------------------------------------------------------------- Q7
@@ -423,7 +402,8 @@ def resolve_ids_from_name(df: DataFrame, name_col: str, id_col: str,
     """Q13 name -> id resolution: 3-tier scored match (exact term=3,
     phrase=2, fuzzy AND=1), collapse per id, top-k ids.
     (reference `resolve_patient_ids_from_name`, app/main.py:2637-2744.)
-    An ask resolves the same score inside its route's plan (`NameMatch`)."""
+    An ask runs it before a kNN or AGGREGATE route; the other routes
+    resolve the same score inside their own plan (`NameMatch`)."""
     best = (df.groupBy(id_col)
               .agg(_name_max(NameMatch(query_name, name_col)).alias("score"))
               .filter(F.col("score") > 0))

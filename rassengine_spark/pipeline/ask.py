@@ -18,7 +18,7 @@ import uuid
 from dataclasses import dataclass, field
 from functools import cached_property
 from typing import Callable
-from zoneinfo import ZoneInfo, ZoneInfoNotFoundError
+from zoneinfo import ZoneInfo
 
 from pyspark.sql import Column, DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
@@ -92,16 +92,26 @@ class AskResult:
 # helper columns that ride along with an ask's collected rows
 _HELPERS = ("_name", "_nmax", "_rank")
 
+# routes that resolve a named patient inside their own plan (ops.NameMatch):
+# their score is positive on few rows, and only those rows and the name's
+# rows reach the per-patient shuffle. A kNN score is positive on nearly
+# every embedded row and AGGREGATE counts every row, so the other routes
+# resolve the name in an action of its own and run for the top patient.
+_NAME_IN_PLAN = ("KEYWORD", "STRUCTURED", "COMPARISON", "TEMPORAL",
+                 "EXPLANATORY", "ENTITY_SPECIFIC", "DOCUMENT_FETCH")
+
 
 def _session_tz() -> dt.tzinfo:
-    """The session time zone: a region id or a '(+|-)HH:mm' offset."""
-    name = SparkSession.active().conf.get("spark.sql.session.timeZone")
-    try:
-        return ZoneInfo(name)
-    except (ValueError, ZoneInfoNotFoundError):
-        sign = -1 if name[0] == "-" else 1
-        return dt.timezone(sign * dt.timedelta(hours=int(name[1:3]),
-                                               minutes=int(name[4:6])))
+    """The session time zone, as Spark resolves its setting (region ids,
+    offsets such as 'Z' or '+5:30', and short ids such as 'PST')."""
+    spark = SparkSession.active()
+    zone = spark._jvm.org.apache.spark.sql.catalyst.util.DateTimeUtils \
+        .getZoneId(spark.conf.get("spark.sql.session.timeZone")).normalized()
+    rules = zone.getRules()
+    if rules.isFixedOffset():
+        return dt.timezone(dt.timedelta(seconds=rules.getOffset(
+            spark._jvm.java.time.Instant.EPOCH).getTotalSeconds()))
+    return ZoneInfo(zone.getId())
 
 
 def _spark_str(v, dtype, tz: dt.tzinfo | None) -> str:
@@ -214,8 +224,7 @@ class AskPipeline:
     # ---- stage 5: name resolution (Q13, app/main.py:2774-2778)
     def resolve_patients(self, query: str, k: int = 3) -> NameMatch | None:
         """The patient scope of a query that names a person. It runs no
-        job: each route resolves the name inside its own plan and returns
-        the top-k patient ids from the same action (ops.NameMatch)."""
+        job: the route resolves the name (see `_NAME_IN_PLAN`)."""
         persons = [e.text for e in tag_entities(query)
                    if e.label == "PERSON"]
         return NameMatch(persons[0], "patientName", k) if persons else None
@@ -282,8 +291,9 @@ class AskPipeline:
             top_k: int | None = None) -> AskResult:
         """The full §3.1 lifecycle over `user_id`'s rows, LLM pluggable.
         The route, the name resolution and the context come from one
-        Spark action; a second runs only when the query names a person
-        nobody matches, or for the rerank stage."""
+        Spark action on the routes of `_NAME_IN_PLAN`; a second runs when
+        the query names a person nobody matches, on the other routes when
+        it names one, and for the rerank stage."""
         if not query.strip():
             raise ValueError("query must be non-empty")   # app/main.py:2756
         if not user_id:
@@ -300,22 +310,26 @@ class AskPipeline:
         pc = self.spec.partition_col
 
         def collect(frame_of):
-            """(patient ids, rows, frame) of frame_of(name); when nobody
-            matches the name, the route runs again over the whole tenant."""
-            frame = frame_of(name)
+            """(patient ids, rows, frame) of the route frame_of(key); when
+            nobody matches the name, the route runs over the whole tenant."""
+            pids, key = [], name
+            if name is not None and intent not in _NAME_IN_PLAN:
+                pids = [r[0] for r in ops.resolve_ids_from_name(
+                    corpus, name.name_col, pc, name.name, name.ids).collect()]
+                key = pids[0] if pids else None
+            frame = frame_of(key)
             rows = frame.collect()
-            pids = [] if name is None else ops.matched_ids(rows, pc, name.ids)
-            if name is not None and not pids:
-                frame = frame_of(None)
-                rows = frame.collect()
+            if isinstance(key, NameMatch):
+                pids = ops.matched_ids(rows, pc, key.ids)
+                if not pids:
+                    frame = frame_of(None)
+                    rows = frame.collect()
             return pids, rows, frame
 
         if intent == "AGGREGATE":                         # app/main.py:2872
             dims = ["conditionCodeText", "resourceType", "patientId"]
-            pids, rows, _ = collect(lambda nm: ops.aggregate_search(
-                corpus, self.spec, dims, 5, filter_expr, nm))
-            rows = [r for r in rows
-                    if r["dim"] and (not pids or r[pc] == pids[0])]
+            pids, rows, _ = collect(lambda key: ops.aggregate_search(
+                corpus, self.spec, dims, 5, filter_expr, key))
             buckets: dict[str, list] = {}
             for r in sorted(rows, key=lambda r: (dims.index(r["dim"]),
                                                  -r["cnt"], r["key"])):
@@ -330,17 +344,18 @@ class AskPipeline:
         rerank = self.rerank and intent not in ("STRUCTURED",
                                                 "HYBRID_STRUCTURED")
 
-        def route(nm):
-            if intent == "DOCUMENT_FETCH" and nm is not None:
-                return ops.document_fetch_search(corpus, self.spec, nm)
+        def route(key):
+            if intent == "DOCUMENT_FETCH" and key is not None:
+                return ops.document_fetch_search(corpus, self.spec, key)
             return self.dispatch(                         # app/main.py:2804
                 intent, query, qvec, k * self.rerank_depth if rerank else k,
-                filter_expr, nm, corpus)
+                filter_expr, key, corpus)
 
         pids, rows, frame = collect(route)
         if pids and intent == "DOCUMENT_FETCH":   # the k lowest ids fetched
             rows = sorted(rows, key=lambda r: r[self.spec.id_col])[:k]
         elif pids:     # the first patient's rows: the `score > 0` cut
+            # (rows of a route run for one patient id already pass it)
             rows = [r for r in rows if r[pc] == pids[0]
                     and r["score"] is not None and r["score"] > 0]
         schema = StructType([f for f in frame.schema.fields

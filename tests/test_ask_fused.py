@@ -146,13 +146,17 @@ EDGE_CASES = [
     "Get details for patient Ann Lee.",
     # the top patient has fewer than k positive rows; the second Ann's
     # rows must not spill into its hits
-    "Find patient Ann Lee with hypertension.",
+    "Compare the outcomes of hypertension vs. diabetes for patient Ann Lee.",
     # the NER filter excludes every row of the resolved patient
     "Get details for patient Ann Lee with diabetes.",
     "Fetch the medical records for patient Ann Lee.",
     # a name that matches nobody: the route over the whole tenant
     "Get details for patient Zed Nobody.",
     "Fetch the medical records for patient Zed Nobody.",
+    # kNN routes that name a patient resolve the name first, then run for
+    # the top patient
+    "Search for hypertension treatment options for patient Ann Lee.",
+    "Find patient Ann Lee with hypertension.",
 ]
 
 
@@ -189,6 +193,10 @@ def test_fused_edge_cases_are_exercised(tenants):
     assert ask(EDGE_CASES[5])["hits"] == [("Condition-p1-1", 1.0),
                                           ("Condition-p2-1", 1.0)]
     assert ask(EDGE_CASES[6])["pids"] == []
+    assert ask(EDGE_CASES[8])["pids"] == ["p1", "p2"]
+    hybrid = ask(EDGE_CASES[9])
+    assert hybrid["pids"] == ["p1", "p2"] and hybrid["hits"]
+    assert all("-p1-" in d for d, _ in hybrid["hits"])
 
 
 # one question per route family, naming a patient both tenants have

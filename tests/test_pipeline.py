@@ -218,7 +218,9 @@ def test_ask_odd_queries(pipeline, query, intent, hits):
 def test_render_context_prints_values_as_spark_casts(spark, pipeline):
     """The context is rendered on the driver from the collected rows; each
     value must read as Spark's CAST(v AS STRING) prints it: the fixture's
-    rows, plus fractional-second timestamps, early dates and booleans."""
+    rows, plus fractional-second timestamps, early dates and booleans,
+    under session time zones given as a region, an offset ('Z' among
+    them) and a short id."""
     import datetime as dt
 
     from pyspark.sql.types import ArrayType
@@ -233,18 +235,29 @@ def test_render_context_prints_values_as_spark_casts(spark, pipeline):
           1234.5, None)],
         "doc_id string, ts timestamp, d date, n int, b boolean, x double, "
         "unstructuredText string")
-    for frame in [pipeline.corpus, odd]:
-        fields = [f.name for f in frame.schema.fields
-                  if f.name not in {"doc_id", "doc_type", "resourceType",
-                                    "user_id", "file_path", "file_type"}
-                  and not isinstance(f.dataType, ArrayType)]
-        kvs = ", ".join(f"concat({sql_quote(c + ': ')}, "
-                        f"CAST({qident(c)} AS STRING))" for c in fields)
-        ref = F.expr(f"coalesce(unstructuredText, concat_ws(' | ', {kvs}))")
-        rows = frame.select("*", ref.alias("_ref")).collect()
-        assert rows
-        for r in rows:
-            assert render_context([r], frame.schema) == r["_ref"]
+    key = "spark.sql.session.timeZone"
+    default = spark.conf.get(key)
+    try:
+        for tz in [default, "Z", "+05:30", "-3:00", "PST",
+                   "America/New_York"]:
+            spark.conf.set(key, tz)
+            for frame in [pipeline.corpus, odd]:
+                fields = [f.name for f in frame.schema.fields
+                          if f.name not in {"doc_id", "doc_type",
+                                            "resourceType", "user_id",
+                                            "file_path", "file_type"}
+                          and not isinstance(f.dataType, ArrayType)]
+                kvs = ", ".join(f"concat({sql_quote(c + ': ')}, "
+                                f"CAST({qident(c)} AS STRING))"
+                                for c in fields)
+                ref = F.expr("coalesce(unstructuredText, "
+                             f"concat_ws(' | ', {kvs}))")
+                rows = frame.select("*", ref.alias("_ref")).collect()
+                assert rows
+                for r in rows:
+                    assert render_context([r], frame.schema) == r["_ref"], tz
+    finally:
+        spark.conf.set(key, default)
 
 
 # one question per route family; none of the single-scan ones names a
@@ -262,11 +275,18 @@ SINGLE_SCAN = [
     ("MULTI_INTENT", "Explain the procedure for appendectomy and list "
                      "patients who had it."),
 ]
+# routes that resolve the named patient inside their own plan
 ONE_SHUFFLE = [
-    ("AGGREGATE", "How many patients have hypertension?"),
     ("DOCUMENT_FETCH", "Fetch the medical records for patient Julian Q "
                        "Stamm."),
     ("ENTITY_SPECIFIC", "Get details for patient Julian Q Stamm."),
+]
+# AGGREGATE counts in one shuffle and ranks per dim in a second; a kNN
+# route resolves a named patient first, in an action of its own
+TWO_SHUFFLES = [
+    ("AGGREGATE", "How many patients have hypertension?"),
+    ("SEMANTIC", "Search for hypertension treatment options for patient "
+                 "Julian Q Stamm."),
 ]
 
 
@@ -285,22 +305,24 @@ def _jobs_and_stages(spark, fn):
     return out, len(jobs), stages
 
 
-@pytest.mark.parametrize("intent,query", SINGLE_SCAN + ONE_SHUFFLE)
+@pytest.mark.parametrize("intent,query",
+                         SINGLE_SCAN + ONE_SHUFFLE + TWO_SHUFFLES)
 def test_ask_job_budget(spark, pipeline, intent, query):
-    """An ask is one Spark action: the route, the name resolution and the
-    context come from one collect. A single-scan route is one job of one
-    stage (the take-ordered merges on the driver); AGGREGATE, and the
-    routes that resolve a patient name, add at most one shuffle, which
-    adaptive execution runs as a job of its own."""
+    """The Spark jobs and stages of one ask. A single-scan route is one
+    job of one stage (the take-ordered merges on the driver); each shuffle
+    adds one job, since adaptive execution runs every shuffle as a job of
+    its own, and its stages (a job also lists the stages it skips)."""
     res, jobs, stages = _jobs_and_stages(
         spark, lambda: pipeline.ask(query, "u1"))
     assert res.intent == intent
     if (intent, query) in SINGLE_SCAN:
         assert (jobs, stages) == (1, 1)
-    else:
+    elif (intent, query) in ONE_SHUFFLE:
         assert jobs <= 2 and stages <= 3
-        if intent != "AGGREGATE":
-            assert res.patient_ids == ["p1"]
+    else:
+        assert jobs <= 3 and stages <= 6
+    if intent != "AGGREGATE" and (intent, query) not in SINGLE_SCAN:
+        assert res.patient_ids == ["p1"]
 
 
 def test_merge_rollup_incremental_equals_full(spark, tmp_path):
