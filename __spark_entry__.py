@@ -6626,57 +6626,6 @@ FROM cleaned
 """
 
 
-def _q_s9_bucketed_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """S9 as a driver-checkable query: the bucketed copy-on-write upsert
-    (pipeline/ingest.py::bucketed_upsert — the reference's idempotent
-    ``_id=doc_id`` index write, app/main.py:1211-1282, without Delta).
-    Builds the table from documents, then upserts a batch that UPDATES
-    every 7th doc (n_chars+1000) and APPENDS shifted copies; the oracle
-    states the MERGE semantics directly. The table lands in /tmp (pid-
-    suffixed — a concurrent harness run must not rmtree a table the
-    other process is mid-read on) and is rebuilt once per process in
-    the prepare phase (_prepared_store); this callable reads the
-    upserted table — the serving contract of an index store."""
-    path = _prepared_store("s9_bucketed_upsert", spark, sf_dir)
-    return (spark.read.parquet(os.path.join(path, "data"))
-            .select("doc_id", "lang", "n_chars"))
-
-
-def _build_s9_upsert_table(spark: SparkSession, sf_dir: str) -> str:
-    """s9_bucketed_upsert's build + upsert lifecycle (bench BUILD
-    phase): base table from documents, then one batch that updates
-    every 7th doc and appends shifted copies."""
-    from rassengine_spark.pipeline.ingest import bucketed_upsert
-
-    path = _store_tmp_path("rass_s9_upsert", sf_dir)
-    docs = load_tables(spark, sf_dir)["documents"] \
-        .select("doc_id", "lang", "n_chars")
-    bucketed_upsert(docs, path, key_col="doc_id", n_buckets=16)
-    sev = docs.filter(F.col("doc_id") % 7 == 0)
-    batch = (sev.select("doc_id", "lang",
-                        (F.col("n_chars") + 1000).alias("n_chars"))
-             .unionByName(sev.select(
-                 (F.col("doc_id") + 500000).alias("doc_id"),
-                 "lang", "n_chars")))
-    bucketed_upsert(batch, path, key_col="doc_id")
-    return path
-
-
-_SQL_S9_BUCKETED_UPSERT = """
-WITH batch AS (
-  SELECT doc_id, lang, n_chars + 1000 AS n_chars
-  FROM documents WHERE doc_id % 7 = 0
-  UNION ALL
-  SELECT doc_id + 500000 AS doc_id, lang, n_chars
-  FROM documents WHERE doc_id % 7 = 0)
-SELECT d.doc_id, d.lang, d.n_chars
-FROM documents d
-WHERE d.doc_id NOT IN (SELECT doc_id FROM batch)
-UNION ALL
-SELECT doc_id, lang, n_chars FROM batch
-"""
-
-
 def _q_m1_intent_route(spark: SparkSession, sf_dir: str) -> DataFrame:
     """M1: the rule-based intent router over a fixed query workload
     (deterministic; mirrors the reference's 12 intent labels)."""
@@ -7449,7 +7398,7 @@ _STALE_R3 = [
     "events_json_extract", "events_funnel", "events_volume_anomaly",
     "events_daily_gapfill", "events_value_histogram",
     "customer_rfm_segments", "events_retention_cohorts",
-    "events_except_buyers", "s9_bucketed_upsert", "text_line_dedup",
+    "events_except_buyers", "text_line_dedup",
     "text_span_dedup", "url_canonicalize", "text_top_ngrams",
     "text_unicode_clean", "events_rollup_merge", "table_snapshot_read",
 ]
@@ -7503,7 +7452,6 @@ _BENCH_BUILDERS: dict[str, Callable[[SparkSession, str], str]] = {
     "dq_report_fold": _build_dq_fold_store,
     "events_mg_rollup_bounds": _build_mg_rollup_store,
     "split_quantile_threshold_fold": _build_score_hist_store,
-    "s9_bucketed_upsert": _build_s9_upsert_table,
     # the 9 re-registered fold twins (r08 optimization round) join the
     # same seam — fold lifecycle = build phase, store read = serve:
     "boilerplate_store_fold": _build_boilerplate_fold_store,
@@ -7747,7 +7695,6 @@ def _queries_base() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "sketch_daily_rollup": _q_sketch_daily,
         "s1_fhir_parse": _q_s1_fhir_parse,
         "s3_markdown_strip": _q_s3_markdown_strip,
-        "s9_bucketed_upsert": _q_s9_bucketed_upsert,
         "text_line_dedup": _q_text_line_dedup,
         "text_span_dedup": _q_text_span_dedup,
         "url_canonicalize": _q_url_canonicalize,
@@ -7943,7 +7890,6 @@ def oracle_sql() -> dict[str, str]:
         "events_retention_cohorts": _SQL_EVENTS_RETENTION,
         "events_except_buyers": _SQL_EVENTS_EXCEPT,
         "s3_markdown_strip": _sql_s3_markdown(),
-        "s9_bucketed_upsert": _SQL_S9_BUCKETED_UPSERT,
         "text_line_dedup": _SQL_TEXT_LINE_DEDUP,
         "text_span_dedup": _SQL_TEXT_SPAN_DEDUP,
         "url_canonicalize": _sql_url_canonicalize(),

@@ -4,7 +4,9 @@ of the reference's REST endpoints has a direct equivalent for each flow.
     python -m rassengine_spark ingest --src DIR --warehouse DIR [--user U]
         the /upload_data flow (SURVEY §3.3): parse FHIR bundles / NDJSON /
         text / markdown, chunk, embed (deterministic default embedder),
-        upsert into warehouse parquet tables.
+        upsert into user U's partition of the warehouse parquet tables.
+        Prints the upload's own row counts per table (this upload's rows,
+        not the warehouse's).
 
     python -m rassengine_spark ask "QUESTION" --warehouse DIR [--user U]
             [--top-k K]
@@ -166,7 +168,9 @@ def build_parser() -> argparse.ArgumentParser:
     p = argparse.ArgumentParser(prog="rassengine_spark")
     sub = p.add_subparsers(dest="cmd", required=True)
 
-    pi = sub.add_parser("ingest", help="parse + chunk + embed + upsert")
+    pi = sub.add_parser(
+        "ingest", help="parse + chunk + embed + upsert into the user's "
+        "partition; prints this upload's own row counts")
     pi.add_argument("--src", required=True)
     pi.add_argument("--warehouse", required=True)
     pi.add_argument("--user", default="default")

@@ -165,36 +165,3 @@ def with_embeddings(df: DataFrame, text_col: str,
     # no-op at real scale where input splits >= cores
     return spread(df).mapInPandas(run, schema=out_schema)
 
-
-def with_embeddings_incremental(df: DataFrame, existing: DataFrame,
-                                text_col: str,
-                                embed_fn: EmbedFn | None = None,
-                                dim: int = 64,
-                                out_col: str = "embedding") -> DataFrame:
-    """`with_embeddings`, but texts whose exact content already has an
-    embedding in `existing` REUSE it; only genuinely new content reaches
-    the model.
-
-    The ingest cost saver: model inference dominates embedding-pipeline
-    cost (the reference pays one Ollama HTTP call per chunk,
-    app/main.py:240-263), and re-uploads / idempotent replays mostly carry
-    unchanged content. Join is on md5(text) — embeddings are a pure
-    function of content — and carries only (hash, vector), never the text;
-    one hash-shuffle, with the reused vectors flowing straight from the
-    existing table's scan. `existing` needs `text_col` + `out_col`.
-    """
-    from pyspark.sql import functions as F
-
-    known = (existing
-             .select(F.md5(F.col(text_col)).alias("_h"),
-                     F.col(out_col).alias("_known"))
-             .dropDuplicates(["_h"]))
-    tagged = (df.withColumn("_h", F.md5(F.col(text_col)))
-                .join(known, "_h", "left"))
-    hits = (tagged.filter(F.col("_known").isNotNull())
-                  .withColumn(out_col, F.col("_known"))
-                  .drop("_h", "_known"))
-    misses = tagged.filter(F.col("_known").isNull()).drop("_h", "_known")
-    embedded = with_embeddings(misses, text_col, embed_fn, dim, out_col)
-    return embedded.unionByName(
-        hits.withColumn(out_col, F.col(out_col).cast("array<float>")))

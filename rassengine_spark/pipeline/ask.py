@@ -165,13 +165,6 @@ def build_prompt(query: str, context: str, history: str = "") -> str:
         f"Question: {query}\nAnswer:")
 
 
-def check_user_exists(users: DataFrame, user_id: str) -> bool:
-    """C4 (app/embedding_gen.py:1225-1227): the upload endpoint's auth —
-    the user row must exist before ingestion proceeds. Same limit(1)
-    existence-probe shape as chat ownership (C1)."""
-    return users.filter(F.col("id") == user_id).limit(1).count() > 0
-
-
 class AskPipeline:
     """Composable /ask engine over (documents, chunks, chats, messages)."""
 

@@ -1,5 +1,5 @@
 """Batch ingestion job (SURVEY.md §3.3): files -> parse -> chunk -> embed ->
-partitioned write.
+per-tenant upsert.
 
 Reference lifecycle (POST /upload_data, app/embedding_gen.py:1256-1408):
 validate -> parse (.json FHIR / .md / .txt) -> chunk -> embed (Ollama,
@@ -7,20 +7,21 @@ batch 64, concurrency 5) -> L2 normalize -> bulk index with
 ``_id=doc_id`` (idempotent upsert) and ``_routing=patientId``.
 
 Spark mapping: one declarative job. The per-request concurrency knobs
-disappear into partition parallelism; the idempotent-upsert becomes
-overwrite-by-key (anti-join + union append on plain parquet; MERGE on
-Delta). Writes partition by ``user_id`` — the per-user-index analog
-(app/main.py:346-347) — so every per-user query prunes to one partition;
-``patientId`` stays a sort-within-partition key, the ``_routing`` analog
-(app/main.py:1230).
+disappear into partition parallelism. Stores partition by ``user_id`` —
+the per-user-index analog (app/main.py:346-347) — so every per-user query
+prunes to one partition, and an upload is one upsert per table
+(``upsert_parquet``): a per-tenant dynamic partition overwrite that
+anti-joins the tenant's own rows by key and rewrites only that tenant's
+partition. The counts an upload returns are taken from the write itself,
+not from a re-read of the store. ``patientId`` stays a
+sort-within-partition key, the ``_routing`` analog (app/main.py:1230).
 """
 
 from __future__ import annotations
 
 import os
-import shutil
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..ml.embed import EmbedFn, with_embeddings
@@ -68,170 +69,48 @@ def ingest_directory(spark: SparkSession, root: str, user_id: str,
     return docs, chunks
 
 
-def upsert_parquet(df: DataFrame, path: str, key_col: str = "doc_id",
-                   partition_col: str | None = "user_id") -> None:
-    """S9 idempotent write: new rows replace same-key rows (the reference's
-    ``_id=doc_id`` index semantics, app/main.py:1228). Plain-parquet
-    implementation: anti-join existing data against incoming keys, union,
-    rewrite. On Delta this is a single MERGE; the API is the seam."""
-    spark = df.sparkSession
+def upsert_parquet(df: DataFrame, path: str, user_id: str,
+                   key_col: str = "doc_id") -> int:
+    """S9 idempotent write into one tenant's partition: every row of
+    ``df`` lands under ``user_id`` and replaces that tenant's same-key row
+    (the reference's ``_id=doc_id`` bulk index into the per-user index,
+    app/main.py:1228, :346-347). Returns the number of rows uploaded.
+
+    Only that tenant's partition is read (the ``user_id`` filter prunes
+    to it) and rewritten: the writer-level dynamic partition overwrite
+    replaces just the partitions present in the written frame, from files
+    staged under the store and swapped in at job commit. No other
+    tenant's directory is read or touched, and the old partition is still
+    on disk while the job reads it. The option is per write, not a
+    session conf, so concurrent uploads never see a dynamic session. The
+    count is observed on the incoming rows as they are written, so it
+    costs no extra job."""
+    df = df.withColumn("user_id", F.lit(user_id))
+    uploaded = Observation()
+    out = df.observe(uploaded, F.count(F.lit(1)).alias("rows"))
     if os.path.exists(path):
-        existing = spark.read.parquet(path)
-        keep = existing.join(df.select(key_col).distinct(), key_col,
-                             "left_anti")
-        # materialize before overwrite — the plan must not lazily re-read
-        # the very path it is about to truncate
-        df = keep.unionByName(df, allowMissingColumns=True).localCheckpoint()
-    writer = df.write.mode("overwrite")
-    if partition_col and partition_col in df.columns:
-        writer = writer.partitionBy(partition_col)
-    writer.parquet(path)
-
-
-def bucketed_upsert(df: DataFrame, path: str, key_col: str = "doc_id",
-                    n_buckets: int = 64) -> None:
-    """MERGE-shaped idempotent upsert on plain parquet — the 100 TB form
-    of the reference's ``_id=doc_id`` index semantics
-    (app/main.py:1211-1282, ``_id=doc_id`` at :1228) without Delta (not
-    installed in this environment; NOTES tracks re-probing).
-
-    Layout: hive-partitioned by ``kb = md5(key) % n_buckets`` (the same
-    engine-portable bucketing as operators/index_store.py). An upsert then
-    touches ONLY the buckets its keys hash into:
-
-      1. incoming batch gets its kb,
-      2. existing rows of the touched buckets are read back (partition
-         pruning — PartitionFilters on kb, never a full scan),
-      3. same-key rows are anti-joined away, batch unioned in,
-      4. dynamic partition overwrite replaces JUST those bucket
-         directories.
-
-    Write amplification is |touched buckets| / n_buckets of the table per
-    batch instead of 1.0 (upsert_parquet's full rewrite) — size n_buckets
-    so a typical batch's buckets sum to a few GB. Untouched buckets are
-    never read or written (tests/test_bucketed_upsert.py proves their
-    files stay byte-identical)."""
-    spark = df.sparkSession
-    from ..operators.index_store import term_bucket_expr
-
-    meta_p = _meta_dir(path, "upsert_meta")
-    data_p = os.path.join(path, "data")
-    if os.path.exists(meta_p):
-        from ..operators.index_store import cached_store_meta
-        n_buckets = cached_store_meta(
-            meta_p, lambda: int(spark.read.parquet(meta_p)
-                                .collect()[0]["n_buckets"]))
-    else:
-        # meta commits BEFORE the first data write: a crash between the
-        # two must never leave data whose bucket count a retry (possibly
-        # with a different n_buckets default) cannot recover
-        (spark.createDataFrame([(n_buckets,)], "n_buckets int")
-         .repartition(1).write.mode("overwrite").parquet(meta_p))
-    batch = df.withColumn(
-        "kb", term_bucket_expr(F.col(key_col).cast("string"), n_buckets))
-    if os.path.exists(data_p):
-        # pin the batch: its lineage otherwise re-executes for the
-        # touched-kb collect, the anti-join build, and the final write
-        # (the first-write path consumes it exactly once — no pin there)
-        batch = batch.localCheckpoint(eager=False)
-        touched = [r[0] for r in batch.select("kb").distinct().collect()]
-        existing = (spark.read.parquet(data_p)
-                    .filter(F.col("kb").isin(touched)))
-        keep = existing.join(batch.select(key_col).distinct(), key_col,
-                             "left_anti")
-        # materialize before overwrite — the plan must not lazily re-read
-        # the partitions it is about to replace
-        out = keep.unionByName(batch,
-                               allowMissingColumns=True).localCheckpoint()
-    else:
-        out = batch
-    # writer-level option, not a session-conf toggle: the option overrides
-    # spark.sql.sources.partitionOverwriteMode for THIS write only, so
-    # concurrent driver threads (guide §2.6 job overlap) never observe a
-    # transiently-dynamic session (the hnsw append writer's pattern)
-    (out.repartition("kb").write.mode("overwrite")
+        keep = (df.sparkSession.read.parquet(path)
+                .filter(F.col("user_id") == user_id)
+                .join(df.select(key_col).distinct(), key_col, "left_anti"))
+        out = keep.unionByName(out, allowMissingColumns=True)
+    (out.write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("kb").parquet(data_p))
-
-
-def bucketed_lookup(spark: SparkSession, path: str, keys: list,
-                    key_col: str = "doc_id") -> DataFrame:
-    """Point lookups against a bucketed_upsert table: bucket ids are
-    computed DRIVER-side (md5 twin — no job), so the read plan carries
-    PartitionFilters on kb and scans |distinct buckets| directories out of
-    n_buckets — the whole-file-fetch / GET-by-_id analog
-    (app/main.py:1178-1190) at table scale."""
-    from ..operators.index_store import cached_store_meta, term_bucket_py
-
-    meta_p = _meta_dir(path, "upsert_meta")
-    n_buckets = cached_store_meta(
-        meta_p, lambda: int(spark.read.parquet(meta_p)
-                            .collect()[0]["n_buckets"]))
-    kbs = sorted({term_bucket_py(str(k), n_buckets) for k in keys})
-    return (spark.read.parquet(os.path.join(path, "data"))
-            .filter(F.col("kb").isin(kbs))
-            .filter(F.col(key_col).isin(list(keys)))
-            .drop("kb"))
-
-
-def bucketed_delete(spark: SparkSession, path: str, keys: list,
-                    key_col: str = "doc_id") -> None:
-    """Erasure by key against a bucketed_upsert table (the GDPR/right-
-    to-be-forgotten job a corpus store needs): compute the keys' buckets
-    DRIVER-side (md5 twin — no planning job), read back ONLY those
-    bucket directories (PartitionFilters), drop the keys' rows, and
-    dynamic-partition-overwrite just the touched buckets. Untouched
-    buckets are never read or rewritten — same |touched|/n_buckets write
-    amplification as the upsert. Deleting keys that don't exist is a
-    no-op rewrite of their buckets (idempotent)."""
-    from ..operators.index_store import cached_store_meta, term_bucket_py
-
-    data_p = os.path.join(path, "data")
-    meta_p = _meta_dir(path, "upsert_meta")
-    n_buckets = cached_store_meta(
-        meta_p, lambda: int(spark.read.parquet(meta_p)
-                            .collect()[0]["n_buckets"]))
-    kbs = sorted({term_bucket_py(str(k), n_buckets) for k in keys})
-    keep = (spark.read.parquet(data_p)
-            .filter(F.col("kb").isin(kbs))
-            .filter(~F.col(key_col).isin(list(keys)))
-            .localCheckpoint())   # must not lazily re-read the
-    #                               partitions the write replaces
-    # dynamic overwrite only replaces partitions PRESENT in the written
-    # frame: a bucket whose every row was deleted writes nothing, so its
-    # directory must go explicitly — BEFORE the overwrite and WITHOUT
-    # swallowing errors, or a crash/failed rmtree after a "successful"
-    # return would leave every erased key readable in that bucket.
-    # (Crash between rmtree and overwrite: emptied buckets are already
-    # erased, surviving buckets still hold victims — but the call never
-    # reported success, and the rerun is idempotent.)
-    survived = {r[0] for r in keep.select("kb").distinct().collect()}
-    for kb in set(kbs) - survived:
-        d = os.path.join(data_p, f"kb={kb}")
-        if os.path.exists(d):
-            shutil.rmtree(d)
-    # writer-level dynamic overwrite (see bucketed_upsert): per-write
-    # scope, no session-conf race window for concurrent driver threads
-    (keep.repartition("kb").write.mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .partitionBy("kb").parquet(data_p))
+        .partitionBy("user_id").parquet(path))
+    return uploaded.get["rows"]
 
 
 def run_ingest(spark: SparkSession, root: str, user_id: str, out_dir: str,
                chunk_size: int = 512, embed_fn: EmbedFn | None = None,
                dim: int = 64) -> dict[str, int]:
-    """Full S1-S10 job; returns row counts per table."""
+    """Full S1-S10 job; returns this upload's row count per table."""
     docs, chunks = ingest_directory(spark, root, user_id, chunk_size,
                                     embed_fn, dim)
-    upsert_parquet(docs, os.path.join(out_dir, "documents"))
-    upsert_parquet(chunks, os.path.join(out_dir, "chunks"))
-    out = {
-        "documents": spark.read.parquet(
-            os.path.join(out_dir, "documents")).count(),
-        "chunks": spark.read.parquet(
-            os.path.join(out_dir, "chunks")).count(),
+    return {
+        "documents": upsert_parquet(
+            docs, os.path.join(out_dir, "documents"), user_id),
+        "chunks": upsert_parquet(
+            chunks, os.path.join(out_dir, "chunks"), user_id),
     }
-    return out
 
 
 def _split_touched(existing: DataFrame, touched: DataFrame,
@@ -373,8 +252,7 @@ def merge_mg_rollup(spark: SparkSession, rollup_path: str,
         return _emit(pdf, sums)
 
     # pin: part feeds the touched-split semi/anti joins AND the merge
-    # union (the bucketed_upsert lesson — unpinned lineage re-runs the
-    # Python pass per consumer)
+    # union — unpinned lineage re-runs the Python pass per consumer
     part = (delta.select(*group_cols, item_col)
             .mapInPandas(summarize, schema)
             .groupBy(group_cols).applyInPandas(merge_counters, schema)

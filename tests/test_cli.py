@@ -20,6 +20,16 @@ def test_cli_ingest_then_ask(spark, tmp_path, capsys):
     out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert out["documents"] == 9 and out["chunks"] > 0
 
+    # a second user's upload into the same warehouse prints its own
+    # counts, not the warehouse's
+    other = tmp_path / "uploads_other"
+    other.mkdir()
+    (other / "patient_2_note.txt").write_text("Follow-up visit, bp fine.")
+    assert main(["ingest", "--src", str(other), "--warehouse", wh,
+                 "--user", "other"]) == 0
+    out2 = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert out2["documents"] == 0 and out2["chunks"] == 1
+
     assert main(["ask", "How many patients have hypertension?",
                  "--warehouse", wh]) == 0
     text = capsys.readouterr().out

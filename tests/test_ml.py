@@ -244,36 +244,3 @@ def test_plugin_contract_is_swappable(spark):
     from rassengine_spark.ml.intent import classify_batch
     got = classify_batch(["x", "y"], fn=lambda q: "KEYWORD")
     assert got == ["KEYWORD", "KEYWORD"]
-
-
-def test_with_embeddings_incremental_reuses_known_vectors(spark, tmp_path):
-    from rassengine_spark.ml.embed import (hash_ngram_embedder,
-                                           with_embeddings,
-                                           with_embeddings_incremental)
-    old = spark.createDataFrame(
-        [(1, "alpha beta"), (2, "gamma delta")], "id int, text string")
-    existing = with_embeddings(old, "text", dim=8)
-    # the embed fn runs in executor workers: log its inputs via the shared
-    # filesystem, not a driver-side list
-    log = str(tmp_path / "embed_calls.log")
-    base = hash_ngram_embedder(8)
-
-    def counting_fn(texts, _log=log):
-        with open(_log, "a") as f:
-            for t in texts:
-                f.write(t + "\n")
-        return base(texts)
-
-    new = spark.createDataFrame(
-        [(3, "alpha beta"),        # same content as id=1 -> reuse
-         (4, "brand new text")],   # only this one reaches the model
-        "id int, text string")
-    out = with_embeddings_incremental(new, existing, "text",
-                                      embed_fn=counting_fn, dim=8)
-    rows = {r["id"]: r["embedding"] for r in out.collect()}
-    assert set(rows) == {3, 4}
-    with open(log) as f:                     # one model call, not two
-        assert f.read().splitlines() == ["brand new text"]
-    known = {r["id"]: r["embedding"] for r in existing.collect()}
-    assert rows[3] == known[1]               # byte-identical reuse
-    assert rows[4] == [pytest.approx(x) for x in base(["brand new text"])[0]]

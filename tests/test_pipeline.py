@@ -127,12 +127,85 @@ def test_upsert_is_idempotent(spark, corpus_dir):
 
 def test_upsert_replaces_same_key(spark, tmp_path):
     p = str(tmp_path / "t")
-    df1 = spark.createDataFrame([("a", 1), ("b", 1)], "doc_id string, v int")
-    upsert_parquet(df1, p, partition_col=None)
-    df2 = spark.createDataFrame([("b", 2), ("c", 2)], "doc_id string, v int")
-    upsert_parquet(df2, p, partition_col=None)
-    got = {r.doc_id: r.v for r in spark.read.parquet(p).collect()}
-    assert got == {"a": 1, "b": 2, "c": 2}
+    schema = "doc_id string, v int"
+    assert upsert_parquet(spark.createDataFrame([("b", 0)], schema),
+                          p, "other") == 1
+    df1 = spark.createDataFrame([("a", 1), ("b", 1)], schema)
+    assert upsert_parquet(df1, p, "u1") == 2
+    df2 = spark.createDataFrame([("b", 2), ("c", 2)], schema)
+    assert upsert_parquet(df2, p, "u1") == 2
+    got = {(r.user_id, r.doc_id): r.v
+           for r in spark.read.parquet(p).collect()}
+    # the other tenant's same doc_id is not a same-key row
+    assert got == {("u1", "a"): 1, ("u1", "b"): 2, ("u1", "c"): 2,
+                   ("other", "b"): 0}
+
+
+def _tenant_files(out, user_id: str) -> dict:
+    """{path: (size, mtime_ns)} of one tenant's files in both tables."""
+    return {str(f): (f.stat().st_size, f.stat().st_mtime_ns)
+            for t in ("documents", "chunks")
+            for f in (out / t / f"user_id={user_id}").rglob("*")
+            if f.is_file()}
+
+
+def _tenant_counts(spark, out, user_id: str) -> dict:
+    return {t: spark.read.parquet(str(out / t))
+            .filter(F.col("user_id") == user_id).count()
+            for t in ("documents", "chunks")}
+
+
+def test_upload_rewrites_only_its_own_tenant(spark, corpus_dir, tmp_path):
+    """An upload reads and rewrites only its tenant's partition and
+    returns its own row counts, not the store's."""
+    root, _, counts_a = corpus_dir
+    src_b = tmp_path / "uploads_b"
+    src_b.mkdir()
+    (src_b / "patient_1_bundle.json").write_text(json.dumps(BUNDLE))
+    out = tmp_path / "warehouse"
+
+    def ingest(src, user_id):
+        return run_ingest(spark, str(src), user_id, str(out), chunk_size=64,
+                          dim=16)
+
+    assert ingest(root, "a") == counts_a
+    counts_b = ingest(src_b, "b")
+    assert counts_b["documents"] == 9
+    assert counts_b["chunks"] < counts_a["chunks"]   # no txt file
+    assert _tenant_counts(spark, out, "b") == counts_b
+    b_files = _tenant_files(out, "b")
+    a_rows = sorted(repr(r) for r in spark.read.parquet(str(out / "chunks"))
+                    .filter(F.col("user_id") == "a").collect())
+
+    assert ingest(root, "a") == counts_a
+    assert _tenant_files(out, "b") == b_files
+    assert sorted(repr(r) for r in spark.read.parquet(str(out / "chunks"))
+                  .filter(F.col("user_id") == "a").collect()) == a_rows
+    assert _tenant_counts(spark, out, "a") == counts_a
+
+
+def test_concurrent_uploads_of_two_tenants(spark, corpus_dir, tmp_path):
+    """Two tenants' uploads from two threads of one session leave every
+    tenant's rows complete, with no duplicated (user_id, doc_id)."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    root, _, counts = corpus_dir
+    out = tmp_path / "warehouse"
+
+    def ingest(user_id):
+        return run_ingest(spark, str(root), user_id, str(out),
+                          chunk_size=64, dim=16)
+
+    ingest("t0")
+    with ThreadPoolExecutor(2) as pool:
+        got = list(pool.map(ingest, ["t1", "t2"]))
+    assert got == [counts, counts]
+    for t in ("documents", "chunks"):
+        rows = spark.read.parquet(str(out / t))
+        assert rows.groupBy("user_id", "doc_id").count() \
+                   .filter(F.col("count") > 1).count() == 0
+    for user_id in ("t0", "t1", "t2"):
+        assert _tenant_counts(spark, out, user_id) == counts
 
 
 # ------------------------------------------------------------ /ask (§3.1)
@@ -361,12 +434,3 @@ def test_persist_turn_appends_both_roles(spark, pipeline, tmp_path):
     assert {g[0] for g in got} == {"user", "assistant"}
     assert ("user", "what is bp?") in got and ("assistant", "another") in got
     assert rows.filter(F.col("createdAt").isNull()).count() == 0
-
-
-def test_check_user_exists(spark):
-    from rassengine_spark.pipeline.ask import check_user_exists
-    users = spark.createDataFrame(
-        [("u1", "a@x.io", "A", "pw")],
-        "id string, email string, name string, password string")
-    assert check_user_exists(users, "u1") is True
-    assert check_user_exists(users, "nope") is False

@@ -171,6 +171,23 @@ def test_mg_rollup_persists_k(spark, tmp_path):
     assert read_mg_rollup(spark, path).count() <= 4
 
 
+def test_mg_rollup_reads_legacy_underscore_meta(spark, tmp_path):
+    """Stores written before the meta-dir rename (leading underscore)
+    keep resolving through _meta_dir's fallback."""
+    import os
+
+    from rassengine_spark.pipeline.ingest import merge_mg_rollup, read_mg_rollup
+
+    path = str(tmp_path / "mg")
+    df1 = spark.createDataFrame([("g", f"w{i % 3}") for i in range(30)],
+                                "g string, w string")
+    merge_mg_rollup(spark, path, df1, ["g"], "w", k=4)
+    os.rename(os.path.join(path, "mg_meta"), os.path.join(path, "_mg_meta"))
+    merge_mg_rollup(spark, path, df1, ["g"], "w", k=999)
+    assert not os.path.exists(os.path.join(path, "mg_meta"))
+    assert read_mg_rollup(spark, path).count() <= 4
+
+
 def test_mg_rollup_merges_null_group(spark, tmp_path):
     # a NULL group key must merge across folds like any other group (a
     # null-unsafe semi-join would accumulate duplicate summaries)
